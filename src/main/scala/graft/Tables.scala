@@ -82,4 +82,15 @@ object Tables {
     .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     .config("spark.sql.parquet.compression.codec", "snappy")
     .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
+    // generated-class cache (static, JVM-wide; default 100): one checked
+    // opinion pass (OpinionPipeline.runChecked on the RefShaped fixture)
+    // generates 242 distinct classes, so the default LRU evicted each
+    // class before its next use and every pass recompiled ~330 of them
+    // in Janino (PublishCheckedSpec counts them). 2000 leaves headroom
+    // for a session that runs several pipelines.
+    .config("spark.sql.codegen.cache.maxEntries", "2000")
+    // the SQL status store keeps each execution's plan string and
+    // metrics (default 1000 executions); nothing here reads it, and
+    // trimming it offsets the driver heap the class cache above retains
+    .config("spark.sql.ui.retainedExecutions", "50")
 }

@@ -9,6 +9,7 @@ import scala.concurrent.duration.Duration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Manifest-pointer committed tables: the object-store-safe form of the
   * reference's multi-table transaction (`main.py:173-195`, T1) that
@@ -1128,20 +1129,22 @@ object ManifestTable {
         fname => 2L * rowsByName.getOrElse(fname, DefaultBloomItems / 2))
     lazy val emptyPointer =
       SidecarMark + writeBloomSidecar(fs, rootP, table, emptyBloomBytes())
-    def metaOf(n: String): Option[PerFileMeta] = perFile.collectFirst {
-      case (f, m) if f.endsWith("/" + n) => m }
+    // perFile keys are `/<name>` or full file paths: index by basename
+    // once, not one scan of perFile per listed file
+    val metaOf: Map[String, PerFileMeta] = perFile.map { case (f, m) =>
+      f.substring(f.lastIndexOf('/') + 1) -> m }
     // one pack object per write unit instead of one sidecar per
     // (file, column) — see [[writeBloomPack]]
     val packed = writeBloomPack(fs, rootP, table,
       for {
         s <- listed; n = s.getPath.getName
-        m <- metaOf(n).toSeq
+        m <- metaOf.get(n).toSeq
         kc <- bloomCols
         bytes <- m.blooms.get(kc).toSeq
       } yield ((n, kc), bytes))
     listed.map { s =>
       val n = s.getPath.getName
-      val meta = metaOf(n)
+      val meta = metaOf.get(n)
       val stats = meta.fold(Map.empty[String, (Long, Long)])(_.stats)
       val primary = statsCols.headOption.flatMap(stats.get)
       var e = FileEntry(table, s"$dir/$n",
@@ -1258,8 +1261,14 @@ object ManifestTable {
       val (relPath, slice) = raw.indexOf('#') match {
         case -1 => (raw, None)
         case i =>
-          val Array(o, l) = raw.substring(i + 1).split(":")
-          (raw.substring(0, i), Some((o.toLong, l.toInt)))
+          val frag = raw.substring(i + 1).split(":", -1).map(_.toLongOption)
+          val ol = frag match {
+            case Array(Some(o), Some(l)) if o >= 0L && l >= 0L => Some((o, l))
+            case _ => None
+          }
+          require(ol.isDefined,
+            s"corrupt bloom pack pointer (want @<rel>#<offset>:<len>): $payload")
+          (raw.substring(0, i), ol)
       }
       val p = new HPath(rootP, relPath)
       val key = p.toString
@@ -1284,7 +1293,10 @@ object ManifestTable {
       slice match {
         case None => whole
         case Some((o, l)) =>
-          java.util.Arrays.copyOfRange(whole, o.toInt, o.toInt + l)
+          require(o <= whole.length && l <= whole.length - o,
+            s"bloom pack pointer out of range (pack holds " +
+              s"${whole.length} bytes): $payload")
+          java.util.Arrays.copyOfRange(whole, o.toInt, (o + l).toInt)
       }
     }
 
@@ -1644,8 +1656,12 @@ object ManifestTable {
     * and any violation aborts with the failing check names before a
     * single data file is written — the previous version keeps serving.
     * Each checked frame is lineage-cut so the validation and the write
-    * see the SAME rows even for non-deterministic inputs. Returns the
-    * committed version. */
+    * see the SAME rows even for non-deterministic inputs. A checked
+    * frame that another checked frame's plan contains (a dimension a
+    * fact semi-joins) is cached while the cuts run
+    * ([[cacheSharedSubtrees]]), so every cut reads one computation of
+    * it — a fact is filtered against exactly the dimension rows that
+    * get published. Returns the committed version. */
   def publishChecked(spark: SparkSession, root: String,
                      tables: Map[String, DataFrame],
                      checks: Map[String, Seq[(String, Column)]],
@@ -1667,9 +1683,11 @@ object ManifestTable {
       checks.get(name).exists(_.nonEmpty) ||
         uniqueKeys.get(name).exists(_.nonEmpty) ||
         foreignKeys.exists(fk => fk._2 == name || fk._4 == name)
-    val cut = tables.map { case (name, df) =>
-      name -> (if (hasChecks(name)) graft.operators.Lineage.cut(df) else df)
-    }
+    val checked = tables.filter { case (name, _) => hasChecks(name) }
+    val shared = cacheSharedSubtrees(checked.values.toSeq)
+    val cut = try tables ++ checked.map { case (name, df) =>
+      name -> graft.operators.Lineage.cut(df)
+    } finally shared.foreach(_.unpersist())
     val rowFailures = checks.toSeq.sortBy(_._1).flatMap { case (name, cs) =>
       if (cs.isEmpty) Nil
       else graft.operators.Validate.expectationSuite(cut(name), cs)
@@ -1706,6 +1724,26 @@ object ManifestTable {
         s"publishChecked: constraint violations — nothing committed: " +
           failures.mkString("; "))
     publish(spark, root, cut, statsCols, bloomCols)
+  }
+
+  /** Cache the frames of `frames` that another one's plan contains — in
+    * the opinion star, the dimensions the facts semi-join and look up —
+    * so each is computed once for all its consumers instead of once per
+    * lineage cut that reads it. Containment is `sameResult` on analyzed
+    * plans, the match Spark's CacheManager applies, so a match here is a
+    * subtree the consumers' plans will read from the cache. Contained frames are the shared
+    * ones only: a frame nothing else reads (a fact) is never cached, so
+    * it is not stored twice beside its cut. A frame already cached (by
+    * the caller, or equal to one cached here) is skipped. Returns the
+    * frames cached here, for the caller to unpersist. */
+  private def cacheSharedSubtrees(frames: Seq[DataFrame]): Seq[DataFrame] = {
+    val plans = frames.map(_.queryExecution.analyzed)
+    frames.zip(plans).zipWithIndex.collect {
+      case ((df, p), i) if df.storageLevel == StorageLevel.NONE &&
+          plans.indices.exists(j =>
+            j != i && plans(j).find(_.sameResult(p)).isDefined) =>
+        df.persist()
+    }
   }
 
   /** Idempotent incremental append (S4/J2, `load_data_conditionally`
@@ -1758,15 +1796,6 @@ object ManifestTable {
     n
   }
 
-  /** Targeted deletion at FILE granularity: only files that contain a
-    * matching row are rewritten (manifest stats have already bounded
-    * which files those can be for stats-correlated predicates); all
-    * other files are carried into the new version untouched —
-    * byte-identical, not even re-read at commit time. Crash-consistent
-    * ACROSS files, unlike the per-partition swap loop of
-    * [[IncrementalLoad.deleteWhere]]: either the single new commit
-    * lands (all affected files replaced at once) or nothing changes.
-    * Returns (filesRewritten, rowsDeleted). */
   /** Necessary [lo, hi] bounds on `c`'s canonical-long stats values
     * implied by `pred`'s CONJUNCTS, or None when nothing bounds the
     * column. Sound for file skipping: pred ⇒ each conjunct, so every
@@ -1884,6 +1913,15 @@ object ManifestTable {
     }
   }
 
+  /** Targeted deletion at FILE granularity: only files that contain a
+    * matching row are rewritten (manifest stats have already bounded
+    * which files those can be for stats-correlated predicates); all
+    * other files are carried into the new version untouched —
+    * byte-identical, not even re-read at commit time. Crash-consistent
+    * ACROSS files, unlike the per-partition swap loop of
+    * [[IncrementalLoad.deleteWhere]]: either the single new commit
+    * lands (all affected files replaced at once) or nothing changes.
+    * Returns (filesRewritten, rowsDeleted). */
   def deleteWhere(spark: SparkSession, root: String, table: String,
                   predicate: Column, statsCol: Option[String] = None,
                   bloomCol: Option[String] = None,

@@ -170,23 +170,6 @@ object OpinionPipeline {
     out
   }
 
-  /** E1 end-to-end: transform + atomic multi-table publish (T1) through
-    * [[ManifestTable.publish]] — ALL NINE star tables become visible in one
-    * commit-file PUT, so the reference's one-transaction load
-    * (main.py:173-195) is all-or-nothing even on object stores, where the
-    * directory renames of [[IncrementalLoad.atomicPublish]] are not atomic.
-    * Earlier versions keep serving readers until [[ManifestTable.vacuum]]
-    * (snapshot isolation), and a crashed publish leaves only orphan data
-    * files — the previous star is untouched.
-    *
-    * S5 year partitioning survives the move: facts carry the derived `anio`
-    * column, are RANGE-CLUSTERED on (anio, Fecha) at write time (a data
-    * file spans one year except at range boundaries), and register `anio`
-    * min/max per file in the manifest — so
-    * [[ManifestTable.readPruned]] on a year range opens only that year's
-    * files, the same pruning the reference delegates to its yearly
-    * filegroups (sql:83-90) and Hive-style `partitionBy` gives on
-    * directories. Returns the committed version. */
   /** The nine-table star as publish inputs — ONE definition shared by
     * [[run]] and [[runChecked]] so the two entry points cannot drift.
     * Explicit partition count = user-specified partitioning, which AQE
@@ -213,21 +196,28 @@ object OpinionPipeline {
         "webreviews" -> "anio"))
   }
 
+  /** E1 end-to-end: transform + atomic multi-table publish (T1) through
+    * [[ManifestTable.publish]] — ALL NINE star tables become visible in one
+    * commit-file PUT, so the reference's one-transaction load
+    * (main.py:173-195) is all-or-nothing even on object stores, where the
+    * directory renames of [[IncrementalLoad.atomicPublish]] are not atomic.
+    * Earlier versions keep serving readers until [[ManifestTable.vacuum]]
+    * (snapshot isolation), and a crashed publish leaves only orphan data
+    * files — the previous star is untouched.
+    *
+    * S5 year partitioning survives the move: facts carry the derived `anio`
+    * column, are RANGE-CLUSTERED on (anio, Fecha) at write time (a data
+    * file spans one year except at range boundaries), and register `anio`
+    * min/max per file in the manifest — so
+    * [[ManifestTable.readPruned]] on a year range opens only that year's
+    * files, the same pruning the reference delegates to its yearly
+    * filegroups (sql:83-90) and Hive-style `partitionBy` gives on
+    * directories. Returns the committed version. */
   def run(spark: SparkSession, out: Out, root: String): Long = {
     val (tables, statsCols) = starTables(spark, out)
     ManifestTable.publish(spark, root, tables, statsCols)
   }
 
-  /** [[run]] gated by the DDL's declared constraints
-    * (`Base de Datos Relacional copy.sql:47-139`): the database the
-    * reference loads into would REJECT a violating INSERT and roll the
-    * whole transaction back; this is that semantics engine-side
-    * (SURVEY §1.3) — PK/UNIQUE uniqueness, NOT NULLs, CHECK ranges and
-    * NVARCHAR widths all verified BEFORE a single file is written, any
-    * violation aborting with the previous star version still serving.
-    * The transform already establishes these invariants by
-    * construction; the gate is the independent proof at load time, the
-    * role the DB played for the reference. */
   /** Conform the fact tables to the DDL's PRODUCT foreign key — the one
     * constraint main.py does NOT pre-validate (it filters clients only,
     * main.py:142,150,159), so on any extract where a fact cites an
@@ -244,6 +234,16 @@ object OpinionPipeline {
       webReviews = f(out.webReviews))
   }
 
+  /** [[run]] gated by the DDL's declared constraints
+    * (`Base de Datos Relacional copy.sql:47-139`): the database the
+    * reference loads into would REJECT a violating INSERT and roll the
+    * whole transaction back; this is that semantics engine-side
+    * (SURVEY §1.3) — PK/UNIQUE uniqueness, NOT NULLs, CHECK ranges and
+    * NVARCHAR widths all verified BEFORE a single file is written, any
+    * violation aborting with the previous star version still serving.
+    * The transform already establishes these invariants by
+    * construction; the gate is the independent proof at load time, the
+    * role the DB played for the reference. */
   def runChecked(spark: SparkSession, out: Out, root: String): Long = {
     val (tables, statsCols) = starTables(spark, out)
     def dimChecks(nameCap: Int = 100) = Seq(

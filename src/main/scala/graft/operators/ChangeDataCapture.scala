@@ -25,14 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object ChangeDataCapture {
 
-  /** Latest state per key from a change log.
-    *
-    * `changes` carries `keyCols`, totally-ordering `seqCols` (e.g. a log
-    * sequence number; ties broken deterministically by the remaining
-    * payload columns), an `opCol` whose value `deleteOp` marks deletion,
-    * and arbitrary payload. Keys whose LATEST op is a delete are absent
-    * from the snapshot; `opCol` itself is dropped.
-    */
   /** Latest change per key, keys + FULL payload including the op column
     * — the one aggregation [[applyChangeLog]] and [[latestDeletes]] both
     * derive from, exposed so a caller applying both (the per-micro-batch
@@ -49,6 +41,14 @@ object ChangeDataCapture {
       .select(keyCols.map(col) ++ payload.map(c => col(s"__last.`$c`").as(c)): _*)
   }
 
+  /** Latest state per key from a change log.
+    *
+    * `changes` carries `keyCols`, totally-ordering `seqCols` (e.g. a log
+    * sequence number; ties broken deterministically by the remaining
+    * payload columns), an `opCol` whose value `deleteOp` marks deletion,
+    * and arbitrary payload. Keys whose LATEST op is a delete are absent
+    * from the snapshot; `opCol` itself is dropped.
+    */
   def applyChangeLog(changes: DataFrame, keyCols: Seq[String], seqCols: Seq[String],
                      opCol: String, deleteOp: String = "D"): DataFrame =
     latestState(changes, keyCols, seqCols)

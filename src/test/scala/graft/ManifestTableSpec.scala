@@ -429,4 +429,45 @@ class ManifestTableSpec extends SparkSpec {
     assert(fin.count(_.startsWith("p-")) == 1,
       s"superseded packs must be reclaimed: $fin")
   }
+
+  test("a hand-edited bloom pack pointer fails with a require naming it") {
+    val root = tmpDir("mtpackbad")
+    ManifestTable.publish(spark, root,
+      Map("t" -> spark.range(0, 100).select($"id",
+        md5(concat(lit("k"), $"id")).as("digest")).repartition(2)),
+      bloomCols = Map("t" -> "digest"))
+    val commit = new java.io.File(s"$root/_commits").listFiles()
+      .filter(_.getName.startsWith("c-")).head
+    val good = new String(java.nio.file.Files.readAllBytes(commit.toPath),
+      "UTF-8")
+    def b64(x: String) = java.util.Base64.getEncoder
+      .encodeToString(x.getBytes("UTF-8"))
+    def unb64(x: String) =
+      new String(java.util.Base64.getDecoder.decode(x), "UTF-8")
+    // rewrite the `#<offset>:<len>` fragment of every `P:` pointer group
+    def probeWith(fragment: String): String = {
+      val edited = good.split("\n", -1).map(_.split("\t", -1).map { g =>
+        g.split(":", -1) match {
+          case Array("P", c, ptr) =>
+            val rel = unb64(ptr)
+            s"P:$c:${b64(rel.substring(0, rel.indexOf('#') + 1) + fragment)}"
+          case _ => g
+        }
+      }.mkString("\t")).mkString("\n")
+      java.nio.file.Files.write(commit.toPath, edited.getBytes("UTF-8"))
+      // the local filesystem's checksum would reject the edit first
+      new java.io.File(commit.getParent, s".${commit.getName}.crc").delete()
+      ManifestTable.dropStateCacheForTest()
+      intercept[IllegalArgumentException] {
+        ManifestTable.bloomPruneStats(spark, root, "t", "digest", "x")
+      }.getMessage
+    }
+    val malformed = probeWith("12:x")
+    assert(malformed.contains("corrupt bloom pack pointer") &&
+      malformed.contains(".pack.bloom#12:x"), malformed)
+    assert(probeWith("7").contains(".pack.bloom#7"))
+    val beyond = probeWith("99999:16")
+    assert(beyond.contains("out of range") &&
+      beyond.contains(".pack.bloom#99999:16"), beyond)
+  }
 }

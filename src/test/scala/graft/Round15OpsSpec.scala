@@ -573,8 +573,14 @@ class Round15OpsSpec extends SparkSpec {
 
   // ---- constraint-gated publish: the DB-rejects-the-load analog ----
 
-  test("publishChecked: a violating table aborts the WHOLE publish before " +
-    "any file is written; a clean publish commits") {
+  private val publishCheckedGate = "publishChecked: a violating table " +
+    "aborts the WHOLE publish before any file is written; a clean " +
+    "publish commits"
+  test(publishCheckedGate)(publishCheckedAbortsOrCommits())
+  test(publishCheckedGate + " (reliable checkpoints)")(
+    withReliableCuts(publishCheckedAbortsOrCommits()))
+
+  private def publishCheckedAbortsOrCommits(): Unit = {
     val root = tmpDir("pub-checked") + "/t"
     graft.etl.ManifestTable.publish(spark, root,
       Map("dim" -> Seq((1L, "a")).toDF("id", "name")))
@@ -660,8 +666,14 @@ class Round15OpsSpec extends SparkSpec {
 
   // ---- the reference pipeline under the DDL constraint gate ----
 
-  test("runChecked: the star publishes under the DDL's constraints; a " +
-    "violating dimension aborts the whole nine-table transaction") {
+  private val runCheckedGate = "runChecked: the star publishes under the " +
+    "DDL's constraints; a violating dimension aborts the whole nine-table " +
+    "transaction"
+  test(runCheckedGate)(runCheckedAbortsOrCommits())
+  test(runCheckedGate + " (reliable checkpoints)")(
+    withReliableCuts(runCheckedAbortsOrCommits()))
+
+  private def runCheckedAbortsOrCommits(): Unit = {
     val raw = graft.etl.RefShaped.out(spark, sf())
     val root = tmpDir("star-checked") + "/star"
     // the RAW transform output violates the PRODUCT FK on this fixture

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbridge.CheckpointDirBridge
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +17,19 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Runs `body` with lineage cuts as reliable checkpoints
+    * (`spark.graft.checkpoint.dir`), the cut's persist-then-checkpoint
+    * branch, instead of the local checkpoints tests use otherwise. */
+  def withReliableCuts[T](body: => T): T = {
+    val sc = spark.sparkContext
+    val prior = CheckpointDirBridge.get(sc)
+    spark.conf.set("spark.graft.checkpoint.dir", tmpDir("graft-ckpt"))
+    try body finally {
+      spark.conf.unset("spark.graft.checkpoint.dir")
+      CheckpointDirBridge.restore(sc, prior)
+    }
+  }
 
   def tmpDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
