@@ -9,6 +9,8 @@ import scala.concurrent.duration.Duration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Manifest-pointer committed tables: the object-store-safe form of the
@@ -938,15 +940,14 @@ object ManifestTable {
     * a compacted 128 MB file gets the bits its fpp needs, a 500-row CDC
     * file no longer pays the fixed 50k-item allocation. Files with no
     * rows are absent from the result. */
-  private def statsBloomPass(spark: SparkSession, paths: Seq[String],
-      schema: org.apache.spark.sql.types.StructType,
+  private def statsBloomPass(data: DataFrame,
       statsCols: Seq[String], bloomCols: Seq[String],
       expectedOf: String => Long, fpp: Double = 0.03)
       : Map[String, PerFileMeta] = {
     if (statsCols.isEmpty && bloomCols.isEmpty) return Map.empty
     val nS = statsCols.length
     val nB = bloomCols.length
-    def dtOf(c: String) = schema.find(_.name == c).map(_.dataType)
+    def dtOf(c: String) = data.schema.find(_.name == c).map(_.dataType)
     val exprs = Seq(input_file_name().as("__f")) ++
       statsCols.zipWithIndex.map { case (c, i) =>
         canonLongExpr(c, dtOf(c)).as(s"__s$i") } ++
@@ -995,7 +996,7 @@ object ManifestTable {
       while (j < nB) { a.blooms(j).mergeInPlace(b.blooms(j)); j += 1 }
       a
     }
-    spark.read.parquet(paths: _*).select(exprs: _*).rdd
+    data.select(exprs: _*).rdd
       .map(r => (r.getString(0), r))
       .combineByKey(
         (r: Row) => update(new SBAcc(nS, nB,
@@ -1069,6 +1070,7 @@ object ManifestTable {
       }
     }
     val footerOnly = bloomCols.isEmpty && statsCols.forall(footerable.contains)
+    val conversion = ParquetSchemaBridge.conversion(spark)
     // footer opens are independent metadata reads — do them
     // concurrently instead of one driver round-trip per file
     val footerMeta: Seq[(String, Long, Map[String, (Long, Long)])] =
@@ -1077,6 +1079,12 @@ object ManifestTable {
           .fromPath(s.getPath, conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try {
+          // every file of one write shares its schema: record it from
+          // the first footer, so no later read of this write infers it
+          if (s eq listed.head)
+            schemaCache.put((full.toString, conversion),
+              ParquetSchemaBridge.footerSchema(s.getPath, r.getFooter,
+                conversion))
           val stats: Map[String, (Long, Long)] =
             if (!footerOnly || footerable.isEmpty) Map.empty
             else {
@@ -1124,8 +1132,10 @@ object ManifestTable {
       if (rowsByName.values.forall(_ == 0L)) Map.empty[String, PerFileMeta]
       else if (footerOnly) footerMeta.map { case (n, _, st) =>
         s"/$n" -> PerFileMeta(st, Map.empty) }.toMap
-      else statsBloomPass(spark, Seq(full.toString), df.schema, statsCols,
-        bloomCols,
+      else statsBloomPass(
+        scan(spark, rootP, listed.map(st =>
+          FileEntry(table, s"$dir/${st.getPath.getName}", None, None))),
+        statsCols, bloomCols,
         fname => 2L * rowsByName.getOrElse(fname, DefaultBloomItems / 2))
     lazy val emptyPointer =
       SidecarMark + writeBloomSidecar(fs, rootP, table, emptyBloomBytes())
@@ -1239,12 +1249,12 @@ object ManifestTable {
   }
 
   /** Driver-side cache of immutable sidecar payloads — content-addressed
-    * files never change, so a hit is valid forever; bounded by a crude
-    * clear-when-full (right-sized filters are small, and correctness
-    * never depends on a hit). */
-  private val bloomSidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-  private val MaxBloomCacheEntries = 4096
+    * files never change, so a hit is valid forever; bounded in bytes
+    * (one pack holds a whole write unit's filters, so entry sizes vary
+    * by orders of magnitude), and correctness never depends on a hit. */
+  private val BloomCacheBytes = 64L << 20
+  private val bloomSidecarCache = new ByteBoundedCache[String, Array[Byte]](
+    BloomCacheBytes, (k, bytes) => 2L * k.length + bytes.length)
 
   /** Materialize a bloom payload: `@<relPath>` pointers read their
     * sidecar (cached), inline base64 payloads (pre-v3 commits) decode
@@ -1272,23 +1282,15 @@ object ManifestTable {
       }
       val p = new HPath(rootP, relPath)
       val key = p.toString
-      val whole = {
-        val hit = bloomSidecarCache.get(key)
-        if (hit != null) hit
-        else {
-          val in = fs.open(p)
-          val bytes = try {
-            val bos = new java.io.ByteArrayOutputStream()
-            val buf = new Array[Byte](65536)
-            var n = in.read(buf)
-            while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-            bos.toByteArray
-          } finally in.close()
-          if (bloomSidecarCache.size() >= MaxBloomCacheEntries)
-            bloomSidecarCache.clear()
-          bloomSidecarCache.put(key, bytes)
-          bytes
-        }
+      val whole = bloomSidecarCache.getOrElseUpdate(key) {
+        val in = fs.open(p)
+        try {
+          val bos = new java.io.ByteArrayOutputStream()
+          val buf = new Array[Byte](65536)
+          var n = in.read(buf)
+          while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
+          bos.toByteArray
+        } finally in.close()
       }
       slice match {
         case None => whole
@@ -1339,7 +1341,7 @@ object ManifestTable {
     if (n > 0L) written
     else if (!keepSchemaIfEmpty) { fs.delete(dir, true); Nil }
     else {
-      val schema = spark.read.parquet(dir.toString).schema
+      val schema = schemaOf(spark, rootP, written.head)
       fs.delete(dir, true)
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -1360,9 +1362,51 @@ object ManifestTable {
                    table: String, mergeSchema: Boolean = false): DataFrame = {
     val mine = entries.filter(_.table == table)
     require(mine.nonEmpty, s"no table '$table' in this version")
-    spark.read.option("mergeSchema", mergeSchema.toString)
+    if (mergeSchema) spark.read.option("mergeSchema", "true")
       .parquet(mine.map(e => new HPath(rootP, e.relPath).toString): _*)
+    else scan(spark, rootP, mine)
   }
+
+  /** Data schema of every write directory (`<table>/d-<uuid>`) this
+    * driver wrote or read, per parquet conversion settings: [[writeData]]
+    * records it from a footer it opens anyway, so reading a table never
+    * runs Spark's schema-inference job for files this driver wrote. A
+    * directory another driver wrote is inferred on first use. Bounded in
+    * bytes; a miss only costs the inference again. */
+  private[graft] val SchemaCacheBytes = 4L << 20
+  private val schemaCache = new ByteBoundedCache[
+      (String, ParquetSchemaBridge.Conversion), StructType](SchemaCacheBytes,
+    (k, st) => 2L * k._1.length + org.apache.spark.util.SizeEstimator.estimate(st))
+
+  /** (entries, bytes) the schema cache holds — for specs. */
+  private[graft] def schemaCacheFootprint: (Int, Long) = schemaCache.footprint
+
+  /** The schema a non-merging `spark.read.parquet` infers when `first`
+    * is its first file — the schema of `first`'s write unit. */
+  private def schemaOf(spark: SparkSession, rootP: HPath,
+                       first: FileEntry): StructType = {
+    val file = new HPath(rootP, first.relPath)
+    schemaCache.getOrElseUpdate(
+        (file.getParent.toString, ParquetSchemaBridge.conversion(spark)))(
+      spark.read.parquet(file.toString).schema)
+  }
+
+  /** The one non-merging read of manifest entries: `files` planned
+    * under the schema [[schemaOf]] knows for the first of them, so no
+    * schema-inference job runs — the same schema Spark would infer. No
+    * files at all yields an empty relation with the schema of
+    * `orEmptyOf` (a pruned read that keeps nothing), which lists and
+    * plans no file either. */
+  private def scan(spark: SparkSession, rootP: HPath, files: Seq[FileEntry],
+                   orEmptyOf: Seq[FileEntry] = Nil): DataFrame =
+    files.headOption match {
+      case Some(first) => spark.read.schema(schemaOf(spark, rootP, first))
+        .parquet(files.map(e => new HPath(rootP, e.relPath).toString): _*)
+      case None =>
+        require(orEmptyOf.nonEmpty, "scan: no files and no table to type them")
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          schemaOf(spark, rootP, orEmptyOf.head))
+    }
 
   // ------------------------------------------------------------------ reads
 
@@ -1395,9 +1439,7 @@ object ManifestTable {
       case Some((mn, mx)) => mx >= lo && mn <= hi
       case None => true
     })
-    val base =
-      if (keep.isEmpty) toDf(spark, rootP, mine, table).where(lit(false))
-      else spark.read.parquet(keep.map(e => new HPath(rootP, e.relPath).toString): _*)
+    val base = scan(spark, rootP, keep, orEmptyOf = mine)
     val cl = canonLongExpr(statsCol,
       base.schema.find(_.name == statsCol).map(_.dataType))
     base.filter(cl >= lo && cl <= hi)
@@ -1436,10 +1478,7 @@ object ManifestTable {
     val mine = entries.filter(_.table == table)
     require(mine.nonEmpty, s"no table '$table' under $root")
     val keep = mine.filter(e => keepInSet(fs, rootP, e, statsCol, values))
-    val base =
-      if (keep.isEmpty) toDf(spark, rootP, mine, table).where(lit(false))
-      else spark.read.parquet(
-        keep.map(e => new HPath(rootP, e.relPath).toString): _*)
+    val base = scan(spark, rootP, keep, orEmptyOf = mine)
     base.filter(canonLongExpr(statsCol,
       base.schema.find(_.name == statsCol).map(_.dataType)).isin(values: _*))
   }
@@ -1538,9 +1577,7 @@ object ManifestTable {
     require(mine.nonEmpty, s"no table '$table' under $root")
     val rowsByName: Map[String, Long] = mine.flatMap(e =>
       e.rows.map(r => e.relPath.split("/").last -> r)).toMap
-    val paths = mine.map(e => new HPath(rootP, e.relPath).toString)
-    val blooms = statsBloomPass(spark, paths,
-      spark.read.parquet(paths: _*).schema, Nil, Seq(keyCol),
+    val blooms = statsBloomPass(scan(spark, rootP, mine), Nil, Seq(keyCol),
       fname => rowsByName.get(fname).map(2L * _)
         .getOrElse(expectedItemsPerFile), fpp)
     // one pack per retrofit call (see [[writeBloomPack]]), keyed here by
@@ -1582,9 +1619,7 @@ object ManifestTable {
         case None => true
       }
     }
-    val base =
-      if (keep.isEmpty) toDf(spark, rootP, mine, table).where(lit(false))
-      else spark.read.parquet(keep.map(e => new HPath(rootP, e.relPath).toString): _*)
+    val base = scan(spark, rootP, keep, orEmptyOf = mine)
     base.filter(col(keyCol).cast("string") === lit(String.valueOf(value)))
   }
 
@@ -1948,7 +1983,7 @@ object ManifestTable {
     // while still matching the predicate; skipping by those stats would
     // silently leave matching rows undeleted. Arbitrary predicates (no
     // extractable conjunct) scan everything, exactly as before.
-    val schema = toDf(spark, rootP, cur.entries, table).schema
+    val schema = schemaOf(spark, rootP, mine.head)
     def colType(c: String): Option[org.apache.spark.sql.types.DataType] =
       schema.find(_.name == c).map(_.dataType)
     def numericCol(c: String): Boolean = colType(c)
@@ -2064,14 +2099,12 @@ object ManifestTable {
     recordDiscoveryStats(rootP, table,
       DiscoveryStats(scanSet.size.toLong, mine.size.toLong))
     if (scanSet.isEmpty) return (0L, 0L)
-    val df = spark.read.parquet(
-      scanSet.map(e => new HPath(rootP, e.relPath).toString): _*)
-    val affectedFiles = df.filter(delCond)
+    val affectedFiles = scan(spark, rootP, scanSet).filter(delCond)
       .select(input_file_name().as("f")).distinct()
       .collect().map(_.getString(0)).toSet
     if (affectedFiles.isEmpty) return (0L, 0L)
     val (aff, keep) = partitionAffected(rootP, mine, affectedFiles)
-    val adf = spark.read.parquet(aff.map(e => new HPath(rootP, e.relPath).toString): _*)
+    val adf = scan(spark, rootP, aff)
     val keepRows = adf.filter(!delCond)
     // a fully-emptied table still commits one footer-only file so the
     // next read keeps its schema (the deleteWhere readability contract)
@@ -2321,9 +2354,7 @@ object ManifestTable {
     recordDiscoveryStats(rootP, mine.headOption.fold("")(_.table),
       DiscoveryStats(cand.size.toLong, mine.size.toLong))
     if (cand.isEmpty) return (Nil, mine)
-    val cdf = spark.read.parquet(
-      cand.map(e => new HPath(rootP, e.relPath).toString): _*)
-    val affectedFiles = cdf.withColumn("__f", input_file_name())
+    val affectedFiles = scan(spark, rootP, cand).withColumn("__f", input_file_name())
       .join(probeKeys, key, "left_semi")
       .select(col("__f")).distinct()
       .collect().map(_.getString(0)).toSet
@@ -2391,9 +2422,7 @@ object ManifestTable {
                               extraStatsCols: Seq[String] = Nil): Seq[FileEntry] = {
     val keepRows =
       if (aff.isEmpty) touchedKeys.where(lit(false)) // only with inserts
-      else spark.read.parquet(
-        aff.map(e => new HPath(rootP, e.relPath).toString): _*)
-        .join(touchedKeys, key, "left_anti")
+      else scan(spark, rootP, aff).join(touchedKeys, key, "left_anti")
     val newRows = inserts match {
       case None => keepRows
       case Some(ins) =>
@@ -2442,7 +2471,7 @@ object ManifestTable {
     val ks = graft.operators.Lineage.cut(
       keys.select(key.map(col): _*).distinct())
     val (aff, keep) = affectedByKeys(spark, rootP, ks, key, statsCol, mine,
-      toDf(spark, rootP, cur.entries, table).schema)
+      schemaOf(spark, rootP, mine.head))
     if (aff.isEmpty) return (0L, 0L)
     val newEntries = rewriteAffected(spark, rootP, fs, table, aff, ks,
       key, inserts = None, keepSchemaIfEmpty = keep.isEmpty, statsCol,
@@ -2454,9 +2483,7 @@ object ManifestTable {
     val affRows = aff.flatMap(_.rows)
     val nDel =
       if (affRows.size == aff.size) affRows.sum - writtenRows(newEntries)
-      else spark.read.parquet(
-          aff.map(e => new HPath(rootP, e.relPath).toString): _*)
-        .join(ks, key, "left_semi").count()
+      else scan(spark, rootP, aff).join(ks, key, "left_semi").count()
     commitOrRebase(spark, fs, rootP, root, Some(cur),
       carriedOf = _.filterNot(_.table == table),
       added = keep ++ newEntries,
@@ -2504,21 +2531,21 @@ object ManifestTable {
       throw new IllegalArgumentException(s"no committed table under $root"))
     val mine = entriesOf(Some(cur), table)
     require(mine.nonEmpty, s"no table '$table' under $root")
-    val df = toDf(spark, rootP, cur.entries, table)
-    require(newRows.columns.toSet == df.columns.toSet,
+    val schema = schemaOf(spark, rootP, mine.head)
+    require(newRows.columns.toSet == schema.fieldNames.toSet,
       s"replaceByKeys: newRows columns ${newRows.columns.toSeq} must " +
-        s"match table columns ${df.columns.toSeq}")
+        s"match table columns ${schema.fieldNames.toSeq}")
     require(key.forall(dropKeys.columns.contains),
       s"replaceByKeys: dropKeys must carry the key columns $key " +
         s"(got ${dropKeys.columns.toSeq})")
     // cut: the new rows feed the touched-key set AND the rewrite union
     val nr = graft.operators.Lineage.cut(
-      newRows.select(df.columns.map(col): _*))
+      newRows.select(schema.fieldNames.map(col): _*))
     val touched = graft.operators.Lineage.cut(
       nr.select(key.map(col): _*)
         .unionByName(dropKeys.select(key.map(col): _*)).distinct())
     val (aff, keep) = affectedByKeys(spark, rootP, touched, key, statsCol,
-      mine, df.schema)
+      mine, schema)
     val newEntries = rewriteAffected(spark, rootP, fs, table, aff, touched,
       key, inserts = Some(nr), keepSchemaIfEmpty = keep.isEmpty, statsCol,
       bloomCol, extraBloomCols, extraStatsCols)
@@ -2533,9 +2560,7 @@ object ManifestTable {
       if (aff.isEmpty) 0L
       else if (affRows.size == aff.size)
         affRows.sum + nr.count() - writtenRows(newEntries)
-      else spark.read.parquet(
-        aff.map(e => new HPath(rootP, e.relPath).toString): _*)
-        .join(touched, key, "left_semi").count()
+      else scan(spark, rootP, aff).join(touched, key, "left_semi").count()
     commitOrRebase(spark, fs, rootP, root, Some(cur),
       carriedOf = _.filterNot(_.table == table),
       added = keep ++ newEntries,
@@ -2585,12 +2610,12 @@ object ManifestTable {
       throw new IllegalArgumentException(s"no committed table under $root"))
     val mine = entriesOf(Some(cur), table)
     require(mine.nonEmpty, s"no table '$table' under $root")
-    val df = toDf(spark, rootP, cur.entries, table)
-    require(source.columns.toSet == df.columns.toSet,
+    val schema = schemaOf(spark, rootP, mine.head)
+    require(source.columns.toSet == schema.fieldNames.toSet,
       s"mergeInto: source columns ${source.columns.toSeq} must match " +
-        s"table columns ${df.columns.toSeq}")
+        s"table columns ${schema.fieldNames.toSeq}")
     val src = graft.operators.Lineage.cut(
-      source.select(df.columns.map(col): _*))
+      source.select(schema.fieldNames.map(col): _*))
     // row count and duplicate-key guard in ONE aggregation job (formerly
     // count() + distinct().count() — two passes over the source)
     val (nSrc, nSrcKeys) = {
@@ -2603,7 +2628,7 @@ object ManifestTable {
       "mergeInto: duplicate keys in source make the replace ambiguous")
     val srcKeys = src.select(key.map(col): _*)
     val (aff, keep) = affectedByKeys(spark, rootP, srcKeys, key, statsCol,
-      mine, df.schema)
+      mine, schema)
     val (nUpdated, nMatchedKeys) =
       if (aff.isEmpty) (0L, 0L)
       else {
@@ -2611,9 +2636,7 @@ object ManifestTable {
         // counts (formerly two semi-join count jobs): matched table
         // rows = Σ per-key counts, matched source keys = the group
         // count (source keys are unique by the guard above)
-        val adf = spark.read.parquet(
-          aff.map(e => new HPath(rootP, e.relPath).toString): _*)
-        val r = adf.select(key.map(col): _*)
+        val r = scan(spark, rootP, aff).select(key.map(col): _*)
           .join(srcKeys, key, "left_semi")
           .groupBy(key.map(col): _*).agg(count(lit(1)).as("__c"))
           .agg(coalesce(sum(col("__c")), lit(0L)), count(lit(1))).head()
@@ -2899,17 +2922,17 @@ object ManifestTable {
           extraStatsCols = extraStatsCols))
     }
     val mine = entriesOf(cur, table)
-    val df = toDf(spark, rootP, cur.get.entries, table)
-    require(up.columns.toSet == df.columns.toSet || nUp == 0L,
+    val schema = schemaOf(spark, rootP, mine.head)
+    require(up.columns.toSet == schema.fieldNames.toSet || nUp == 0L,
       s"transactionalMerge: upsert columns ${up.columns.toSeq} must " +
-        s"match table columns ${df.columns.toSeq}")
+        s"match table columns ${schema.fieldNames.toSeq}")
     // cut: touched feeds the discovery collect, the semi-join scan, and
     // the rewrite anti-join — without it each consumer re-runs the
     // distinct shuffle
     val touched = graft.operators.Lineage.cut(
       up.select(key.map(col): _*).unionByName(del).distinct())
     val (aff, keep) = affectedByKeys(spark, rootP, touched, key, statsCol,
-      mine, df.schema)
+      mine, schema)
     if (aff.isEmpty && nUp == 0L) return true // no-change batch
     val newEntries = rewriteAffected(spark, rootP, fs, table, aff, touched,
       key, if (nUp == 0L) None else Some(up),
@@ -3135,8 +3158,11 @@ object ManifestTable {
         fs.listStatus(tdir.getPath).filter(_.isDirectory).foreach { d =>
           val kids = fs.listStatus(d.getPath)
           if (kids.forall(k => !k.getPath.getName.endsWith(".parquet") &&
-              !k.getPath.getName.endsWith(".bloom")))
+              !k.getPath.getName.endsWith(".bloom"))) {
             fs.delete(d.getPath, true)
+            val gone = fs.makeQualified(d.getPath).toString
+            schemaCache.removeIf(_._1 == gone)
+          }
         }
       }
     // superseded commit files get the same age guard (computed above,

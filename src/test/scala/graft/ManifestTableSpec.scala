@@ -1,6 +1,12 @@
 package graft
 
+import java.sql.Date
+
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.etl.ManifestTable
 
@@ -469,5 +475,196 @@ class ManifestTableSpec extends SparkSpec {
     val beyond = probeWith("99999:16")
     assert(beyond.contains("out of range") &&
       beyond.contains(".pack.bloom#99999:16"), beyond)
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(l)
+    try { body; ListenerBridge.drain(sc) } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  private def filesOf(root: String, table: String): Seq[String] =
+    ManifestTable.current(spark, root).get.entries.filter(_.table == table)
+      .map(e => new org.apache.hadoop.fs.Path(root, e.relPath).toString)
+
+  test("reads plan from the schema recorded at write time: a pruned read " +
+      "runs only its scan job, and none when no file survives") {
+    val root = tmpDir("mtplan")
+    def digested(lo: Long, hi: Long) = spark.range(lo, hi)
+      .select($"id", md5(concat(lit("k"), $"id")).as("digest"))
+    ManifestTable.publish(spark, root,
+      Map("t" -> digested(0, 400).repartitionByRange(4, $"id")),
+      statsCols = Map("t" -> "id"), bloomCols = Map("t" -> "digest"))
+    val target = digested(0, 400).filter($"id" === 123L)
+      .select("digest").as[String].head()
+    // the publish recorded the schema: no inference job before the scan
+    var hit = Array.empty[Row]
+    assert(jobsOf { hit = ManifestTable.readPrunedEq(spark, root, "t",
+      "digest", target).collect() } == 1)
+    assert(hit.map(_.getLong(0)).toSeq == Seq(123L))
+    val absent = Iterator.from(0).map(i => s"absent-$i").find(v =>
+      ManifestTable.bloomPruneStats(spark, root, "t", "digest", v)._1 == 0L).get
+    var none = Array.empty[Row]
+    assert(jobsOf { none = ManifestTable.readPrunedEq(spark, root, "t",
+      "digest", absent).collect() } == 0)
+    assert(none.isEmpty)
+    var range = Array.empty[Row]
+    assert(jobsOf { range = ManifestTable.readPruned(spark, root, "t", "id",
+      150L, 159L).collect() } == 1)
+    assert(range.map(_.getLong(0)).toSet == (150L to 159L).toSet)
+    // a range no file covers lists no file and runs no job either
+    val empty = ManifestTable.readPruned(spark, root, "t", "id", 1000L, 2000L)
+    assert(jobsOf(empty.collect()) == 0)
+    assert(empty.inputFiles.isEmpty &&
+      empty.schema == spark.read.parquet(filesOf(root, "t"): _*).schema)
+  }
+
+  test("the recorded schema is the one Spark infers, for logical and " +
+      "nested types, under either binaryAsString setting") {
+    val root = tmpDir("mtschema")
+    val df = spark.range(0, 6).select(
+      $"id",
+      date_add(lit(Date.valueOf("2020-01-01")), $"id".cast("int")).as("d"),
+      timestamp_seconds($"id" * 3600L).as("ts"),
+      ($"id" / 3).cast("decimal(20,4)").as("amt"),
+      $"id".cast("string").cast("binary").as("raw"),
+      struct($"id".as("a"), array($"id", $"id" + 1).as("xs")).as("nest"),
+      array(struct($"id".cast("string").as("b"))).as("arr"))
+      .repartition(2)
+    ManifestTable.publish(spark, root, Map("t" -> df),
+      statsCols = Map("t" -> "id"))
+    val files = filesOf(root, "t")
+    def inferred = spark.read.parquet(files: _*).schema
+    def check(planJobs: Int): Unit = {
+      var read: org.apache.spark.sql.DataFrame = null
+      assert(jobsOf { read = ManifestTable.read(spark, root, "t") } == planJobs)
+      assert(read.schema == inferred)
+      assert(read.orderBy("id").collect().toSeq ==
+        spark.read.parquet(files: _*).orderBy("id").collect().toSeq)
+      assert(ManifestTable.readPruned(spark, root, "t", "id", 2L, 3L)
+        .schema == inferred)
+      assert(ManifestTable.readPruned(spark, root, "t", "id", 90L, 99L)
+        .schema == inferred, "the empty relation of a fully pruned read")
+    }
+    check(planJobs = 0) // recorded by the publish
+    // other conversion settings are another cache key: inferred once
+    val key = "spark.sql.parquet.binaryAsString"
+    spark.conf.set(key, "true")
+    try check(planJobs = 1) finally spark.conf.unset(key)
+    check(planJobs = 0)
+  }
+
+  test("the schema cache is bounded in bytes: writing past the bound " +
+      "evicts, and an evicted table still reads its schema and rows") {
+    val names = (0 until 64).map(i => f"c$i%02d_" + "x" * 8000)
+    def wide(v: Long) = spark.range(v, v + 1)
+      .select($"id" +: names.map(n => ($"id" * 2).as(n)): _*)
+    val first = tmpDir("mtwide") + "/t"
+    ManifestTable.publish(spark, first, Map("t" -> wide(0L)))
+    val (entries0, bytes0) = ManifestTable.schemaCacheFootprint
+    assert(bytes0 <= ManifestTable.SchemaCacheBytes)
+    // each wide schema weighs at least its column names
+    val perSchema = names.map(_.length.toLong).sum
+    val more = (ManifestTable.SchemaCacheBytes / perSchema).toInt + 1
+    (1 to more).foreach { i =>
+      ManifestTable.publish(spark, tmpDir("mtwide") + "/t",
+        Map("t" -> wide(i.toLong)))
+      assert(ManifestTable.schemaCacheFootprint._2 <=
+        ManifestTable.SchemaCacheBytes)
+    }
+    assert(ManifestTable.schemaCacheFootprint._1 < entries0 + more,
+      "writing past the bound must evict entries")
+    // the first table's schema was evicted: its next read infers it once
+    var read: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { read = ManifestTable.read(spark, first, "t") } == 1)
+    assert(read.schema == spark.read.parquet(filesOf(first, "t"): _*).schema)
+    assert(read.collect().toSeq == wide(0L).collect().toSeq)
+    assert(jobsOf(ManifestTable.read(spark, first, "t")) == 0,
+      "the inferred schema is cached again")
+  }
+
+  test("deleteWhere keeps rows whose predicate is NULL and reports the " +
+      "same count with and without footer row counts") {
+    val rows = Seq((1L, Some(5L)), (2L, None), (3L, Some(50L)),
+      (4L, None), (5L, Some(7L)), (6L, None))
+    val df = rows.toDF("id", "score").repartition(2)
+    val pred = $"score" < 10L // NULL on ids 2, 4 and 6
+    def ids(root: String) = ManifestTable.read(spark, root, "t")
+      .select("id").as[Long].collect().toSet
+    // footer branch: the deleted count is manifest row arithmetic
+    val root = tmpDir("mtnull") + "/t"
+    ManifestTable.overwrite(spark, root, "t", df)
+    assert(ManifestTable.current(spark, root).get.entries.forall(_.rows.isDefined))
+    val (_, footerCount) = ManifestTable.deleteWhere(spark, root, "t", pred)
+    // scan branch: the same files under pre-v2 lines without row counts
+    val legacy = tmpDir("mtnull-legacy") + "/t"
+    df.write.parquet(s"$legacy/t/d-legacy")
+    val parts = new java.io.File(s"$legacy/t/d-legacy").list()
+      .filter(_.endsWith(".parquet")).sorted
+    new java.io.File(s"$legacy/_commits").mkdirs()
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$legacy/_commits/c-00000000000000000001.txt"),
+      parts.map(p => s"t\tt/d-legacy/$p\t\t\n").mkString.getBytes("UTF-8"))
+    assert(ManifestTable.current(spark, legacy).get.entries.forall(_.rows.isEmpty))
+    val (_, scanCount) = ManifestTable.deleteWhere(spark, legacy, "t", pred)
+    assert(footerCount == 2L && scanCount == 2L,
+      s"footer branch $footerCount, scan branch $scanCount")
+    assert(ids(root) == Set(2L, 3L, 4L, 6L) && ids(legacy) == ids(root))
+  }
+
+  test("footer-derived DATE and LONG stats equal the scan-derived ones, " +
+      "an all-NULL file included") {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("d", DateType), StructField("n", LongType),
+      StructField("k", StringType)))
+    def day(s: String) = Date.valueOf(s)
+    // three files: mixed values, stats columns all NULL, negative values
+    val data = Seq(
+      Row(1L, day("2020-01-05"), -3L, "a"), Row(2L, day("2019-12-31"), 40L, "b"),
+      Row(3L, null, null, "c"), Row(4L, null, null, "d"),
+      Row(5L, day("1969-12-30"), Long.MinValue + 1, "e"),
+      Row(6L, day("2021-06-01"), 7L, "f"))
+    def df = spark.createDataFrame(spark.sparkContext.parallelize(data, 3), schema)
+    val footer = tmpDir("mtfooter") + "/t"
+    ManifestTable.publish(spark, footer, Map("t" -> df),
+      statsCols = Map("t" -> "d"), extraStatsCols = Map("t" -> Seq("n")))
+    // a bloom column sends the same write through the stats scan
+    val scanned = tmpDir("mtscanstats") + "/t"
+    ManifestTable.publish(spark, scanned, Map("t" -> df),
+      statsCols = Map("t" -> "d"), extraStatsCols = Map("t" -> Seq("n")),
+      bloomCols = Map("t" -> "k"))
+    def entries(root: String) = ManifestTable.current(spark, root).get
+      .entries.filter(_.table == "t").sortBy(_.relPath.split("/").last)
+    val (fe, se) = (entries(footer), entries(scanned))
+    assert(fe.size == 3 && se.size == 3)
+    assert(fe.forall(_.bloomFor("k").isEmpty) && se.forall(_.bloomFor("k").isDefined))
+    fe.zip(se).foreach { case (f, s) =>
+      Seq("d", "n").foreach { c =>
+        assert(f.statsFor(c, Some("d")) == s.statsFor(c, Some("d")),
+          s"$c stats of ${f.relPath}: footer ${f.statsFor(c, Some("d"))}, " +
+            s"scan ${s.statsFor(c, Some("d"))}")
+      }
+      assert(f.rows == s.rows)
+    }
+    assert(fe(1).statsFor("d").isEmpty && fe(1).statsFor("n").isEmpty,
+      "an all-NULL file records no range")
+    assert(fe(0).statsFor("d").contains((18261L, 18266L)) &&
+      fe(2).statsFor("n").contains((Long.MinValue + 1, 7L)))
+    def pruned(root: String, c: String, lo: Long, hi: Long) =
+      ManifestTable.readPruned(spark, root, "t", c, lo, hi)
+        .select("id").as[Long].collect().toSet
+    Seq(("d", -2L, -2L), ("d", 18262L, 18800L), ("n", -5L, 10L),
+        ("n", Long.MinValue, 0L)).foreach { case (c, lo, hi) =>
+      assert(pruned(footer, c, lo, hi) == pruned(scanned, c, lo, hi),
+        s"readPruned $c in [$lo, $hi]")
+    }
+    assert(pruned(footer, "d", 18262L, 18800L) == Set(1L, 6L))
   }
 }
