@@ -2819,7 +2819,7 @@ object SparkEntry {
       etl.ManifestTable.publish(s, root,
         Map("documents" -> docs.repartition(8, col("doc_id"))))
       etl.ManifestTable.indexBloom(s, root, "documents", "digest",
-        expectedItemsPerFile = 2000L, fpp = 0.001)
+        fpp = 0.001)
       val probe = docs.filter(col("doc_id") === 42L)
         .select("digest").as[String].head()
       val (kept, total) =

@@ -314,41 +314,10 @@ object IncrementalLoad {
     def sweep(dir: HPath): Unit =
       fs.listStatus(dir).toSeq.filter(_.isDirectory).foreach { s =>
         val n = s.getPath.getName
-        if (n.startsWith(".rewrite-old-")) {
-          val stripped = n.stripPrefix(".rewrite-old-")
-          val tgt = new HPath(dir, stripped)
-          // a pre-deterministic-naming leftover (`.rewrite-old-<nanoTime>`,
-          // a LONG all-digit tag) names no real target: "restoring" it
-          // would resurrect a stale backup as a visible data dir named
-          // after the tag. Repair when a sibling target exists (normal
-          // drop-the-backup path) or the stripped name isn't the
-          // unambiguous legacy shape — EXACTLY 18-19 digits, the
-          // nanoTime length on any host up more than ~10 years or with
-          // a boot-epoch clock source. Anything shorter all-digit
-          // (a date dir "20240101", an epoch-millis dir at 13, a
-          // short-uptime nanoTime) is AMBIGUOUS and errs toward
-          // restore: resurrecting a stale legacy backup costs one
-          // spurious visible dir; deleting a real mid-swap backup
-          // destroys the target's only copy. Asymmetric risk decides.
-          val legacyTag = (stripped.length == 18 || stripped.length == 19) &&
-            stripped.forall(_.isDigit)
-          if (fs.exists(tgt) || !legacyTag) {
-            // an all-digit tag SHORTER than the unambiguous nanoTime
-            // shape could still be a legacy leftover (boot-relative
-            // monotonic clocks emit 13-17 digits): the restore is the
-            // asymmetric-risk-correct move, but it may resurrect a
-            // stale backup as a visible all-digit data dir — name it
-            // so operators can recognize and clean true legacy junk
-            if (!fs.exists(tgt) && stripped.nonEmpty &&
-                stripped.forall(_.isDigit))
-              System.err.println(
-                s"[graft.recover] restoring ambiguous all-digit dir " +
-                  s"'$stripped' from ${s.getPath.getName}: if this is a " +
-                  "legacy .rewrite-old-<nanoTime> leftover (not a real " +
-                  "data dir), delete it manually")
-            repairSwap(fs, tgt, s.getPath)
-          } else fs.delete(s.getPath, true)
-        } else if (n.startsWith(".rewrite-staging-"))
+        if (n.startsWith(".rewrite-old-"))
+          repairSwap(fs, new HPath(dir, n.stripPrefix(".rewrite-old-")),
+            s.getPath)
+        else if (n.startsWith(".rewrite-staging-"))
           fs.delete(s.getPath, true)
         else if (!n.startsWith(".")) sweep(s.getPath)
       }

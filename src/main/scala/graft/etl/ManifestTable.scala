@@ -30,7 +30,7 @@ import org.apache.spark.storage.StorageLevel
   *    upserted entries, batch-proportional) afterwards, with periodic
   *    `k-<seq>.txt` checkpoint snapshots amortizing resolution; entries
   *    carry per-file canonical min/max stats, row counts, byte sizes
-  *    and content-addressed Bloom-sidecar pointers for file skipping;
+  *    and content-addressed Bloom-pack pointers for file skipping;
   *  - readers resolve the highest committed sequence number and the
   *    entry list it implies — so a commit "happens" at the instant
   *    one small object appears, which is atomic even where directory
@@ -66,25 +66,25 @@ import org.apache.spark.storage.StorageLevel
   * destination-exists (`FileContext.rename` with `Options.Rename.NONE`
   * — exclusion guaranteed by the Hadoop FS spec, not by any one
   * implementation) and its caller re-resolves [[current]] and retries.
-  * ALL writers to a root must be on this fixed-name protocol — the
-  * legacy `c-<seq>-<uuid>.txt` form is READ-compatible only, a legacy
-  * writer is not excluded by the fixed-name rename. On true
-  * object stores, where rename is copy+delete without an exclusivity
-  * guarantee, concurrent committers additionally need a CAS/lock
-  * service (the same qualification Delta Lake documents for S3) or a
-  * single-writer-per-root deployment; single-writer needs nothing.
+  * On true object stores, where rename is copy+delete without an
+  * exclusivity guarantee, concurrent committers additionally need a
+  * CAS/lock service (the same qualification Delta Lake documents for
+  * S3) or a single-writer-per-root deployment; single-writer needs
+  * nothing.
+  *
+  * On-disk format, one form written and read:
+  *  - commit names are `_commits/c-<seq>.txt` (20-digit sequence),
+  *    checkpoints `_commits/k-<seq>.txt`;
+  *  - every entry line is the `#2` grammar ([[parseV2]]); a data entry
+  *    always carries its byte size and row count;
+  *  - every bloom payload is a slice of its write unit's pack object,
+  *    `@<rel>.pack.bloom#<offset>:<len>` ([[writeBloomPack]]).
   */
 object ManifestTable {
 
   private val CommitDir = "_commits"
-  // fixed per-sequence name (`c-<seq>.txt`) is the commit-exclusion
-  // mechanism; the uuid-suffixed form is accepted for roots written
-  // before the fixed-name protocol. ALL WRITERS TO A ROOT MUST BE ON THE
-  // FIXED-NAME PROTOCOL: legacy uuid names are read-compatible only — a
-  // legacy writer racing a fixed-name writer on the same sequence is not
-  // excluded (different destinations), and the hint fast path probes
-  // fixed names only.
-  private val CommitName = """c-(\d{20})(?:-[0-9a-f]{32})?\.txt""".r
+  // the fixed per-sequence name is the commit-exclusion mechanism
+  private val CommitName = """c-(\d{20})\.txt""".r
   private def fixedName(seq: Long): String = f"c-$seq%020d.txt"
   /** Latest-version pointer (`_commits/_latest.hint`), updated
     * best-effort after every commit — Delta's `_last_checkpoint` idea.
@@ -217,55 +217,30 @@ object ManifestTable {
     nc.entries.filter(_.table == table) ==
       planned.map(_.entries.filter(_.table == table)).getOrElse(Nil)
 
-  /** One immutable data file of one table version. `min`/`max` are
-    * optional long stats of the table's declared stats column (empty for
-    * footer-only files — those are never skipped). `bloom` is an optional
-    * (column, base64-serialized BloomFilter) pair for EQUALITY-probe file
-    * skipping on keys uncorrelated with the file layout — built by
-    * [[indexBloom]], consumed by [[readPrunedEq]]. Values enter the
-    * filter as the UTF-8 bytes of the column's canonical string cast, so
-    * probes are type-agnostic and deterministic; no false negatives, so
-    * skipping never loses a row.
-    *
-    * v2 extensions (round 17):
-    *  - `statsName`: the COLUMN the primary min/max pair was computed
-    *    over. Pre-v2 commits carry stats untagged; narrowing then trusts
-    *    the caller's declared stats column (the only option), but a
-    *    NAMED pair is only applied when the probe column matches — a
-    *    table whose declared stats column drifted across writes can no
-    *    longer have another column's range misread as key bounds (a
-    *    silently-skipped matching file on a merge/delete path).
-    *  - `bytes`: the file's length, recorded at write time from the
-    *    same listStatus the writer already pays — so [[compact]] /
-    *    [[compactIfFragmented]] size the table from the manifest in
-    *    O(0) FS calls instead of one getFileStatus RPC per file per
-    *    micro-batch (a multi-minute driver stall at 10^5 files on an
-    *    object store).
-    *  - `stats2` / `blooms2`: additional named (col, min, max) /
-    *    (col, bloom) groups, so point-lookup pruning works on keys
-    *    OTHER than the clustered one — the forget path every GDPR
-    *    delete takes (doc-id deletes against a band-clustered minhash
-    *    index, vec-id deletes against list-clustered IVF).
-    *
-    * v3 extensions (round 18):
-    *  - `rows`: the file's row count, read from the parquet footer the
-    *    writer just produced (a driver-side metadata GET, no data
-    *    pass) — sizes Bloom filters to actual content and turns every
-    *    "count the written files" probe into manifest arithmetic.
-    *  - bloom payload strings carry EITHER an inline base64 filter
-    *    (legacy, read-compat) OR a `@<relPath>` POINTER to an immutable
-    *    content-addressed sidecar file under `<table>/_blooms/`. At the
-    *    10^4–10^5-file steady state inline filters made every commit
-    *    O(files × bloomCols × 60 KB) — rewritten each version, the
-    *    manifest (not the data) became the dominant per-batch write.
-    *    Pointers keep the commit line ~100 B per file; carried entries
-    *    reuse the sidecar untouched, [[vacuum]] treats sidecars like
-    *    data files, and content addressing dedups identical filters
-    *    (every footer-only file shares ONE empty-bloom sidecar). A
-    *    write unit's filters land PACKED in one object
-    *    (`@<rel>.pack.bloom#<offset>:<len>` — [[writeBloomPack]]), so
-    *    the per-commit sidecar OBJECT count is O(1), not
-    *    O(files × bloomCols); plain `@<rel>` pointers stay readable. */
+  /** One immutable data file of one table version, or one transaction
+    * watermark (table [[TxnTable]], no file behind it). Fields:
+    *  - `min`/`max` + `statsName`: the primary canonical-long range and
+    *    the COLUMN it was computed over. A data file records it only
+    *    when the column holds a non-null value; a watermark stores its
+    *    batch id here, unnamed.
+    *  - `stats2`: further named (col, min, max) ranges, so pruning works
+    *    on keys other than the clustered one.
+    *  - `bytes`: the file's length, from the listStatus the writer
+    *    already pays — [[compact]] / [[compactIfFragmented]] size the
+    *    table from the manifest with no FS call.
+    *  - `rows`: the file's row count, from the parquet footer the writer
+    *    just produced — sizes Bloom filters and turns every "count the
+    *    written files" probe into manifest arithmetic.
+    *  - `bloom` / `blooms2`: (column, payload) pairs for EQUALITY-probe
+    *    skipping on keys uncorrelated with the layout. The payload is a
+    *    pointer `@<rel>.pack.bloom#<offset>:<len>` to a slice of the
+    *    write unit's content-addressed pack under `<table>/_blooms/`
+    *    ([[writeBloomPack]]), so a commit line stays ~100 B per file
+    *    however large its filters are. Values enter a filter as the
+    *    UTF-8 bytes of the column's canonical string cast; no false
+    *    negatives, so skipping never loses a row.
+    * Every data entry carries `bytes` and `rows` ([[parseV2]] rejects a
+    * line without them). */
   final case class FileEntry(table: String, relPath: String,
                              min: Option[Long], max: Option[Long],
                              bloom: Option[(String, String)] = None,
@@ -274,19 +249,12 @@ object ManifestTable {
                              stats2: Seq[(String, Long, Long)] = Nil,
                              blooms2: Seq[(String, String)] = Nil,
                              rows: Option[Long] = None) {
-    /** min/max recorded for column `c`, if any. The primary pair
-      * answers when its recorded name matches — or, for pre-v2 unnamed
-      * stats, when the CALLER's declared stats column (`declared`)
-      * names `c` (legacy trust, the only information available). Named
-      * mismatches fall through to `stats2`; no match means the file is
-      * never skipped on `c`. */
-    def statsFor(c: String, declared: Option[String] = None): Option[(Long, Long)] = {
-      val primaryName = statsName.orElse(declared)
-      val primary =
-        if (primaryName.contains(c)) min.zip(max) else None
-      primary.orElse(stats2.collectFirst {
-        case (n, mn, mx) if n == c => (mn, mx) })
-    }
+    /** min/max recorded for column `c`, if any: the primary pair when
+      * its recorded name is `c`, else a named `stats2` group. No match
+      * means the file is never skipped on `c`. */
+    def statsFor(c: String): Option[(Long, Long)] =
+      (if (statsName.contains(c)) min.zip(max) else None)
+        .orElse(stats2.collectFirst { case (n, mn, mx) if n == c => (mn, mx) })
     /** Serialized bloom filter recorded for column `c`, if any. */
     def bloomFor(c: String): Option[String] =
       bloom.collect { case (bc, b64) if bc == c => b64 }
@@ -327,9 +295,9 @@ object ManifestTable {
 
   // ---------------------------------------------------------------- resolve
 
-  /** Parsed body of one commit file: a self-contained SNAPSHOT (every
-    * pre-v3 commit; every `CheckpointInterval`-th commit; `k-` sidecar
-    * checkpoints) or a DELTA against the previous version — key
+  /** Parsed body of one commit file: a self-contained SNAPSHOT (a
+    * parentless commit; every `CheckpointInterval`-th commit; `k-`
+    * sidecar checkpoints) or a DELTA against the previous version — key
     * removals plus entry upserts (an upsert replaces an existing
     * (table, relPath) in place, new keys append). Deltas are what keep
     * the per-commit write O(changed files): a CDC sink at its
@@ -399,24 +367,13 @@ object ManifestTable {
       if (cached.exists(_._1 == s)) base = cached.get._2
       else {
         val kp = new HPath(cd, checkpointName(s))
-        val useK = fs.exists(kp)
+        val cp = new HPath(cd, fixedName(s))
         val body =
-          if (useK) parseBody(fs, kp)
-          else {
-            val cp = new HPath(cd, fixedName(s))
-            val p =
-              if (fs.exists(cp)) cp
-              else { // legacy uuid-named commit of this sequence
-                val names = fs.listStatus(cd).map(_.getPath.getName)
-                  .filter(n => versionOfName(n).contains(s)).sorted
-                names.lastOption.map(n => new HPath(cd, n)).getOrElse(
-                  throw new java.io.IOException(
-                    s"broken commit chain under $cd: version $s missing " +
-                      s"while resolving $version (compacted without a " +
-                      "checkpoint?)"))
-              }
-            parseBody(fs, p)
-          }
+          if (fs.exists(kp)) parseBody(fs, kp)
+          else if (fs.exists(cp)) parseBody(fs, cp)
+          else throw new java.io.IOException(
+            s"broken commit chain under $cd: version $s missing while " +
+              s"resolving $version (compacted without a checkpoint?)")
         body match {
           case Snapshot(es) => base = es
           case d: DeltaBody => deltas.prepend(d); s -= 1
@@ -436,15 +393,13 @@ object ManifestTable {
   /** Latest committed state, or None for an uninitialized root. Partial
     * uploads (`.tmp-*`) and foreign files in `_commits` are ignored by
     * the name pattern. Fixed commit names make equal sequence numbers
-    * impossible under the current protocol (the loser's rename fails on
-    * destination-exists); should a legacy uuid-named root carry one,
-    * the lexicographically last name wins deterministically.
+    * impossible (the loser's rename fails on destination-exists).
     *
     * Resolve cost: O(1) in retained history — the `_latest.hint` fast
     * path reads the pointer and exists-probes forward to the dense tip,
-    * never listing `_commits`; only hint-less (legacy/compacted) states
-    * pay the full LIST. Entry resolution then parses only the commits
-    * newer than the cached state ([[resolveEntries]]). */
+    * never listing `_commits`; only a missing, torn or compacted-away
+    * hint pays the full LIST. Entry resolution then parses only the
+    * commits newer than the cached state ([[resolveEntries]]). */
   def current(spark: SparkSession, root: String): Option[Commit] = {
     val (fs, rootP) = fsFor(spark, root)
     val cd = new HPath(rootP, CommitDir)
@@ -504,11 +459,9 @@ object ManifestTable {
              version: Long): DataFrame = {
     val (fs, rootP) = fsFor(spark, root)
     val cd = new HPath(rootP, CommitDir)
-    val retained = fs.exists(new HPath(cd, fixedName(version))) ||
-      fs.listStatus(cd).map(_.getPath.getName)
-        .exists(n => versionOfName(n).contains(version))
-    if (!retained) throw new IllegalArgumentException(
-      s"readAt: version $version not retained under $root (vacuumed?)")
+    if (!fs.exists(new HPath(cd, fixedName(version))))
+      throw new IllegalArgumentException(
+        s"readAt: version $version not retained under $root (vacuumed?)")
     toDf(spark, rootP, resolveEntries(fs, cd, version), table)
   }
 
@@ -573,39 +526,24 @@ object ManifestTable {
     }
   }
 
-  /** v2 line marker: `#` is outside the legal table-name alphabet
-    * ([[writeData]]'s `[A-Za-z0-9._-]+` require), so a first field of
-    * `#2` can never collide with a legacy line's table field. */
+  /** Entry line marker: `#` is outside the legal table-name alphabet
+    * ([[writeData]]'s `[A-Za-z0-9._-]+` require), so no table field can
+    * pose as it. */
   private val V2Marker = "#2"
-  /** Prefix marking a bloom payload as a SIDECAR POINTER (`@<relPath>`)
-    * rather than an inline base64 filter — `@` is outside the base64
-    * alphabet, so the two forms can never collide. */
-  private[graft] val SidecarMark = "@"
+  /** Prefix of every bloom payload, marking it a pack-slice pointer. */
+  private[graft] val PointerMark = "@"
 
   /** One commit line for one entry (see [[parseV2]] for the grammar). */
   private def entryLine(e: FileEntry): String = {
-    val v2 = e.bytes.isDefined || e.statsName.isDefined ||
-      e.stats2.nonEmpty || e.blooms2.nonEmpty || e.rows.isDefined ||
-      e.bloom.exists(_._2.startsWith(SidecarMark))
-    if (!v2) {
-      val base =
-        s"${e.table}\t${e.relPath}\t${e.min.fold("")(_.toString)}\t${e.max.fold("")(_.toString)}"
-      e.bloom.fold(base) { case (bc, bb) => s"$base\t$bc\t$bb" }
-    } else {
-      def bloomGroup(c: String, payload: String): String =
-        if (payload.startsWith(SidecarMark))
-          s"P:${b64col(c)}:${b64col(payload.stripPrefix(SidecarMark))}"
-        else s"B:${b64col(c)}:$payload"
-      val groups =
-        e.min.zip(e.max).map { case (mn, mx) =>
-          s"S:${e.statsName.fold("")(b64col)}:$mn:$mx" }.toSeq ++
-        e.stats2.map { case (c, mn, mx) => s"S:${b64col(c)}:$mn:$mx" } ++
-        e.bloom.map { case (c, bb) => bloomGroup(c, bb) }.toSeq ++
-        e.blooms2.map { case (c, bb) => bloomGroup(c, bb) } ++
-        e.rows.map(n => s"R:$n").toSeq
-      (Seq(V2Marker, e.table, e.relPath, e.bytes.fold("")(_.toString)) ++
-        groups).mkString("\t")
-    }
+    val groups =
+      e.min.zip(e.max).map { case (mn, mx) =>
+        s"S:${e.statsName.fold("")(b64col)}:$mn:$mx" }.toSeq ++
+      e.stats2.map { case (c, mn, mx) => s"S:${b64col(c)}:$mn:$mx" } ++
+      (e.bloom.toSeq ++ e.blooms2).map { case (c, p) =>
+        s"P:${b64col(c)}:${b64col(p.stripPrefix(PointerMark))}" } ++
+      e.rows.map(n => s"R:$n").toSeq
+    (Seq(V2Marker, e.table, e.relPath, e.bytes.fold("")(_.toString)) ++
+      groups).mkString("\t")
   }
   private def b64col(c: String): String =
     java.util.Base64.getEncoder.encodeToString(c.getBytes(StandardCharsets.UTF_8))
@@ -613,68 +551,52 @@ object ManifestTable {
     new String(java.util.Base64.getDecoder.decode(s), StandardCharsets.UTF_8)
 
   /** Commit-line parser shared with the streaming reader (which gets its
-    * lines from a text file-source batch, not an FS open). Reads BOTH
-    * forms: the legacy 4/6-field lines of pre-v2 commits (read-compat
-    * shim — stats stay unnamed, [[FileEntry.statsFor]] trusts the
-    * declared column for them) and the `#2`-marked form carrying byte
-    * size plus repeated named stats/bloom groups. */
+    * lines from a text file-source batch, not an FS open): one
+    * [[parseV2]] line per entry. */
   private[graft] def parseEntryLines(lines: Iterator[String],
                                      src: String): Seq[FileEntry] =
-    lines.map { line =>
-      val f = line.split("\t", -1)
-      if (f.length >= 4 && f(0) == V2Marker) parseV2(f, line, src)
-      else f match {
-        case Array(t, rel, mn, mx) =>
-          FileEntry(t, rel,
-            if (mn.isEmpty) None else Some(mn.toLong),
-            if (mx.isEmpty) None else Some(mx.toLong))
-        // bloom-carrying form: two extra fields (column, base64 filter)
-        case Array(t, rel, mn, mx, bc, bb) if bc.nonEmpty && bb.nonEmpty =>
-          FileEntry(t, rel,
-            if (mn.isEmpty) None else Some(mn.toLong),
-            if (mx.isEmpty) None else Some(mx.toLong),
-            Some((bc, bb)))
-        case other => throw new java.io.IOException(
-          s"corrupt commit line in $src: '${line.take(80)}'")
-      }
-    }.toVector
+    lines.map(line => parseV2(line.split("\t", -1), line, src)).toVector
 
   /** `#2 <TAB> table <TAB> relPath <TAB> bytes? <TAB> group...` where
-    * each group is `S:<b64(col)>:<min>:<max>` (col empty for legacy
-    * unnamed stats carried forward), `B:<b64(col)>:<bloomB64>` (inline
-    * filter, read-compat), `P:<b64(col)>:<b64(relPath)>` (sidecar
-    * pointer, parsed into the `@<relPath>` payload form) or `R:<rows>`
-    * (row count). The FIRST group of each kind is the primary slot; the
-    * rest ride stats2/blooms2. Column names travel base64'd so no
-    * column name can collide with the `:` group delimiter. */
+    * each group is one of
+    *  - `S:<b64(col)>:<min>:<max>`: a canonical-long range; the column
+    *    is empty only for a watermark's batch id;
+    *  - `P:<b64(col)>:<b64(rel#offset:len)>`: a bloom filter's pack
+    *    slice, parsed into the `@<rel>#<offset>:<len>` payload;
+    *  - `R:<rows>`: the row count.
+    * The FIRST range and the first bloom fill the primary slots; the
+    * rest ride stats2/blooms2. Column names travel base64'd so none can
+    * collide with the `:` delimiter. Every entry but a [[TxnTable]]
+    * watermark carries `bytes` and an `R:` group. Any other line fails
+    * with an IOException naming the file and the line. */
   private def parseV2(f: Array[String], line: String, src: String): FileEntry = {
     def corrupt(): Nothing = throw new java.io.IOException(
-      s"corrupt v2 commit line in $src: '${line.take(80)}'")
+      s"corrupt commit line in $src: '${line.take(80)}'")
+    def num(s: String): Long = s.toLongOption.getOrElse(corrupt())
+    def name(s: String): String =
+      try unb64col(s) catch { case _: IllegalArgumentException => corrupt() }
+    if (f.length < 4 || f(0) != V2Marker) corrupt()
     var e = FileEntry(f(1), f(2), None, None,
-      bytes = if (f(3).isEmpty) None else Some(f(3).toLong))
-    def addBloom(c: String, payload: String): Unit =
-      if (e.bloom.isEmpty && e.blooms2.isEmpty)
-        e = e.copy(bloom = Some((c, payload)))
-      else e = e.copy(blooms2 = e.blooms2 :+ ((c, payload)))
+      bytes = if (f(3).isEmpty) None else Some(num(f(3))))
     f.drop(4).filter(_.nonEmpty).foreach { g =>
       g.split(":", -1) match {
         case Array("S", c, mn, mx) =>
-          val name = if (c.isEmpty) None else Some(unb64col(c))
+          val n = if (c.isEmpty) None else Some(name(c))
           if (e.min.isEmpty && e.stats2.isEmpty)
-            e = e.copy(min = Some(mn.toLong), max = Some(mx.toLong),
-              statsName = name)
+            e = e.copy(min = Some(num(mn)), max = Some(num(mx)),
+              statsName = n)
           else
             e = e.copy(stats2 = e.stats2 :+
-              ((name.getOrElse(corrupt()), mn.toLong, mx.toLong)))
-        case Array("B", c, bb) if c.nonEmpty && bb.nonEmpty =>
-          addBloom(unb64col(c), bb)
+              ((n.getOrElse(corrupt()), num(mn), num(mx))))
         case Array("P", c, pp) if c.nonEmpty && pp.nonEmpty =>
-          addBloom(unb64col(c), SidecarMark + unb64col(pp))
-        case Array("R", n) if n.nonEmpty =>
-          e = e.copy(rows = Some(n.toLong))
+          val b = (name(c), PointerMark + name(pp))
+          if (e.bloom.isEmpty) e = e.copy(bloom = Some(b))
+          else e = e.copy(blooms2 = e.blooms2 :+ b)
+        case Array("R", n) => e = e.copy(rows = Some(num(n)))
         case _ => corrupt()
       }
     }
+    if (e.table != TxnTable && (e.bytes.isEmpty || e.rows.isEmpty)) corrupt()
     e
   }
 
@@ -689,11 +611,8 @@ object ManifestTable {
                                version: Long): Option[Seq[FileEntry]] = {
     val (fs, rootP) = fsFor(spark, root)
     val cd = new HPath(rootP, CommitDir)
-    if (!fs.exists(cd)) return None
-    val retained = fs.exists(new HPath(cd, fixedName(version))) ||
-      fs.listStatus(cd).map(_.getPath.getName)
-        .exists(n => versionOfName(n).contains(version))
-    if (!retained) None else Some(resolveEntries(fs, cd, version))
+    if (!fs.exists(new HPath(cd, fixedName(version)))) None
+    else Some(resolveEntries(fs, cd, version))
   }
 
   /** Oldest retained version, None for an uninitialized root. */
@@ -720,7 +639,8 @@ object ManifestTable {
     * `FileSystem.rename` fallback for schemes lacking a FileContext
     * binding — so exactly one committer per sequence number succeeds;
     * the loser re-resolves and retries. The listStatus pre-check below
-    * is a fast-fail courtesy, not the exclusion mechanism. */
+    * additionally refuses a stale writer whose sequence the log has
+    * already passed. */
   /** Test-only interposition point: when set, runs ONCE at the next
     * [[writeCommit]] entry (self-clearing, so an interleaved commit the
     * hook itself performs cannot recurse) — how specs inject a
@@ -741,7 +661,7 @@ object ManifestTable {
         !e.table.contains("\n") && !e.relPath.contains("\n"),
         s"illegal table/path characters: ${e.table} ${e.relPath}")
       (e.bloom.toSeq ++ e.blooms2).foreach { case (bc, bb) =>
-        require(bc.nonEmpty && bb.nonEmpty &&
+        require(bc.nonEmpty && bb.startsWith(PointerMark) &&
           !s"$bc$bb".exists(ch => ch == '\t' || ch == '\n'),
           s"illegal bloom fields for ${e.relPath}")
       }
@@ -751,11 +671,6 @@ object ManifestTable {
     }
     val cd = new HPath(rootP, CommitDir)
     fs.mkdirs(cd)
-    // entries with no v2 payload keep the legacy 4/6-field line
-    // byte-identical (txn watermarks, hand-built entries); anything
-    // carrying bytes / rows / a named stats pair / a sidecar pointer /
-    // extra groups writes the `#2` form (see [[parseV2]]).
-    //
     // Commit body: a DELTA against `parent` whenever the writer knows
     // the parent state and the delta is actually smaller — the change
     // that makes per-commit bytes ∝ the batch's changed files instead
@@ -789,8 +704,10 @@ object ManifestTable {
         s"commit conflict: version $version already committed under $rootP — " +
           "re-resolve current() and retry")
     }
-    // fast-fail if a newer sequence (or a legacy uuid-named file of this
-    // sequence, which the fixed-name rename cannot exclude) already exists
+    // fast-fail if this or a newer sequence already exists. Beyond the
+    // rename below, this refuses a stale writer whose sequence the log
+    // passed and whose `c-<version>` compactLog has since removed: the
+    // fixed-name rename alone would succeed there
     val clash = fs.listStatus(cd).map(_.getPath.getName).exists {
       case CommitName(seq) => seq.toLong >= version
       case _ => false
@@ -857,20 +774,12 @@ object ManifestTable {
 
   // ------------------------------------------------------------- data write
 
-  /** Counter of per-file FS stat RPCs paid by maintenance sizing
-    * ([[compact]] / [[compactIfFragmented]] fallbacks for pre-v2
-    * entries with no recorded byte size) — specs assert it stays ZERO
-    * on the steady-state path, where sizes come from the manifest. */
-  private[graft] val fileStatCalls = new java.util.concurrent.atomic.AtomicLong
-
   /** Counter of [[writeData]] invocations — the observability hook for
     * the file-reusing conflict rebase (a rebase that re-commits already
     * written files must NOT re-run the attempt's data write). */
   private[graft] val dataWrites = new java.util.concurrent.atomic.AtomicLong
 
-  /** Default bloom sizing when a file's row count is unknown (pre-v3
-    * entries), and the hard cap keeping one file's filter bounded. */
-  private val DefaultBloomItems = 100000L
+  /** Hard cap keeping one file's filter bounded. */
   private val MaxBloomItems = 20000000L
   private def bloomSize(items: Long): Long =
     math.max(64L, math.min(items, MaxBloomItems))
@@ -879,10 +788,9 @@ object ManifestTable {
     * epoch-DAY for DATE (a date→long cast does not exist, so
     * date-clustered tables previously recorded NO usable range and a
     * date-bounded retention purge could not prune discovery),
-    * epoch-SECOND for TIMESTAMP (exactly what `cast(ts AS long)` always
-    * computed — unit stability with every pre-v3 commit), long cast
-    * otherwise. [[impliedRange]]'s literal canonicalizers mirror these
-    * units. */
+    * epoch-SECOND for TIMESTAMP (exactly what `cast(ts AS long)`
+    * computes), long cast otherwise. [[impliedRange]]'s literal
+    * canonicalizers mirror these units. */
   private def canonLongExpr(c: String,
       dt: Option[org.apache.spark.sql.types.DataType]): Column = dt match {
     case Some(org.apache.spark.sql.types.DateType) =>
@@ -935,11 +843,10 @@ object ManifestTable {
     * held the raw form would be a guaranteed FALSE NEGATIVE — a
     * silently dropped matching file. Two insertions at most per row per
     * column; `expectedOf(fileName)` supplies the per-file insertion
-    * budget (2×rows from the footer counts at write time; the caller's
-    * estimate for pre-v3 retrofits), so filters are SIZED TO CONTENT —
-    * a compacted 128 MB file gets the bits its fpp needs, a 500-row CDC
-    * file no longer pays the fixed 50k-item allocation. Files with no
-    * rows are absent from the result. */
+    * budget (2×rows from the recorded footer counts), so filters are
+    * SIZED TO CONTENT — a compacted 128 MB file gets the bits its fpp
+    * needs, a 500-row CDC file no longer pays a fixed 50k-item
+    * allocation. Files with no rows are absent from the result. */
   private def statsBloomPass(data: DataFrame,
       statsCols: Seq[String], bloomCols: Seq[String],
       expectedOf: String => Long, fpp: Double = 0.03)
@@ -1023,13 +930,13 @@ object ManifestTable {
     * `statsCol` + `extraStatsCols` AND a right-sized per-file Bloom
     * filter of `bloomCol` + `extraBloomCols` — so files appended AFTER
     * an [[indexBloom]] call keep the table's bloom coverage instead of
-    * silently never being skipped. Bloom payloads land in
-    * content-addressed SIDECAR files (`<table>/_blooms/`), the entry
+    * silently never being skipped. Bloom payloads land in the write
+    * unit's content-addressed PACK ([[writeBloomPack]]), the entry
     * carrying only the pointer — commit bodies stay O(~100 B) per file
-    * regardless of filter size. A file with NO non-null key rows gets
-    * the shared EMPTY filter (rejects every probe): sound — a rowless
-    * or all-null-key file can never hold a probed equality match — and
-    * it keeps footer-only schema keepers out of every point lookup.
+    * regardless of filter size. A file with NO rows gets the EMPTY
+    * filter (rejects every probe) as a slice of the same pack: sound —
+    * a rowless file can never hold a probed equality match — and it
+    * keeps footer-only schema keepers out of every point lookup.
     * The files are INVISIBLE to readers until a commit lists them —
     * writing is not publishing. */
   private def writeData(spark: SparkSession, rootP: HPath, fs: FileSystem,
@@ -1135,23 +1042,19 @@ object ManifestTable {
       else statsBloomPass(
         scan(spark, rootP, listed.map(st =>
           FileEntry(table, s"$dir/${st.getPath.getName}", None, None))),
-        statsCols, bloomCols,
-        fname => 2L * rowsByName.getOrElse(fname, DefaultBloomItems / 2))
-    lazy val emptyPointer =
-      SidecarMark + writeBloomSidecar(fs, rootP, table, emptyBloomBytes())
+        statsCols, bloomCols, fname => 2L * rowsByName(fname))
     // perFile keys are `/<name>` or full file paths: index by basename
     // once, not one scan of perFile per listed file
     val metaOf: Map[String, PerFileMeta] = perFile.map { case (f, m) =>
       f.substring(f.lastIndexOf('/') + 1) -> m }
-    // one pack object per write unit instead of one sidecar per
-    // (file, column) — see [[writeBloomPack]]
+    // one pack object per write unit, rowless files included — see
+    // [[writeBloomPack]]
     val packed = writeBloomPack(fs, rootP, table,
       for {
         s <- listed; n = s.getPath.getName
-        m <- metaOf.get(n).toSeq
         kc <- bloomCols
-        bytes <- m.blooms.get(kc).toSeq
-      } yield ((n, kc), bytes))
+      } yield ((n, kc), metaOf.get(n).flatMap(_.blooms.get(kc))
+        .getOrElse(emptyBloomBytes)))
     listed.map { s =>
       val n = s.getPath.getName
       val meta = metaOf.get(n)
@@ -1166,67 +1069,32 @@ object ManifestTable {
           stats.get(c).map { case (a, b) => (c, a, b) }),
         rows = rowsByName.get(n))
       bloomCols.foreach { kc =>
-        e = e.withBloom(kc, packed.getOrElse((n, kc), emptyPointer))
+        e = e.withBloom(kc, packed((n, kc)))
       }
       e
     }
   }
 
-  /** Serialized empty Bloom filter — what a file with no non-null key
-    * rows carries: rejects every probe, which is exact for such a
-    * file. Content addressing makes every footer-only file in a table
-    * share ONE sidecar. */
-  private def emptyBloomBytes(): Array[Byte] =
+  /** Serialized empty Bloom filter — what a rowless file carries:
+    * rejects every probe, which is exact for such a file. */
+  private lazy val emptyBloomBytes: Array[Byte] =
     graft.expressions.BloomExprs.toBytes(
       org.apache.spark.util.sketch.BloomFilter.create(1L, 0.03))
-
-  /** Write `bytes` as an immutable CONTENT-ADDRESSED bloom sidecar
-    * under `<table>/_blooms/` and return its relPath. Content
-    * addressing makes the write idempotent (a same-content racer lands
-    * on the same name; either rename outcome leaves the right bytes),
-    * dedups identical filters across files and versions, and lets
-    * carried entries reuse their sidecar untouched forever — a sidecar
-    * is only ever deleted by [[vacuum]], and only when NO retained
-    * version points at it. */
-  private def writeBloomSidecar(fs: FileSystem, rootP: HPath,
-                                table: String, bytes: Array[Byte]): String = {
-    val hex = sha16(bytes)
-    val rel = s"$table/_blooms/b-$hex.bloom"
-    writeSidecarObject(fs, rootP, rel, bytes)
-    rel
-  }
 
   private def sha16(bytes: Array[Byte]): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(bytes).take(16).map("%02x".format(_)).mkString
 
-  private def writeSidecarObject(fs: FileSystem, rootP: HPath, rel: String,
-                                 bytes: Array[Byte]): Unit = {
-    val dest = new HPath(rootP, rel)
-    if (!fs.exists(dest)) {
-      val dirP = dest.getParent
-      fs.mkdirs(dirP)
-      val tmp = new HPath(dirP, s".tmp-${uuid()}")
-      val out = fs.create(tmp, false)
-      try out.write(bytes) finally out.close()
-      if (!fs.rename(tmp, dest)) {
-        fs.delete(tmp, false) // lost a same-content race: dest is right
-        require(fs.exists(dest), s"bloom sidecar write failed: $dest")
-      }
-    }
-  }
-
   /** Write ALL of one write-unit's (file, column) bloom filters as ONE
-    * content-addressed PACK object (`p-<hex>.pack.bloom` — the `.bloom`
-    * suffix keeps [[vacuum]]'s walker and dir pruning working unchanged)
-    * and return per-(fileName, column) pointer payloads of the form
-    * `@<rel>#<offset>:<len>`. One commit's worth of filters was
-    * previously files × bloomCols separate sidecar objects — at the
-    * 10^4-file steady state the per-commit object count, not the bytes,
-    * dominated the manifest dir (guide §6 small files). Identical filter
-    * bytes dedup to one slice inside the pack; the pack itself is
-    * content-addressed, so replays and same-content racers stay
-    * idempotent exactly like single sidecars. */
+    * immutable content-addressed PACK object under `<table>/_blooms/`
+    * (`p-<hex>.pack.bloom`) and return per-(fileName, column) pointer
+    * payloads `@<rel>#<offset>:<len>` — O(1) objects per commit, not
+    * O(files × bloomCols) (guide §6 small files). Identical filter
+    * bytes dedup to one slice. Content addressing makes the write
+    * idempotent (a same-content racer lands on the same name; either
+    * rename outcome leaves the right bytes) and lets carried entries
+    * reuse their pack untouched forever — a pack is only ever deleted
+    * by [[vacuum]], and only when NO retained version points into it. */
   private def writeBloomPack(fs: FileSystem, rootP: HPath, table: String,
       filters: Seq[((String, String), Array[Byte])])
       : Map[(String, String), String] = {
@@ -1243,77 +1111,72 @@ object ManifestTable {
     offsets.values.foreach { case (b, _) => bos.write(b) }
     val pack = bos.toByteArray
     val rel = s"$table/_blooms/p-${sha16(pack)}.pack.bloom"
-    writeSidecarObject(fs, rootP, rel, pack)
+    val dest = new HPath(rootP, rel)
+    if (!fs.exists(dest)) {
+      fs.mkdirs(dest.getParent)
+      val tmp = new HPath(dest.getParent, s".tmp-${uuid()}")
+      val out = fs.create(tmp, false)
+      try out.write(pack) finally out.close()
+      if (!fs.rename(tmp, dest)) {
+        fs.delete(tmp, false) // lost a same-content race: dest is right
+        require(fs.exists(dest), s"bloom pack write failed: $dest")
+      }
+    }
     slices.map { case (k, (o, l)) =>
-      k -> s"$SidecarMark$rel#$o:$l" }.toMap
+      k -> s"$PointerMark$rel#$o:$l" }.toMap
   }
 
-  /** Driver-side cache of immutable sidecar payloads — content-addressed
+  /** Driver-side cache of immutable bloom packs — content-addressed
     * files never change, so a hit is valid forever; bounded in bytes
     * (one pack holds a whole write unit's filters, so entry sizes vary
     * by orders of magnitude), and correctness never depends on a hit. */
   private val BloomCacheBytes = 64L << 20
-  private val bloomSidecarCache = new ByteBoundedCache[String, Array[Byte]](
+  private val bloomPackCache = new ByteBoundedCache[String, Array[Byte]](
     BloomCacheBytes, (k, bytes) => 2L * k.length + bytes.length)
 
-  /** Materialize a bloom payload: `@<relPath>` pointers read their
-    * sidecar (cached), inline base64 payloads (pre-v3 commits) decode
-    * directly. */
-  private def bloomBytesOf(fs: FileSystem, rootP: HPath,
-                           payload: String): Array[Byte] =
-    if (!payload.startsWith(SidecarMark))
-      java.util.Base64.getDecoder.decode(payload)
-    else {
-      // `@<rel>` reads the whole sidecar; `@<rel>#<offset>:<len>` slices
-      // a pack — the pack is cached WHOLE (one object per write unit,
-      // so every file's probe of one commit shares a single read)
-      val raw = payload.stripPrefix(SidecarMark)
-      val (relPath, slice) = raw.indexOf('#') match {
-        case -1 => (raw, None)
-        case i =>
-          val frag = raw.substring(i + 1).split(":", -1).map(_.toLongOption)
-          val ol = frag match {
-            case Array(Some(o), Some(l)) if o >= 0L && l >= 0L => Some((o, l))
-            case _ => None
-          }
-          require(ol.isDefined,
-            s"corrupt bloom pack pointer (want @<rel>#<offset>:<len>): $payload")
-          (raw.substring(0, i), ol)
-      }
-      val p = new HPath(rootP, relPath)
-      val key = p.toString
-      val whole = bloomSidecarCache.getOrElseUpdate(key) {
-        val in = fs.open(p)
-        try {
-          val bos = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](65536)
-          var n = in.read(buf)
-          while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-          bos.toByteArray
-        } finally in.close()
-      }
-      slice match {
-        case None => whole
-        case Some((o, l)) =>
-          require(o <= whole.length && l <= whole.length - o,
-            s"bloom pack pointer out of range (pack holds " +
-              s"${whole.length} bytes): $payload")
-          java.util.Arrays.copyOfRange(whole, o.toInt, (o + l).toInt)
-      }
-    }
-
-  /** Deserialize a bloom payload into a probe-ready filter. */
+  /** The probe-ready filter a bloom payload points at: the pack is read
+    * and cached WHOLE (one object per write unit, so every file's probe
+    * of one commit shares a single read), and the filter deserializes
+    * straight from its slice. A payload that is not
+    * `@<rel>#<offset>:<len>`, or whose slice lies outside the pack,
+    * fails a require naming it. */
   private def bloomFilterOf(fs: FileSystem, rootP: HPath, payload: String)
-      : org.apache.spark.util.sketch.BloomFilter =
+      : org.apache.spark.util.sketch.BloomFilter = {
+    val raw = payload.stripPrefix(PointerMark)
+    val i = raw.indexOf('#')
+    val slice =
+      if (!payload.startsWith(PointerMark) || i < 0) None
+      else raw.substring(i + 1).split(":", -1).map(_.toLongOption) match {
+        case Array(Some(o), Some(l)) if o >= 0L && l >= 0L => Some((o, l))
+        case _ => None
+      }
+    require(slice.isDefined,
+      s"corrupt bloom pack pointer (want @<rel>#<offset>:<len>): $payload")
+    val (o, l) = slice.get
+    val p = new HPath(rootP, raw.substring(0, i))
+    val whole = bloomPackCache.getOrElseUpdate(p.toString) {
+      val in = fs.open(p)
+      try {
+        val bos = new java.io.ByteArrayOutputStream()
+        val buf = new Array[Byte](65536)
+        var n = in.read(buf)
+        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
+        bos.toByteArray
+      } finally in.close()
+    }
+    require(o <= whole.length && l <= whole.length - o,
+      s"bloom pack pointer out of range (pack holds " +
+        s"${whole.length} bytes): $payload")
     org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(bloomBytesOf(fs, rootP, payload)))
+      new java.io.ByteArrayInputStream(whole, o.toInt, l.toInt))
+  }
 
-  /** Rows across a [[writeData]] result — manifest arithmetic over the
-    * footer counts it always records, replacing the metadata-count
-    * Spark job every write path used to pay. */
-  private def writtenRows(written: Seq[FileEntry]): Long =
-    written.map(_.rows.getOrElse(sys.error(
-      s"writeData entry without a row count: ${written.head.relPath}"))).sum
+  /** Rows across data entries — manifest arithmetic over the footer
+    * counts every data entry carries ([[parseV2]] rejects one without),
+    * replacing a count job over the files. */
+  private def rowsOf(entries: Seq[FileEntry]): Long =
+    entries.map(e => e.rows.getOrElse(sys.error(
+      s"data entry without a row count: ${e.relPath}"))).sum
 
   /** [[writeData]] under the ONE-EXECUTION + footer-only discipline
     * shared by every rewrite path (transactionalMerge,
@@ -1337,7 +1200,7 @@ object ManifestTable {
     val written = writeData(spark, rootP, fs, table, df, statsCol, bloomCol,
       extraStatsCols = extraStatsCols, extraBloomCols = extraBloomCols)
     val dir = new HPath(rootP, written.head.relPath).getParent
-    val n = writtenRows(written)
+    val n = rowsOf(written)
     if (n > 0L) written
     else if (!keepSchemaIfEmpty) { fs.delete(dir, true); Nil }
     else {
@@ -1435,7 +1298,7 @@ object ManifestTable {
       throw new IllegalArgumentException(s"no committed table under $root"))
     val mine = entriesOf(Some(c), table)
     require(mine.nonEmpty, s"no table '$table' under $root")
-    val keep = mine.filter(e => e.statsFor(statsCol, Some(statsCol)) match {
+    val keep = mine.filter(e => e.statsFor(statsCol) match {
       case Some((mn, mx)) => mx >= lo && mn <= hi
       case None => true
     })
@@ -1484,12 +1347,12 @@ object ManifestTable {
   }
 
   /** The [[readPrunedIn]] skip test for one file: min/max range first
-    * (the primary pair when its recorded/declared name matches, or a
-    * named secondary group), then the per-file Bloom filter when one
+    * (the primary pair when its recorded name matches, or a named
+    * secondary group), then the per-file Bloom filter when one
     * covers `statsCol` (primary or secondary slot). */
   private def keepInSet(fs: FileSystem, rootP: HPath, e: FileEntry,
                         statsCol: String, values: Seq[Long]): Boolean = {
-    val rangeOk = e.statsFor(statsCol, Some(statsCol)) match {
+    val rangeOk = e.statsFor(statsCol) match {
       case Some((mn, mx)) => values.exists(v => v >= mn && v <= mx)
       case None => true
     }
@@ -1517,7 +1380,7 @@ object ManifestTable {
           s"no committed table under $root")).entries
     }
     val mine = entries.filter(_.table == table)
-    val keptRange = mine.count(e => e.statsFor(statsCol, Some(statsCol)) match {
+    val keptRange = mine.count(e => e.statsFor(statsCol) match {
       case Some((mn, mx)) => values.exists(v => v >= mn && v <= mx)
       case None => true
     })
@@ -1558,28 +1421,25 @@ object ManifestTable {
     * background maintenance op, never an outage.
     *
     * One distributed pass ([[statsBloomPass]]) builds every file's
-    * filter, SIZED per file from the manifest-recorded row count when
-    * the entry carries one (v3 writes) and from `expectedItemsPerFile`
-    * otherwise; payloads land in content-addressed sidecar files, the
-    * commit carrying only pointers — the commit body stays ~100 B per
-    * file however large the filters are.
+    * filter, SIZED per file from its manifest-recorded row count;
+    * payloads land in one content-addressed pack, the commit carrying
+    * only pointers — the commit body stays ~100 B per file however
+    * large the filters are.
     *
     * Files written AFTER this call (appends, compactions) carry no bloom
     * and are simply never skipped — re-run indexBloom to re-cover them.
     * Returns the new version. */
   def indexBloom(spark: SparkSession, root: String, table: String,
-                 keyCol: String, expectedItemsPerFile: Long = 50000L,
-                 fpp: Double = 0.03): Long = {
+                 keyCol: String, fpp: Double = 0.03): Long = {
     val (fs, rootP) = fsFor(spark, root)
     val cur = current(spark, root).getOrElse(
       throw new IllegalArgumentException(s"no committed table under $root"))
     val mine = entriesOf(Some(cur), table)
     require(mine.nonEmpty, s"no table '$table' under $root")
-    val rowsByName: Map[String, Long] = mine.flatMap(e =>
-      e.rows.map(r => e.relPath.split("/").last -> r)).toMap
+    val rowsByName: Map[String, Long] = mine.map(e =>
+      e.relPath.split("/").last -> rowsOf(Seq(e))).toMap
     val blooms = statsBloomPass(scan(spark, rootP, mine), Nil, Seq(keyCol),
-      fname => rowsByName.get(fname).map(2L * _)
-        .getOrElse(expectedItemsPerFile), fpp)
+      fname => 2L * rowsByName(fname), fpp)
     // one pack per retrofit call (see [[writeBloomPack]]), keyed here by
     // the entry's relPath since retrofits span multiple write dirs
     val packed = writeBloomPack(fs, rootP, table,
@@ -1808,7 +1668,7 @@ object ManifestTable {
         bloomCol, extraStatsCols = extraStatsCols,
         extraBloomCols = extraBloomCols)
       val newDir = new HPath(rootP, newEntries.head.relPath).getParent
-      val n = writtenRows(newEntries)
+      val n = rowsOf(newEntries)
       if (n == 0L) { fs.delete(newDir, true); return 0L }
       val carried = cur.map(_.entries).getOrElse(Nil)
       writeCommit(fs, rootP, cur.fold(1L)(_.version + 1L),
@@ -1824,7 +1684,7 @@ object ManifestTable {
       bloomCol, extraStatsCols = extraStatsCols,
       extraBloomCols = extraBloomCols)
     val newDir = new HPath(rootP, newEntries.head.relPath).getParent
-    val n = writtenRows(newEntries)
+    val n = rowsOf(newEntries)
     if (n == 0L) { fs.delete(newDir, true); return 0L } // no new version
     writeCommit(fs, rootP, cur.get.version + 1L,
       cur.get.entries ++ newEntries, parent = Some(cur.get.entries))
@@ -1973,9 +1833,8 @@ object ManifestTable {
     // matching row, so files whose recorded [min,max] misses the
     // implied range provably hold no match — the affected-file scan
     // reads only in-range files, the readPruned shape on a write path.
-    // EVERY column with recorded stats participates (the declared
-    // primary, legacy unnamed primaries under the declared name, and
-    // any secondary stats group); per-column necessity intersects.
+    // EVERY column with recorded stats participates (the named primary
+    // and any secondary stats group); per-column necessity intersects.
     // TYPE-GUARDED: conjunct literals are numeric, so narrowing applies
     // only to NUMERIC-typed columns — on a STRING column Spark coerces
     // the comparison to DOUBLE and a decimal-formatted value ("4.00")
@@ -1998,12 +1857,12 @@ object ManifestTable {
       case org.apache.spark.sql.types.TimestampType => true
       case _ => false
     }
-    val statCols = (statsCol.toSeq ++ mine.flatMap(e =>
-      e.statsName.toSeq ++ e.stats2.map(_._1))).distinct
+    val statCols = mine.flatMap(e =>
+      e.statsName.toSeq ++ e.stats2.map(_._1)).distinct
     val ranged = statCols.filter(rangeNarrowable).foldLeft(mine) { (cand, sc) =>
       impliedRange(predicate, sc, colType(sc)) match {
         case Some((lo, hi)) => cand.filter(e =>
-          e.statsFor(sc, statsCol) match {
+          e.statsFor(sc) match {
             case Some((mn, mx)) => mx >= lo && mn <= hi
             case None => true
           })
@@ -2104,8 +1963,7 @@ object ManifestTable {
       .collect().map(_.getString(0)).toSet
     if (affectedFiles.isEmpty) return (0L, 0L)
     val (aff, keep) = partitionAffected(rootP, mine, affectedFiles)
-    val adf = scan(spark, rootP, aff)
-    val keepRows = adf.filter(!delCond)
+    val keepRows = scan(spark, rootP, aff).filter(!delCond)
     // a fully-emptied table still commits one footer-only file so the
     // next read keeps its schema (the deleteWhere readability contract)
     val newEntries = writeDataNonEmptyOr(spark, rootP, fs, table, keepRows,
@@ -2113,12 +1971,8 @@ object ManifestTable {
       extraStatsCols)
     // deleted-row count by manifest arithmetic — affected footer rows
     // minus the survivor rows the rewrite just recorded — instead of a
-    // separate filter-count pass over the affected files; only pre-v2
-    // entries without footer counts pay the scan
-    val affRows = aff.flatMap(_.rows)
-    val nDel =
-      if (affRows.size == aff.size) affRows.sum - writtenRows(newEntries)
-      else adf.filter(delCond).count()
+    // separate filter-count pass over the affected files
+    val nDel = rowsOf(aff) - rowsOf(newEntries)
     writeCommit(fs, rootP, cur.version + 1L,
       cur.entries.filterNot(e => e.table == table) ++ keep ++ newEntries,
       parent = Some(cur.entries))
@@ -2169,11 +2023,10 @@ object ManifestTable {
     * O(candidates), not O(table). Sound by construction (a skipped
     * file provably contains NO probe key):
     *   - manifest min/max on a key column — applied only when the
-    *     file's RECORDED stats name matches the column (pre-v2 unnamed
-    *     stats trust the caller's declared column, the only information
-    *     there is): exact per-file containment against the collected
-    *     probe-key set when it is bounded (a sorted-array binary search
-    *     per file), the coarse [batchMin,batchMax] envelope past
+    *     file's RECORDED stats name matches the column: exact per-file
+    *     containment against the collected probe-key set when it is
+    *     bounded (a sorted-array binary search per file), the coarse
+    *     [batchMin,batchMax] envelope past
     *     [[MaxCollectedProbeKeys]];
     *   - per-file Bloom filters on the column (write-time or
     *     [[indexBloom]]-retrofitted, primary or secondary slot): a
@@ -2228,7 +2081,6 @@ object ManifestTable {
 
   private def discoveryCandidates(spark: SparkSession, rootP: HPath,
                                   probeKeys: DataFrame, key: Seq[String],
-                                  statsCol: Option[String],
                                   mine: Seq[FileEntry],
                                   tableSchema: org.apache.spark.sql.types.StructType): Seq[FileEntry] = {
     // a handful of files is cheaper to scan than to narrow (the probe
@@ -2242,7 +2094,7 @@ object ManifestTable {
         case _ => false
       }
       if (cand.size <= 4 || !aligned) cand
-      else narrowByColumn(spark, rootP, probeKeys, kc, statsCol, cand)
+      else narrowByColumn(spark, rootP, probeKeys, kc, cand)
     }
   }
 
@@ -2254,11 +2106,10 @@ object ManifestTable {
     * ([[canonLongExpr]]/[[bloomLongFormExpr]] — epoch-day for DATE keys,
     * whose plain long cast is an analysis error). */
   private def narrowByColumn(spark: SparkSession, rootP: HPath,
-                             probeKeys: DataFrame,
-                             kc: String, statsCol: Option[String],
+                             probeKeys: DataFrame, kc: String,
                              cand: Seq[FileEntry]): Seq[FileEntry] = {
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statsCover = cand.exists(_.statsFor(kc, statsCol).isDefined)
+    val statsCover = cand.exists(_.statsFor(kc).isDefined)
     val bloomsPresent = cand.exists(_.bloomFor(kc).isDefined)
     if (!statsCover && !bloomsPresent) return cand
     val probeDt = probeKeys.schema.find(_.name == kc).map(_.dataType)
@@ -2277,7 +2128,7 @@ object ManifestTable {
           // exact per-file containment against the sorted key set
           val longs = rows.filter(!_.isNullAt(0)).map(_.getLong(0)).sorted
           val anyUncastable = rows.exists(_.isNullAt(0))
-          cand.filter(e => e.statsFor(kc, statsCol) match {
+          cand.filter(e => e.statsFor(kc) match {
             case Some((mn, mx)) if !anyUncastable =>
               val i = java.util.Arrays.binarySearch(longs, mn)
               val from = if (i >= 0) i else -i - 1
@@ -2296,7 +2147,7 @@ object ManifestTable {
               lit(1L)).otherwise(lit(0L)))).head()
           val anyUncastable = !r.isNullAt(2) && r.getLong(2) > 0L
           if (r.isNullAt(0) || r.isNullAt(1) || anyUncastable) cand
-          else cand.filter(e => e.statsFor(kc, statsCol) match {
+          else cand.filter(e => e.statsFor(kc) match {
             case Some((mn, mx)) => mx >= r.getLong(0) && mn <= r.getLong(1)
             case None => true
           })
@@ -2346,11 +2197,10 @@ object ManifestTable {
     * name if a plan change ever reintroduces that. */
   private def affectedByKeys(spark: SparkSession, rootP: HPath,
                              probeKeys: DataFrame,
-                             key: Seq[String], statsCol: Option[String],
-                             mine: Seq[FileEntry],
+                             key: Seq[String], mine: Seq[FileEntry],
                              tableSchema: org.apache.spark.sql.types.StructType): (Seq[FileEntry], Seq[FileEntry]) = {
-    val cand = discoveryCandidates(spark, rootP, probeKeys, key, statsCol,
-      mine, tableSchema)
+    val cand = discoveryCandidates(spark, rootP, probeKeys, key, mine,
+      tableSchema)
     recordDiscoveryStats(rootP, mine.headOption.fold("")(_.table),
       DiscoveryStats(cand.size.toLong, mine.size.toLong))
     if (cand.isEmpty) return (Nil, mine)
@@ -2470,7 +2320,7 @@ object ManifestTable {
     // cut: the key set feeds discovery, the row count, and the rewrite
     val ks = graft.operators.Lineage.cut(
       keys.select(key.map(col): _*).distinct())
-    val (aff, keep) = affectedByKeys(spark, rootP, ks, key, statsCol, mine,
+    val (aff, keep) = affectedByKeys(spark, rootP, ks, key, mine,
       schemaOf(spark, rootP, mine.head))
     if (aff.isEmpty) return (0L, 0L)
     val newEntries = rewriteAffected(spark, rootP, fs, table, aff, ks,
@@ -2478,12 +2328,8 @@ object ManifestTable {
       bloomCol, extraBloomCols, extraStatsCols)
     // deleted-row count by manifest arithmetic — affected footer rows
     // minus survivor rows the rewrite just recorded — instead of a
-    // separate semi-join count pass over the affected files; only
-    // pre-v2 entries without footer counts pay the scan
-    val affRows = aff.flatMap(_.rows)
-    val nDel =
-      if (affRows.size == aff.size) affRows.sum - writtenRows(newEntries)
-      else scan(spark, rootP, aff).join(ks, key, "left_semi").count()
+    // separate semi-join count pass over the affected files
+    val nDel = rowsOf(aff) - rowsOf(newEntries)
     commitOrRebase(spark, fs, rootP, root, Some(cur),
       carriedOf = _.filterNot(_.table == table),
       added = keep ++ newEntries,
@@ -2544,23 +2390,18 @@ object ManifestTable {
     val touched = graft.operators.Lineage.cut(
       nr.select(key.map(col): _*)
         .unionByName(dropKeys.select(key.map(col): _*)).distinct())
-    val (aff, keep) = affectedByKeys(spark, rootP, touched, key, statsCol,
-      mine, schema)
+    val (aff, keep) = affectedByKeys(spark, rootP, touched, key, mine,
+      schema)
     val newEntries = rewriteAffected(spark, rootP, fs, table, aff, touched,
       key, inserts = Some(nr), keepSchemaIfEmpty = keep.isEmpty, statsCol,
       bloomCol, extraBloomCols, extraStatsCols)
     // dropped-row count by manifest arithmetic: the rewrite wrote
     // (affected survivors + nr), so dropped = affected footer rows +
     // |nr| − written rows — |nr| is a count over the already-
-    // materialized cut, far cheaper than the former semi-join pass over
-    // the affected parquet; pre-v2 entries without footer counts fall
-    // back to that pass
-    val affRows = aff.flatMap(_.rows)
+    // materialized cut, far cheaper than a semi-join pass over the
+    // affected parquet
     val nDropped =
-      if (aff.isEmpty) 0L
-      else if (affRows.size == aff.size)
-        affRows.sum + nr.count() - writtenRows(newEntries)
-      else scan(spark, rootP, aff).join(touched, key, "left_semi").count()
+      if (aff.isEmpty) 0L else rowsOf(aff) + nr.count() - rowsOf(newEntries)
     commitOrRebase(spark, fs, rootP, root, Some(cur),
       carriedOf = _.filterNot(_.table == table),
       added = keep ++ newEntries,
@@ -2627,8 +2468,8 @@ object ManifestTable {
     require(nSrcKeys == nSrc,
       "mergeInto: duplicate keys in source make the replace ambiguous")
     val srcKeys = src.select(key.map(col): _*)
-    val (aff, keep) = affectedByKeys(spark, rootP, srcKeys, key, statsCol,
-      mine, schema)
+    val (aff, keep) = affectedByKeys(spark, rootP, srcKeys, key, mine,
+      schema)
     val (nUpdated, nMatchedKeys) =
       if (aff.isEmpty) (0L, 0L)
       else {
@@ -2669,7 +2510,7 @@ object ManifestTable {
       throw new IllegalArgumentException(s"no committed table under $root"))
     val mine = entriesOf(Some(cur), table)
     require(mine.nonEmpty, s"no table '$table' under $root")
-    val bytes = tableBytes(fs, rootP, mine)
+    val bytes = tableBytes(mine)
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     val df = toDf(spark, rootP, cur.entries, table)
     val re = statsCol match {
@@ -2689,16 +2530,11 @@ object ManifestTable {
     (mine.size.toLong, newEntries.size.toLong)
   }
 
-  /** Sum of a table's file sizes, from the MANIFEST when the entries
-    * carry write-time byte sizes (zero FS calls — the steady state for
-    * every v2-written table); only pre-v2 entries without a recorded
-    * size pay a getFileStatus RPC, counted on [[fileStatCalls]]. */
-  private def tableBytes(fs: FileSystem, rootP: HPath,
-                         mine: Seq[FileEntry]): Long =
-    mine.map(e => e.bytes.getOrElse {
-      fileStatCalls.incrementAndGet()
-      fs.getFileStatus(new HPath(rootP, e.relPath)).getLen
-    }).sum
+  /** Sum of a table's file sizes from the manifest's write-time byte
+    * sizes — zero FS calls ([[parseV2]] rejects a data entry without). */
+  private def tableBytes(mine: Seq[FileEntry]): Long =
+    mine.map(e => e.bytes.getOrElse(sys.error(
+      s"data entry without a byte size: ${e.relPath}"))).sum
 
   /** Adaptive defrag for streaming maintainers ([[graft.streaming.CdcApply]],
     * [[graft.streaming.CorpusIngest]]): compacts `table` only when its
@@ -2709,8 +2545,8 @@ object ManifestTable {
     * and every micro-batch would rewrite the whole table. The sizing
     * reads the manifest's write-time byte sizes — a steady-state-large
     * table (≥ minFiles files forever, the normal shape of any big
-    * CDC-maintained table) pays ZERO per-file FS stats per micro-batch;
-    * only pre-v2 entries fall back to getFileStatus ([[tableBytes]]).
+    * CDC-maintained table) pays ZERO per-file FS stats per micro-batch
+    * ([[tableBytes]]).
     * A lost compaction commit CAS is swallowed, not retried:
     * maintenance is optional, the next trigger re-fires, and it must
     * never kill a stream whose batch data already committed. Returns
@@ -2723,10 +2559,9 @@ object ManifestTable {
                           extraBloomCols: Seq[String] = Nil,
                           extraStatsCols: Seq[String] = Nil): Option[(Long, Long)] = {
     require(minFiles >= 1, "minFiles >= 1")
-    val (fs, rootP) = fsFor(spark, root)
     val mine = entriesOf(current(spark, root), table)
     if (mine.size < minFiles) return None
-    val bytes = tableBytes(fs, rootP, mine)
+    val bytes = tableBytes(mine)
     val ideal = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
     if (mine.size < 2L * ideal) return None // the table NEEDS these files
     try Some(compact(spark, root, table, targetFileBytes, statsCol, bloomCol,
@@ -2779,7 +2614,7 @@ object ManifestTable {
     // empty batch still returns true without creating a version
     val written = writeData(spark, rootP, fs, table, df, statsCol)
     val writtenDir = new HPath(rootP, written.head.relPath).getParent
-    if (writtenRows(written) == 0L) {
+    if (rowsOf(written) == 0L) {
       fs.delete(writtenDir, true)
       return true
     }
@@ -2931,8 +2766,8 @@ object ManifestTable {
     // distinct shuffle
     val touched = graft.operators.Lineage.cut(
       up.select(key.map(col): _*).unionByName(del).distinct())
-    val (aff, keep) = affectedByKeys(spark, rootP, touched, key, statsCol,
-      mine, schema)
+    val (aff, keep) = affectedByKeys(spark, rootP, touched, key, mine,
+      schema)
     if (aff.isEmpty && nUp == 0L) return true // no-change batch
     val newEntries = rewriteAffected(spark, rootP, fs, table, aff, touched,
       key, if (nUp == 0L) None else Some(up),
@@ -3107,23 +2942,17 @@ object ManifestTable {
       else drop.toSeq.partition(n =>
         fs.getFileStatus(new HPath(cd, n)).getModificationTime < horizon)
     // referenced = every data file of a retained version's RESOLVED
-    // state PLUS every bloom sidecar its entries point at — sidecars
-    // are reclaimed exactly like data files, only when no retained
+    // state PLUS every bloom pack its entries point into — packs are
+    // reclaimed exactly like data files, only when no retained
     // version needs them. Resolution happens BEFORE any deletion, while
     // the full delta chain still exists.
     val retainedNames = (dropRetained ++ keep.toSeq).sorted
     val referenced: Set[String] = retainedNames.flatMap { n =>
       val CommitName(seq) = n
       resolveEntries(fs, cd, seq.toLong).flatMap(e =>
-        e.relPath +: (e.bloom.toSeq ++ e.blooms2).map(_._2)
-          .filter(_.startsWith(SidecarMark))
-          // pack pointers carry a `#offset:len` fragment — the
-          // referenced OBJECT is the pack file itself
-          .map { p =>
-            val q = p.stripPrefix(SidecarMark)
-            val i = q.indexOf('#')
-            if (i < 0) q else q.substring(0, i)
-          })
+        // a pointer's referenced OBJECT is the pack before its fragment
+        e.relPath +: (e.bloom.toSeq ++ e.blooms2).map(_._2
+          .stripPrefix(PointerMark).takeWhile(_ != '#')))
     }.toSet
     // delta-chain safety before dropping ancestors: checkpoint the
     // oldest RETAINED version (same rule as compactLog)
@@ -3149,7 +2978,7 @@ object ManifestTable {
               && (minAgeMs == 0L || f.getModificationTime < horizon)) {
             toDelete += f.getPath
             if (name.endsWith(".bloom"))
-              bloomSidecarCache.remove(fs.makeQualified(f.getPath).toString)
+              bloomPackCache.remove(fs.makeQualified(f.getPath).toString)
           }
         }
         toDelete.foreach { p => fs.delete(p, false); deleted += 1 }

@@ -284,8 +284,7 @@ class ManifestTableSpec extends SparkSpec {
       .select($"id", md5(concat(lit("k"), $"id")).as("digest"))
     ManifestTable.publish(spark, root,
       Map("t" -> digested(0, 400).repartition(4, $"id")))
-    ManifestTable.indexBloom(spark, root, "t", "digest",
-      expectedItemsPerFile = 1000L, fpp = 0.001)
+    ManifestTable.indexBloom(spark, root, "t", "digest", fpp = 0.001)
     val target = digested(0, 400).filter($"id" === 123L)
       .select("digest").as[String].head()
 
@@ -306,8 +305,7 @@ class ManifestTableSpec extends SparkSpec {
     ManifestTable.appendNew(spark, root, "t", digested(400, 500), Seq("id"))
     val (k2, t2) = ManifestTable.bloomPruneStats(spark, root, "t", "digest", "not-a-digest")
     assert(t2 > total && k2 == t2 - total, "bloom-less appended files always open")
-    ManifestTable.indexBloom(spark, root, "t", "digest",
-      expectedItemsPerFile = 1000L, fpp = 0.001)
+    ManifestTable.indexBloom(spark, root, "t", "digest", fpp = 0.001)
     val (k3, _) = ManifestTable.bloomPruneStats(spark, root, "t", "digest", "not-a-digest")
     assert(k3 == 0L)
     assert(ManifestTable.readPrunedEq(spark, root, "t", "digest", target)
@@ -456,7 +454,7 @@ class ManifestTableSpec extends SparkSpec {
         g.split(":", -1) match {
           case Array("P", c, ptr) =>
             val rel = unb64(ptr)
-            s"P:$c:${b64(rel.substring(0, rel.indexOf('#') + 1) + fragment)}"
+            s"P:$c:${b64(rel.substring(0, rel.indexOf('#')) + fragment)}"
           case _ => g
         }
       }.mkString("\t")).mkString("\n")
@@ -468,13 +466,93 @@ class ManifestTableSpec extends SparkSpec {
         ManifestTable.bloomPruneStats(spark, root, "t", "digest", "x")
       }.getMessage
     }
-    val malformed = probeWith("12:x")
+    val malformed = probeWith("#12:x")
     assert(malformed.contains("corrupt bloom pack pointer") &&
       malformed.contains(".pack.bloom#12:x"), malformed)
-    assert(probeWith("7").contains(".pack.bloom#7"))
-    val beyond = probeWith("99999:16")
+    assert(probeWith("#7").contains(".pack.bloom#7"))
+    // a pointer without any fragment is no pack slice either
+    val bare = probeWith("")
+    assert(bare.contains("corrupt bloom pack pointer") &&
+      bare.endsWith(".pack.bloom"), bare)
+    val beyond = probeWith("#99999:16")
     assert(beyond.contains("out of range") &&
       beyond.contains(".pack.bloom#99999:16"), beyond)
+  }
+
+  test("one on-disk format: every commit and checkpoint line is #2, data " +
+      "entries carry bytes and rows, every bloom is a pack slice") {
+    val root = tmpDir("mtformat")
+    def digested(lo: Long, hi: Long) = spark.range(lo, hi)
+      .select($"id", md5(concat(lit("k"), $"id")).as("digest"))
+    val (stats, bloom) = (Some("id"), Some("digest"))
+    ManifestTable.publish(spark, root,
+      Map("t" -> digested(0, 40).repartition(2)),
+      statsCols = Map("t" -> "id"), bloomCols = Map("t" -> "digest"))
+    ManifestTable.appendNew(spark, root, "t", digested(40, 50), Seq("id"),
+      statsCol = stats, bloomCol = bloom)
+    ManifestTable.mergeInto(spark, root, "t", digested(45, 55), Seq("id"),
+      statsCol = stats, bloomCol = bloom)
+    assert(ManifestTable.transactionalMerge(spark, root, "t",
+      digested(55, 60), digested(0, 0).select("id"), Seq("id"), "w", 0L,
+      statsCol = stats, bloomCol = bloom))
+    // every row goes: the commit keeps one rowless schema-keeper file
+    assert(ManifestTable.deleteWhere(spark, root, "t", lit(true),
+      statsCol = stats, bloomCol = bloom)._2 == 60L)
+    ManifestTable.compact(spark, root, "t", statsCol = stats,
+      bloomCol = bloom)
+    def bodies(prefix: String) = new java.io.File(s"$root/_commits")
+      .listFiles().filter(_.getName.startsWith(prefix)).sortBy(_.getName)
+      .toSeq.map { f => f.getName -> new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .split("\n").filter(_.nonEmpty).toSeq }
+    val commits = bodies("c-")
+    assert(commits.size == 6, commits.map(_._1))
+    ManifestTable.compactLog(spark, root)
+    val checkpoints = bodies("k-")
+    assert(checkpoints.nonEmpty, "compactLog lands a k- checkpoint")
+    val entries = (commits ++ checkpoints).flatMap { case (name, lines) =>
+      lines.filterNot(l => l == ManifestTable.DeltaMarker ||
+          l.startsWith(ManifestTable.RemoveMarker + "\t"))
+        .map { l =>
+          assert(l.startsWith("#2\t"), s"$name: $l")
+          val Seq(e) = ManifestTable.parseEntryLines(Iterator(l), name)
+          e
+        }
+    }
+    val data = entries.filter(_.table == "t")
+    assert(entries.exists(_.table == "_txn") && data.nonEmpty)
+    assert(data.forall(e => e.bytes.isDefined && e.rows.isDefined), data)
+    val Pointer = """@t/_blooms/p-[0-9a-f]+\.pack\.bloom#\d+:\d+""".r
+    val payloads = data.flatMap(e => (e.bloom.toSeq ++ e.blooms2).map(_._2))
+    assert(data.forall(_.bloomFor("digest").isDefined) &&
+      payloads.forall(Pointer.matches), payloads.distinct)
+    assert(data.exists(_.rows.contains(0L)), "the rowless keeper is listed")
+    val blooms = new java.io.File(s"$root/t/_blooms").list().toSeq
+    assert(!blooms.exists(_.startsWith("b-")), blooms)
+    // the keeper reads back empty with its schema and opens no file on a
+    // point lookup: its empty filter rejects every probe
+    ManifestTable.dropStateCacheForTest()
+    assert(ManifestTable.read(spark, root, "t").columns.toSeq ==
+      Seq("id", "digest"))
+    assert(ManifestTable.bloomPruneStats(spark, root, "t", "digest",
+      "x") == ((0L, 1L)))
+    // hand-written commits outside the grammar fail naming the file
+    def b64(x: String) = java.util.Base64.getEncoder
+      .encodeToString(x.getBytes("UTF-8"))
+    Seq("four-field" -> "t\tt/d-x/a.parquet\t1\t1",
+      "inline-bloom" -> s"#2\tt\tt/d-x/a.parquet\t9\tB:${b64("id")}:AAAA\tR:1",
+      "no-rows" -> s"#2\tt\tt/d-x/a.parquet\t9\tS:${b64("id")}:1:1")
+      .foreach { case (name, line) =>
+        val r = tmpDir(s"mtformat-$name")
+        new java.io.File(s"$r/_commits").mkdirs()
+        java.nio.file.Files.write(java.nio.file.Paths.get(
+          s"$r/_commits/c-00000000000000000001.txt"),
+          (line + "\n").getBytes("UTF-8"))
+        val msg = intercept[java.io.IOException](
+          ManifestTable.current(spark, r)).getMessage
+        assert(msg.contains("corrupt commit line") &&
+          msg.contains("c-00000000000000000001.txt"), s"$name: $msg")
+      }
   }
 
   /** Spark jobs started while `body` runs. */
@@ -590,33 +668,19 @@ class ManifestTableSpec extends SparkSpec {
       "the inferred schema is cached again")
   }
 
-  test("deleteWhere keeps rows whose predicate is NULL and reports the " +
-      "same count with and without footer row counts") {
+  test("deleteWhere keeps rows whose predicate is NULL and counts only " +
+      "the rows it deleted") {
     val rows = Seq((1L, Some(5L)), (2L, None), (3L, Some(50L)),
       (4L, None), (5L, Some(7L)), (6L, None))
     val df = rows.toDF("id", "score").repartition(2)
     val pred = $"score" < 10L // NULL on ids 2, 4 and 6
-    def ids(root: String) = ManifestTable.read(spark, root, "t")
-      .select("id").as[Long].collect().toSet
-    // footer branch: the deleted count is manifest row arithmetic
+    // the deleted count is manifest row arithmetic over footer counts
     val root = tmpDir("mtnull") + "/t"
     ManifestTable.overwrite(spark, root, "t", df)
-    assert(ManifestTable.current(spark, root).get.entries.forall(_.rows.isDefined))
-    val (_, footerCount) = ManifestTable.deleteWhere(spark, root, "t", pred)
-    // scan branch: the same files under pre-v2 lines without row counts
-    val legacy = tmpDir("mtnull-legacy") + "/t"
-    df.write.parquet(s"$legacy/t/d-legacy")
-    val parts = new java.io.File(s"$legacy/t/d-legacy").list()
-      .filter(_.endsWith(".parquet")).sorted
-    new java.io.File(s"$legacy/_commits").mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$legacy/_commits/c-00000000000000000001.txt"),
-      parts.map(p => s"t\tt/d-legacy/$p\t\t\n").mkString.getBytes("UTF-8"))
-    assert(ManifestTable.current(spark, legacy).get.entries.forall(_.rows.isEmpty))
-    val (_, scanCount) = ManifestTable.deleteWhere(spark, legacy, "t", pred)
-    assert(footerCount == 2L && scanCount == 2L,
-      s"footer branch $footerCount, scan branch $scanCount")
-    assert(ids(root) == Set(2L, 3L, 4L, 6L) && ids(legacy) == ids(root))
+    val (_, deleted) = ManifestTable.deleteWhere(spark, root, "t", pred)
+    assert(deleted == 2L, s"deleted count $deleted")
+    assert(ManifestTable.read(spark, root, "t").select("id").as[Long]
+      .collect().toSet == Set(2L, 3L, 4L, 6L))
   }
 
   test("footer-derived DATE and LONG stats equal the scan-derived ones, " +
@@ -647,9 +711,9 @@ class ManifestTableSpec extends SparkSpec {
     assert(fe.forall(_.bloomFor("k").isEmpty) && se.forall(_.bloomFor("k").isDefined))
     fe.zip(se).foreach { case (f, s) =>
       Seq("d", "n").foreach { c =>
-        assert(f.statsFor(c, Some("d")) == s.statsFor(c, Some("d")),
-          s"$c stats of ${f.relPath}: footer ${f.statsFor(c, Some("d"))}, " +
-            s"scan ${s.statsFor(c, Some("d"))}")
+        assert(f.statsFor(c) == s.statsFor(c),
+          s"$c stats of ${f.relPath}: footer ${f.statsFor(c)}, " +
+            s"scan ${s.statsFor(c)}")
       }
       assert(f.rows == s.rows)
     }

