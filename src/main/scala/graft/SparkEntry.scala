@@ -967,10 +967,10 @@ object SparkEntry {
         iters = 5, damping = 0.85)
     }),
 
-    // Persisted + LAYERED graph-ANN (the ivfWrite contract for the
-    // graph family): graphWrite materializes the full k-NN edge list
+    // Persisted + LAYERED graph-ANN (the persisted IVF contract for the
+    // graph family): graphWriteVersioned commits the full k-NN edge list
     // AND a deterministic sampled upper layer (id % 4 == 0, HNSW-style
-    // two-level hierarchy) partitioned by src shard; the search is a
+    // two-level hierarchy) in one manifest commit; the search is a
     // cheap beam over the sparse upper graph first (localizes every
     // query from 4 fixed entries), then the full-layer beam SEEDED by
     // those per-query-adapted entry points + LSH bucket mates — which
@@ -987,12 +987,12 @@ object SparkEntry {
       val exact = operators.Lineage.cut(
         Similarity.bruteForceTopK(e, qs, "vec_id", "embedding",
           k = 10).select(col("query_id"), col("vec_id")))
-      val path = java.nio.file.Files.createTempDirectory("graft-gann-idx")
-        .toString
-      operators.GraphAnn.graphWrite(e, "vec_id", "embedding", dim = 64,
-        planes = 4, tables = 2, degree = 16, refine = 1, path = path,
-        upperMod = 4, upperDegree = 8, upperRefine = 0)
-      val ann = operators.GraphAnn.layeredTopKPartitioned(s, path, e, qs,
+      val root = java.nio.file.Files.createTempDirectory("graft-gann-idx")
+        .toString + "/g"
+      operators.GraphAnn.graphWriteVersioned(e, "vec_id", "embedding",
+        dim = 64, planes = 4, tables = 2, degree = 16, refine = 1,
+        root = root, upperMod = 4, upperDegree = 8, upperRefine = 0)
+      val ann = operators.GraphAnn.layeredTopKVersioned(s, root, e, qs,
           "vec_id", "embedding", dim = 64, planes = 4, tables = 2,
           entries = Seq(0L, 4L, 8L, 12L), upperRounds = 2, upperWidth = 16,
           rounds = 3, beamWidth = 48)
@@ -1109,10 +1109,11 @@ object SparkEntry {
     }),
 
     // Incremental ANN-index maintenance: the q311 index built WITHOUT
-    // vec_ids 5..24, then those 20 vectors inserted via graphAppend
-    // (beam-searched neighborhoods + reverse-edge re-rank — never a
-    // rebuild), then the probes searched against the UPDATED persisted
-    // index. The board adds delta accounting: of each probe's exact
+    // vec_ids 5..24, then those 20 vectors inserted via
+    // graphAppendVersioned (beam-searched neighborhoods + reverse-edge
+    // re-rank — never a rebuild; 20 of 480 appended stays below the 0.5
+    // upper-rebuild bar), then the probes searched against the UPDATED
+    // persisted index. The board adds delta accounting: of each probe's exact
     // top-10 that live in the inserted batch, how many the post-append
     // search finds — proof the insertion made new nodes discoverable,
     // not just stored. Oracle replays base build, insertion and the
@@ -1123,15 +1124,15 @@ object SparkEntry {
       val base = e.filter(!isDelta)
       val delta = e.filter(isDelta)
       val qs = e.filter(col("vec_id") < 5)
-      val path = java.nio.file.Files.createTempDirectory("graft-gann-app")
-        .toString
-      operators.GraphAnn.graphWrite(base, "vec_id", "embedding", dim = 64,
-        planes = 4, tables = 2, degree = 16, refine = 1, path = path,
-        upperMod = 4, upperDegree = 8, upperRefine = 0)
-      operators.GraphAnn.graphAppend(s, path, base, delta, "vec_id",
-        "embedding", dim = 64, planes = 4, tables = 2, degree = 16,
-        rounds = 2, beamWidth = 32, entries = Seq(0L, 4L, 28L, 32L))
-      val ann = operators.GraphAnn.layeredTopKPartitioned(s, path, e, qs,
+      val root = java.nio.file.Files.createTempDirectory("graft-gann-app")
+        .toString + "/g"
+      operators.GraphAnn.graphWriteVersioned(base, "vec_id", "embedding",
+        dim = 64, planes = 4, tables = 2, degree = 16, refine = 1,
+        root = root, upperMod = 4, upperDegree = 8, upperRefine = 0)
+      operators.GraphAnn.graphAppendVersioned(s, root, base, delta,
+        "vec_id", "embedding", rounds = 2, beamWidth = 32,
+        entries = Seq(0L, 4L, 28L, 32L))
+      val ann = operators.GraphAnn.layeredTopKVersioned(s, root, e, qs,
           "vec_id", "embedding", dim = 64, planes = 4, tables = 2,
           entries = Seq(0L, 4L, 28L, 32L), upperRounds = 2, upperWidth = 16,
           rounds = 3, beamWidth = 48)
@@ -1190,10 +1191,10 @@ object SparkEntry {
 
     // Incremental IVF-index maintenance (the q317 story for the
     // quantization family): the q38 index built WITHOUT vec_ids 5..24,
-    // then those 20 vectors inserted via ivfAppend — assigned to the
-    // EXISTING centroids (no re-train), appended to the affected
-    // list_id partitions only — then the probes searched against the
-    // updated persisted index through the partition-pruned path.
+    // then those 20 vectors inserted via ivfAppendVersioned — assigned
+    // to the EXISTING centroids (no re-train), committed as new files
+    // only — then the probes searched against the updated persisted
+    // index through the file-skipping path.
     // Assignment is per-vector, so the oracle replays it in one pass
     // over base ∪ delta under the base-corpus centroids; search output
     // is hash-checked end to end (delta vectors must surface in the
@@ -1201,13 +1202,13 @@ object SparkEntry {
     "q320_ivf_append" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val isDelta = col("vec_id") >= 5 && col("vec_id") < 25
-      val path = java.nio.file.Files.createTempDirectory("graft-ivf-app")
+      val root = java.nio.file.Files.createTempDirectory("graft-ivf-app")
         .toString + "/ivf"
-      val cents = Similarity.ivfWrite(e.filter(!isDelta), "vec_id",
-        "embedding", path, nlist = 16)
-      Similarity.ivfAppend(e.filter(isDelta), "vec_id", "embedding", path,
-        cents)
-      Similarity.ivfTopKPartitioned(s, path, cents,
+      val cents = Similarity.ivfWriteVersioned(e.filter(!isDelta), "vec_id",
+        "embedding", root, nlist = 16)
+      Similarity.ivfAppendVersioned(e.filter(isDelta), "vec_id", "embedding",
+        root, cents)
+      Similarity.ivfTopKVersioned(s, root, cents,
         e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10,
         nprobe = 4)
     }),
@@ -1247,21 +1248,20 @@ object SparkEntry {
     }),
 
     // IVF index DELETE — the missing quarter of the index lifecycle
-    // (q38 write / q320 append / delete / vacuum): LSM-style tombstone
-    // sidecar, never a data-file rewrite — a delete batch costs
-    // O(batch), base files stay immutable, and the search anti-joins
-    // the broadcast tombstone set. Deletes vec_id % 7 == 3 from a
-    // full-corpus index, then the q320 search shape; the oracle
-    // replays assignment and search minus the tombstoned rows.
+    // (q38 write / q320 append / delete / vacuum): a keyed forget of
+    // vec_id % 7 == 3 from a full-corpus index — the id set probes the
+    // per-file vec_id blooms and only files holding a forgotten vector
+    // are rewritten, in one commit — then the q320 search shape; the
+    // oracle replays assignment and search minus the forgotten rows.
     "q324_ivf_delete" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val path = java.nio.file.Files.createTempDirectory("graft-ivf-del")
+      val root = java.nio.file.Files.createTempDirectory("graft-ivf-del")
         .toString + "/ivf"
-      val cents = Similarity.ivfWrite(e, "vec_id", "embedding", path,
-        nlist = 16)
-      Similarity.ivfDelete(s, path,
+      val cents = Similarity.ivfWriteVersioned(e, "vec_id", "embedding",
+        root, nlist = 16)
+      Similarity.ivfForgetVersioned(s, root,
         e.filter(col("vec_id") % 7 === 3).select(col("vec_id")))
-      Similarity.ivfTopKPartitioned(s, path, cents,
+      Similarity.ivfTopKVersioned(s, root, cents,
         e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10,
         nprobe = 4)
     }),
@@ -1270,22 +1270,22 @@ object SparkEntry {
     // tombstoned nodes keep ROUTING the beam — their edges stay in
     // both layers, cutting them would disconnect regions — but can
     // never be RETURNED: the final beam is anti-joined against the
-    // tombstone sidecar and re-ranked, so rank <= 10 still yields 10
-    // LIVE results. Tombstones vec_id % 5 == 2 (including upper entry
+    // tombstone table and re-ranked, so rank <= 10 still yields 10
+    // LIVE results. Soft-deletes vec_id % 5 == 2 (including upper entry
     // 12 and query 2's own id — both still route). Build uses the
     // cheap refine=0 profile: the grade here is delete semantics, not
     // recall (q311 holds the recall gates). Oracle replays build, both
     // beam phases, and the live re-rank.
     "q325_graph_ann_delete" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val path = java.nio.file.Files.createTempDirectory("graft-gann-del")
-        .toString
-      operators.GraphAnn.graphWrite(e, "vec_id", "embedding", dim = 64,
-        planes = 4, tables = 2, degree = 16, refine = 0, path = path,
-        upperMod = 4, upperDegree = 8, upperRefine = 0)
-      operators.GraphAnn.graphDelete(s, path,
+      val root = java.nio.file.Files.createTempDirectory("graft-gann-del")
+        .toString + "/g"
+      operators.GraphAnn.graphWriteVersioned(e, "vec_id", "embedding",
+        dim = 64, planes = 4, tables = 2, degree = 16, refine = 0,
+        root = root, upperMod = 4, upperDegree = 8, upperRefine = 0)
+      operators.GraphAnn.graphDeleteVersioned(s, root,
         e.filter(col("vec_id") % 5 === 2).select(col("vec_id")))
-      operators.GraphAnn.layeredTopKPartitioned(s, path, e,
+      operators.GraphAnn.layeredTopKVersioned(s, root, e,
           e.filter(col("vec_id") < 5), "vec_id", "embedding", dim = 64,
           planes = 4, tables = 2, entries = Seq(0L, 4L, 8L, 12L),
           upperRounds = 1, upperWidth = 16, rounds = 2, beamWidth = 32)
@@ -1309,7 +1309,7 @@ object SparkEntry {
     // a removed document must stop generating near-dup candidates
     // immediately, not at the next re-index), then dedup the %10==0
     // batch against the maintained index (forget class %10==2 is
-    // chosen to intersect the q81 pair set, so the tombstone path is
+    // chosen to intersect the q81 pair set, so the forget path is
     // actually graded, not vacuous). Oracle = exact cross Jaccard
     // between the batch and the LIVE indexed set (the q81
     // empirical-recall caveat, minus the forgotten ids).
@@ -1317,15 +1317,15 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val m10 = col("doc_id") % 10
       val idxTmp = java.nio.file.Files.createTempDirectory("graft-mh-lc")
-      val idx = idxTmp.resolve("index").toString
-      Dedup.writeMinhashIndex(docs.filter(m10 =!= 0 && m10 =!= 1), "text",
-        "doc_id", idx, bands = 16, rowsPerBand = 2, shingleN = 3)
-      Dedup.minhashIndexAppend(s, docs.filter(m10 === 1), "text", "doc_id",
-        idx, bands = 16, rowsPerBand = 2, shingleN = 3)
-      Dedup.minhashIndexDelete(s, idx,
-        docs.filter(m10 === 2).select(col("doc_id")))
-      val out = Dedup.incrementalPairs(s, docs.filter(m10 === 0),
-          docs.filter(m10 =!= 0), "text", "doc_id", idx,
+      val root = idxTmp.resolve("index").toString
+      Dedup.minhashIndexWriteVersioned(docs.filter(m10 =!= 0 && m10 =!= 1),
+        "text", "doc_id", root, bands = 16, rowsPerBand = 2, shingleN = 3)
+      Dedup.minhashIndexAppendVersioned(s, docs.filter(m10 === 1), "text",
+        "doc_id", root, bands = 16, rowsPerBand = 2, shingleN = 3)
+      Dedup.minhashIndexForgetVersioned(s, root,
+        docs.filter(m10 === 2).select(col("doc_id").as("id")))
+      val out = Dedup.incrementalPairsVersioned(s, docs.filter(m10 === 0),
+          docs.filter(m10 =!= 0), "text", "doc_id", root,
           bands = 16, rowsPerBand = 2, shingleN = 3, threshold = 0.35)
         .localCheckpoint() // materialize, then drop the on-disk index
       etl.IncrementalLoad.deleteRecursively(idxTmp)
@@ -1635,21 +1635,21 @@ object SparkEntry {
     }),
 
     // FILTERED ANN: top-10 among label == 3 only — the metadata column
-    // rides in the index files (ivfWrite metaCols), so the predicate
-    // pushes into the probed-list parquet scan (PartitionFilters ×
-    // PushedFilters, spec-asserted) instead of post-hoc filtering an
-    // unconstrained top-k (which, at 10 uniform labels, would keep ~1
-    // of 10 results). nprobe raised to 6: the standard over-probe
+    // rides in the index files (ivfWriteVersioned metaCols), so the
+    // predicate pushes into the scan of the probed lists' files (file
+    // skipping × PushedFilters, spec-asserted) instead of post-hoc
+    // filtering an unconstrained top-k (which, at 10 uniform labels,
+    // would keep ~1 of 10 results). nprobe raised to 6: the standard over-probe
     // trade under a selective predicate.
     "q328_filtered_ann" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val path = java.nio.file.Files.createTempDirectory("graft-ivf-flt")
+      val root = java.nio.file.Files.createTempDirectory("graft-ivf-flt")
         .toString + "/ivf"
-      val cents = Similarity.ivfWrite(e, "vec_id", "embedding", path,
-        nlist = 16, metaCols = Seq("label"))
-      Similarity.ivfTopKPartitionedWhere(s, path, cents,
-        e.filter(col("vec_id") < 5), "vec_id", "embedding",
-        col("label") === 3, k = 10, nprobe = 6)
+      val cents = Similarity.ivfWriteVersioned(e, "vec_id", "embedding",
+        root, nlist = 16, metaCols = Seq("label"))
+      Similarity.ivfTopKVersioned(s, root, cents,
+        e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10,
+        nprobe = 6, pred = Some(col("label") === 3))
     }),
 
     // FILTERED graph-ANN (the q328 constraint on the graph index): the
@@ -1660,12 +1660,12 @@ object SparkEntry {
     // beamWidth ≈ k/selectivity). Same cheap build profile as q325.
     "q329_graph_ann_filtered" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val path = java.nio.file.Files.createTempDirectory("graft-gann-flt")
-        .toString
-      operators.GraphAnn.graphWrite(e, "vec_id", "embedding", dim = 64,
-        planes = 4, tables = 2, degree = 16, refine = 0, path = path,
-        upperMod = 4, upperDegree = 8, upperRefine = 0)
-      operators.GraphAnn.layeredTopKPartitionedWhere(s, path, e,
+      val root = java.nio.file.Files.createTempDirectory("graft-gann-flt")
+        .toString + "/g"
+      operators.GraphAnn.graphWriteVersioned(e, "vec_id", "embedding",
+        dim = 64, planes = 4, tables = 2, degree = 16, refine = 0,
+        root = root, upperMod = 4, upperDegree = 8, upperRefine = 0)
+      operators.GraphAnn.layeredTopKVersionedWhere(s, root, e,
           e.filter(col("vec_id") < 5), "vec_id", "embedding", dim = 64,
           planes = 4, tables = 2, entries = Seq(0L, 4L, 8L, 12L),
           pred = col("label") === 3, upperRounds = 1, upperWidth = 16,
@@ -3339,11 +3339,12 @@ object SparkEntry {
       val old = docs.filter(col("doc_id") % 10 =!= 0)
       val fresh = docs.filter(col("doc_id") % 10 === 0)
       val idxTmp = java.nio.file.Files.createTempDirectory("graft-mh-idx")
-      val idx = idxTmp.resolve("index").toString
-      Dedup.writeMinhashIndex(old, "text", "doc_id", idx,
+      val root = idxTmp.resolve("index").toString
+      Dedup.minhashIndexWriteVersioned(old, "text", "doc_id", root,
         bands = 16, rowsPerBand = 2, shingleN = 3)
-      val out = Dedup.incrementalPairs(s, fresh, old, "text", "doc_id", idx,
-          bands = 16, rowsPerBand = 2, shingleN = 3, threshold = 0.35)
+      val out = Dedup.incrementalPairsVersioned(s, fresh, old, "text",
+          "doc_id", root, bands = 16, rowsPerBand = 2, shingleN = 3,
+          threshold = 0.35)
         .localCheckpoint() // materialize, then drop the on-disk index
       etl.IncrementalLoad.deleteRecursively(idxTmp)
       out
@@ -8869,7 +8870,7 @@ object SparkEntry {
     // the q38 mirror with centroids seeded from the BASE corpus (delta
     // ids 5..24 excluded from the seed scan) and assignment over
     // base ∪ delta in one pass — per-vector assignment is batch-order
-    // independent, so this replays ivfWrite-then-ivfAppend exactly
+    // independent, so this replays the write-then-append exactly
     "q320_ivf_append" ->
       ("""WITH cents AS (
         |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid, embedding AS cv
@@ -8968,8 +8969,8 @@ object SparkEntry {
         |  FROM scored) WHERE rn <= 10""".stripMargin),
 
     // the q320 assignment replay over the FULL corpus, with the
-    // tombstoned rows (vec_id % 7 = 3) removed from the candidate set —
-    // exactly the search-side anti-join of the tombstone sidecar
+    // forgotten rows (vec_id % 7 = 3) removed from the candidate set —
+    // exactly what the keyed forget deletes from the index
     "q324_ivf_delete" ->
       ("""WITH cents AS (
         |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid, embedding AS cv
@@ -9046,7 +9047,7 @@ object SparkEntry {
     "q326_mmr_rerank" -> MmrOracle(k = 5, lambda6 = 700000L, candK = 20),
 
     // the q81 oracle with the forgotten ids (old side % 10 = 2)
-    // excluded — exactly the index's tombstone anti-join
+    // excluded — exactly the rows the keyed forget deletes
     "q327_dedup_index_lifecycle" ->
       ("WITH " + JaccardCtes(0.35) + """
         |SELECT CASE WHEN id_a % 10 = 0 THEN id_a ELSE id_b END AS new_id,
@@ -13221,14 +13222,6 @@ object SparkEntry {
        |FROM agg a LEFT JOIN hits h USING (query_id), tt""".stripMargin
   }
 
-  /** Oracle for q311_graph_ann_index: REPLAYS graphWrite +
-    * layeredTopKPartitioned — the full-layer graph (degree 16, 2
-    * NN-descent rounds), the UPPER-layer graph over `vec_id % 4 = 0`
-    * (degree 8, 1 round), the 2-round upper beam from the fixed
-    * entries, the 3-round full beam seeded by the upper results ∪ LSH
-    * bucket mates, and the exact top-10 board. The parquet round trip
-    * the engine does between build and search is value-invariant
-    * (long edge pairs), so the replay skips it. */
   /** Scored (src, dst) edge top-k CTE pair — shared by the graph-ANN
     * oracles (q311/q317). */
   private def gannEdgeTopK(in: String, out: String, degree: Int): String =
@@ -13289,6 +13282,15 @@ object SparkEntry {
        |  WHERE vec_id <> query_id),
        |${gannQueryTopK(s"${b}x$r", s"$b$r", width)}""".stripMargin
 
+  /** Oracle for q311_graph_ann_index (and q334, which searches the
+    * same build pinned at version 1): REPLAYS graphWriteVersioned +
+    * layeredTopKVersioned — the full-layer graph (degree 16, 1
+    * NN-descent round), the UPPER-layer graph over `vec_id % 4 = 0`
+    * (degree 8, bucket-confined), the 2-round upper beam from the fixed
+    * entries, the 3-round full beam seeded by the upper results ∪ LSH
+    * bucket mates, and the exact top-10 board. The parquet round trip
+    * the engine does between build and search is value-invariant
+    * (long edge pairs), so the replay skips it. */
   private def GraphAnnIndexOracle: String = {
     def edgeTopK(in: String, out: String, degree: Int): String =
       gannEdgeTopK(in, out, degree)
@@ -13452,7 +13454,7 @@ object SparkEntry {
   }
 
   /** Shared oracle for the cheap-profile (refine 0) graph-ANN searches
-    * with a final-beam survivor filter: REPLAYS graphWrite
+    * with a final-beam survivor filter: REPLAYS graphWriteVersioned
     * (bucket-confined g0/u0 only), the 1-round upper beam from the
     * fixed entries, the `beamWidth`-wide 2-round full beam, then keeps
     * only beam members satisfying `liveCond` (they all still ROUTED
@@ -13513,10 +13515,11 @@ object SparkEntry {
        |WHERE rank <= $k""".stripMargin
   }
 
-  /** Oracle for q317_graph_ann_append: REPLAYS graphWrite over the
-    * BASE corpus (vec_id < 5 or >= 25), the graphAppend insertion of
-    * the 20-vector delta (beam-searched forward edges + delta-delta
-    * bucket mates, affected-base reverse-edge re-rank, merge), and the
+  /** Oracle for q317_graph_ann_append: REPLAYS graphWriteVersioned over
+    * the BASE corpus (vec_id < 5 or >= 25), the graphAppendVersioned
+    * insertion of the 20-vector delta (beam-searched forward edges +
+    * delta-delta bucket mates, affected-base reverse-edge re-rank,
+    * merge), and the
     * layered probe search over the UPDATED graph — plus the delta
     * accounting board. The parquet rewrite between steps is
     * value-invariant, so the replay chains the CTEs directly. */

@@ -211,119 +211,6 @@ object IncrementalLoad {
     } finally fs.delete(stage, true)
   }
 
-  /** Atomic in-place rewrite of ONE table path: `write` stages the new
-    * contents into a sibling `.rewrite-staging-<name>` dir, then the
-    * swap is move-aside / swap-in / restore-on-failure (the [[compact]]
-    * discipline). Until the first rename the published path is
-    * untouched, so a mid-write failure loses nothing; a mid-swap
-    * exception restores the moved-aside original.
-    *
-    * Crash recovery: the swap is TWO renames, so a hard crash between
-    * them leaves the target missing and its live rows only in
-    * `.rewrite-old-<name>`. Both sidecar names are DETERMINISTIC
-    * functions of the target, so that state is detectable after the
-    * fact: entry to this function repairs it first (restore when the
-    * target is missing, drop the leftover backup when it isn't), and
-    * [[recoverRewrites]] does the same sweep over a whole table tree
-    * for callers whose re-run would not revisit the same path (e.g.
-    * vacuum's touched-partition scan). A concurrent reader inside the
-    * two-rename window can still observe a missing path — single-swap
-    * readers should retry; versioned readers belong on
-    * [[ManifestTable]]. Concurrent writers to the SAME path must be
-    * externally serialized per table tree — the deterministic staging
-    * name means writer B's entry deletes writer A's in-flight staging.
-    * A per-attempt CLAIM MARKER (a unique dot-file dropped inside the
-    * staging after the write callback, re-checked before the swap)
-    * turns that collision into a loud failure on at least one side
-    * instead of A silently publishing B's contents as its own; it is a
-    * tripwire, not a lock — interleavings narrower than the
-    * check-to-rename window still need the external serialization. A
-    * missing target (first publish) simply renames the
-    * staging in. Callers whose new contents DERIVE from the current
-    * table contents must materialize that read (lineage cut) before
-    * calling — the staged write otherwise races the swap it feeds. */
-  def atomicRewrite(spark: SparkSession, path: String)
-                   (write: String => Unit): Unit = {
-    val (fs, target) = fsFor(spark, path)
-    val parent = Option(target.getParent).getOrElse(target)
-    fs.mkdirs(parent)
-    val stage = new HPath(parent, s".rewrite-staging-${target.getName}")
-    val old = new HPath(parent, s".rewrite-old-${target.getName}")
-    repairSwap(fs, target, old)
-    fs.delete(stage, true) // stale staging from a crashed prior attempt
-    try {
-      write(stage.toString)
-      require(fs.exists(stage),
-        s"atomicRewrite: write callback produced nothing at $stage")
-      // claim the staging: dot-underscore names are hidden from Spark
-      // reads, so a marker that outlives cleanup is inert. The exists
-      // check above matters: fs.create would silently RESURRECT a
-      // staging a concurrent writer just deleted, and the swap below
-      // would then publish a directory holding only the claim file.
-      val claim = s"._graft-claim-${java.util.UUID.randomUUID().toString}"
-      fs.create(new HPath(stage, claim), false).close()
-      val names = fs.listStatus(stage).map(_.getPath.getName)
-      val claims = names.filter(_.startsWith("._graft-claim-")).sorted
-      require(claims.sameElements(Array(claim)),
-        s"atomicRewrite: concurrent writer detected on $target " +
-          s"(staging claims: ${claims.mkString(", ")}) — writers to one " +
-          "table tree must be externally serialized")
-      require(names.exists(n => !n.startsWith(".") && !n.startsWith("_")),
-        s"atomicRewrite: staging at $stage holds no data files — a " +
-          "concurrent writer deleted the written contents mid-flight")
-      val hadOld = fs.exists(target)
-      if (hadOld) mv(fs, target, old, "rewrite move-aside")
-      try mv(fs, stage, target, "rewrite swap-in")
-      catch {
-        case NonFatal(e) =>
-          if (hadOld) mv(fs, old, target, "rewrite restore")
-          throw e
-      }
-      if (hadOld) fs.delete(old, true)
-      fs.delete(new HPath(target, claim), false)
-    } finally fs.delete(stage, true)
-  }
-
-  /** Repair one interrupted [[atomicRewrite]] swap: a surviving
-    * `.rewrite-old-<name>` next to a MISSING target is the
-    * between-renames crash state (the backup holds the only live copy —
-    * restore it); next to a live target it is a crash after swap-in
-    * (the new contents already won — drop the backup). */
-  private def repairSwap(fs: FileSystem, target: HPath, old: HPath): Unit =
-    if (fs.exists(old)) {
-      if (!fs.exists(target)) mv(fs, old, target, "rewrite recover")
-      else fs.delete(old, true)
-    }
-
-  /** Sweep `root` (recursively) for interrupted [[atomicRewrite]] swaps
-    * and repair each — restore `.rewrite-old-<name>` dirs whose target
-    * vanished mid-swap, drop ones whose target survived, and clear
-    * stale `.rewrite-staging-*` dirs. Run this before any scan whose
-    * RESULT decides what gets rewritten (vacuum's touched-partition
-    * scan): without it, a partition lost to a crashed swap is invisible
-    * to the scan and would never be revisited. Idempotent; a no-op on a
-    * clean tree. */
-  def recoverRewrites(spark: SparkSession, root: String): Unit = {
-    val (fs, rp) = fsFor(spark, root)
-    // the root itself may be the vanished target of its parent's swap —
-    // repair that first or the sweep below finds nothing to walk
-    Option(rp.getParent).foreach { p =>
-      repairSwap(fs, rp, new HPath(p, s".rewrite-old-${rp.getName}"))
-    }
-    if (!fs.exists(rp)) return
-    def sweep(dir: HPath): Unit =
-      fs.listStatus(dir).toSeq.filter(_.isDirectory).foreach { s =>
-        val n = s.getPath.getName
-        if (n.startsWith(".rewrite-old-"))
-          repairSwap(fs, new HPath(dir, n.stripPrefix(".rewrite-old-")),
-            s.getPath)
-        else if (n.startsWith(".rewrite-staging-"))
-          fs.delete(s.getPath, true)
-        else if (!n.startsWith(".")) sweep(s.getPath)
-      }
-    sweep(rp)
-  }
-
   /** Hive partition columns of a table directory, outermost first, read
     * from the `col=value` directory names. */
   private def partitionColumns(fs: FileSystem, target: HPath): Seq[String] = {

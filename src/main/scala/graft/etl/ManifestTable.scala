@@ -2780,9 +2780,8 @@ object ManifestTable {
     * files and the `(writerId, batchId)` watermark land in ONE commit —
     * the whole batch is a single transaction, so there is no ordering
     * among sinks to crash between and no per-sink idempotence guard to
-    * re-derive on replay (the CorpusIngest marker-file design needs a
-    * begin/commit pair and an expensive crashed-replay path precisely
-    * because its sinks commit separately). A crash before the commit
+    * re-derive on replay (sinks that commit separately need begin/commit
+    * markers and an expensive crashed-replay path). A crash before the commit
     * leaves only orphan data files (invisible to readers, reclaimed by
     * [[vacuum]]); the replay recomputes and commits whole.
     *

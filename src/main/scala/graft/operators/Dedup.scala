@@ -636,75 +636,14 @@ object Dedup {
       .drop("__rk", "__cl", "cluster_id")
   }
 
-  /** Materialize a MinHash LSH index of the corpus: the banded
-    * (id, band, bh) keys written partitioned by band. This is the
-    * production shape for CONTINUOUS ingestion at 100 TB: index the
-    * historical corpus once, then each new batch joins its own banded
-    * keys against the index instead of re-pairing the full corpus —
-    * incremental cost is proportional to the batch, not the corpus. */
-  /** Read a [[writeMinhashIndex]] index with its FIXED schema declared
-    * explicitly, so an EMPTY index (a bootstrap `writeMinhashIndex`
-    * over zero documents writes a directory with no parquet footers)
-    * reads as an empty frame instead of failing schema inference —
-    * the empty-history bootstrap every reader of the index must
-    * survive. */
-  private[graft] def readMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                                      path: String): DataFrame =
-    spark.read.schema("id LONG, bh LONG, band INT").parquet(path)
-
-  def writeMinhashIndex(df: DataFrame, textCol: String, idCol: String,
-                        path: String, bands: Int = 16, rowsPerBand: Int = 2,
-                        shingleN: Int = 3, maxBucket: Int = 1000): Unit = {
-    val banded = bandedSignatures(df, textCol, idCol, bands, rowsPerBand, shingleN)
-    // same stop-shingle skew cap as the pairing path, applied at WRITE
-    // time: an uncapped boilerplate bucket would explode every future
-    // batch join against the index. Dropped rows are counted
-    // (Dedup.bucketStats("graft.dedup.index.buckets")), never silent.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bh"))
-    val counted = banded.withColumn("__bn", count(lit(1)).over(w))
-    val statsEnabled = df.sparkSession.conf
-      .getOption("spark.graft.bucketStats.enabled").forall(_.toBoolean)
-    if (statsEnabled) {
-      val s = banded.groupBy(col("band"), col("bh")).agg(count(lit(1)).as("__bn"))
-        .agg(
-          coalesce(sum(when(col("__bn") > maxBucket, col("__bn"))
-            .otherwise(lit(0L))), lit(0L)).as("dropped"),
-          coalesce(max(col("__bn")), lit(0L)).as("maxb"))
-        .head()
-      val stats = BucketStats(s.getLong(0), s.getLong(1))
-      bucketStatsRegistry.put("graft.dedup.index.buckets", stats)
-      if (stats.droppedRows > 0)
-        System.err.println(s"[graft.dedup.index.buckets] skew cap dropped " +
-          s"${stats.droppedRows} rows (largest bucket ${stats.maxBucketSize})")
-    }
-    counted.filter(col("__bn") <= maxBucket).drop("__bn")
-      .write.mode("overwrite").partitionBy("band").parquet(path)
-  }
-
-  /** APPEND a new batch's banded keys to a [[writeMinhashIndex]] index —
-    * continuous ingestion without ever re-indexing the corpus: cost is
-    * one signature pass over the batch plus new files in the touched
-    * band partitions (base files are never rewritten). The write-time
-    * skew cap is maintained across appends: a batch row is dropped when
-    * its bucket's COMBINED size (existing index rows + batch rows) would
-    * exceed `maxBucket` — existing counts come from a semi-joined read
-    * of only the buckets the batch touches, so no bucket in the index
-    * ever exceeds the cap no matter how many appends ran. Band settings
-    * MUST match the ones the index was written with. */
-  def minhashIndexAppend(spark: org.apache.spark.sql.SparkSession,
-                         df: DataFrame, textCol: String, idCol: String,
-                         path: String, bands: Int = 16, rowsPerBand: Int = 2,
-                         shingleN: Int = 3, maxBucket: Int = 1000): Unit =
-    cappedIndexRows(readMinhashIndex(spark, path), df, textCol, idCol,
-      bands, rowsPerBand, shingleN, maxBucket)
-      .write.mode("append").partitionBy("band").parquet(path)
-
   /** The batch's banded signature rows under the COMBINED skew cap
     * (existing index rows + batch rows per bucket ≤ `maxBucket`),
     * against a caller-provided existing-index frame — the write-free
-    * core of [[minhashIndexAppend]], shared with the manifest-table
-    * ingestion path. */
+    * core of the index writers and the manifest-mode ingestion gate.
+    * An uncapped boilerplate bucket would explode every later batch
+    * join against the index; existing counts come from a semi-joined
+    * read of only the buckets the batch touches, so no bucket ever
+    * exceeds the cap no matter how many appends ran. */
   private[graft] def cappedIndexRows(existingIdx: DataFrame, df: DataFrame,
                                      textCol: String, idCol: String,
                                      bands: Int, rowsPerBand: Int,
@@ -724,30 +663,9 @@ object Dedup {
       .drop("__bn", "__en")
   }
 
-  /** SOFT-delete ids from a [[writeMinhashIndex]] index — the
-    * right-to-be-forgotten path for the dedup family: a removed
-    * document must stop generating near-dup candidates IMMEDIATELY
-    * (not at the next full re-index), or [[incrementalPairs]] keeps
-    * reporting new batches as duplicates of text that no longer
-    * exists. Same LSM tombstone sidecar as the vector indexes
-    * ([[graft.etl.Tombstones]]): O(batch) distinct-union republish,
-    * immutable data files, candidate generation anti-joins the
-    * broadcast set. Reclaim rows physically with
-    * [[minhashIndexVacuum]] on the compaction cadence. */
-  def minhashIndexDelete(spark: org.apache.spark.sql.SparkSession,
-                         path: String, ids: DataFrame): Unit =
-    graft.etl.Tombstones.delete(spark, path, ids, "id")
+  // -------- persisted minhash index: ManifestTable-committed --------
 
-  /** Physically drop tombstoned signature rows (touched band partitions
-    * only, each an atomic swap, idempotent mid-crash), then clear the
-    * sidecar. */
-  def minhashIndexVacuum(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Unit =
-    graft.etl.Tombstones.vacuum(spark, path, "id", "band")
-
-  // -------- versioned minhash index: ManifestTable-committed --------
-
-  /** Table name the versioned dedup index commits under its root —
+  /** Table name the dedup index commits under its root —
     * deliberately the SAME name the manifest-mode ingestion gate
     * ([[graft.streaming.CorpusIngest.dedupIngestManifest]]) writes, so
     * batch and stream publish one index shape. */
@@ -759,17 +677,19 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession): DataFrame =
     spark.range(0).select(col("id"), lit(0L).as("bh"), lit(0).as("band"))
 
-  /** [[writeMinhashIndex]] committed through [[graft.etl.ManifestTable]]
-    * instead of a raw `band=` directory — the last index family to get
-    * what IVF ([[Similarity.ivfWriteVersioned]]) and graph-ANN
-    * ([[GraphAnn.graphWriteVersioned]]) already have: one atomic
-    * commit-file PUT per publish, snapshot isolation for readers racing
-    * appends/forgets, "pairs as of version V" time travel
-    * ([[incrementalPairsVersioned]]), and retention vacuum. Rows are
-    * range-clustered by `band` so manifest min/max stats skip files per
-    * band, matching the directory family's partition layout and the
-    * manifest-mode ingestion gate's `statsCols`. The write-time skew cap
-    * is identical ([[cappedIndexRows]] against an empty index). Returns
+  /** Materialize a MinHash LSH index of the corpus under `root`: the
+    * banded (id, bh, band) keys committed through
+    * [[graft.etl.ManifestTable]]. This is the production shape for
+    * CONTINUOUS ingestion at 100 TB: index the historical corpus once,
+    * then each new batch joins its own banded keys against the index
+    * ([[incrementalPairsVersioned]]) instead of re-pairing the full
+    * corpus — incremental cost is proportional to the batch. One atomic
+    * commit-file PUT per publish gives snapshot isolation for readers
+    * racing appends/forgets, "pairs as of version V" time travel, and
+    * retention vacuum. Rows are range-clustered by `band` so manifest
+    * min/max stats skip files per band, matching the manifest-mode
+    * ingestion gate's `statsCols`. The stop-shingle skew cap applies at
+    * write time ([[cappedIndexRows]] against an empty index). Returns
     * the version. */
   def minhashIndexWriteVersioned(df: DataFrame, textCol: String,
                                  idCol: String, root: String,
@@ -790,13 +710,15 @@ object Dedup {
       statsCol = Some("band"), extraBloomCols = Seq("id"))
   }
 
-  /** [[minhashIndexAppend]] for the versioned index: the batch's capped
-    * signature rows commit as a NEW version through the idempotent
-    * manifest append (keyed on (id, band) — one bucket row per document
-    * per band), so a replayed batch appends 0 rows and creates NO
-    * version, and readers of the previous version are untouched. The
-    * combined skew cap holds across appends exactly as in the directory
-    * family. Returns rows appended. */
+  /** APPEND a new batch's banded keys to the index — continuous
+    * ingestion without ever re-indexing the corpus: one signature pass
+    * over the batch, whose capped rows commit as a NEW version through
+    * the idempotent manifest append (keyed on (id, band) — one bucket
+    * row per document per band), so a replayed batch appends 0 rows and
+    * creates NO version, and readers of the previous version are
+    * untouched. The skew cap counts existing index rows plus batch rows
+    * per bucket. Band settings MUST match the write's. Returns rows
+    * appended. */
   def minhashIndexAppendVersioned(spark: org.apache.spark.sql.SparkSession,
                                   df: DataFrame, textCol: String,
                                   idCol: String, root: String,
@@ -823,8 +745,8 @@ object Dedup {
     * at FILE granularity ([[graft.etl.ManifestTable.deleteWhere]]) —
     * the forgotten ids stop generating candidates in the CURRENT
     * version immediately, while every pre-delete version stays
-    * queryable until retention drops it (the audit trail the
-    * tombstone-sidecar [[minhashIndexDelete]] cannot give). Returns
+    * queryable until retention drops it — the audit trail a
+    * right-to-be-forgotten pipeline wants. Returns
     * (filesRewritten, rowsDeleted). */
   def minhashIndexDeleteVersioned(spark: org.apache.spark.sql.SparkSession,
                                   root: String,
@@ -851,13 +773,17 @@ object Dedup {
       ids.select(col("id")), key = Seq("id"), statsCol = Some("band"),
       bloomCol = Some("band"), extraBloomCols = Seq("id"))
 
-  /** [[incrementalPairs]] against a versioned index, optionally pinned
-    * to a retained `version` — "which of these documents were near-dups
-    * of the corpus AS OF version V", consistent by construction while
-    * appends and forgets commit concurrently. `corpus` must supply the
-    * texts of the pinned version's ids (the caller pins both or accepts
-    * missing-text drops, exactly the directory family's
-    * index-corpus-in-step contract). */
+  /** Near-dup pairs between a NEW batch and the indexed historical
+    * corpus, optionally pinned to a retained `version` — "which of these
+    * documents were near-dups of the corpus AS OF version V", consistent
+    * by construction while appends and forgets commit concurrently.
+    * Candidates come from joining the batch's banded keys against the
+    * index on (band, bh) — the corpus side never recomputes signatures
+    * — then exact-Jaccard verification joins only the candidate ids'
+    * texts. `corpus` must supply the texts of the indexed ids (the
+    * caller keeps index and corpus in step, or accepts missing-text
+    * drops). Band settings MUST match the write's. Returns
+    * (new_id, old_id, jaccard). */
   def incrementalPairsVersioned(spark: org.apache.spark.sql.SparkSession,
                                 newDocs: DataFrame, corpus: DataFrame,
                                 textCol: String, idCol: String,
@@ -875,33 +801,9 @@ object Dedup {
       bands, rowsPerBand, shingleN, threshold)
   }
 
-  /** Near-dup pairs between a NEW batch and an indexed historical corpus:
-    * candidates come from joining the batch's banded keys against the
-    * index on (band, bh) — the corpus side never recomputes signatures —
-    * then exact-Jaccard verification joins only the candidate ids' texts
-    * (point lookups on both sides). Band settings MUST match the ones the
-    * index was written with. Returns (new_id, old_id, jaccard). */
-  def incrementalPairs(spark: org.apache.spark.sql.SparkSession,
-                       newDocs: DataFrame, corpus: DataFrame,
-                       textCol: String, idCol: String, indexPath: String,
-                       bands: Int = 16, rowsPerBand: Int = 2,
-                       shingleN: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val idx0 = readMinhashIndex(spark, indexPath)
-    // forgotten documents must stop generating candidates immediately
-    // (minhashIndexDelete contract) — dead signature rows are masked
-    // here until a vacuum reclaims them
-    val idx = graft.etl.Tombstones.read(spark, indexPath, "id") match {
-      case Some(tomb) => idx0.join(broadcast(tomb), Seq("id"), "left_anti")
-      case None       => idx0
-    }
-    incrementalPairsFrame(newDocs, corpus, idx, textCol, idCol, bands,
-      rowsPerBand, shingleN, threshold)
-  }
-
-  /** [[incrementalPairs]] against a caller-provided (already
-    * tombstone-masked) index FRAME — the manifest-table ingestion path
-    * reads its index through [[graft.etl.ManifestTable]] rather than a
-    * `band=`-partitioned directory. */
+  /** [[incrementalPairsVersioned]] against a caller-provided
+    * (id, bh, band) index FRAME — shared with the manifest-mode
+    * ingestion gate, which reads its index from its own commit. */
   private[graft] def incrementalPairsFrame(newDocs: DataFrame,
                                            corpus: DataFrame,
                                            indexFrame: DataFrame,
@@ -953,7 +855,7 @@ object Dedup {
   /** Measured MinHash-LSH RECALL board, oracle-gradable end to end.
     *
     * The production signature path ([[minhashPairs]] /
-    * [[writeMinhashIndex]]) hashes with xxhash64 — codegen'd and
+    * [[minhashIndexWriteVersioned]]) hashes with xxhash64 — codegen'd and
     * scan-side, but not replayable in an external SQL engine, so its
     * recall could only ever be a spec assertion on fixtures. This board
     * swaps in a PORTABLE hash family whose every step is exact integer
@@ -1496,10 +1398,10 @@ object Dedup {
 
   /** Materialize the distinct chunk digests of a corpus as a parquet
     * index, partitioned by the digest's first hex char — the continuous-
-    * ingestion shape for CDC dedup (the [[writeMinhashIndex]] pattern):
-    * chunk the history ONCE, then each new batch joins its own chunk
-    * digests against the stored index, cost proportional to the batch,
-    * never the corpus. */
+    * ingestion shape for CDC dedup (the
+    * [[minhashIndexWriteVersioned]] pattern): chunk the history ONCE,
+    * then each new batch joins its own chunk digests against the stored
+    * index, cost proportional to the batch, never the corpus. */
   def writeCdcChunkIndex(df: DataFrame, textCol: String, idCol: String,
                          path: String, divisor: Int = 8): Unit =
     cdcChunks(df, textCol, idCol, divisor)

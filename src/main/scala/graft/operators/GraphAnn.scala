@@ -197,265 +197,6 @@ object GraphAnn {
       col("rank"))
   }
 
-  /** Materialize the k-NN graph index: the full-layer edge list plus a
-    * sampled UPPER-layer graph (HNSW-style two-level hierarchy), each
-    * written partitioned by a `src` shard. The deterministic upper
-    * layer is the nodes with `id % upperMod == 0` — a property of the
-    * id, not of insertion order, so the whole index is a pure function
-    * of the corpus and an oracle replays it exactly.
-    *
-    * This is the `ivfWrite` contract for the graph family: build cost
-    * (bucket-confined pairwise + NN-descent) is paid ONCE offline;
-    * searches read the edge lists back and pay only beam-walk joins.
-    * At 100 TB the shard partitioning keys the per-round
-    * beam-to-edges join: a cluster deployment bucket-joins on src
-    * shard instead of re-shuffling the (much larger) edge side every
-    * round. */
-  def graphWrite(corpus: DataFrame, idCol: String, vecCol: String,
-                 dim: Int, planes: Int, tables: Int, degree: Int,
-                 refine: Int, path: String, upperMod: Int = 4,
-                 upperDegree: Int = 8, upperRefine: Int = 1,
-                 shards: Int = 32): Unit = {
-    require(upperMod >= 2, "upperMod >= 2 (1 would duplicate the full layer)")
-    val spark = corpus.sparkSession
-    // staged swaps, not in-place overwrites: a REBUILD over an existing
-    // index must never delete the only copy before the new one commits.
-    // The two layers are INDEPENDENT builds over disjoint outputs —
-    // overlap them (guide §2.6) so the sparse upper build back-fills
-    // the full layer's stage tails instead of waiting for them.
-    val upper = corpus.filter(pmod(col(idCol), lit(upperMod.toLong)) === 0L)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val layers = Seq(
-      scala.concurrent.Future(publishEdges(spark, s"$path/edges",
-        knnGraph(corpus, idCol, vecCol, dim, planes, tables, degree,
-          refine, cutFinal = false),
-        shards)),
-      scala.concurrent.Future(publishEdges(spark, s"$path/upper_edges",
-        knnGraph(upper, idCol, vecCol, dim, planes, tables, upperDegree,
-          upperRefine, cutFinal = false),
-        shards)))
-    layers.foreach(scala.concurrent.Await.result(_,
-      scala.concurrent.duration.Duration.Inf))
-    // record the build knobs so later maintenance (and especially the
-    // append-triggered vacuum escalation) rebuilds under THESE params,
-    // never under some call site's defaults
-    writeParamsSidecar(spark, path, BuildParams(dim, planes, tables,
-      degree, refine, upperMod, upperDegree, upperRefine, 0L, 0L))
-  }
-
-  /** Atomically publish an edge list to `path`, sharded on src. */
-  private def publishEdges(spark: org.apache.spark.sql.SparkSession,
-                           path: String, edges: DataFrame,
-                           shards: Int): Unit =
-    graft.etl.IncrementalLoad.atomicRewrite(spark, path) { staging =>
-      edges.withColumn("shard", pmod(col("src"), lit(shards.toLong)))
-        .write.mode("overwrite").partitionBy("shard").parquet(staging)
-    }
-
-  /** Index COMPACTION — rebuild the upper routing layer from the
-    * CURRENT corpus on the manifest-compaction cadence: [[graphAppend]]
-    * deliberately leaves the upper layer stale (inserted nodes stay
-    * reachable through full-layer forward/reverse edges, but never
-    * ROUTE queries), so repeated appends degrade routing quality
-    * without bound — regions populated only by appended vectors have
-    * no upper-layer presence and queries landing there start from
-    * entry points a full graph diameter away. Compaction restores the
-    * [[graphWrite]] invariant exactly: post-compact `upper_edges`
-    * equals a fresh build's for the same corpus (the upper layer is a
-    * pure function of the corpus — `id % upperMod == 0` membership +
-    * deterministic k-NN build — spec-asserted in Round13OpsSpec).
-    *
-    * The FULL layer is not rebuilt: appends maintain it (and each
-    * append republishes it whole, so file layout never fragments).
-    * Publishes through the atomic staged swap — a failed compaction
-    * leaves the old routing layer readable.
-    *
-    * Cost: the upper layer holds ~1/upperMod of the corpus at degree
-    * `upperDegree`, so compaction costs one sparse knnGraph build —
-    * cheap relative to the full layer, which is why it can run on
-    * every Nth append batch. */
-  def graphCompact(spark: org.apache.spark.sql.SparkSession, path: String,
-                   corpus: DataFrame, idCol: String, vecCol: String,
-                   dim: Int, planes: Int, tables: Int, upperMod: Int = 4,
-                   upperDegree: Int = 8, upperRefine: Int = 1,
-                   shards: Int = 32): Unit = {
-    require(upperMod >= 2, "upperMod >= 2 (1 would duplicate the full layer)")
-    val upper = corpus.filter(pmod(col(idCol), lit(upperMod.toLong)) === 0L)
-    publishEdges(spark, s"$path/upper_edges",
-      knnGraph(upper, idCol, vecCol, dim, planes, tables, upperDegree,
-        upperRefine, cutFinal = false),
-      shards)
-    // a caller-driven upper rebuild under NEW knobs updates the
-    // persisted record, so later escalations rebuild under these
-    readParamsSidecar(spark, path).foreach(p =>
-      writeParamsSidecar(spark, path, p.copy(upperMod = upperMod,
-        upperDegree = upperDegree, upperRefine = upperRefine)))
-  }
-
-  /** Tombstone sidecar of a [[graphWrite]] index — a CHILD of the index
-    * root next to `edges`/`upper_edges` (each layer is its own parquet
-    * root, so a sibling dir cannot disturb their partition discovery). */
-  private def tombstonePath(path: String): String =
-    s"${path.stripSuffix("/")}/tombstones"
-
-  /** Current tombstone set as a 1-column (vec_id) frame, or None when
-    * nothing was ever deleted. */
-  def graphTombstones(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Option[DataFrame] = {
-    val tp = tombstonePath(path)
-    val (fs, hp) = graft.etl.IncrementalLoad.fsFor(spark, tp)
-    if (fs.exists(hp)) Some(spark.read.parquet(tp).select(col("vec_id")))
-    else None
-  }
-
-  /** SOFT-delete ids from a [[graphWrite]] index — the HNSW soft-delete
-    * discipline: tombstoned nodes keep ROUTING (their edges stay in
-    * both layers, so the graph stays navigable — cutting them would
-    * disconnect regions and crater recall) but can never be RETURNED:
-    * [[layeredTopKPartitioned]] drops them from the final beam and
-    * re-ranks the live survivors. Deletion cost is O(batch) — one
-    * distinct-union republish of the (id-list-sized) sidecar through
-    * the atomic staged swap; the edge shards are untouched. Reclaim
-    * the dead nodes for real on the compaction cadence with
-    * [[graphVacuum]]. Idempotent. */
-  def graphDelete(spark: org.apache.spark.sql.SparkSession, path: String,
-                  ids: DataFrame): Unit = {
-    val nw = ids.select(col(ids.columns.head).cast("long").as("vec_id"))
-    val merged = graphTombstones(spark, path) match {
-      case Some(old) => old.union(nw).distinct()
-      case None      => nw.distinct()
-    }
-    graft.etl.IncrementalLoad.atomicRewrite(spark, tombstonePath(path)) {
-      staging =>
-        merged.coalesce(1).write.mode("overwrite").parquet(staging)
-    }
-  }
-
-  /** VACUUM a tombstoned graph index: rebuild BOTH layers from the
-    * live corpus (a k-NN graph over the survivors is NOT the survivor
-    * subgraph of the old edge lists — removing a hub must re-route its
-    * neighborhood through new edges, so vacuum is a rebuild by
-    * construction, unlike the IVF case where dropping rows suffices),
-    * then clear the tombstone sidecar. Each layer publishes through
-    * the atomic staged swap and the sidecar is removed LAST, so a
-    * crash at any point leaves an index where tombstone-filtered
-    * search still returns exactly the live top-k; re-running
-    * completes. Post-vacuum the index equals a fresh [[graphWrite]]
-    * over the live corpus (pure-function-of-corpus invariant,
-    * spec-asserted). */
-  def graphVacuum(spark: org.apache.spark.sql.SparkSession, path: String,
-                  corpus: DataFrame, idCol: String, vecCol: String,
-                  dim: Int, planes: Int, tables: Int, degree: Int,
-                  refine: Int, upperMod: Int = 4, upperDegree: Int = 8,
-                  upperRefine: Int = 1, shards: Int = 32): Unit = {
-    val live = graphTombstones(spark, path) match {
-      case Some(tomb) => corpus.join(broadcast(tomb),
-        corpus(idCol) === tomb("vec_id"), "left_anti")
-      case None => corpus
-    }
-    graphWrite(live, idCol, vecCol, dim, planes, tables, degree, refine,
-      path, upperMod, upperDegree, upperRefine, shards)
-    val (fs, hp) = graft.etl.IncrementalLoad.fsFor(spark, tombstonePath(path))
-    fs.delete(hp, true)
-  }
-
-  /** Two-phase layered search over a [[graphWrite]] index: a cheap
-    * beam over the SPARSE upper graph first (few nodes, small degree —
-    * it localizes every query to its neighborhood from fixed global
-    * entry points), then the full-layer beam SEEDED by the upper
-    * results plus the query's own LSH bucket mates. The upper phase
-    * replaces blind global entry points with per-query-adapted ones,
-    * which is what lets the full-layer walk converge in fewer rounds
-    * at equal-or-better recall (the HNSW argument, two levels deep).
-    *
-    * `entries` must be upper-layer ids (multiples of `upperMod`).
-    * Output: (query_id, vec_id, cosine, rank), rank 1..beamWidth. */
-  def layeredTopKPartitioned(spark: org.apache.spark.sql.SparkSession,
-                             path: String, corpus: DataFrame,
-                             queries: DataFrame, idCol: String,
-                             vecCol: String, dim: Int, planes: Int,
-                             tables: Int, entries: Seq[Long],
-                             upperRounds: Int = 2, upperWidth: Int = 16,
-                             rounds: Int = 3, beamWidth: Int = 32,
-                             upperMod: Int = 4): DataFrame =
-    layeredSearch(
-      spark.read.parquet(s"$path/edges").select("src", "dst"),
-      spark.read.parquet(s"$path/upper_edges").select("src", "dst"),
-      graphTombstones(spark, path),
-      corpus, queries, idCol, vecCol, dim, planes, tables, entries,
-      upperRounds, upperWidth, rounds, beamWidth, upperMod)
-
-  /** The layered walk over caller-provided edge frames — shared by the
-    * directory index ([[layeredTopKPartitioned]]) and the
-    * manifest-versioned index ([[layeredTopKVersioned]]). */
-  private def layeredSearch(edges: DataFrame, upperEdges: DataFrame,
-                            tombOpt: Option[DataFrame], corpus: DataFrame,
-                            queries: DataFrame, idCol: String,
-                            vecCol: String, dim: Int, planes: Int,
-                            tables: Int, entries: Seq[Long],
-                            upperRounds: Int, upperWidth: Int,
-                            rounds: Int, beamWidth: Int,
-                            upperMod: Int): DataFrame = {
-    require(entries.forall(_ % upperMod == 0),
-      s"entries must live on the upper layer (id % $upperMod == 0)")
-    val upperSeeds = queries.select(col(idCol).as("query_id"))
-      .crossJoin(broadcast(entries.toDF("vec_id")))
-      .filter(col("vec_id") =!= col("query_id"))
-    val upperBeam = beamTopK(corpus, queries, upperEdges, upperSeeds,
-      idCol, vecCol, upperRounds, upperWidth)
-    val seeds = dedupKeyed(
-      upperBeam.select(col("query_id"), col("vec_id"))
-        .union(lshSeeds(corpus, queries, idCol, vecCol, dim, planes, tables,
-          entries = Seq.empty)),
-      "query_id")
-    val beam = beamTopK(corpus, queries, edges, seeds, idCol, vecCol,
-      rounds, beamWidth)
-    // soft-deleted nodes routed the walk above but may not be RETURNED:
-    // drop them from the final beam and re-rank the live survivors so
-    // `rank <= k` still yields k results (graphDelete contract)
-    tombOpt match {
-      case Some(tomb) =>
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("vec_id").asc)
-        beam.join(broadcast(tomb), Seq("vec_id"), "left_anti")
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .select(col("query_id"), col("vec_id"), col("cosine"), col("rank"))
-      case None => beam
-    }
-  }
-
-  /** FILTERED layered search: top results among corpus rows satisfying
-    * `pred` (evaluated against `corpus`, which carries the metadata
-    * columns). The walk itself stays UNCONSTRAINED — non-matching nodes
-    * keep routing exactly like soft-deleted ones, because filtering
-    * during the walk fragments the graph under selective predicates
-    * (the ACORN problem) — and the predicate applies to the FINAL beam,
-    * re-ranked over the survivors. The over-widen discipline is the
-    * price: at selectivity s, a beam of width w yields ~s·w filtered
-    * results, so size `beamWidth ≈ k/s` (the graph twin of q328's
-    * over-probe rule). The filter side is an id-only column-pruned
-    * scan semi-joined against the (queries × beamWidth)-sized beam. */
-  def layeredTopKPartitionedWhere(spark: org.apache.spark.sql.SparkSession,
-                                  path: String, corpus: DataFrame,
-                                  queries: DataFrame, idCol: String,
-                                  vecCol: String, dim: Int, planes: Int,
-                                  tables: Int, entries: Seq[Long],
-                                  pred: Column,
-                                  upperRounds: Int = 2, upperWidth: Int = 16,
-                                  rounds: Int = 3, beamWidth: Int = 32,
-                                  upperMod: Int = 4): DataFrame = {
-    val beam = layeredTopKPartitioned(spark, path, corpus, queries, idCol,
-      vecCol, dim, planes, tables, entries, upperRounds, upperWidth,
-      rounds, beamWidth, upperMod)
-    val keep = corpus.filter(pred).select(col(idCol).as("vec_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    beam.join(keep, Seq("vec_id"), "left_semi")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("query_id"), col("vec_id"), col("cosine"), col("rank"))
-  }
-
   /** Rank a (src, dst) candidate frame to the `degree` best per src by
     * (cosine desc, dst asc), scoring against `vecs` (vec_id, cv). */
   private def topEdges(cand: DataFrame, vecs: DataFrame,
@@ -473,87 +214,16 @@ object GraphAnn {
       .select(col("src"), col("dst"))
   }
 
-  /** INCREMENTAL index maintenance — insert a `delta` batch into a
-    * [[graphWrite]] index WITHOUT rebuilding (the HNSW insertion
-    * pattern, batched): each new node beam-searches the existing
-    * full-layer graph for its neighborhood (plus LSH bucket mates
-    * among the delta itself, so intra-batch near-dups still connect),
-    * keeps its `degree` best by (cosine desc, id asc), and the
-    * affected base nodes re-rank their adjacency over
-    * (existing targets ∪ new reverse partners) — the standard
-    * insert-with-reverse-edges + prune step, made deterministic by the
-    * fixed tie-breaks. The merged edge list replaces `$path/edges`
-    * (materialized through a lineage cut first — never a lazy
-    * self-overwrite).
-    *
-    * The upper ROUTING layer is deliberately left stale (it only
-    * seeds the beam; new nodes are reachable through the full-layer
-    * forward AND reverse edges) — rebuild it on the normal compaction
-    * cadence, the manifest-table discipline.
-    *
-    * Cost is delta-proportional: one beam search per new node over
-    * the persisted graph + rescoring of the touched base adjacencies;
-    * the base corpus is never re-paired — EXCEPT when the tombstone
-    * fraction has crossed `vacuumAtTombstoneFraction`, where the
-    * append escalates itself to a [[graphVacuum]] rebuild (see the
-    * cadence note in the body). */
-  def graphAppend(spark: org.apache.spark.sql.SparkSession, path: String,
-                  base: DataFrame, delta: DataFrame, idCol: String,
-                  vecCol: String, dim: Int, planes: Int, tables: Int,
-                  degree: Int, rounds: Int, beamWidth: Int,
-                  entries: Seq[Long], shards: Int = 32,
-                  vacuumAtTombstoneFraction: Double = 0.25,
-                  refine: Int = 1, upperMod: Int = 4,
-                  upperDegree: Int = 8, upperRefine: Int = 1): Unit = {
-    // Tombstone-aware compaction cadence: every append republishes the
-    // FULL edge layer — including tombstoned nodes' edges — so under
-    // churn an append-only regime re-copies an ever-growing dead
-    // fraction forever and the soft-deleted nodes keep costing beam
-    // slots. When the tombstone set reaches the bar relative to the
-    // post-append live corpus, fold this append INTO a [[graphVacuum]]
-    // rebuild over base ∪ delta: one rebuild instead of append-then-
-    // rebuild, the dead edges vanish physically, the sidecar clears,
-    // and the post-state equals a fresh [[graphWrite]] over the live
-    // corpus (the vacuum invariant). The sidecar count is O(deletes) —
-    // a tiny single-file read, not an index scan.
-    // BOTH paths run under the index's PERSISTED build params: an index
-    // built with e.g. upperRefine=0 must not be silently rebuilt under
-    // this call site's defaults, and the non-escalation merge must not
-    // mix edge structures built under drifted dim/planes/tables/degree
-    // into one index (legacy indexes without the sidecar keep the old
-    // call-site-args behavior) — the versioned family's discipline.
-    val p = readParamsSidecar(spark, path).getOrElse(BuildParams(dim,
-      planes, tables, degree, refine, upperMod, upperDegree,
-      upperRefine, 0L, 0L))
-    val tombN = graphTombstones(spark, path).map(_.count()).getOrElse(0L)
-    if (tombN > 0 &&
-        tombN.toDouble / (base.count() + delta.count()).max(1L)
-          >= vacuumAtTombstoneFraction) {
-      val corpus = base.select(col(idCol), col(vecCol))
-        .unionByName(delta.select(col(idCol), col(vecCol)))
-      graphVacuum(spark, path, corpus, idCol, vecCol, p.dim, p.planes,
-        p.tables, p.degree, p.refine, p.upperMod, p.upperDegree,
-        p.upperRefine, shards)
-      return
-    }
-    val edges = spark.read.parquet(s"$path/edges").select("src", "dst")
-    val merged = appendMergedEdges(edges, base, delta, idCol, vecCol,
-      p.dim, p.planes, p.tables, p.degree, rounds, beamWidth, entries)
-    // Publish through a staged swap: the old in-place overwrite deleted
-    // the ONLY copy of the index before the new write committed (a
-    // mid-write failure lost it; a concurrent reader could see a
-    // half-deleted directory). `merged` is lineage-cut, so the staged
-    // write no longer reads from the path it replaces.
-    graft.etl.IncrementalLoad.atomicRewrite(spark, s"$path/edges") { staging =>
-      merged.withColumn("shard", pmod(col("src"), lit(shards.toLong)))
-        .write.mode("overwrite").partitionBy("shard").parquet(staging)
-    }
-  }
-
-  /** The insert-with-reverse-edges merge of [[graphAppend]] over a
-    * caller-provided current edge frame — shared by the directory and
-    * manifest-versioned appends. Returns the lineage-cut merged edge
-    * list (safe to publish over the frame it was derived from). */
+  /** The batched HNSW insertion step over the current full-layer
+    * `edges`: each `delta` node beam-searches the existing graph for its
+    * neighborhood (plus LSH bucket mates among the delta itself, so
+    * intra-batch near-dups still connect) and keeps its `degree` best by
+    * (cosine desc, id asc); the base nodes that gain reverse partners
+    * re-rank their adjacency over (existing targets ∪ new partners). The
+    * fixed tie-breaks make the insert deterministic. Cost is
+    * delta-proportional: the base corpus is never re-paired. Returns the
+    * lineage-cut merged edge list, safe to publish over the frame it was
+    * derived from. */
   private def appendMergedEdges(edges: DataFrame, base: DataFrame,
                                 delta: DataFrame, idCol: String,
                                 vecCol: String, dim: Int, planes: Int,
@@ -598,12 +268,11 @@ object GraphAnn {
   /** The build-time knobs an index must be REBUILT under to stay
     * self-consistent: an escalated vacuum/compaction that silently used
     * call-site defaults instead (refine=1, upperRefine=1, ...) would
-    * change search results after the escalation fires. Persisted with
+    * change search results after the escalation fires. Committed with
     * the index at write time and read back by every maintenance op that
-    * rebuilds a layer. `baseN`/`appendedN` additionally carry the
-    * upper-layer staleness accounting for the versioned family: baseN =
-    * corpus size when the upper layer was last built, appendedN = rows
-    * appended since. */
+    * rebuilds a layer. `baseN`/`appendedN` carry the upper-layer
+    * staleness accounting: baseN = corpus size when the upper layer was
+    * last built, appendedN = rows appended since. */
   private[graft] case class BuildParams(dim: Int, planes: Int,
       tables: Int, degree: Int, refine: Int, upperMod: Int,
       upperDegree: Int, upperRefine: Int, baseN: Long, appendedN: Long)
@@ -627,76 +296,60 @@ object GraphAnn {
       r.getLong(9))
   }
 
-  /** Sidecar path of the directory family's persisted params (a child
-    * of the index root, like the tombstone sidecar). */
-  private def paramsPath(path: String): String =
-    s"${path.stripSuffix("/")}/build_params"
-
-  private def writeParamsSidecar(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, p: BuildParams): Unit =
-    graft.etl.IncrementalLoad.atomicRewrite(spark, paramsPath(path)) {
-      staging =>
-        paramsDf(spark, p).coalesce(1).write.mode("overwrite").parquet(staging)
-    }
-
-  /** Persisted params of a directory index, or None for an index
-    * written before params were recorded (legacy — maintenance then
-    * falls back to call-site values, the pre-persistence behavior). */
-  def readParamsSidecar(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Option[BuildParams] = {
-    val (fs, hp) = graft.etl.IncrementalLoad.fsFor(spark, paramsPath(path))
-    if (fs.exists(hp)) Some(paramsOf(spark.read.parquet(paramsPath(path))))
-    else None
-  }
-
-  // ------- versioned graph index: ManifestTable-committed layers -------
+  // ------- graph index: ManifestTable-committed layers -------
 
   private val EdgesT = "edges"
   private val UpperT = "upper_edges"
   private val TombT = "tombstones"
   private val ParamsT = "build_params"
 
-  /** Per-file coverage every versioned edge publish records: src
-    * range+bloom (discovery for [[graphForgetVersioned]]'s targeted
-    * rewrite of affected sources) and a dst bloom (the "who points at
-    * a dead node" scan) — what lets a small forget touch only the edge
-    * files holding a tombstoned node instead of rebuilding the table. */
+  /** Per-file coverage every edge publish records: src range+bloom
+    * (discovery for [[graphForgetVersioned]]'s targeted rewrite of
+    * affected sources) and a dst bloom (the "who points at a dead
+    * node" scan) — what lets a small forget touch only the edge files
+    * holding a tombstoned node instead of rebuilding the table. */
   private val EdgeStats = Map(EdgesT -> "src", UpperT -> "src")
   private val EdgeBlooms = Map(EdgesT -> "src", UpperT -> "src")
   private val EdgeExtraBlooms = Map(EdgesT -> Seq("dst"), UpperT -> Seq("dst"))
 
-  /** Persisted params of a versioned index (None for pre-params
-    * commits). */
+  /** The build params committed with the index at `root`. Every index
+    * write records them, so a missing or malformed `build_params` table
+    * is an error naming the root — never a silent fall-back to the
+    * caller's arguments, the drift the table exists to prevent. */
   private[graft] def readParamsVersioned(
-      spark: org.apache.spark.sql.SparkSession,
-      root: String): Option[BuildParams] =
-    scala.util.Try(
-      paramsOf(graft.etl.ManifestTable.read(spark, root, ParamsT))).toOption
+      spark: org.apache.spark.sql.SparkSession, root: String): BuildParams =
+    try paramsOf(graft.etl.ManifestTable.read(spark, root, ParamsT))
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        throw new IllegalStateException(
+          s"graph index at $root: unreadable $ParamsT table: ${e.getMessage}", e)
+    }
 
   /** Footer-only empty tombstone table (the ManifestTable.deleteWhere
     * schema-preservation idiom: repartition(1) of an empty frame still
     * writes one parquet footer, so the table stays readable). */
-  private def emptyTombstones(
+  private def emptyTombTable(
       spark: org.apache.spark.sql.SparkSession): DataFrame =
     spark.range(0).select(col("id").as("vec_id")).repartition(1)
 
-  /** [[graphWrite]] committed through [[graft.etl.ManifestTable]]: both
-    * edge layers AND the tombstone table land in ONE commit-file PUT —
-    * which closes the one atomicity gap the staged-swap family cannot
-    * (graphWrite publishes `edges` then `upper_edges` as two separate
-    * swaps, so a crash between them leaves a full layer newer than its
-    * routing layer). On top of cross-layer atomicity the manifest buys
-    * the versioned-IVF feature set: snapshot isolation for readers
-    * racing any maintenance op, "search as of version V"
-    * ([[layeredTopKVersioned]]), and retention vacuum
-    * ([[graft.etl.ManifestTable.vacuum]]). Returns the version.
+  /** Build and commit the graph index under `root`: the full-layer k-NN
+    * edge list plus a sampled UPPER-layer graph (HNSW-style two-level
+    * hierarchy), an empty tombstone table and the build params, all in
+    * ONE [[graft.etl.ManifestTable]] commit — a crash can never leave a
+    * full layer newer than its routing layer. The upper layer is the
+    * nodes with `id % upperMod == 0` — a property of the id, not of
+    * insertion order — so the index is a pure function of the corpus
+    * and an oracle replays it exactly. Build cost (bucket-confined
+    * pairwise + NN-descent) is paid once; searches
+    * ([[layeredTopKVersioned]]) read the edge lists back and pay only
+    * beam-walk joins. The manifest adds snapshot isolation for readers
+    * racing any maintenance op, "search as of version V", and retention
+    * vacuum ([[graft.etl.ManifestTable.vacuum]]). Returns the version.
     *
-    * Deliberately NO write-time blooms (unlike the IVF/minhash
-    * versioned appends): every read of the edge tables is a
-    * whole-table join (the beam expands over ALL of `edges`; the
-    * upper layer seeds likewise) — there is no probed-key read that
-    * could ever consult a per-file filter, so a bloom here would be
-    * pure write-amplification. */
+    * Both edge tables carry per-file src range stats, a src bloom and a
+    * dst bloom: the beam itself joins the whole table, but
+    * [[graphForgetVersioned]] probes them to rewrite only the edge files
+    * that hold a forgotten node. */
   def graphWriteVersioned(corpus: DataFrame, idCol: String, vecCol: String,
                           dim: Int, planes: Int, tables: Int, degree: Int,
                           refine: Int, root: String, upperMod: Int = 4,
@@ -707,7 +360,8 @@ object GraphAnn {
     val upper = corpus.filter(pmod(col(idCol), lit(upperMod.toLong)) === 0L)
     // the two layer builds are independent and EAGER (their refine
     // rounds lineage-cut as they are constructed) — overlap them
-    // (guide §2.6) like the directory family's graphWrite
+    // (guide §2.6) so the sparse upper build back-fills the full
+    // layer's stage tails
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     val fFull = scala.concurrent.Future(
@@ -721,19 +375,23 @@ object GraphAnn {
     graft.etl.ManifestTable.publish(spark, root, Map(
       EdgesT -> awaited(fFull),
       UpperT -> awaited(fUpper),
-      TombT -> emptyTombstones(spark),
+      TombT -> emptyTombTable(spark),
       ParamsT -> paramsDf(spark, BuildParams(dim, planes, tables, degree,
         refine, upperMod, upperDegree, upperRefine, corpus.count(), 0L))),
       statsCols = EdgeStats, bloomCols = EdgeBlooms,
       extraBloomCols = EdgeExtraBlooms)
   }
 
-  /** [[graphDelete]] for the versioned index: the merged tombstone set
-    * republishes as a new version in one commit (edge layers carried
-    * untouched — byte-identical, never re-read). Soft-delete semantics
-    * are identical to the sidecar family: tombstoned nodes keep
-    * ROUTING, never RETURN. Pre-delete versions stay searchable until
-    * retention drops them. Idempotent. */
+  /** SOFT-delete ids from the index — the HNSW soft-delete discipline:
+    * tombstoned nodes keep ROUTING (their edges stay in both layers, so
+    * the graph stays navigable — cutting them would disconnect regions
+    * and crater recall) but are never RETURNED: [[layeredTopKVersioned]]
+    * drops them from the final beam and re-ranks the live survivors.
+    * The merged tombstone set republishes as a new version in one
+    * commit; the edge layers carry over untouched, never re-read.
+    * Pre-delete versions stay searchable until retention drops them.
+    * Reclaim dead nodes with [[graphForgetVersioned]] (few) or
+    * [[graphVacuumVersioned]] (many). Idempotent. */
   def graphDeleteVersioned(spark: org.apache.spark.sql.SparkSession,
                            root: String, ids: DataFrame): Long = {
     val nw = ids.select(col(ids.columns.head).cast("long").as("vec_id"))
@@ -743,12 +401,13 @@ object GraphAnn {
       Map(TombT -> merged.coalesce(1)))
   }
 
-  /** [[graphVacuum]] for the versioned index: rebuild BOTH layers from
-    * the live corpus and clear the tombstone table — all three tables
-    * in ONE atomic commit (the sidecar family needs two swaps plus a
-    * sidecar delete, idempotence doing the work a transaction would).
-    * Post-vacuum the latest version equals a fresh
-    * [[graphWriteVersioned]] over the live corpus. */
+  /** VACUUM: rebuild BOTH layers from the live corpus and clear the
+    * tombstone table — all four tables in ONE atomic commit. A k-NN
+    * graph over the survivors is not the survivor subgraph of the old
+    * edge lists (removing a hub must re-route its neighborhood through
+    * new edges), so vacuum is a rebuild by construction. Post-vacuum
+    * the latest version equals a fresh [[graphWriteVersioned]] over the
+    * live corpus. */
   def graphVacuumVersioned(spark: org.apache.spark.sql.SparkSession,
                            root: String, corpus: DataFrame, idCol: String,
                            vecCol: String, dim: Int, planes: Int,
@@ -766,7 +425,7 @@ object GraphAnn {
           degree, refine, cutFinal = false),
         UpperT -> knnGraph(upper, idCol, vecCol, dim, planes, tables,
           upperDegree, upperRefine, cutFinal = false),
-        TombT -> emptyTombstones(spark),
+        TombT -> emptyTombTable(spark),
         ParamsT -> paramsDf(spark, BuildParams(dim, planes, tables, degree,
           refine, upperMod, upperDegree, upperRefine, live.count(), 0L))),
         statsCols = EdgeStats, bloomCols = EdgeBlooms,
@@ -774,36 +433,33 @@ object GraphAnn {
     } finally live.unpersist()
   }
 
-  /** TARGETED reclaim of a SMALL tombstone set — the keyed-forget path
-    * of the versioned graph index. [[graphVacuumVersioned]] rebuilds
-    * both layers from the live corpus (right when deletes are a large
-    * fraction), but a 2-node GDPR forget must not rewrite an N-file
-    * edge table: this repair rewrites ONLY the edge files holding a
-    * tombstoned node (as src or dst) — discovered through the per-file
-    * src stats/blooms + dst blooms every versioned edge publish records
-    * — and replaces the affected sources' lists with EXACT top-degree
-    * lists over the live layer (brute force: the affected set is
-    * tombstone-proportional, so the scoring crossJoin is
-    * O(|affected| × layer) with a broadcast query side — better-than-
-    * LSH-approximate lists for exactly the nodes a forget disturbed).
-    * Dead nodes stop routing entirely (full vacuum semantics for them);
-    * untouched files carry byte-identical into the new versions.
+  /** TARGETED reclaim of a SMALL tombstone set — the keyed-forget path.
+    * [[graphVacuumVersioned]] rebuilds both layers from the live corpus
+    * (right when deletes are a large fraction), but a 2-node GDPR
+    * forget must not rewrite an N-file edge table: this repair rewrites
+    * ONLY the edge files holding a tombstoned node (as src or dst) —
+    * discovered through the per-file src stats/blooms + dst blooms
+    * every edge publish records — and replaces the affected sources'
+    * lists with EXACT top-degree lists over the live layer (brute force:
+    * the affected set is tombstone-proportional, so the scoring
+    * crossJoin is O(|affected| × layer) with a broadcast query side —
+    * better-than-LSH-approximate lists for exactly the nodes a forget
+    * disturbed). Dead nodes stop routing entirely (full vacuum semantics
+    * for them); untouched files carry byte-identical into the new
+    * versions.
     *
     * Three commits (edges repair, upper repair, tombstone clear), each
     * atomic; the sequence is idempotent — a crash between them leaves
-    * tombstone-filtered search exact (the cleared set only shrinks
-    * what the final filter must drop) and a re-run converges. Returns
+    * tombstone-filtered search exact (the cleared set only shrinks what
+    * the final filter must drop) and a re-run converges. Returns
     * Some(version) of the tombstone-clearing commit, or None — caller
     * escalates to [[graphVacuumVersioned]] — when tombstones exceed
-    * `maxForget`, the index has no persisted build params, or nothing
-    * is tombstoned. */
+    * `maxForget` or nothing is tombstoned. */
   def graphForgetVersioned(spark: org.apache.spark.sql.SparkSession,
                            root: String, corpus: DataFrame, idCol: String,
                            vecCol: String,
                            maxForget: Int = 1024): Option[Long] = {
-    val pOpt = readParamsVersioned(spark, root)
-    if (pOpt.isEmpty) return None
-    val p = pOpt.get
+    val p = readParamsVersioned(spark, root)
     val tombAll = graft.etl.ManifestTable.read(spark, root, TombT)
       .select(col("vec_id"))
     val tombIds = tombAll.limit(maxForget + 1).collect()
@@ -836,74 +492,71 @@ object GraphAnn {
       live.filter(pmod(col(idCol), lit(p.upperMod.toLong)) === 0L),
       p.upperDegree)
     Some(graft.etl.ManifestTable.publish(spark, root,
-      Map(TombT -> emptyTombstones(spark))))
+      Map(TombT -> emptyTombTable(spark))))
   }
 
-  /** [[graphCompact]] for the versioned index: the upper routing layer
-    * rebuilds as a new version (full layer + tombstones carried).
-    * Tombstoned nodes stay IN the routing layer by the soft-delete
-    * contract — they route, they don't return. */
+  /** Index COMPACTION — rebuild the upper routing layer from the
+    * CURRENT corpus as a new version (full layer + tombstones carried).
+    * Appends below [[graphAppendVersioned]]'s bar leave the upper layer
+    * stale: inserted nodes stay reachable through full-layer
+    * forward/reverse edges but never ROUTE queries, so regions populated
+    * only by appended vectors have no upper-layer presence. Compaction
+    * restores the build invariant exactly: post-compact `upper_edges`
+    * equals a fresh build's for the same corpus. Tombstoned nodes stay
+    * IN the routing layer by the soft-delete contract — they route,
+    * they don't return. The layer hashes under the committed
+    * dim/planes/tables; the (possibly new) upper knobs are recorded and
+    * the staleness accounting resets. Cost: one sparse knnGraph build
+    * over ~1/upperMod of the corpus. */
   def graphCompactVersioned(spark: org.apache.spark.sql.SparkSession,
                             root: String, corpus: DataFrame, idCol: String,
-                            vecCol: String, dim: Int, planes: Int,
-                            tables: Int, upperMod: Int = 4,
+                            vecCol: String, upperMod: Int = 4,
                             upperDegree: Int = 8,
                             upperRefine: Int = 1): Long = {
     require(upperMod >= 2, "upperMod >= 2 (1 would duplicate the full layer)")
+    val p = readParamsVersioned(spark, root)
     val upper = corpus.filter(pmod(col(idCol), lit(upperMod.toLong)) === 0L)
-    val tbls = Map(UpperT -> knnGraph(upper, idCol, vecCol, dim, planes,
-      tables, upperDegree, upperRefine, cutFinal = false)) ++
-      // the upper layer is fresh again: record the (possibly new) upper
-      // knobs and reset the staleness accounting
-      readParamsVersioned(spark, root).map(p =>
-        ParamsT -> paramsDf(spark, p.copy(upperMod = upperMod,
-          upperDegree = upperDegree, upperRefine = upperRefine,
-          baseN = corpus.count(), appendedN = 0L)))
-    graft.etl.ManifestTable.publish(spark, root, tbls,
+    graft.etl.ManifestTable.publish(spark, root, Map(
+      UpperT -> knnGraph(upper, idCol, vecCol, p.dim, p.planes, p.tables,
+        upperDegree, upperRefine, cutFinal = false),
+      ParamsT -> paramsDf(spark, p.copy(upperMod = upperMod,
+        upperDegree = upperDegree, upperRefine = upperRefine,
+        baseN = corpus.count(), appendedN = 0L))),
       statsCols = EdgeStats, bloomCols = EdgeBlooms,
       extraBloomCols = EdgeExtraBlooms)
   }
 
-  /** [[graphAppend]] for the versioned index: the merged full layer
-    * commits as ONE new version (upper layer + tombstones carried
-    * untouched), with TWO self-escalation cadences, both evaluated
-    * under the index's PERSISTED build params (never this call site's
-    * defaults — an index built with upperRefine=0 must not be silently
-    * rebuilt under upperRefine=1):
+  /** INCREMENTAL insert of a `delta` batch without a rebuild
+    * ([[appendMergedEdges]]): the merged full layer commits as ONE new
+    * version (upper layer + tombstones carried untouched), with TWO
+    * self-escalation cadences, both evaluated under the index's
+    * COMMITTED build params (never this call site's arguments — an
+    * index built with upperRefine=0 must not be silently rebuilt under
+    * upperRefine=1, nor a merge mix edge structures built under
+    * drifted dim/planes/tables/degree into one index):
     *
     *  - tombstone fraction >= `vacuumAtTombstoneFraction` → the append
-    *    folds into [[graphVacuumVersioned]] (one rebuild commit);
+    *    folds into [[graphVacuumVersioned]] over base ∪ delta (one
+    *    rebuild commit): every append republishes the full edge layer,
+    *    dead nodes' edges included, so under churn an append-only regime
+    *    would re-copy an ever-growing dead fraction forever;
     *  - appended fraction >= `compactAtAppendedFraction` → the commit
     *    ALSO rebuilds the upper routing layer
     *    ([[graphCompactVersioned]] semantics) in the SAME version.
     *    Without this, pure append-only growth — the most common
-    *    workload — degrades routing without bound: appended nodes never
-    *    enter the upper layer, so regions populated only by appends
-    *    have no routing presence. The accounting rides the
-    *    `build_params` table: `base_n` = corpus size at the last upper
-    *    build, `appended_n` = rows appended since, reset whenever any
-    *    op rebuilds the upper layer.
+    *    workload — degrades routing without bound. The accounting rides
+    *    the `build_params` table: `base_n` = corpus size at the last
+    *    upper build, `appended_n` = rows appended since, reset whenever
+    *    any op rebuilds the upper layer.
     *
     * Returns the version. */
   def graphAppendVersioned(spark: org.apache.spark.sql.SparkSession,
                            root: String, base: DataFrame, delta: DataFrame,
-                           idCol: String, vecCol: String, dim: Int,
-                           planes: Int, tables: Int, degree: Int,
+                           idCol: String, vecCol: String,
                            rounds: Int, beamWidth: Int, entries: Seq[Long],
                            vacuumAtTombstoneFraction: Double = 0.25,
-                           compactAtAppendedFraction: Double = 0.5,
-                           refine: Int = 1, upperMod: Int = 4,
-                           upperDegree: Int = 8,
-                           upperRefine: Int = 1): Long = {
-    // a legacy (pre-params) index keeps legacy behavior: call-site args
-    // drive this append, but are NEVER persisted as the authoritative
-    // build_params — recording them would launder a call site's
-    // defaults into "what the index was built with", the exact drift
-    // the persistence exists to prevent
-    val pOpt = readParamsVersioned(spark, root)
-    val p = pOpt.getOrElse(BuildParams(dim,
-      planes, tables, degree, refine, upperMod, upperDegree, upperRefine,
-      baseN = base.count(), appendedN = 0L))
+                           compactAtAppendedFraction: Double = 0.5): Long = {
+    val p = readParamsVersioned(spark, root)
     val tombN = graft.etl.ManifestTable.read(spark, root, TombT).count()
     val deltaN = delta.count()
     if (tombN > 0 &&
@@ -920,24 +573,19 @@ object GraphAnn {
     val merged = appendMergedEdges(edges, base, delta, idCol, vecCol,
       p.dim, p.planes, p.tables, p.degree, rounds, beamWidth, entries)
     val appended = p.appendedN + deltaN
-    if (pOpt.isEmpty) {
-      // legacy index: no persisted accounting to update, no cadence
-      graft.etl.ManifestTable.publish(spark, root, Map(EdgesT -> merged),
-        statsCols = EdgeStats, bloomCols = EdgeBlooms,
-        extraBloomCols = EdgeExtraBlooms)
-    } else if (appended.toDouble / p.baseN.max(1L) >= compactAtAppendedFraction) {
+    if (appended.toDouble / p.baseN.max(1L) >= compactAtAppendedFraction) {
       // upper-staleness escalation: merged full layer AND the rebuilt
       // routing layer land in ONE commit (tombstoned nodes stay in the
       // routing layer — they route, they don't return)
       val corpus = base.select(col(idCol).as("__i"), col(vecCol).as("__v"))
         .unionByName(delta.select(col(idCol).as("__i"), col(vecCol).as("__v")))
       val upper = corpus.filter(pmod(col("__i"), lit(p.upperMod.toLong)) === 0L)
-      val newBase = p.baseN + appended
       graft.etl.ManifestTable.publish(spark, root, Map(
         EdgesT -> merged,
         UpperT -> knnGraph(upper, "__i", "__v", p.dim, p.planes, p.tables,
           p.upperDegree, p.upperRefine, cutFinal = false),
-        ParamsT -> paramsDf(spark, p.copy(baseN = newBase, appendedN = 0L))),
+        ParamsT -> paramsDf(spark,
+          p.copy(baseN = p.baseN + appended, appendedN = 0L))),
         statsCols = EdgeStats, bloomCols = EdgeBlooms,
         extraBloomCols = EdgeExtraBlooms)
     } else {
@@ -949,11 +597,23 @@ object GraphAnn {
     }
   }
 
-  /** [[layeredTopKPartitioned]] against a [[graphWriteVersioned]]
-    * index, optionally pinned to a retained `version` — every layer
-    * (edges, routing, tombstones) resolves from the SAME commit, so a
-    * pinned search is consistent by construction even while appends,
-    * deletes, and vacuums commit concurrently. */
+  /** Two-phase layered search over the index at `root`, optionally
+    * pinned to a retained `version`: a cheap beam over the SPARSE upper
+    * graph first (few nodes, small degree — it localizes every query to
+    * its neighborhood from fixed global entry points), then the
+    * full-layer beam SEEDED by the upper results plus the query's own
+    * LSH bucket mates. The upper phase replaces blind global entry
+    * points with per-query-adapted ones, which is what lets the
+    * full-layer walk converge in fewer rounds at equal-or-better recall
+    * (the HNSW argument, two levels deep). Tombstoned nodes route the
+    * walk but are dropped from the final beam, which is re-ranked over
+    * the live survivors so `rank <= k` still yields k results. Every
+    * layer (edges, routing, tombstones) resolves from the SAME commit,
+    * so a pinned search is consistent by construction even while
+    * appends, deletes and vacuums commit concurrently.
+    *
+    * `entries` must be upper-layer ids (multiples of `upperMod`).
+    * Output: (query_id, vec_id, cosine, rank), rank 1..beamWidth. */
   def layeredTopKVersioned(spark: org.apache.spark.sql.SparkSession,
                            root: String, corpus: DataFrame,
                            queries: DataFrame, idCol: String,
@@ -963,15 +623,63 @@ object GraphAnn {
                            rounds: Int = 3, beamWidth: Int = 32,
                            upperMod: Int = 4,
                            version: Option[Long] = None): DataFrame = {
+    require(entries.forall(_ % upperMod == 0),
+      s"entries must live on the upper layer (id % $upperMod == 0)")
     def tbl(t: String) = version match {
       case Some(v) => graft.etl.ManifestTable.readAt(spark, root, t, v)
       case None    => graft.etl.ManifestTable.read(spark, root, t)
     }
-    layeredSearch(tbl(EdgesT).select("src", "dst"),
-      tbl(UpperT).select("src", "dst"),
-      Some(tbl(TombT).select(col("vec_id"))),
-      corpus, queries, idCol, vecCol, dim, planes, tables, entries,
-      upperRounds, upperWidth, rounds, beamWidth, upperMod)
+    val upperSeeds = queries.select(col(idCol).as("query_id"))
+      .crossJoin(broadcast(entries.toDF("vec_id")))
+      .filter(col("vec_id") =!= col("query_id"))
+    val upperBeam = beamTopK(corpus, queries,
+      tbl(UpperT).select("src", "dst"), upperSeeds, idCol, vecCol,
+      upperRounds, upperWidth)
+    val seeds = dedupKeyed(
+      upperBeam.select(col("query_id"), col("vec_id"))
+        .union(lshSeeds(corpus, queries, idCol, vecCol, dim, planes, tables,
+          entries = Seq.empty)),
+      "query_id")
+    val beam = beamTopK(corpus, queries, tbl(EdgesT).select("src", "dst"),
+      seeds, idCol, vecCol, rounds, beamWidth)
+    survivorsReRanked(beam.join(broadcast(tbl(TombT).select(col("vec_id"))),
+      Seq("vec_id"), "left_anti"))
+  }
+
+  /** FILTERED layered search: top results among corpus rows satisfying
+    * `pred` (evaluated against `corpus`, which carries the metadata
+    * columns). The walk itself stays UNCONSTRAINED — non-matching nodes
+    * keep routing exactly like soft-deleted ones, because filtering
+    * during the walk fragments the graph under selective predicates
+    * (the ACORN problem) — and the predicate applies to the FINAL beam,
+    * re-ranked over the survivors. The over-widen discipline is the
+    * price: at selectivity s, a beam of width w yields ~s·w filtered
+    * results, so size `beamWidth ≈ k/s` (the graph twin of q328's
+    * over-probe rule). The filter side is an id-only column-pruned
+    * scan semi-joined against the (queries × beamWidth)-sized beam. */
+  def layeredTopKVersionedWhere(spark: org.apache.spark.sql.SparkSession,
+                                root: String, corpus: DataFrame,
+                                queries: DataFrame, idCol: String,
+                                vecCol: String, dim: Int, planes: Int,
+                                tables: Int, entries: Seq[Long],
+                                pred: Column,
+                                upperRounds: Int = 2, upperWidth: Int = 16,
+                                rounds: Int = 3, beamWidth: Int = 32,
+                                upperMod: Int = 4): DataFrame = {
+    val beam = layeredTopKVersioned(spark, root, corpus, queries, idCol,
+      vecCol, dim, planes, tables, entries, upperRounds, upperWidth,
+      rounds, beamWidth, upperMod)
+    val keep = corpus.filter(pred).select(col(idCol).as("vec_id"))
+    survivorsReRanked(beam.join(keep, Seq("vec_id"), "left_semi"))
+  }
+
+  /** Re-rank the rows of a final beam that survived a filter, per query
+    * by (cosine desc, vec_id asc). */
+  private def survivorsReRanked(beam: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("vec_id").asc)
+    beam.withColumn("rank", row_number().over(w).cast("long"))
+      .select(col("query_id"), col("vec_id"), col("cosine"), col("rank"))
   }
 
   private implicit class LongSeqToDf(xs: Seq[Long]) {

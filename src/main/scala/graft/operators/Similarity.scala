@@ -254,10 +254,10 @@ object Similarity {
     * lists per query. With `trainIters = 0` centroids are a deterministic
     * corpus sample (fixed, re-run-stable seed set); `trainIters > 0` runs
     * that many Lloyd's iterations first ([[kmeansCentroids]]) — better
-    * list balance and recall, same query plan. At 100 TB the corpus is
-    * written partitioned by `list_id`, so a query reads only nprobe
-    * partitions — the classic IVF pruning, expressed as partition
-    * pruning.
+    * list balance and recall, same query plan. At 100 TB the assigned
+    * corpus is persisted once ([[ivfWriteVersioned]]), so a query opens
+    * only the files of its nprobe lists — the classic IVF pruning,
+    * expressed as manifest file skipping ([[ivfTopKVersioned]]).
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
@@ -299,170 +299,25 @@ object Similarity {
       .select("query_id", "vec_id", "cosine", "rank")
   }
 
-  /** Materialize the IVF index: corpus written partitioned by `list_id`.
-    * Returns the centroids — the caller persists them next to the index
-    * (they are the query-side "index metadata"). At 100 TB this is the
-    * point of IVF: a query batch reads ONLY its probed list partitions
-    * (classic IVF pruning, expressed as Spark partition pruning). */
-  def ivfWrite(corpus: DataFrame, idCol: String, vecCol: String, path: String,
-               nlist: Int = 16, trainIters: Int = 0,
-               metaCols: Seq[String] = Nil): Seq[Array[Double]] = {
-    import graft.expressions.CosinesExpr.{argMax, cosinesD}
-    // metaCols ride along in the index files so a filtered search
-    // (ivfTopKPartitionedWhere) pushes its predicate into the parquet
-    // scan instead of joining metadata back in by id
-    val c = corpus.select((Seq(col(idCol).as("vec_id"), col(vecCol).as("cv"))
-      ++ metaCols.map(col)): _*)
-    val cents =
-      if (trainIters > 0) kmeansCentroids(corpus, idCol, vecCol, nlist, trainIters)
-      else seedCentroids(c, nlist)
-    c.withColumn("list_id", argMax(cosinesD(col("cv"), cents)))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    cents
-  }
+  // ------------- persisted IVF: ManifestTable-committed index -------------
 
-  /** INCREMENTAL IVF insert — add a `delta` batch to an [[ivfWrite]]
-    * index WITHOUT re-training: each delta vector is assigned to its
-    * nearest EXISTING centroid (the exact [[ivfWrite]] argmax — same
-    * literal centroid matrix, same tie-break), and the batch is
-    * appended to the affected `list_id` partitions only. The centroids
-    * are immutable index metadata ([[ivfWrite]]'s return, persisted by
-    * the caller) — re-training would reassign the whole corpus, which
-    * is a rebuild, not an append. Drift discipline: as the appended
-    * fraction grows, lists get lopsided relative to what re-trained
-    * centroids would give; rebuild on the compaction cadence (the
-    * [[graft.operators.GraphAnn.graphCompact]] story).
-    *
-    * Cost is delta-proportional: one codegen'd assignment pass over
-    * the batch + new parquet files in the touched partitions; base
-    * files are never rewritten, so a mid-write failure leaves only
-    * uncommitted temporaries (parquet readers ignore `_temporary`) and
-    * the committed index keeps serving.
-    *
-    * Search equality contract (spec-asserted): at fixed centroids, a
-    * search of the appended index is IDENTICAL to a search of an index
-    * built from the full corpus in one shot — assignment is per-vector,
-    * so batching cannot change it. */
-  def ivfAppend(delta: DataFrame, idCol: String, vecCol: String,
-                path: String, cents: Seq[Array[Double]],
-                metaCols: Seq[String] = Nil): Unit = {
-    import graft.expressions.CosinesExpr.{argMax, cosinesD}
-    // metaCols must match the ivfWrite call's, or appended files would
-    // diverge from the index schema
-    delta.select((Seq(col(idCol).as("vec_id"), col(vecCol).as("cv"))
-        ++ metaCols.map(col)): _*)
-      .withColumn("list_id", argMax(cosinesD(col("cv"), cents)))
-      .write.mode("append").partitionBy("list_id").parquet(path)
-  }
-
-  /** Search a materialized IVF index: the scan filter `list_id IN
-    * (probed lists)` hits the partition columns, so only nprobe
-    * partitions of the corpus are read (`PartitionFilters` in the plan —
-    * asserted in ScaleFeaturesSpec). Results are identical to the
-    * in-memory `ivfTopK` with the same centroids. */
-  def ivfTopKPartitioned(spark: org.apache.spark.sql.SparkSession, path: String,
-                         cents: Seq[Array[Double]], queries: DataFrame,
-                         idCol: String, vecCol: String, k: Int,
-                         nprobe: Int = 4): DataFrame = {
-    val q = probes(queries, idCol, vecCol, cents, nprobe)
-    // the probed-list set is tiny (≤ nlist ints): collect it so the IN
-    // filter is a literal and prunes partitions at planning time
-    val probedLists = q.select(col("list_id")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val assigned0 = spark.read.parquet(path)
-      .filter(col("list_id").isin(probedLists: _*))
-    val assigned = ivfTombstones(spark, path) match {
-      case Some(tomb) =>
-        assigned0.join(broadcast(tomb), Seq("vec_id"), "left_anti")
-      case None => assigned0
-    }
-    rankProbedLists(assigned, q, k)
-  }
-
-  /** FILTERED ANN search over a materialized IVF index: top-k among
-    * the corpus rows satisfying `pred` — the "constrained nearest
-    * neighbor" query every retrieval stack needs (top-k within a
-    * language / license / date range). The predicate evaluates against
-    * metadata columns STORED IN THE INDEX (`ivfWrite(metaCols = ...)`),
-    * so the plan stacks BOTH prunings: `PartitionFilters` keeps the
-    * scan to the probed lists and `PushedFilters` drops non-matching
-    * row groups before any cosine is computed — no id-join back to a
-    * metadata table, no post-hoc filtering of a top-k that came up
-    * short. Selectivity discipline: the filter shrinks each probed
-    * list, not the probe count — under a highly selective predicate
-    * raise `nprobe` (the standard over-probe trade) or the k results
-    * may not exist in the probed lists at all. Tombstones are honored
-    * like the unfiltered path. */
-  def ivfTopKPartitionedWhere(spark: org.apache.spark.sql.SparkSession,
-                              path: String, cents: Seq[Array[Double]],
-                              queries: DataFrame, idCol: String,
-                              vecCol: String, pred: Column, k: Int,
-                              nprobe: Int = 4): DataFrame = {
-    val q = probes(queries, idCol, vecCol, cents, nprobe)
-    val probedLists = q.select(col("list_id")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val assigned0 = spark.read.parquet(path)
-      .filter(col("list_id").isin(probedLists: _*))
-      .filter(pred)
-    val assigned = ivfTombstones(spark, path) match {
-      case Some(tomb) =>
-        assigned0.join(broadcast(tomb), Seq("vec_id"), "left_anti")
-      case None => assigned0
-    }
-    rankProbedLists(assigned, q, k)
-  }
-
-  /** Current tombstone set of an IVF index as a 1-column (vec_id)
-    * frame, or None when nothing was ever deleted. */
-  def ivfTombstones(spark: org.apache.spark.sql.SparkSession,
-                    path: String): Option[DataFrame] =
-    graft.etl.Tombstones.read(spark, path, "vec_id")
-
-  /** SOFT-delete ids from an [[ivfWrite]] index — the missing quarter
-    * of the index lifecycle (write / [[ivfAppend]] / delete /
-    * [[ivfVacuum]]). Deletion is a TOMBSTONE union, never a data-file
-    * rewrite: the LSM discipline — at 100 TB a delete batch must cost
-    * O(batch), not O(touched partitions), and the base files stay
-    * immutable for snapshot readers. [[ivfTopKPartitioned]] anti-joins
-    * the (broadcast-sized) tombstone set, so deleted vectors stop
-    * appearing in results the moment the sidecar commits. The sidecar
-    * is republished through the atomic staged swap: a delete that dies
-    * mid-write leaves the previous tombstone set intact and readable.
-    * Idempotent — re-deleting the same ids is a distinct-union no-op. */
-  def ivfDelete(spark: org.apache.spark.sql.SparkSession, path: String,
-                ids: DataFrame): Unit =
-    graft.etl.Tombstones.delete(spark, path, ids, "vec_id")
-
-  /** VACUUM an IVF index: physically drop tombstoned rows, then clear
-    * the tombstone sidecar — run on the compaction cadence when the
-    * tombstone fraction makes the search-side anti-join (or the dead
-    * bytes scanned in probed lists) worth reclaiming. Only TOUCHED
-    * `list_id` partitions are rewritten; crash consistency by
-    * idempotence (see [[graft.etl.Tombstones.vacuum]]). */
-  def ivfVacuum(spark: org.apache.spark.sql.SparkSession,
-                path: String): Unit =
-    graft.etl.Tombstones.vacuum(spark, path, "vec_id", "list_id")
-
-  // ------------- versioned IVF: ManifestTable-committed index -------------
-
-  /** Table name the versioned IVF index commits under its root. */
+  /** Table name the IVF index commits under its root. */
   private val IvfTable = "lists"
 
-  /** [[ivfWrite]] committed through [[graft.etl.ManifestTable]]
-    * instead of a raw `list_id=` directory: every index publish is ONE
-    * atomic commit-file PUT, which upgrades the staged-swap story to
-    * real SNAPSHOT ISOLATION — a reader racing an append or vacuum
-    * plans from a consistent manifest file list, never a re-listed
-    * directory — plus "search as of version V" time travel
-    * ([[ivfTopKVersioned]]) and retention-based vacuum
-    * ([[graft.etl.ManifestTable.vacuum]]) for free. Directory
-    * partition pruning is replaced by manifest min/max FILE SKIPPING
-    * on `list_id`: rows are range-clustered by list before the write
-    * so each file covers a tight list range, and a probed search opens
-    * only files whose [min,max] intersects its probed set
-    * ([[graft.etl.ManifestTable.readPrunedIn]]) — the same I/O shape,
-    * one atomic commit. Returns the centroids (immutable index
-    * metadata the caller persists, as [[ivfWrite]]). */
+  /** Materialize the IVF index under `root`: every corpus vector
+    * assigned to its nearest centroid (`list_id`) and committed through
+    * [[graft.etl.ManifestTable]] as ONE atomic commit-file PUT — snapshot
+    * isolation for readers racing an append or delete, "search as of
+    * version V" time travel ([[ivfTopKVersioned]]) and retention vacuum
+    * ([[graft.etl.ManifestTable.vacuum]]). Rows are range-clustered by
+    * list before the write so each file covers a tight list range, and
+    * a probed search opens only files whose [min,max] intersects its
+    * probed set ([[graft.etl.ManifestTable.readPrunedIn]]) — the classic
+    * IVF pruning, expressed as file skipping. `metaCols` ride along in
+    * the index files so a filtered search pushes its predicate into the
+    * scan instead of joining metadata back in by id. Returns the
+    * centroids — immutable index metadata the caller keeps for appends
+    * and searches. */
   def ivfWriteVersioned(corpus: DataFrame, idCol: String, vecCol: String,
                         root: String, nlist: Int = 16, trainIters: Int = 0,
                         metaCols: Seq[String] = Nil): Seq[Array[Double]] = {
@@ -485,13 +340,20 @@ object Similarity {
     cents
   }
 
-  /** [[ivfAppend]] against a [[ivfWriteVersioned]] index: the delta is
-    * assigned under the same immutable centroids, range-clustered, and
-    * committed as a NEW VERSION via the idempotent manifest append —
-    * a replayed batch appends 0 rows and creates no version, readers
-    * of the previous version are untouched, and the search-equality
-    * contract of [[ivfAppend]] holds (assignment is per-vector).
-    * Returns rows appended. */
+  /** INCREMENTAL insert of a `delta` batch into an [[ivfWriteVersioned]]
+    * index WITHOUT re-training: each delta vector is assigned to its
+    * nearest EXISTING centroid (the build's exact argmax — same literal
+    * centroid matrix, same tie-break), range-clustered, and committed as
+    * a NEW VERSION via the idempotent manifest append — a replayed
+    * batch appends 0 rows and creates no version, and readers of the
+    * previous version are untouched. Re-training would reassign the
+    * whole corpus, which is a rebuild, not an append; as the appended
+    * fraction grows, lists get lopsided relative to re-trained
+    * centroids — rebuild on the compaction cadence. Search equality
+    * (spec-asserted): at fixed centroids, a search of the appended index
+    * equals a search of an index built from the full corpus in one
+    * shot — assignment is per-vector, so batching cannot change it.
+    * `metaCols` must match the write's. Returns rows appended. */
   def ivfAppendVersioned(delta: DataFrame, idCol: String, vecCol: String,
                          root: String, cents: Seq[Array[Double]],
                          metaCols: Seq[String] = Nil): Long = {
@@ -521,9 +383,9 @@ object Similarity {
     * at FILE granularity ([[graft.etl.ManifestTable.deleteWhere]]) —
     * only files holding a matching row are rewritten, untouched files
     * carry over byte-identical, and the whole delete is one atomic
-    * commit. Unlike the tombstone-sidecar [[ivfDelete]] this pays the
-    * rewrite up front (no search-side anti-join, no separate vacuum),
-    * and every pre-delete version stays searchable until retention
+    * commit. The delete pays the rewrite up front (no search-side
+    * anti-join, no separate vacuum), and every pre-delete version
+    * stays searchable until retention
     * drops it — the audit trail a right-to-be-forgotten pipeline wants
     * ([[graft.etl.ManifestTable.snapshotDiff]] shows exactly what each
     * delete removed). Returns (filesRewritten, rowsDeleted). */
@@ -558,10 +420,15 @@ object Similarity {
   /** Search a [[ivfWriteVersioned]] index, optionally pinned to a
     * retained `version` (time travel — "what did this query return
     * before yesterday's delete?") and optionally filtered by a
-    * metadata predicate over index-resident columns (the
-    * [[ivfTopKPartitionedWhere]] semantics). The probed-list set
-    * prunes at FILE granularity through the manifest's min/max stats;
-    * `pred` pushes into the parquet scan of the surviving files. */
+    * metadata predicate over index-resident columns (`metaCols` of the
+    * write) — the "constrained nearest neighbor" query: top-k within a
+    * language / license / date range. The probed-list set prunes at
+    * FILE granularity through the manifest's min/max stats and list_id
+    * blooms; `pred` pushes into the parquet scan of the surviving files,
+    * so no id-join back to a metadata table and no post-hoc filtering
+    * of a top-k that came up short. The filter shrinks each probed list,
+    * not the probe count: under a highly selective predicate raise
+    * `nprobe` (the standard over-probe trade). */
   def ivfTopKVersioned(spark: org.apache.spark.sql.SparkSession,
                        root: String, cents: Seq[Array[Double]],
                        queries: DataFrame, idCol: String, vecCol: String,
@@ -648,7 +515,7 @@ object Similarity {
   }
 
   /** Coarse-assign at FIXED centroids + long-form residual split —
-    * shared by the one-shot build and [[ivfPqAppend]]. Returns
+    * the first half of the one-shot build ([[pqEncodeAll]]). Returns
     * (assigned(vec_id, cv, list_id), rsub(vec_id, list_id, m, sub)). */
   private def pqResidSub(c: DataFrame, cents: Seq[Array[Double]], m: Int,
                          dsub: Int): (DataFrame, DataFrame) = {
@@ -681,34 +548,6 @@ object Similarity {
           lit(0.0d), (acc, x) => acc + x * x))
       .select("vec_id", "list_id", "m", "code", "rn2")
 
-  /** INCREMENTAL IVF-PQ insert — the [[ivfAppend]] contract for the
-    * quantized index: delta vectors coarse-assign to their nearest
-    * EXISTING centroid and PQ-encode under the FIXED trained codebooks
-    * (the exact build-time argmax/argmin — same literals, same
-    * tie-breaks), then append to the touched list partitions of BOTH
-    * tables. Centroids and codebooks are immutable index metadata —
-    * re-training either is a rebuild, not an append; as the appended
-    * fraction grows, quantization error drifts upward relative to
-    * re-trained codebooks — rebuild on the compaction cadence. The
-    * drift is MEASURED, not asserted: Round14OpsSpec's drift board
-    * grades appended-index recall against a full rebuild at 10/50/100%
-    * append fractions and pins the 50% floor (the compact-before-here
-    * trigger). Search equality at fixed (cents, cb) is
-    * batch-independent by construction (per-vector assignment +
-    * encoding), spec-asserted against a one-shot build. */
-  def ivfPqAppend(delta: DataFrame, idCol: String, vecCol: String,
-                  path: String, cents: Seq[Array[Double]],
-                  cb: Seq[Seq[Seq[Double]]], dim: Int): Unit = {
-    val m = cb.length
-    require(dim % m == 0, "dim must split evenly into m subspaces")
-    val c = delta.select(col(idCol).as("vec_id"), col(vecCol).as("cv"))
-    val (assigned, rsub) = pqResidSub(c, cents, m, dim / m)
-    pqEncodeRsub(rsub, cents, cb, dim / m)
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/codes")
-    assigned.write.mode("append").partitionBy("list_id")
-      .parquet(s"$path/vectors")
-  }
-
   /** Reconstruction of sub-centroid (m, cid) inside list `listId`:
     * the coarse centroid's subspace slice plus the codebook entry. */
   private def pqRecon(cents: Seq[Array[Double]], cb: Seq[Seq[Seq[Double]]],
@@ -718,8 +557,8 @@ object Similarity {
         mi * dsub + 1, lit(dsub)),
       element_at(element_at(typedLit(cb), mi + 1), cid + 1), _ + _)
 
-  /** Internal: the IVF-PQ search tail over caller-provided code and
-    * vector frames (in-memory or pruned index scans): probe, ADC-score,
+  /** Internal: the IVF-PQ search tail over the build's code and
+    * vector frames: probe, ADC-score,
     * cut at `rerank` by approximate cosine, exact-rerank, emit top-k. */
   private def pqSearchTail(codes: DataFrame, vectors: DataFrame,
                            cents: Seq[Array[Double]], cb: Seq[Seq[Seq[Double]]],
@@ -797,9 +636,7 @@ object Similarity {
     * broadcast; scoring is one hash join on (list_id, m, code) plus a
     * (query, vec) re-aggregation. Codebooks and coarse centroids are
     * driver literals (nlist*dim + m*ksub*dsub doubles). Per-query work
-    * is proportional to the probed lists' code rows, not the corpus —
-    * and with [[ivfPqWrite]]/[[ivfPqTopKPartitioned]] only those
-    * partitions are even READ.
+    * is proportional to the probed lists' code rows, not the corpus.
     *
     * Determinism: residuals are exact double ops from the literal
     * centroids; codebook means round 6dp per iteration; approximate
@@ -817,81 +654,6 @@ object Similarity {
     pqSearchTail(encoded, assigned, cents, cb, dim, queries, idCol, vecCol,
       k, nprobe, rerank)
   }
-
-  /** Materialized IVF-PQ index: the per-(vec, subspace) code rows
-    * written partitioned by `list_id`, plus the RAW vectors written
-    * alongside (partitioned the same way) for the rerank stage.
-    * Returns (coarse centroids, codebooks) — the query-side index
-    * metadata. At 100 TB the code table is ~m bytes of payload per
-    * vector and a query batch reads ONLY its probed list partitions of
-    * it; the raw-vector table is touched just for the top-`rerank`
-    * candidates per query. */
-  def ivfPqWrite(corpus: DataFrame, idCol: String, vecCol: String,
-                 path: String, dim: Int, nlist: Int = 16, m: Int = 8,
-                 ksub: Int = 16, pqIters: Int = 1)
-      : (Seq[Array[Double]], Seq[Seq[Seq[Double]]]) = {
-    val c = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("cv"))
-    val (cents, cb, assigned, encoded) =
-      pqEncodeAll(c, dim, nlist, m, ksub, pqIters)
-    encoded.write.mode("overwrite").partitionBy("list_id")
-      .parquet(s"$path/codes")
-    assigned.write.mode("overwrite").partitionBy("list_id")
-      .parquet(s"$path/vectors")
-    (cents, cb)
-  }
-
-  /** Search a materialized IVF-PQ index: the probed-list literal prunes
-    * BOTH scans (codes for ADC scoring, vectors for the exact rerank)
-    * to nprobe partitions — `PartitionFilters` in the plan, asserted in
-    * the spec. Results are identical to the in-memory [[ivfPqTopK]]
-    * with the same metadata. */
-  def ivfPqTopKPartitioned(spark: org.apache.spark.sql.SparkSession,
-                           path: String, cents: Seq[Array[Double]],
-                           cb: Seq[Seq[Seq[Double]]], queries: DataFrame,
-                           idCol: String, vecCol: String, dim: Int, k: Int,
-                           nprobe: Int = 4, rerank: Int = 40): DataFrame = {
-    import graft.expressions.CosinesExpr.{cosinesD, topKIndices}
-    val probedLists = queries.select(col(vecCol).as("qv"))
-      .select(explode(topKIndices(cosinesD(col("qv"), cents), nprobe))
-        .as("list_id"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val codes0 = spark.read.parquet(s"$path/codes")
-      .filter(col("list_id").isin(probedLists: _*))
-    val vectors0 = spark.read.parquet(s"$path/vectors")
-      .filter(col("list_id").isin(probedLists: _*))
-    // one sidecar covers both tables (they are one logical index)
-    val (codes, vectors) = ivfTombstones(spark, path) match {
-      case Some(tomb) =>
-        (codes0.join(broadcast(tomb), Seq("vec_id"), "left_anti"),
-          vectors0.join(broadcast(tomb), Seq("vec_id"), "left_anti"))
-      case None => (codes0, vectors0)
-    }
-    pqSearchTail(codes, vectors, cents, cb, dim, queries, idCol, vecCol,
-      k, nprobe, rerank)
-  }
-
-  /** SOFT-delete ids from an [[ivfPqWrite]] index — same LSM sidecar
-    * contract as [[ivfDelete]]; one tombstone set masks both the codes
-    * and the exact-rerank vectors table. */
-  def ivfPqDelete(spark: org.apache.spark.sql.SparkSession, path: String,
-                  ids: DataFrame): Unit =
-    graft.etl.Tombstones.delete(spark, path, ids, "vec_id")
-
-  /** VACUUM an IVF-PQ index: reclaim tombstoned rows from BOTH tables
-    * (touched list partitions only), clear the sidecar last — same
-    * idempotent crash story as [[ivfVacuum]]. */
-  def ivfPqVacuum(spark: org.apache.spark.sql.SparkSession,
-                  path: String): Unit =
-    ivfTombstones(spark, path).foreach { tomb =>
-      graft.etl.Tombstones.vacuumTable(spark, s"$path/codes", tomb,
-        "vec_id", "list_id")
-      graft.etl.Tombstones.vacuumTable(spark, s"$path/vectors", tomb,
-        "vec_id", "list_id")
-      val (fs, hp) = graft.etl.IncrementalLoad.fsFor(spark,
-        graft.etl.Tombstones.sidecarPath(path))
-      fs.delete(hp, true)
-    }
-
 
   /** Scalar int8 quantization of the embedding column: per-vector
     * symmetric scale `127 / max|x|`, elements mapped with round-half-up

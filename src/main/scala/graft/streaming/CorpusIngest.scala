@@ -1,188 +1,40 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Dedup
 
 /** Continuous corpus ingestion behind the near-dup gate — the streaming
-  * face of the dedup-index lifecycle (`writeMinhashIndex` /
-  * `minhashIndexAppend` / `minhashIndexDelete`): each micro-batch is
-  * deduped WITHIN itself, then against the persisted index
-  * (`incrementalPairs` — batch-proportional, the corpus never
-  * re-signs), and only the unique survivors append to the corpus sink
-  * and contribute their signatures to the index. Gated near-dups are
-  * not dropped silently: when `quarantinePath` is set they are routed
-  * to an audit table carrying what matched them (`doc_id, matched_id,
-  * jaccard, kind, batch_id`) — `kind = "batch"` for within-batch
-  * losers (matched_id = the surviving cluster representative; jaccard
-  * only when directly paired — transitive members carry null),
-  * `kind = "index"` for cross-history dups (matched_id = the smallest
-  * matching historical id, jaccard = the strongest match). This is the
-  * shape a 100 TB training-data pipeline actually runs: the index is
-  * the only state that grows with the corpus, and every batch touches
-  * it key-locally.
+  * face of the dedup-index lifecycle
+  * ([[graft.operators.Dedup.minhashIndexWriteVersioned]] and its
+  * append/forget/pairs methods). Corpus, index and quarantine are
+  * tables of ONE [[graft.etl.ManifestTable]] root. Each micro-batch is
+  * deduped WITHIN itself, then against the index (batch-proportional —
+  * the corpus never re-signs), and only the unique survivors append to
+  * the corpus and contribute their signatures to the index. Gated
+  * near-dups are not dropped silently: the quarantine table carries
+  * what matched them (`doc_id, matched_id, jaccard, kind, batch_id`) —
+  * `kind = "batch"` for within-batch losers (matched_id = the surviving
+  * cluster representative; jaccard only when directly paired —
+  * transitive members carry null), `kind = "index"` for cross-history
+  * dups (matched_id = the smallest matching historical id, jaccard =
+  * the strongest match). This is the shape a 100 TB training-data
+  * pipeline actually runs: the index is the only state that grows with
+  * the corpus, and every batch touches it key-locally.
   *
-  * Bootstrap contract: the caller creates the index once
-  * (`writeMinhashIndex` over the historical corpus, possibly empty)
-  * before starting the stream, and `corpusPath` must hold EXACTLY the
-  * indexed documents (the index supplies candidates, the corpus
-  * supplies their texts for exact-Jaccard verification — the two are
-  * one logical table and this operator keeps them in step). An empty
-  * history is fine: index over an empty frame (readers use the
-  * explicit-schema `Dedup.readMinhashIndex`, so the footer-less empty
-  * index reads as an empty frame), no corpus dir yet.
-  *
-  * Crash consistency (foreachBatch replays a failed batch UNDER THE
-  * SAME batch id — the Structured Streaming contract): a per-batch
-  * commit log beside the corpus (`<corpus>_commits/`, one empty
-  * `begin-<id>` marker before any sink write and one `commit-<id>`
-  * after all of them) makes the steady state O(1):
-  *   - `commit` present  → the batch fully landed; the replay returns
-  *     before reading anything (not even the index).
-  *   - no `begin`        → a genuinely fresh batch; its ids are new to
-  *     every sink, so the survivors append with NO membership scan.
-  *   - `begin` without `commit` → a crashed replay (the only time the
-  *     expensive path runs): each sink is re-guarded by an exact
-  *     membership anti-join so the replay completes exactly the side
-  *     effects that are missing (index-only, corpus-only, or neither).
-  * The batch's dup/unique DECISION is replay-stable independently of
-  * the log: near-dup candidates whose old side is one of the batch's
-  * own ids are excluded, so a partially-committed index append cannot
-  * make the batch's survivors look like duplicates of themselves. The
-  * quarantine sink needs no guard at all — each batch overwrites its
-  * own `batch_id=<id>` partition, idempotent by construction. Net
-  * effect: every unique document lands in both sinks exactly once,
-  * every gated document in the audit table exactly once, and the
-  * replay guard never scans the index (the round-13 O(index)-per-
-  * trigger flaw).
+  * Exactly-once: the entire batch lands as a SINGLE transactional
+  * commit carrying the `(writer, batchId)` watermark. foreachBatch
+  * replays a failed batch UNDER THE SAME batch id (the Structured
+  * Streaming contract); the replay either sees the watermark (O(1)
+  * manifest resolve, before touching the batch) and no-ops, or
+  * recomputes and commits whole. A pre-commit crash leaves only orphan
+  * data files that readers never see and `ManifestTable.vacuum`
+  * reclaims. An empty history needs no bootstrap: the first batch
+  * creates the tables.
   */
 object CorpusIngest {
-
-  /** Start the ingestion stream. `stream` must carry `idCol` (long) and
-    * `textCol`. Band settings MUST match the index's. */
-  def dedupIngest(stream: DataFrame, textCol: String, idCol: String,
-                  indexPath: String, corpusPath: String, checkpoint: String,
-                  bands: Int = 16, rowsPerBand: Int = 2, shingleN: Int = 3,
-                  threshold: Double = 0.8,
-                  quarantinePath: Option[String] = None): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, textCol, idCol, indexPath, corpusPath, batchId,
-          bands, rowsPerBand, shingleN, threshold, quarantinePath)
-        ()
-      }
-
-  /** One micro-batch through the gate (exposed for replay testing). */
-  private[graft] def ingestBatch(batch: DataFrame, textCol: String,
-                                 idCol: String, indexPath: String,
-                                 corpusPath: String, batchId: Long,
-                                 bands: Int, rowsPerBand: Int,
-                                 shingleN: Int, threshold: Double,
-                                 quarantinePath: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    // O(1) replay fast path: a committed batch re-fires as a no-op
-    // without touching the index, the corpus, or even the batch data.
-    // Batches whose commit marker was GC'd are covered by the
-    // committed-upto watermark, so a replay of ANY old id (retried
-    // orchestration, checkpoint loss/reset) no-ops — marker pruning
-    // never narrows the idempotence contract.
-    if (hasMarker(spark, corpusPath, s"commit-$batchId")) return
-    if (committedUpTo(spark, corpusPath) >= batchId) {
-      // LOUD skip: the watermark covers this id but its exact commit
-      // marker is gone. For a replay of a GC'd batch that is correct
-      // and routine — but a CHECKPOINT RESET restarts batch ids at 0
-      // against the same corpusPath, and then this guard silently
-      // drops genuinely NEW batches until ids climb past the old
-      // watermark (the pre-watermark design would have duplicated
-      // instead; the failure mode flipped from duplication to loss).
-      // Operators resetting a checkpoint MUST also use a fresh
-      // corpusPath (or clear its _commitlog); this line is how that
-      // mistake surfaces instead of vanishing.
-      System.err.println(
-        s"[graft.ingest] skipping batch $batchId at $corpusPath: covered " +
-          s"by committed-upto watermark (commit marker GC'd). Expected " +
-          s"for replays; if this stream's checkpoint was RESET, ids " +
-          s"restarted and this batch was NOT ingested — a reset " +
-          s"checkpoint requires a fresh corpusPath.")
-      return
-    }
-    val crashed = hasMarker(spark, corpusPath, s"begin-$batchId")
-    putMarker(spark, corpusPath, s"begin-$batchId")
-    val cached = batch.localCheckpoint() // source offsets are one-shot
-    if (cached.isEmpty) {
-      putMarker(spark, corpusPath, s"commit-$batchId")
-      pruneMarkers(spark, corpusPath, batchId - 1)
-      return
-    }
-    // 1) within-batch dedup: keep each near-dup cluster's min id; the
-    // losers go to quarantine with their surviving representative.
-    // `clusters` is O(component diameter) label propagation — fine HERE
-    // because the pair graph is BATCH-confined (one micro-batch's
-    // near-dups, diameters of a handful); corpus-sized pair graphs
-    // belong on the O(log n) Dedup.clustersStar instead.
-    val pairs = Dedup.minhashPairs(cached, textCol, idCol, bands,
-      rowsPerBand, shingleN, threshold).localCheckpoint()
-    val batchDrops = Dedup.clusters(pairs)
-      .filter(col("id") =!= col("cluster_id")).localCheckpoint()
-    val surv = cached
-      .join(batchDrops.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint()
-    val batchIds = broadcast(cached.select(col(idCol)))
-    // 2) cross-batch dedup against the maintained index; candidates
-    // whose old side is a batch id are replay artifacts of a partially
-    // committed index append, never real history — excluded for
-    // idempotence (a real dup's old id predates the batch)
-    val corpusOpt = readIfExists(spark, corpusPath)
-    val indexDups = (corpusOpt match {
-      case Some(corpus) =>
-        Dedup.incrementalPairs(spark, surv, corpus, textCol, idCol,
-            indexPath, bands, rowsPerBand, shingleN, threshold)
-          .join(batchIds.select(col(idCol).as("old_id")), Seq("old_id"),
-            "left_anti")
-      case None => spark.range(0)
-        .select(col("id").as("new_id"), col("id").as("old_id"),
-          lit(0d).as("jaccard")).limit(0)
-    }).groupBy(col("new_id"))
-      .agg(min(col("old_id")).as("matched_id"), max(col("jaccard")).as("jaccard"))
-      .localCheckpoint()
-    val unique = surv
-      .join(indexDups.select(col("new_id").as(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint()
-    // 3) quarantine the gated docs — idempotent by layout: the batch
-    // owns (and overwrites) its own batch_id partition, so a replay
-    // rewrites the identical rows instead of appending duplicates
-    quarantinePath.foreach { qp =>
-      val q = quarantineRows(pairs, batchDrops, indexDups)
-      if (!q.isEmpty)
-        q.coalesce(1).write.mode("overwrite")
-          .parquet(s"${qp.stripSuffix("/")}/batch_id=$batchId")
-    }
-    // 4) commit each sink; membership guards ONLY on a crashed replay
-    // (the one case where a sink may already hold part of the batch)
-    val toIndex =
-      if (crashed) unique.join(
-        Dedup.readMinhashIndex(spark, indexPath)
-          .join(batchIds.select(col(idCol).as("id")), Seq("id"), "left_semi")
-          .select(col("id").as(idCol)).distinct(),
-        Seq(idCol), "left_anti")
-      else unique
-    if (!toIndex.isEmpty)
-      Dedup.minhashIndexAppend(spark, toIndex, textCol, idCol, indexPath,
-        bands, rowsPerBand, shingleN)
-    val toCorpus = (corpusOpt, crashed) match {
-      case (Some(corpus), true) => unique.join(
-        corpus.join(batchIds, Seq(idCol), "left_semi").select(col(idCol)),
-        Seq(idCol), "left_anti")
-      case _ => unique
-    }
-    if (!toCorpus.isEmpty)
-      toCorpus.write.mode("append").parquet(corpusPath)
-    putMarker(spark, corpusPath, s"commit-$batchId")
-    pruneMarkers(spark, corpusPath, batchId - 1)
-  }
 
   /** Audit rows for the gated docs of one batch: within-batch losers
     * with their surviving representative (direct-pair jaccard when
@@ -206,28 +58,17 @@ object CorpusIngest {
     batchQ.unionByName(indexQ)
   }
 
-  /** [[dedupIngest]] in MANIFEST MODE: corpus, index, and quarantine
-    * are tables of ONE [[graft.etl.ManifestTable]] root, and the entire
-    * batch lands as a SINGLE transactional commit carrying the
-    * `(writer, batchId)` watermark — the strongest exactly-once shape
-    * this operator can have. There is no marker-file window, no sink
-    * ordering to crash between, and no crashed-replay guard path: a
-    * replay either sees the watermark (O(1) manifest resolve, before
-    * touching the batch) and no-ops, or recomputes and commits whole;
-    * a pre-commit crash leaves only orphan data files that readers
-    * never see and `ManifestTable.vacuum` reclaims. The replay-artifact
-    * exclusion of the marker-file mode is unnecessary here for the same
-    * reason — a candidate whose old side is a batch id cannot exist,
-    * because no partial index append can ever be visible. Readers get
-    * snapshot isolation and time travel over all three tables for
-    * free; `ManifestTable.compactLog` bounds the per-batch commit log. */
-  /** `compactLogEvery` > 0 runs [[graft.etl.ManifestTable.compactLog]]
+  /** Start the ingestion stream. `stream` must carry `idCol` (long) and
+    * `textCol`; band settings MUST match the index's.
+    *
+    * `compactLogEvery` > 0 runs [[graft.etl.ManifestTable.compactLog]]
     * every that-many batches (keeping `keepVersions` commits) INSIDE the
     * stream — the hygiene cadence a per-batch committer needs or the
     * commit log grows one file per trigger forever. Safe mid-stream:
     * commit files are self-contained snapshots and the watermark rides
-    * the current one, so dropping old commits never perturbs a replay. */
-  /** `compactAtFileCount` > 0 compacts the corpus/index tables whenever
+    * the current one, so dropping old commits never perturbs a replay.
+    *
+    * `compactAtFileCount` > 0 compacts the corpus/index tables whenever
     * their manifest file count crosses the bar (the CdcApply adaptive
     * trigger): per-batch transactional appends fragment both tables one
     * file set per trigger, and a batch-count cadence cannot see how
@@ -250,7 +91,7 @@ object CorpusIngest {
         ()
       }
 
-  /** One micro-batch in manifest mode (exposed for replay testing). */
+  /** One micro-batch (exposed for replay testing). */
   private[graft] def ingestBatchManifest(batch: DataFrame, textCol: String,
                                          idCol: String, root: String,
                                          batchId: Long, bands: Int,
@@ -296,9 +137,8 @@ object CorpusIngest {
       .join(indexDups.select(col("new_id").as(idCol)), Seq(idCol),
         "left_anti")
       .localCheckpoint()
-    val emptyIdx = spark.range(0).select(col("id"), lit(0L).as("bh"),
-      lit(0).as("band"))
-    val indexRows = Dedup.cappedIndexRows(tbl("index").getOrElse(emptyIdx),
+    val indexRows = Dedup.cappedIndexRows(
+      tbl("index").getOrElse(Dedup.emptyMinhashIndex(spark)),
       unique, textCol, idCol, bands, rowsPerBand, shingleN, maxBucket)
     val tables = Map("corpus" -> unique, "index" -> indexRows) ++
       (if (quarantine)
@@ -332,84 +172,5 @@ object CorpusIngest {
     if (compactLogEvery > 0 && batchId % compactLogEvery == 0)
       ManifestTable.compactLog(spark, root, keepVersions)
     ()
-  }
-
-  /** The per-batch commit log: empty marker files in a sibling dir of
-    * the corpus (`<corpus>_commits/` — the Tombstones sidecar idiom),
-    * one `begin-<id>`/`commit-<id>` pair per batch. Probing one is a
-    * single filesystem `exists` — O(1) regardless of index size. */
-  private[graft] def commitLogPath(corpusPath: String): String =
-    corpusPath.stripSuffix("/") + "_commits"
-
-  private def hasMarker(spark: SparkSession, corpusPath: String,
-                        name: String): Boolean = {
-    val (fs, hp) = graft.etl.IncrementalLoad.fsFor(spark,
-      s"${commitLogPath(corpusPath)}/$name")
-    fs.exists(hp)
-  }
-
-  private def putMarker(spark: SparkSession, corpusPath: String,
-                        name: String): Unit = {
-    val (fs, hp) = graft.etl.IncrementalLoad.fsFor(spark,
-      s"${commitLogPath(corpusPath)}/$name")
-    fs.mkdirs(hp.getParent)
-    if (!fs.exists(hp)) fs.create(hp, true).close()
-  }
-
-  /** GC the commit log: drop begin/commit markers of batches `< below`,
-    * FIRST persisting a `committed-upto-<below-1>` watermark covering
-    * every commit marker about to vanish — batches commit in order
-    * under the Structured Streaming contract, so one watermark encodes
-    * them all and a replay of ANY pruned id still no-ops (the full
-    * ingestBatch idempotence contract, not just the latest batch).
-    * Watermark-then-delete ordering makes a mid-GC crash safe: both
-    * forms may coexist, never neither. Without the GC the log grows two
-    * small files per trigger forever, and a begin marker orphaned by an
-    * old crash keeps forcing the expensive membership-guard path on
-    * every same-id replay long after the batch committed. Called when
-    * the commit marker lands, so the directory the O(1) exists-probe
-    * lists stays O(1)-sized too. */
-  private def pruneMarkers(spark: SparkSession, corpusPath: String,
-                           below: Long): Unit = {
-    if (below <= 0L) return
-    val (fs, dir) = graft.etl.IncrementalLoad.fsFor(spark,
-      commitLogPath(corpusPath))
-    if (!fs.exists(dir)) return
-    if (below - 1 > committedUpTo(spark, corpusPath))
-      putMarker(spark, corpusPath, s"committed-upto-${below - 1}")
-    fs.listStatus(dir).foreach { s =>
-      val n = s.getPath.getName
-      val id = n.dropWhile(_ != '-').drop(1)
-      if ((n.startsWith("begin-") || n.startsWith("commit-")) &&
-          id.nonEmpty && id.forall(_.isDigit) && id.toLong < below)
-        fs.delete(s.getPath, false)
-      // older watermarks are subsumed by the one just written
-      if (n.startsWith("committed-upto-")) {
-        val w = n.stripPrefix("committed-upto-")
-        if (w.forall(_.isDigit) && w.nonEmpty && w.toLong < below - 1)
-          fs.delete(s.getPath, false)
-      }
-    }
-  }
-
-  /** Highest batch id covered by a retained `committed-upto-` watermark
-    * (-1 when none) — one tiny-directory listing, O(1) post-GC. */
-  private def committedUpTo(spark: SparkSession,
-                            corpusPath: String): Long = {
-    val (fs, dir) = graft.etl.IncrementalLoad.fsFor(spark,
-      commitLogPath(corpusPath))
-    if (!fs.exists(dir)) return -1L
-    fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("committed-upto-"))
-      .map(_.stripPrefix("committed-upto-"))
-      .filter(s => s.nonEmpty && s.forall(_.isDigit))
-      .map(_.toLong)
-      .foldLeft(-1L)(_ max _)
-  }
-
-  private def readIfExists(spark: SparkSession,
-                           path: String): Option[DataFrame] = {
-    val (fs, hp) = graft.etl.IncrementalLoad.fsFor(spark, path)
-    if (fs.exists(hp)) Some(spark.read.parquet(path)) else None
   }
 }

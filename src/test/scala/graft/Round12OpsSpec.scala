@@ -99,14 +99,14 @@ class Round12OpsSpec extends SparkSpec {
     val qs = e.filter(col("vec_id") < 5)
     val exact = graft.operators.Similarity.bruteForceTopK(e, qs, "vec_id",
       "embedding", k = 10).select("query_id", "vec_id")
-    val path = tmpDir("graft-gann")
+    val root = tmpDir("graft-gann") + "/g"
     val t0 = System.nanoTime()
-    graft.operators.GraphAnn.graphWrite(e, "vec_id", "embedding",
+    graft.operators.GraphAnn.graphWriteVersioned(e, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 16, refine = 2,
-      path = path, upperMod = 4, upperDegree = 8, upperRefine = 1)
+      root = root, upperMod = 4, upperDegree = 8, upperRefine = 1)
     val tBuild = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
-    val ann = graft.operators.GraphAnn.layeredTopKPartitioned(spark, path,
+    val ann = graft.operators.GraphAnn.layeredTopKVersioned(spark, root,
         e, qs, "vec_id", "embedding", dim = 64, planes = 4, tables = 2,
         entries = Seq(0L, 4L, 8L, 12L), upperRounds = 2, upperWidth = 16,
         rounds = 3, beamWidth = 32)
@@ -261,15 +261,14 @@ class Round12OpsSpec extends SparkSpec {
     val mates = (0 until 64).filter(i => i % 8 == 0 && i != 0).map(_.toLong)
     val base = vecs.filter(!col("vec_id").isin(mates: _*))
     val delta = vecs.filter(col("vec_id").isin(mates: _*))
-    val path = tmpDir("graft-gann-app-spec")
-    graft.operators.GraphAnn.graphWrite(base, "vec_id", "embedding",
+    val root = tmpDir("graft-gann-app-spec") + "/g"
+    graft.operators.GraphAnn.graphWriteVersioned(base, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 1,
-      path = path, upperMod = 4, upperDegree = 8, upperRefine = 1)
-    graft.operators.GraphAnn.graphAppend(spark, path, base, delta,
-      "vec_id", "embedding", dim = 64, planes = 4, tables = 2,
-      degree = 8, rounds = 3, beamWidth = 16,
+      root = root, upperMod = 4, upperDegree = 8, upperRefine = 1)
+    graft.operators.GraphAnn.graphAppendVersioned(spark, root, base, delta,
+      "vec_id", "embedding", rounds = 3, beamWidth = 16,
       entries = Seq(4L, 12L, 20L, 28L))
-    val got = graft.operators.GraphAnn.layeredTopKPartitioned(spark, path,
+    val got = graft.operators.GraphAnn.layeredTopKVersioned(spark, root,
         vecs, vecs.filter(col("vec_id") === 0), "vec_id", "embedding",
         dim = 64, planes = 4, tables = 2,
         entries = Seq(4L, 12L, 20L, 28L), upperRounds = 2, upperWidth = 8,

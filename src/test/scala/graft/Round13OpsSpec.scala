@@ -3,50 +3,30 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Round-13 fixes on crafted fixtures: atomic graph-ANN index
-  * maintenance (staged-swap publish, duplicate-edge dedup), the
-  * atomicRewrite publish primitive, and the survival-board self-checksum
+  * maintenance (a failed append commits nothing, duplicate-edge
+  * dedup), the index lifecycles (append, forget, vacuum) on the
+  * manifest-committed indexes, and the survival-board self-checksum
   * diagnostic (q318/q319). */
 class Round13OpsSpec extends SparkSpec {
   import spark.implicits._
 
-  // ---- atomicRewrite: the single-path staged-swap primitive ----
-
-  test("atomicRewrite: mid-write failure leaves the published table intact") {
-    val dir = tmpDir("arw")
-    val path = s"$dir/t"
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(path)
-    // the callback fails AFTER staging partial contents — the published
-    // path must stay byte-readable and value-identical
-    intercept[RuntimeException] {
-      graft.etl.IncrementalLoad.atomicRewrite(spark, path) { staging =>
-        Seq((9L, "x")).toDF("id", "v").write.parquet(staging)
-        throw new RuntimeException("boom mid-append")
-      }
-    }
-    assert(spark.read.parquet(path).select("id").as[Long].collect().toSet
-      == Set(1L, 2L), "old table survives a failed rewrite")
-    val leftovers = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith(".rewrite-"))
-    assert(leftovers.isEmpty, s"staging cleaned up: ${leftovers.mkString(",")}")
+  /** Every parquet data file under an index root, referenced or not —
+    * what is physically on disk. */
+  private def dataFiles(root: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try s.iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).toList
+    finally s.close()
   }
 
-  test("atomicRewrite: success swaps new contents in; first publish works") {
-    val dir = tmpDir("arw2")
-    val path = s"$dir/t"
-    // first publish: no existing target
-    graft.etl.IncrementalLoad.atomicRewrite(spark, path) { staging =>
-      Seq(1L, 2L).toDF("id").write.parquet(staging)
-    }
-    assert(spark.read.parquet(path).count() == 2)
-    // rewrite: full replacement, old version gone, no leftovers
-    graft.etl.IncrementalLoad.atomicRewrite(spark, path) { staging =>
-      Seq(7L, 8L, 9L).toDF("id").write.parquet(staging)
-    }
-    assert(spark.read.parquet(path).select("id").as[Long].collect().toSet
-      == Set(7L, 8L, 9L))
-    assert(!new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith(".rewrite-")), "no staging/old dirs left")
-  }
+  /** Files of `table` the latest commit of `root` references. */
+  private def liveFiles(root: String, table: String): Set[String] =
+    graft.etl.ManifestTable.current(spark, root).get.entries
+      .filter(_.table == table).map(e => s"$root/${e.relPath}").toSet
+
+  private def version(root: String): Long =
+    graft.etl.ManifestTable.current(spark, root).get.version
 
   // ---- graphAppend: atomic + duplicate-free index maintenance ----
 
@@ -66,29 +46,27 @@ class Round13OpsSpec extends SparkSpec {
   test("graphAppend: failed append leaves the OLD index readable and searchable") {
     val vecs = groupedVecs()
     val base = vecs.filter(col("vec_id") < 24)
-    val path = tmpDir("gann-atomic")
-    graft.operators.GraphAnn.graphWrite(base, "vec_id", "embedding",
+    val root = tmpDir("gann-atomic") + "/g"
+    graft.operators.GraphAnn.graphWriteVersioned(base, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 1,
-      path = path, upperMod = 4, upperDegree = 8, upperRefine = 1)
-    val before = spark.read.parquet(s"$path/edges")
+      root = root, upperMod = 4, upperDegree = 8, upperRefine = 1)
+    def edges() = graft.etl.ManifestTable.read(spark, root, "edges")
       .select("src", "dst").as[(Long, Long)].collect().toSet
+    val before = edges()
+    val v0 = version(root)
     // poisoned delta: evaluating its vector column throws INSIDE the
     // append's jobs — whichever stage hits it first, the published
-    // index must be untouched (the old in-place overwrite deleted the
-    // only copy before the new write committed)
+    // index must be untouched
     val poisoned = vecs.filter(col("vec_id") >= 24)
       .withColumn("embedding",
         when(expr("raise_error('poisoned delta') IS NULL"), col("embedding")))
     intercept[Exception] {
-      graft.operators.GraphAnn.graphAppend(spark, path, base, poisoned,
-        "vec_id", "embedding", dim = 64, planes = 4, tables = 2,
-        degree = 8, rounds = 2, beamWidth = 16, entries = Seq(0L, 4L))
+      graft.operators.GraphAnn.graphAppendVersioned(spark, root, base,
+        poisoned, "vec_id", "embedding", rounds = 2, beamWidth = 16,
+        entries = Seq(0L, 4L))
     }
-    val after = spark.read.parquet(s"$path/edges")
-      .select("src", "dst").as[(Long, Long)].collect().toSet
-    assert(after == before, "failed append must not alter the index")
-    assert(!new java.io.File(path).listFiles()
-      .exists(_.getName.startsWith(".rewrite-")), "no staging left behind")
+    assert(edges() == before, "failed append must not alter the index")
+    assert(version(root) == v0, "a failed append commits nothing")
   }
 
   // ---- modularity: the community-quality gate for the LPA family ----
@@ -257,27 +235,27 @@ class Round13OpsSpec extends SparkSpec {
     val qs = e.filter(col("vec_id") < 3)
     val appended = tmpDir("ivf-app") + "/ivf"
     val oneShot = tmpDir("ivf-one") + "/ivf"
-    val c1 = graft.operators.Similarity.ivfWrite(base, "vec_id", "embedding",
-      appended, nlist = 16)
-    graft.operators.Similarity.ivfAppend(delta, "vec_id", "embedding",
-      appended, c1)
-    val c2 = graft.operators.Similarity.ivfWrite(corpus, "vec_id",
+    val c1 = graft.operators.Similarity.ivfWriteVersioned(base, "vec_id",
+      "embedding", appended, nlist = 16)
+    val baseFiles = liveFiles(appended, "lists")
+    assert(graft.operators.Similarity.ivfAppendVersioned(delta, "vec_id",
+      "embedding", appended, c1) == 20L)
+    val c2 = graft.operators.Similarity.ivfWriteVersioned(corpus, "vec_id",
       "embedding", oneShot, nlist = 16)
     assert(c1.map(_.toSeq) == c2.map(_.toSeq),
       "same seed rule, same centroids")
-    def search(p: String, c: Seq[Array[Double]]) =
-      graft.operators.Similarity.ivfTopKPartitioned(spark, p, c, qs,
+    def search(r: String, c: Seq[Array[Double]]) =
+      graft.operators.Similarity.ivfTopKVersioned(spark, r, c, qs,
           "vec_id", "embedding", k = 5, nprobe = 4)
         .select("query_id", "vec_id", "rank")
         .as[(Long, Long, Long)].collect().toSet
     assert(search(appended, c1) == search(oneShot, c2),
       "append-then-search == build-then-search at fixed centroids")
-    // the insert touched only the delta's own list partitions: every
-    // base file predates the append... cheapest observable proxy:
-    // delta rows are present and assigned to valid lists
-    val lists = spark.read.parquet(appended)
-      .filter(col("vec_id") >= 40).select("list_id").distinct().count()
-    assert(lists >= 1, "delta landed in the index")
+    // the insert only ADDED files: every base file is still referenced
+    assert(baseFiles.subsetOf(liveFiles(appended, "lists")),
+      "the append rewrote no base file")
+    assert(graft.etl.ManifestTable.read(spark, appended, "lists")
+      .filter(col("vec_id") >= 40).count() == 20L, "delta landed in the index")
   }
 
   // ---- graphCompact: upper-routing-layer rebuild after appends ----
@@ -287,22 +265,25 @@ class Round13OpsSpec extends SparkSpec {
     // two append batches, together holding EVERY node of directions 0
     // and 1 — including all their upper-eligible ids (0, 8, 16, 24 are
     // id % 4 == 0) — so after the appends the stale upper layer has no
-    // presence at all in those regions
+    // presence at all in those regions (8 appended of 24 stays below
+    // the append's 0.5 upper-rebuild bar)
     val inB1 = col("vec_id") % 8 === 0
     val inB2 = col("vec_id") % 8 === 1
     val base = vecs.filter(!inB1 && !inB2)
-    val path = tmpDir("gann-compact")
-    graft.operators.GraphAnn.graphWrite(base, "vec_id", "embedding",
+    val root = tmpDir("gann-compact") + "/g"
+    graft.operators.GraphAnn.graphWriteVersioned(base, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 1,
-      path = path, upperMod = 4, upperDegree = 8, upperRefine = 1)
-    graft.operators.GraphAnn.graphAppend(spark, path, base,
-      vecs.filter(inB1), "vec_id", "embedding", dim = 64, planes = 4,
-      tables = 2, degree = 8, rounds = 2, beamWidth = 16,
+      root = root, upperMod = 4, upperDegree = 8, upperRefine = 1)
+    graft.operators.GraphAnn.graphAppendVersioned(spark, root, base,
+      vecs.filter(inB1), "vec_id", "embedding", rounds = 2, beamWidth = 16,
       entries = Seq(4L, 12L))
-    graft.operators.GraphAnn.graphAppend(spark, path,
+    graft.operators.GraphAnn.graphAppendVersioned(spark, root,
       vecs.filter(!inB2), vecs.filter(inB2), "vec_id", "embedding",
-      dim = 64, planes = 4, tables = 2, degree = 8, rounds = 2,
-      beamWidth = 16, entries = Seq(4L, 12L))
+      rounds = 2, beamWidth = 16, entries = Seq(4L, 12L))
+    def upperSet(r: String) = graft.etl.ManifestTable
+      .read(spark, r, "upper_edges").select("src", "dst")
+      .as[(Long, Long)].collect().toSet
+    val upperBefore = upperSet(root)
     // staleness, observed on the routing layer itself: an upper-only
     // beam for a direction-0 probe, entered at the q311-style fixed
     // global entries {0, 4}, can only DISCOVER nodes through upper
@@ -310,7 +291,8 @@ class Round13OpsSpec extends SparkSpec {
     // so probe 8's true upper group-mates 16/24 (inserted, un-seeded)
     // stay unreachable until compaction rebuilds the layer
     def upperBeam(): Set[Long] = {
-      val ue = spark.read.parquet(s"$path/upper_edges").select("src", "dst")
+      val ue = graft.etl.ManifestTable.read(spark, root, "upper_edges")
+        .select("src", "dst")
       val probe = vecs.filter(col("vec_id") === 8L)
       val seeds = Seq((8L, 0L), (8L, 4L)).toDF("query_id", "vec_id")
       graft.operators.GraphAnn.beamTopK(vecs, probe, ue, seeds,
@@ -320,20 +302,28 @@ class Round13OpsSpec extends SparkSpec {
     val stale = upperBeam()
     assert((stale & Set(16L, 24L)).isEmpty,
       s"stale upper layer cannot route to inserted nodes, saw $stale")
-    graft.operators.GraphAnn.graphCompact(spark, path, vecs, "vec_id",
-      "embedding", dim = 64, planes = 4, tables = 2, upperMod = 4,
-      upperDegree = 8, upperRefine = 1)
+    val edgesBefore = graft.etl.ManifestTable.read(spark, root, "edges")
+      .select("src", "dst").as[(Long, Long)].collect().toSet
+    val v0 = version(root)
+    graft.operators.GraphAnn.graphCompactVersioned(spark, root, vecs,
+      "vec_id", "embedding", upperMod = 4, upperDegree = 8, upperRefine = 1)
+    assert(version(root) == v0 + 1, "compaction is one commit")
+    assert(upperSet(root) != upperBefore, "the upper layer was rebuilt")
     val compacted = upperBeam()
     assert(Set(16L, 24L).subsetOf(compacted),
       s"probe 8's upper group-mates (16/24) surface after compact, got $compacted")
+    assert(graft.etl.ManifestTable.read(spark, root, "edges")
+      .select("src", "dst").as[(Long, Long)].collect().toSet == edgesBefore,
+      "the full layer is carried untouched")
+    val p = graft.operators.GraphAnn.readParamsVersioned(spark, root)
+    assert(p.baseN == 32L && p.appendedN == 0L,
+      s"staleness accounting reset by the compaction: $p")
     // layout-only invariant: compacted upper layer == fresh build's
-    val fresh = tmpDir("gann-fresh")
-    graft.operators.GraphAnn.graphWrite(vecs, "vec_id", "embedding",
+    val fresh = tmpDir("gann-fresh") + "/g"
+    graft.operators.GraphAnn.graphWriteVersioned(vecs, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 1,
-      path = fresh, upperMod = 4, upperDegree = 8, upperRefine = 1)
-    def upperSet(p: String) = spark.read.parquet(s"$p/upper_edges")
-      .select("src", "dst").as[(Long, Long)].collect().toSet
-    assert(upperSet(path) == upperSet(fresh),
+      root = fresh, upperMod = 4, upperDegree = 8, upperRefine = 1)
+    assert(upperSet(root) == upperSet(fresh),
       "post-compact upper_edges is a pure function of the corpus")
   }
 
@@ -345,14 +335,15 @@ class Round13OpsSpec extends SparkSpec {
     val isDelta = col("vec_id") % 8 < 2
     val base = vecs.filter(!isDelta)
     val delta = vecs.filter(isDelta)
-    val path = tmpDir("gann-dup")
-    graft.operators.GraphAnn.graphWrite(base, "vec_id", "embedding",
+    val root = tmpDir("gann-dup") + "/g"
+    graft.operators.GraphAnn.graphWriteVersioned(base, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 1,
-      path = path, upperMod = 4, upperDegree = 8, upperRefine = 1)
-    graft.operators.GraphAnn.graphAppend(spark, path, base, delta,
-      "vec_id", "embedding", dim = 64, planes = 4, tables = 2,
-      degree = 8, rounds = 2, beamWidth = 16, entries = Seq(4L, 12L))
-    val edges = spark.read.parquet(s"$path/edges").select("src", "dst")
+      root = root, upperMod = 4, upperDegree = 8, upperRefine = 1)
+    graft.operators.GraphAnn.graphAppendVersioned(spark, root, base, delta,
+      "vec_id", "embedding", rounds = 2, beamWidth = 16,
+      entries = Seq(4L, 12L))
+    val edges = graft.etl.ManifestTable.read(spark, root, "edges")
+      .select("src", "dst")
     val dupes = edges.groupBy("src", "dst").count()
       .filter(col("count") > 1).collect()
     assert(dupes.isEmpty, s"duplicate (src,dst) rows: ${dupes.mkString(",")}")
@@ -378,42 +369,44 @@ class Round13OpsSpec extends SparkSpec {
       s"no cartesian stage anywhere:\n$plan")
   }
 
-  // ---- ivfDelete / ivfVacuum: tombstones, then physical reclaim ----
+  // ---- IVF forget, then physical reclaim by retention vacuum ----
 
   test("ivfDelete: tombstoned rows vanish from search; delete is idempotent") {
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
       .filter(col("vec_id") < 60)
     val qs = e.filter(col("vec_id") < 3)
-    val path = tmpDir("ivf-del") + "/ivf"
-    val cents = graft.operators.Similarity.ivfWrite(e, "vec_id",
-      "embedding", path, nlist = 16)
+    val root = tmpDir("ivf-del") + "/ivf"
+    val cents = graft.operators.Similarity.ivfWriteVersioned(e, "vec_id",
+      "embedding", root, nlist = 16)
     val dead = (id: org.apache.spark.sql.Column) => id % 7 === 3
     def search(k: Int) = graft.operators.Similarity
-      .ivfTopKPartitioned(spark, path, cents, qs, "vec_id", "embedding",
+      .ivfTopKVersioned(spark, root, cents, qs, "vec_id", "embedding",
         k = k, nprobe = 4)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)]
       .collect()
-    // wide pre-delete board: the post-delete expectation is this board
-    // minus the dead ids, ranks compacted — deletion must change
+    // wide pre-forget board: the post-forget expectation is this board
+    // minus the dead ids, ranks compacted — the forget must change
     // NOTHING else (same probes, same candidates, same tie-breaks)
     val pre = search(20).toSeq
-    graft.operators.Similarity.ivfDelete(spark, path,
-      e.filter(dead(col("vec_id"))).select("vec_id"))
+    val deadIds = e.filter(dead(col("vec_id"))).select("vec_id")
+    val (files, rows) = graft.operators.Similarity.ivfForgetVersioned(
+      spark, root, deadIds)
+    assert(files > 0 && rows == deadIds.count(),
+      s"the forget deletes every dead row: ($files, $rows)")
     val post = search(5).toSet
     val expected = pre.filter(_._2 % 7 != 3).groupBy(_._1).toSeq.flatMap {
       case (q, rows) => rows.sortBy(_._3).take(5)
         .zipWithIndex.map { case ((_, v, _), i) => (q, v, i + 1L) }
     }.toSet
     assert(post == expected,
-      s"post-delete top-5 == live pre-delete rows re-ranked\n$post\n$expected")
-    assert(!post.exists(_._2 % 7 == 3), "no tombstoned id in results")
-    // idempotent: re-deleting the same ids leaves one tombstone per id
-    graft.operators.Similarity.ivfDelete(spark, path,
-      e.filter(dead(col("vec_id"))).select("vec_id"))
-    val tomb = graft.operators.Similarity.ivfTombstones(spark, path).get
-    assert(tomb.count() == tomb.distinct().count() &&
-      tomb.count() == e.filter(dead(col("vec_id"))).count(),
-      "distinct-union tombstone set, no growth on re-delete")
+      s"post-forget top-5 == live pre-forget rows re-ranked\n$post\n$expected")
+    assert(!post.exists(_._2 % 7 == 3), "no forgotten id in results")
+    // idempotent: a second forget of the same ids finds nothing to
+    // rewrite and commits no version
+    val v = version(root)
+    assert(graft.operators.Similarity.ivfForgetVersioned(spark, root,
+      deadIds) == ((0L, 0L)), "a second forget rewrites 0 files")
+    assert(version(root) == v, "a no-op forget commits nothing")
   }
 
   test("ivfVacuum: touched lists rewritten, untouched files byte-stable, " +
@@ -421,76 +414,70 @@ class Round13OpsSpec extends SparkSpec {
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
       .filter(col("vec_id") < 60)
     val qs = e.filter(col("vec_id") < 3)
-    val path = tmpDir("ivf-vac") + "/ivf"
-    val cents = graft.operators.Similarity.ivfWrite(e, "vec_id",
-      "embedding", path, nlist = 16)
-    graft.operators.Similarity.ivfDelete(spark, path,
-      e.filter(col("vec_id") % 7 === 3).select("vec_id"))
+    val root = tmpDir("ivf-vac") + "/ivf"
+    val cents = graft.operators.Similarity.ivfWriteVersioned(e, "vec_id",
+      "embedding", root, nlist = 16)
     def search() = graft.operators.Similarity
-      .ivfTopKPartitioned(spark, path, cents, qs, "vec_id", "embedding",
+      .ivfTopKVersioned(spark, root, cents, qs, "vec_id", "embedding",
         k = 5, nprobe = 4)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)]
       .collect().toSet
-    val tombstoned = search()
-    val touched = spark.read.parquet(path)
-      .filter(col("vec_id") % 7 === 3)
-      .select("list_id").distinct().as[Int].collect().toSet
-    val untouched = spark.read.parquet(path)
-      .select("list_id").distinct().as[Int].collect().toSet -- touched
-    def files(lids: Set[Int]) = lids.flatMap { lid =>
-      val d = new java.io.File(s"$path/list_id=$lid")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getPath, f.lastModified(), f.length()))
-    }
-    val beforeFiles = files(untouched)
-    // emulate a vacuum killed after ONE touched list committed: the
-    // idempotence contract — every read during a partial vacuum sees
-    // the same live rows (list already clean + tombstones still mask
-    // the rest), and re-running completes
-    val firstList = touched.min
-    graft.etl.IncrementalLoad.atomicRewrite(spark,
-      s"$path/list_id=$firstList") { staging =>
-      spark.read.parquet(s"$path/list_id=$firstList")
-        .filter(col("vec_id") % 7 =!= 3)
-        .write.mode("overwrite").parquet(staging)
-    }
-    assert(search() == tombstoned, "mid-vacuum reads are unchanged")
-    graft.operators.Similarity.ivfVacuum(spark, path)
-    assert(search() == tombstoned, "post-vacuum reads are unchanged")
-    assert(graft.operators.Similarity.ivfTombstones(spark, path).isEmpty,
-      "sidecar cleared after all lists committed")
-    assert(spark.read.parquet(path)
+    val before = liveFiles(root, "lists")
+    graft.operators.Similarity.ivfForgetVersioned(spark, root,
+      e.filter(col("vec_id") % 7 === 3).select("vec_id"))
+    val forgotten = search()
+    val after = liveFiles(root, "lists")
+    val replaced = before -- after
+    val untouched = before & after
+    assert(replaced.nonEmpty && untouched.nonEmpty,
+      s"the forget rewrote only the files holding a forgotten vector: " +
+        s"${replaced.size} replaced, ${untouched.size} carried")
+    def stamps(fs: Set[String]) = fs.map { f =>
+      val j = new java.io.File(f); (f, j.lastModified(), j.length()) }
+    val untouchedStamps = stamps(untouched)
+    // emulate a vacuum killed after deleting ONE replaced file: readers
+    // resolve the latest commit, which references none of them
+    val first = new org.apache.hadoop.fs.Path(replaced.min)
+    first.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(first, false)
+    assert(search() == forgotten, "mid-vacuum reads are unchanged")
+    // retention vacuum past the pre-forget version reclaims the rest
+    graft.etl.ManifestTable.vacuum(spark, root, keepVersions = 1)
+    assert(search() == forgotten, "post-vacuum reads are unchanged")
+    assert(replaced.forall(f => !new java.io.File(f).exists()),
+      "replaced files deleted")
+    assert(spark.read.parquet(dataFiles(root): _*)
       .filter(col("vec_id") % 7 === 3).count() == 0,
-      "tombstoned rows physically gone")
-    assert(files(untouched) == beforeFiles,
-      "untouched list partitions not rewritten")
-    // vacuum with no tombstones is a no-op
-    graft.operators.Similarity.ivfVacuum(spark, path)
-    assert(search() == tombstoned)
+      "forgotten rows physically gone")
+    assert(stamps(untouched) == untouchedStamps,
+      "untouched files not rewritten")
+    // nothing left to reclaim: a second vacuum is a no-op
+    assert(graft.etl.ManifestTable.vacuum(spark, root) == 0L)
+    assert(search() == forgotten)
   }
 
-  // ---- graphDelete / graphVacuum: HNSW soft delete, then rebuild ----
+  // ---- graph index: HNSW soft delete, then rebuild ----
 
   test("graphDelete: tombstoned nodes still ROUTE but are never returned") {
     val vecs = groupedVecs()
-    val path = tmpDir("gann-del")
-    graft.operators.GraphAnn.graphWrite(vecs, "vec_id", "embedding",
+    val root = tmpDir("gann-del") + "/g"
+    graft.operators.GraphAnn.graphWriteVersioned(vecs, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 1,
-      path = path, upperMod = 4, upperDegree = 8, upperRefine = 1)
+      root = root, upperMod = 4, upperDegree = 8, upperRefine = 1)
     val qs = vecs.filter(col("vec_id") < 3)
     def search() = graft.operators.GraphAnn
-      .layeredTopKPartitioned(spark, path, vecs, qs, "vec_id",
+      .layeredTopKVersioned(spark, root, vecs, qs, "vec_id",
         "embedding", dim = 64, planes = 4, tables = 2,
         entries = Seq(0L, 4L), upperRounds = 1, upperWidth = 8,
         rounds = 2, beamWidth = 16)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)]
       .collect().toSeq
     val pre = search()
-    graft.operators.GraphAnn.graphDelete(spark, path,
+    graft.operators.GraphAnn.graphDeleteVersioned(spark, root,
       vecs.filter(col("vec_id") % 5 === 2).select("vec_id"))
     val post = search().toSet
     // the ONLY change is the final filter + re-rank: deleted nodes kept
-    // routing (edge shards untouched), so post == pre minus dead ids
+    // routing (edge tables untouched), so post == pre minus dead ids
     // with ranks compacted
     val expected = pre.filter(_._2 % 5 != 2).groupBy(_._1).toSeq.flatMap {
       case (q, rows) => rows.sortBy(_._3)
@@ -498,35 +485,36 @@ class Round13OpsSpec extends SparkSpec {
     }.toSet
     assert(post == expected,
       s"soft delete touches only the final re-rank\n$post\n$expected")
-    val edges = spark.read.parquet(s"$path/edges")
+    val edges = graft.etl.ManifestTable.read(spark, root, "edges")
     assert(edges.filter(col("src") % 5 === 2 || col("dst") % 5 === 2)
-      .count() > 0, "edge shards untouched — dead nodes still route")
+      .count() > 0, "edge tables untouched — dead nodes still route")
   }
 
   test("graphVacuum: index equals a fresh build over the live corpus") {
     val vecs = groupedVecs()
-    val path = tmpDir("gann-vac")
-    graft.operators.GraphAnn.graphWrite(vecs, "vec_id", "embedding",
+    val root = tmpDir("gann-vac") + "/g"
+    graft.operators.GraphAnn.graphWriteVersioned(vecs, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 1,
-      path = path, upperMod = 4, upperDegree = 8, upperRefine = 1)
-    graft.operators.GraphAnn.graphDelete(spark, path,
+      root = root, upperMod = 4, upperDegree = 8, upperRefine = 1)
+    graft.operators.GraphAnn.graphDeleteVersioned(spark, root,
       vecs.filter(col("vec_id") % 5 === 2).select("vec_id"))
-    graft.operators.GraphAnn.graphVacuum(spark, path, vecs, "vec_id",
-      "embedding", dim = 64, planes = 4, tables = 2, degree = 8,
+    graft.operators.GraphAnn.graphVacuumVersioned(spark, root, vecs,
+      "vec_id", "embedding", dim = 64, planes = 4, tables = 2, degree = 8,
       refine = 1, upperMod = 4, upperDegree = 8, upperRefine = 1)
-    val fresh = tmpDir("gann-vac-fresh")
-    graft.operators.GraphAnn.graphWrite(
+    val fresh = tmpDir("gann-vac-fresh") + "/g"
+    graft.operators.GraphAnn.graphWriteVersioned(
       vecs.filter(col("vec_id") % 5 =!= 2), "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 1,
-      path = fresh, upperMod = 4, upperDegree = 8, upperRefine = 1)
-    def layer(p: String, l: String) = spark.read.parquet(s"$p/$l")
-      .select("src", "dst").as[(Long, Long)].collect().toSet
-    assert(layer(path, "edges") == layer(fresh, "edges"),
+      root = fresh, upperMod = 4, upperDegree = 8, upperRefine = 1)
+    def layer(r: String, l: String) = graft.etl.ManifestTable
+      .read(spark, r, l).select("src", "dst").as[(Long, Long)]
+      .collect().toSet
+    assert(layer(root, "edges") == layer(fresh, "edges"),
       "vacuumed full layer == fresh build over live corpus")
-    assert(layer(path, "upper_edges") == layer(fresh, "upper_edges"),
+    assert(layer(root, "upper_edges") == layer(fresh, "upper_edges"),
       "vacuumed upper layer == fresh build over live corpus")
-    assert(graft.operators.GraphAnn.graphTombstones(spark, path).isEmpty,
-      "tombstone sidecar cleared")
+    assert(graft.etl.ManifestTable.read(spark, root, "tombstones").isEmpty,
+      "tombstone table cleared")
   }
 
   // ---- mmrTopK: diversity-aware greedy re-rank ----
@@ -569,7 +557,7 @@ class Round13OpsSpec extends SparkSpec {
     assert(pure == bf, s"λ=1 is relevance order: $pure vs $bf")
   }
 
-  // ---- minhash index lifecycle: append / delete / vacuum ----
+  // ---- minhash index lifecycle: append / forget / vacuum ----
 
   test("minhashIndexAppend: maintained index pairs == one-shot index pairs") {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
@@ -579,15 +567,15 @@ class Round13OpsSpec extends SparkSpec {
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val appended = tmpDir("mh-app") + "/index"
     val oneShot = tmpDir("mh-one") + "/index"
-    graft.operators.Dedup.writeMinhashIndex(hist, "text", "doc_id",
+    graft.operators.Dedup.minhashIndexWriteVersioned(hist, "text", "doc_id",
       appended, bands = 16, rowsPerBand = 2, shingleN = 3)
-    graft.operators.Dedup.minhashIndexAppend(spark, batch, "text",
+    graft.operators.Dedup.minhashIndexAppendVersioned(spark, batch, "text",
       "doc_id", appended, bands = 16, rowsPerBand = 2, shingleN = 3)
-    graft.operators.Dedup.writeMinhashIndex(corpus, "text", "doc_id",
+    graft.operators.Dedup.minhashIndexWriteVersioned(corpus, "text", "doc_id",
       oneShot, bands = 16, rowsPerBand = 2, shingleN = 3)
-    def pairs(idx: String) = graft.operators.Dedup.incrementalPairs(spark,
-        fresh, corpus, "text", "doc_id", idx, bands = 16, rowsPerBand = 2,
-        shingleN = 3, threshold = 0.35)
+    def pairs(root: String) = graft.operators.Dedup
+      .incrementalPairsVersioned(spark, fresh, corpus, "text", "doc_id",
+        root, bands = 16, rowsPerBand = 2, shingleN = 3, threshold = 0.35)
       .select("new_id", "old_id").as[(Long, Long)].collect().toSet
     assert(pairs(appended) == pairs(oneShot),
       "write-then-append == one-shot build (signatures are per-doc)")
@@ -598,22 +586,24 @@ class Round13OpsSpec extends SparkSpec {
     // 2-row append onto a 2-row bucket must be dropped whole
     val mk = (ids: Seq[Long]) =>
       ids.map(i => (i, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val idx = tmpDir("mh-cap") + "/index"
-    graft.operators.Dedup.writeMinhashIndex(mk(Seq(1L, 2L)), "text",
-      "doc_id", idx, bands = 4, rowsPerBand = 2, shingleN = 3, maxBucket = 3)
-    graft.operators.Dedup.minhashIndexAppend(spark, mk(Seq(3L, 4L)), "text",
-      "doc_id", idx, bands = 4, rowsPerBand = 2, shingleN = 3, maxBucket = 3)
-    val perBucket = spark.read.parquet(idx).groupBy("band", "bh").count()
+    val root = tmpDir("mh-cap") + "/index"
+    def index() = graft.etl.ManifestTable.read(spark, root, "index")
+    graft.operators.Dedup.minhashIndexWriteVersioned(mk(Seq(1L, 2L)), "text",
+      "doc_id", root, bands = 4, rowsPerBand = 2, shingleN = 3, maxBucket = 3)
+    graft.operators.Dedup.minhashIndexAppendVersioned(spark, mk(Seq(3L, 4L)),
+      "text", "doc_id", root, bands = 4, rowsPerBand = 2, shingleN = 3,
+      maxBucket = 3)
+    val perBucket = index().groupBy("band", "bh").count()
       .agg(max("count")).as[Long].collect().head
     assert(perBucket <= 3, s"no bucket may exceed the cap, got $perBucket")
-    assert(spark.read.parquet(idx).filter(col("id") >= 3).count() == 0,
+    assert(index().filter(col("id") >= 3).count() == 0,
       "the over-cap append batch is dropped whole (all-or-nothing per bucket)")
     // a batch landing in fresh buckets still appends
-    graft.operators.Dedup.minhashIndexAppend(spark,
+    graft.operators.Dedup.minhashIndexAppendVersioned(spark,
       Seq((9L, "omicron pi rho sigma tau upsilon")).toDF("doc_id", "text"),
-      "text", "doc_id", idx, bands = 4, rowsPerBand = 2, shingleN = 3,
+      "text", "doc_id", root, bands = 4, rowsPerBand = 2, shingleN = 3,
       maxBucket = 3)
-    assert(spark.read.parquet(idx).filter(col("id") === 9).count() === 4L,
+    assert(index().filter(col("id") === 9).count() === 4L,
       "fresh-bucket batch appends one row per band")
   }
 
@@ -621,45 +611,71 @@ class Round13OpsSpec extends SparkSpec {
     val docs = spark.read.parquet(s"${sf()}/documents.parquet")
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
     val fresh = docs.filter(col("doc_id") % 10 === 0)
-    val idx = tmpDir("mh-del") + "/index"
-    graft.operators.Dedup.writeMinhashIndex(corpus, "text", "doc_id", idx,
-      bands = 16, rowsPerBand = 2, shingleN = 3)
-    def pairs() = graft.operators.Dedup.incrementalPairs(spark, fresh,
-        corpus, "text", "doc_id", idx, bands = 16, rowsPerBand = 2,
+    val root = tmpDir("mh-del") + "/index"
+    graft.operators.Dedup.minhashIndexWriteVersioned(corpus, "text",
+      "doc_id", root, bands = 16, rowsPerBand = 2, shingleN = 3)
+    def pairs() = graft.operators.Dedup.incrementalPairsVersioned(spark,
+        fresh, corpus, "text", "doc_id", root, bands = 16, rowsPerBand = 2,
         shingleN = 3, threshold = 0.35)
       .select("new_id", "old_id").as[(Long, Long)].collect().toSet
     val before = pairs()
     val forgotten = before.map(_._2).head
-    graft.operators.Dedup.minhashIndexDelete(spark, idx,
-      Seq(forgotten).toDF("doc_id"))
+    val gone = Seq(forgotten).toDF("id")
+    val (files, rows) = graft.operators.Dedup.minhashIndexForgetVersioned(
+      spark, root, gone)
+    assert(files > 0 && rows > 0, s"the forget rewrote its files: ($files, $rows)")
     val after = pairs()
     assert(after == before.filterNot(_._2 == forgotten),
       "exactly the forgotten doc's pairs disappear")
-    graft.operators.Dedup.minhashIndexVacuum(spark, idx)
+    assert(graft.operators.Dedup.minhashIndexForgetVersioned(spark, root,
+      gone) == ((0L, 0L)), "a second forget rewrites 0 files")
+    graft.etl.ManifestTable.vacuum(spark, root, keepVersions = 1)
     assert(pairs() == after, "vacuum preserves the live pairs")
-    assert(spark.read.parquet(idx).filter(col("id") === forgotten).count() == 0,
+    assert(spark.read.parquet(dataFiles(root): _*)
+      .filter(col("id") === forgotten).count() == 0,
       "signature rows physically gone")
-    assert(graft.etl.Tombstones.read(spark, idx, "id").isEmpty,
-      "sidecar cleared")
   }
 
   // ---- filtered ANN: predicate pushed into the probed index scan ----
 
+  /** The distinct lists `nprobe`-probed by `qs` under `cents` — the
+    * probe rule of the IVF search. */
+  private def probedLists(qs: org.apache.spark.sql.DataFrame,
+                          cents: Seq[Array[Double]],
+                          nprobe: Int): Seq[Long] = {
+    import graft.expressions.CosinesExpr.{cosinesD, topKIndices}
+    qs.select(explode(topKIndices(cosinesD(col("embedding"), cents), nprobe)))
+      .distinct().as[Int].collect().map(_.toLong).toSeq
+  }
+
   test("ivfTopKPartitionedWhere: both prunings in the plan; post-hoc filtering loses results") {
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
     val qs = e.filter(col("vec_id") < 3)
-    val path = tmpDir("ivf-flt") + "/ivf"
-    val cents = graft.operators.Similarity.ivfWrite(e, "vec_id",
-      "embedding", path, nlist = 16, metaCols = Seq("label"))
-    val filtered = graft.operators.Similarity.ivfTopKPartitionedWhere(
-      spark, path, cents, qs, "vec_id", "embedding",
-      col("label") === 3, k = 10, nprobe = 6)
-    // the scan must prune BOTH ways: probed lists via the partition
-    // column, the label predicate via parquet row-group pushdown —
-    // never a metadata join or a post-scan-only filter
+    val root = tmpDir("ivf-flt") + "/ivf"
+    val cents = graft.operators.Similarity.ivfWriteVersioned(e, "vec_id",
+      "embedding", root, nlist = 16, metaCols = Seq("label"))
+    val filtered = graft.operators.Similarity.ivfTopKVersioned(spark, root,
+      cents, qs, "vec_id", "embedding", k = 10, nprobe = 6,
+      pred = Some(col("label") === 3))
+    // the scan must prune BOTH ways: probed lists by file skipping on
+    // the manifest's list_id stats, the label predicate via parquet
+    // row-group pushdown — never a metadata join or a post-scan-only
+    // filter
+    def opened(df: org.apache.spark.sql.DataFrame) =
+      df.inputFiles.count(_.contains(root))
+    def kept(q: org.apache.spark.sql.DataFrame, nprobe: Int) =
+      graft.etl.ManifestTable.prunedInStats(spark, root, "lists", "list_id",
+        probedLists(q, cents, nprobe))
+    assert(opened(filtered) == kept(qs, 6)._1,
+      "the scan opens exactly the files whose list range meets the probes")
+    // one query probing 2 lists: the other lists' files are skipped
+    val q0 = qs.filter(col("vec_id") === 0)
+    val (narrow, _, total) = kept(q0, 2)
+    assert(opened(graft.operators.Similarity.ivfTopKVersioned(spark, root,
+      cents, q0, "vec_id", "embedding", k = 10, nprobe = 2,
+      pred = Some(col("label") === 3))) == narrow && narrow < total,
+      s"a 2-list probe opens $narrow of $total index files")
     val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list_id"),
-      s"probed-list partition pruning missing:\n$plan")
     assert(plan.contains("PushedFilters") &&
       plan.replaceAll("\\s", "").contains("EqualTo(label,3"),
       s"label predicate not pushed to the scan:\n$plan")
@@ -673,8 +689,8 @@ class Round13OpsSpec extends SparkSpec {
       "a full page of 10 per query under the filter")
     // the naive alternative — filter an UNCONSTRAINED top-10 — keeps
     // ~1 of 10 at this label cardinality; that deficit is the operator
-    val posthoc = graft.operators.Similarity.ivfTopKPartitioned(spark,
-        path, cents, qs, "vec_id", "embedding", k = 10, nprobe = 6)
+    val posthoc = graft.operators.Similarity.ivfTopKVersioned(spark,
+        root, cents, qs, "vec_id", "embedding", k = 10, nprobe = 6)
       .join(e.filter(col("label") === 3).select("vec_id"), Seq("vec_id"),
         "left_semi")
       .groupBy("query_id").count().agg(max("count")).as[Long]
@@ -692,13 +708,12 @@ class Round13OpsSpec extends SparkSpec {
       doc(1L, "the quick brown fox jumps over the lazy dog again and again"),
       doc(2L, "colorless green ideas sleep furiously under winter moons tonight"))
       .toDF("doc_id", "text")
-    val root = tmpDir("ingest")
-    val idx = s"$root/index"
-    val corpus = s"$root/corpus"
-    // bootstrap: index + corpus are one logical table
-    graft.operators.Dedup.writeMinhashIndex(h, "text", "doc_id", idx,
-      bands = 16, rowsPerBand = 2, shingleN = 3)
-    h.write.parquet(corpus)
+    val dir = tmpDir("ingest")
+    val root = s"$dir/corpus"
+    // bootstrap: index + corpus are tables of one root
+    graft.operators.Dedup.minhashIndexWriteVersioned(h, "text", "doc_id",
+      root, bands = 16, rowsPerBand = 2, shingleN = 3)
+    graft.etl.ManifestTable.publish(spark, root, Map("corpus" -> h))
     val b1 = Seq(
       doc(10L, "seven crimson airships drifted across the copper morning skyline slowly"),
       doc(11L, "the quick brown fox jumps over the lazy dog again and again"), // == h1
@@ -709,11 +724,11 @@ class Round13OpsSpec extends SparkSpec {
       doc(20L, "seven crimson airships drifted across the copper morning skyline slowly"), // == 10
       doc(21L, "binary stars trade plasma in slow ten thousand year waltzes"))
       .toDF("doc_id", "text")
-    val src = s"$root/src"
+    val src = s"$dir/src"
     def ingest(): Unit = {
       val stream = spark.readStream.schema(b1.schema).parquet(src)
-      val q = graft.streaming.CorpusIngest.dedupIngest(stream, "text",
-        "doc_id", idx, corpus, s"$root/ckpt", bands = 16,
+      val q = graft.streaming.CorpusIngest.dedupIngestManifest(stream,
+        "text", "doc_id", root, s"$dir/ckpt", bands = 16,
         rowsPerBand = 2, shingleN = 3, threshold = 0.8).start()
       q.processAllAvailable(); q.stop()
     }
@@ -721,54 +736,21 @@ class Round13OpsSpec extends SparkSpec {
     ingest()
     b2.coalesce(1).write.mode("append").parquet(src)
     ingest()
-    def corpusIds() = spark.read.parquet(corpus)
-      .select("doc_id").as[Long].collect().toSet
-    def indexIds() = spark.read.parquet(idx)
+    def corpus() = graft.etl.ManifestTable.read(spark, root, "corpus")
+    def corpusIds() = corpus().select("doc_id").as[Long].collect().toSet
+    def indexIds() = graft.etl.ManifestTable.read(spark, root, "index")
       .select(col("id")).distinct().as[Long].collect().toSet
     val live = Set(1L, 2L, 10L, 12L, 21L)
     assert(corpusIds() == live, s"corpus gates all three dup kinds: ${corpusIds()}")
     assert(indexIds() == live, "index stays in step with the corpus")
     // replay of an already-committed batch (the foreachBatch crash
-    // contract): both sinks unchanged
-    graft.streaming.CorpusIngest.ingestBatch(b1, "text", "doc_id", idx,
-      corpus, batchId = 0L, bands = 16, rowsPerBand = 2, shingleN = 3,
+    // contract): both tables unchanged
+    graft.streaming.CorpusIngest.ingestBatchManifest(b1, "text", "doc_id",
+      root, batchId = 0L, bands = 16, rowsPerBand = 2, shingleN = 3,
       threshold = 0.8)
     assert(corpusIds() == live && indexIds() == live,
       "batch replay appends nothing anywhere")
-    assert(spark.read.parquet(corpus).count() == 5,
-      "no duplicate corpus rows after replay")
-  }
-
-  // ---- ivfPq delete/vacuum: one sidecar over both index tables ----
-
-  test("ivfPqDelete/Vacuum: tombstones mask codes AND vectors; vacuum reclaims both") {
-    val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
-      .filter(col("vec_id") < 60)
-    val qs = e.filter(col("vec_id") < 3)
-    val path = tmpDir("ivfpq-del") + "/pq"
-    val (cents, cb) = graft.operators.Similarity.ivfPqWrite(e, "vec_id",
-      "embedding", path, dim = 64, nlist = 16)
-    def search() = graft.operators.Similarity.ivfPqTopKPartitioned(spark,
-        path, cents, cb, qs, "vec_id", "embedding", dim = 64, k = 5,
-        nprobe = 4)
-      .select("query_id", "vec_id", "rank").as[(Long, Long, Long)]
-      .collect().toSet
-    val pre = search()
-    val dead = pre.map(_._2).head
-    graft.operators.Similarity.ivfPqDelete(spark, path,
-      Seq(dead).toDF("vec_id"))
-    val post = search()
-    assert(!post.exists(_._2 == dead), "tombstoned id never returned")
-    assert(post != pre, "the board actually changed")
-    graft.operators.Similarity.ivfPqVacuum(spark, path)
-    assert(search() == post, "vacuum preserves the masked board")
-    assert(spark.read.parquet(s"$path/codes")
-      .filter(col("vec_id") === dead).count() == 0 &&
-      spark.read.parquet(s"$path/vectors")
-        .filter(col("vec_id") === dead).count() == 0,
-      "both tables physically reclaimed")
-    assert(graft.operators.Similarity.ivfTombstones(spark, path).isEmpty,
-      "sidecar cleared after both tables committed")
+    assert(corpus().count() == 5, "no duplicate corpus rows after replay")
   }
 
   // ---- graph-ANN filtered search: constrained final beam ----
@@ -776,19 +758,19 @@ class Round13OpsSpec extends SparkSpec {
   test("layeredTopKPartitionedWhere: predicate on the final beam only; walk unconstrained") {
     val vecs = groupedVecs().withColumn("label",
       (col("vec_id") % 2).cast("int"))
-    val path = tmpDir("gann-flt")
-    graft.operators.GraphAnn.graphWrite(vecs, "vec_id", "embedding",
+    val root = tmpDir("gann-flt") + "/g"
+    graft.operators.GraphAnn.graphWriteVersioned(vecs, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 1,
-      path = path, upperMod = 4, upperDegree = 8, upperRefine = 1)
+      root = root, upperMod = 4, upperDegree = 8, upperRefine = 1)
     val qs = vecs.filter(col("vec_id") < 3)
-    val unfiltered = graft.operators.GraphAnn.layeredTopKPartitioned(
-        spark, path, vecs, qs, "vec_id", "embedding", dim = 64,
+    val unfiltered = graft.operators.GraphAnn.layeredTopKVersioned(
+        spark, root, vecs, qs, "vec_id", "embedding", dim = 64,
         planes = 4, tables = 2, entries = Seq(0L, 4L), upperRounds = 1,
         upperWidth = 8, rounds = 2, beamWidth = 16)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Long)]
       .collect().toSeq
-    val filtered = graft.operators.GraphAnn.layeredTopKPartitionedWhere(
-        spark, path, vecs, qs, "vec_id", "embedding", dim = 64,
+    val filtered = graft.operators.GraphAnn.layeredTopKVersionedWhere(
+        spark, root, vecs, qs, "vec_id", "embedding", dim = 64,
         planes = 4, tables = 2, entries = Seq(0L, 4L),
         pred = col("label") === 0, upperRounds = 1, upperWidth = 8,
         rounds = 2, beamWidth = 16)
@@ -803,42 +785,6 @@ class Round13OpsSpec extends SparkSpec {
       .toSet
     assert(filtered == expected,
       s"constraint touches only the final re-rank\n$filtered\n$expected")
-  }
-
-  // ---- ivfPqAppend: incremental insert at fixed cents + codebooks ----
-
-  test("ivfPqAppend: appended index searches identically to a one-shot build") {
-    // base holds the 16 smallest ids (seed centroids AND pq seed rows);
-    // pqIters = 0 keeps the codebooks at their seeds — a pure function
-    // of those ids — so the base-trained and corpus-trained metadata
-    // coincide and fixed-metadata equality is exact (with training
-    // iterations the codebooks are corpus statistics and a rebuild
-    // legitimately differs — that drift is the documented rebuild-on-
-    // compaction-cadence contract, not an append defect)
-    val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
-    val base = e.filter(col("vec_id") < 40)
-    val delta = e.filter(col("vec_id") >= 40 && col("vec_id") < 60)
-    val corpus = e.filter(col("vec_id") < 60)
-    val qs = e.filter(col("vec_id") < 3)
-    val appended = tmpDir("ivfpq-app") + "/pq"
-    val oneShot = tmpDir("ivfpq-one") + "/pq"
-    val (c1, cb1) = graft.operators.Similarity.ivfPqWrite(base, "vec_id",
-      "embedding", appended, dim = 64, nlist = 16, pqIters = 0)
-    graft.operators.Similarity.ivfPqAppend(delta, "vec_id", "embedding",
-      appended, c1, cb1, dim = 64)
-    val (c2, cb2) = graft.operators.Similarity.ivfPqWrite(corpus, "vec_id",
-      "embedding", oneShot, dim = 64, nlist = 16, pqIters = 0)
-    assert(c1.map(_.toSeq) == c2.map(_.toSeq) && cb1 == cb2,
-      "same seed rules, same centroids and codebooks")
-    def search(p: String, c: Seq[Array[Double]], cb: Seq[Seq[Seq[Double]]]) =
-      graft.operators.Similarity.ivfPqTopKPartitioned(spark, p, c, cb, qs,
-          "vec_id", "embedding", dim = 64, k = 5, nprobe = 4)
-        .select("query_id", "vec_id", "rank").as[(Long, Long, Long)]
-        .collect().toSet
-    assert(search(appended, c1, cb1) == search(oneShot, c2, cb2),
-      "append-then-search == build-then-search at fixed metadata")
-    assert(spark.read.parquet(s"$appended/codes")
-      .filter(col("vec_id") >= 40).count() > 0, "delta codes landed")
   }
 
   // ---- hardNegatives: the contrastive-training mining board ----

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 /** Round-15 coverage: the round-14 verdict items (streaming wiring for
   * manifest-mode ingestion, conformalSets de-straggler, versioned
   * minhash index, graph upper-staleness cadence, readPrunedIn × bloom)
-  * and the round-14 ADVICE items (staging claim tripwire, legacy
-  * rewrite-old names, persisted graph build params, commit-log GC,
+  * and the round-14 ADVICE items (persisted graph build params,
   * transactionalAppendAll single execution). */
 class Round15OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -158,30 +157,29 @@ class Round15OpsSpec extends SparkSpec {
     val d1 = e.filter(col("vec_id") >= 30 && col("vec_id") < 34)  // 4 rows
     val d2 = e.filter(col("vec_id") >= 34 && col("vec_id") < 46)  // 12 rows
     val root = tmpDir("gann-cadence") + "/g"
-    // upperRefine deliberately 0 (≠ the append call-site default of 1):
-    // the escalation must rebuild under THESE params, never defaults
+    // upperRefine deliberately 0 (≠ the knnGraph default of 1): the
+    // escalation must rebuild under THESE params, never defaults
     graft.operators.GraphAnn.graphWriteVersioned(base, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 0,
       root = root, upperMod = 4, upperDegree = 6, upperRefine = 0)
-    val p0 = graft.operators.GraphAnn.readParamsVersioned(spark, root).get
+    val p0 = graft.operators.GraphAnn.readParamsVersioned(spark, root)
     assert(p0.baseN == 30L && p0.appendedN == 0L && p0.upperRefine == 0)
     def upperRows() = graft.etl.ManifestTable.read(spark, root, "upper_edges")
       .select("src", "dst").as[(Long, Long)].collect().toSet
     val upperV1 = upperRows()
     // append 4/30 = 13% < 50%: upper layer carried untouched
     graft.operators.GraphAnn.graphAppendVersioned(spark, root, base, d1,
-      "vec_id", "embedding", dim = 64, planes = 4, tables = 2, degree = 8,
-      rounds = 2, beamWidth = 16, entries = Seq(0L, 4L, 8L))
+      "vec_id", "embedding", rounds = 2, beamWidth = 16,
+      entries = Seq(0L, 4L, 8L))
     assert(upperRows() == upperV1, "below the bar the upper layer persists")
     assert(graft.operators.GraphAnn.readParamsVersioned(spark, root)
-      .get.appendedN == 4L, "staleness accounting rides the commit")
+      .appendedN == 4L, "staleness accounting rides the commit")
     // append 12 more: (4+12)/30 = 53% >= 50% → the SAME commit carries
     // the merged full layer AND the rebuilt routing layer
     val vBefore = graft.etl.ManifestTable.current(spark, root).get.version
     graft.operators.GraphAnn.graphAppendVersioned(spark, root,
-      base.unionByName(d1), d2, "vec_id", "embedding", dim = 64, planes = 4,
-      tables = 2, degree = 8, rounds = 2, beamWidth = 16,
-      entries = Seq(0L, 4L, 8L))
+      base.unionByName(d1), d2, "vec_id", "embedding", rounds = 2,
+      beamWidth = 16, entries = Seq(0L, 4L, 8L))
     assert(graft.etl.ManifestTable.current(spark, root).get.version
       == vBefore + 1L, "escalation lands as exactly one commit")
     val corpus = base.unionByName(d1).unionByName(d2)
@@ -193,126 +191,69 @@ class Round15OpsSpec extends SparkSpec {
     assert(upperRows() == freshUpper,
       "post-escalation upper layer equals a fresh build under the " +
         "index's own params")
-    val p2 = graft.operators.GraphAnn.readParamsVersioned(spark, root).get
+    val p2 = graft.operators.GraphAnn.readParamsVersioned(spark, root)
     assert(p2.appendedN == 0L && p2.baseN == 46L,
       s"accounting reset after the upper rebuild: $p2")
   }
 
-  test("graphAppend (directory): tombstone escalation rebuilds under the " +
-    "PERSISTED build params, not the call site's defaults") {
+  test("graphAppendVersioned: tombstone escalation rebuilds under the " +
+    "committed build params") {
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
       .filter(col("vec_id") < 40)
     val base = e.filter(col("vec_id") < 36)
     val delta = e.filter(col("vec_id") >= 36)
-    val path = tmpDir("gann-params")
-    // refine=0 / upperRefine=0 / upperDegree=6 ≠ the graphAppend
-    // escalation defaults (1 / 1 / 8)
-    graft.operators.GraphAnn.graphWrite(base, "vec_id", "embedding",
+    val root = tmpDir("gann-params") + "/g"
+    // refine=0 / upperRefine=0 / upperDegree=6 ≠ the graphVacuumVersioned
+    // defaults (1 / 1 / 8)
+    graft.operators.GraphAnn.graphWriteVersioned(base, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 0,
-      path = path, upperMod = 4, upperDegree = 6, upperRefine = 0)
+      root = root, upperMod = 4, upperDegree = 6, upperRefine = 0)
     // tombstone 12/40 = 30% >= 25% → the next append escalates to vacuum
-    graft.operators.GraphAnn.graphDelete(spark, path,
+    graft.operators.GraphAnn.graphDeleteVersioned(spark, root,
       e.filter(col("vec_id") % 3 === 1).select("vec_id"))
-    graft.operators.GraphAnn.graphAppend(spark, path, base, delta,
-      "vec_id", "embedding", dim = 64, planes = 4, tables = 2, degree = 8,
-      rounds = 2, beamWidth = 16, entries = Seq(0L, 4L, 8L))
-    // post-state must equal a fresh graphWrite over the live corpus
-    // under the ORIGINAL params (vacuum invariant + param persistence)
+    graft.operators.GraphAnn.graphAppendVersioned(spark, root, base, delta,
+      "vec_id", "embedding", rounds = 2, beamWidth = 16,
+      entries = Seq(0L, 4L, 8L))
+    // post-state must equal a fresh build over the live corpus under
+    // the ORIGINAL params (vacuum invariant + param persistence)
     val live = e.filter(col("vec_id") % 3 =!= 1)
-    val ref = tmpDir("gann-params-ref")
-    graft.operators.GraphAnn.graphWrite(live, "vec_id", "embedding",
+    val ref = tmpDir("gann-params-ref") + "/g"
+    graft.operators.GraphAnn.graphWriteVersioned(live, "vec_id", "embedding",
       dim = 64, planes = 4, tables = 2, degree = 8, refine = 0,
-      path = ref, upperMod = 4, upperDegree = 6, upperRefine = 0)
-    def edges(p: String, layer: String) = spark.read.parquet(s"$p/$layer")
-      .select("src", "dst").as[(Long, Long)].collect().toSet
-    assert(edges(path, "edges") == edges(ref, "edges"),
+      root = ref, upperMod = 4, upperDegree = 6, upperRefine = 0)
+    def edges(r: String, layer: String) = graft.etl.ManifestTable
+      .read(spark, r, layer).select("src", "dst").as[(Long, Long)]
+      .collect().toSet
+    assert(edges(root, "edges") == edges(ref, "edges"),
       "full layer rebuilt under the persisted params")
-    assert(edges(path, "upper_edges") == edges(ref, "upper_edges"),
+    assert(edges(root, "upper_edges") == edges(ref, "upper_edges"),
       "upper layer rebuilt under the persisted params")
   }
 
-  // ---- ADVICE: commit-log GC ----
-
-  test("CorpusIngest: begin/commit markers below batchId-1 are pruned at " +
-    "commit time") {
-    val root = tmpDir("ingest-gc")
-    val idx = s"$root/index"
-    val corpus = s"$root/corpus"
-    import org.apache.spark.sql.types._
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-    graft.operators.Dedup.writeMinhashIndex(empty, "text", "doc_id", idx)
-    def ingest(id: Long, docs: Seq[(Long, String)]): Unit =
-      graft.streaming.CorpusIngest.ingestBatch(docs.toDF("doc_id", "text"),
-        "text", "doc_id", idx, corpus, id, bands = 16, rowsPerBand = 2,
-        shingleN = 3, threshold = 0.8)
-    ingest(0L, Seq((1L, "alpha beta gamma delta epsilon zeta eta theta")))
-    ingest(1L, Seq((2L, "one two three four five six seven eight nine")))
-    ingest(2L, Seq((3L, "red orange yellow green blue indigo violet colors")))
-    val names = new java.io.File(
-      graft.streaming.CorpusIngest.commitLogPath(corpus))
-      .listFiles().map(_.getName).filterNot(_.startsWith(".")).toSet
-    assert(names == Set("begin-1", "commit-1", "begin-2", "commit-2",
-      "committed-upto-0"),
-      s"last two batches' markers + the covering watermark survive: $names")
-    // the latest batch (the only one that CAN replay) still no-ops O(1)
-    ingest(2L, Seq((3L, "red orange yellow green blue indigo violet colors")))
-    assert(spark.read.parquet(corpus).count() == 3,
-      "latest-batch replay still guarded after GC")
-    // an OLD id whose markers were pruned (retried orchestration /
-    // checkpoint reset) no-ops via the watermark — GC never narrowed
-    // the idempotence contract
-    ingest(0L, Seq((1L, "alpha beta gamma delta epsilon zeta eta theta")))
-    assert(spark.read.parquet(corpus).count() == 3,
-      "pruned-batch replay no-ops via committed-upto")
-  }
-
-  // ---- ADVICE: atomicRewrite claim tripwire ----
-
-  test("atomicRewrite: a foreign claim in the staging throws instead of " +
-    "publishing someone else's contents") {
-    val root = tmpDir("rewrite-claim")
-    val target = s"$root/tbl"
-    Seq(1L).toDF("v").write.parquet(target)
-    val ex = intercept[IllegalArgumentException] {
-      graft.etl.IncrementalLoad.atomicRewrite(spark, target) { staging =>
-        Seq(2L).toDF("v").write.mode("overwrite").parquet(staging)
-        // another writer's claim landing in OUR staging (the
-        // deterministic-name collision made loud)
-        val p = new org.apache.hadoop.fs.Path(staging, "._graft-claim-foreign")
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.create(p, false).close()
-      }
+  test("graphAppendVersioned: a build_params table missing a column fails " +
+    "the append with an error naming the root") {
+    val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
+      .filter(col("vec_id") < 40)
+    val base = e.filter(col("vec_id") < 36)
+    val root = tmpDir("gann-bad-params") + "/g"
+    graft.operators.GraphAnn.graphWriteVersioned(base, "vec_id", "embedding",
+      dim = 64, planes = 4, tables = 2, degree = 8, refine = 0,
+      root = root, upperMod = 4, upperDegree = 6, upperRefine = 0)
+    // hand-edited params: upper_refine dropped
+    graft.etl.ManifestTable.publish(spark, root, Map("build_params" ->
+      graft.etl.ManifestTable.read(spark, root, "build_params")
+        .drop("upper_refine")))
+    val v = graft.etl.ManifestTable.current(spark, root).get.version
+    val ex = intercept[IllegalStateException] {
+      graft.operators.GraphAnn.graphAppendVersioned(spark, root, base,
+        e.filter(col("vec_id") >= 36), "vec_id", "embedding", rounds = 2,
+        beamWidth = 16, entries = Seq(0L, 4L, 8L))
     }
-    assert(ex.getMessage.contains("concurrent writer"),
-      s"claim tripwire fired: ${ex.getMessage}")
-    assert(spark.read.parquet(target).as[Long].collect().toSeq == Seq(1L),
-      "target untouched after the refused swap")
-  }
-
-  // ---- recoverRewrites: one repair rule for every backup name ----
-
-  test("recoverRewrites: every rewrite-old backup without a target is " +
-    "restored, all-digit names included") {
-    val root = tmpDir("recover-legacy")
-    // all-digit names are ordinary target names: a 19-digit and a
-    // 13-digit backup whose target crashed mid-swap hold its only copy
-    Seq(9L).toDF("v").write.parquet(s"$root/.rewrite-old-1755123456789123456")
-    Seq(5L).toDF("v").write.parquet(s"$root/.rewrite-old-1755123456789")
-    // crashed between renames: target missing
-    Seq(7L).toDF("v").write.parquet(s"$root/.rewrite-old-tbl")
-    graft.etl.IncrementalLoad.recoverRewrites(spark, root)
-    val visible = new java.io.File(root).listFiles().map(_.getName).toSet
-    assert(!visible.exists(_.startsWith(".rewrite-old-")),
-      s"all leftovers handled: $visible")
-    Seq("1755123456789123456" -> 9L, "1755123456789" -> 5L, "tbl" -> 7L)
-      .foreach { case (dir, v) =>
-        assert(visible.contains(dir) &&
-          spark.read.parquet(s"$root/$dir").as[Long].collect().toSeq ==
-            Seq(v), s"backup of $dir restored: $visible")
-      }
+    assert(ex.getMessage.contains(root) &&
+      ex.getMessage.contains("build_params"),
+      s"the error names the root and the table: ${ex.getMessage}")
+    assert(graft.etl.ManifestTable.current(spark, root).get.version == v,
+      "the failed append commits nothing")
   }
 
   // ---- ADVICE: transactionalAppendAll single execution ----

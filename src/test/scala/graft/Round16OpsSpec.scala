@@ -118,32 +118,34 @@ class Round16OpsSpec extends SparkSpec {
 
   // ---- ADVICE: graphAppend non-escalation path under persisted params ----
 
-  test("graphAppend (directory): the NON-escalation merge also runs under " +
-    "the persisted build params — drifted call-site knobs cannot mix edge " +
-    "structures into one index") {
+  test("graphAppendVersioned: the NON-escalation merge runs under the " +
+    "committed build params") {
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
       .filter(col("vec_id") < 40)
     val base = e.filter(col("vec_id") < 36)
     val delta = e.filter(col("vec_id") >= 36)
-    def build(path: String): Unit =
-      graft.operators.GraphAnn.graphWrite(base, "vec_id", "embedding",
-        dim = 64, planes = 4, tables = 2, degree = 8, refine = 0,
-        path = path, upperMod = 4, upperDegree = 6, upperRefine = 0)
-    val drifted = tmpDir("gann-drift")
-    val ref = tmpDir("gann-drift-ref")
-    build(drifted); build(ref)
-    // no tombstones → the append takes the NON-escalation merge path;
-    // the drifted site passes planes=2/tables=1/degree=3
-    graft.operators.GraphAnn.graphAppend(spark, drifted, base, delta,
-      "vec_id", "embedding", dim = 64, planes = 2, tables = 1, degree = 3,
-      rounds = 2, beamWidth = 16, entries = Seq(0L, 4L, 8L))
-    graft.operators.GraphAnn.graphAppend(spark, ref, base, delta,
-      "vec_id", "embedding", dim = 64, planes = 4, tables = 2, degree = 8,
-      rounds = 2, beamWidth = 16, entries = Seq(0L, 4L, 8L))
-    def edges(p: String) = spark.read.parquet(s"$p/edges")
-      .select("src", "dst").as[(Long, Long)].collect().toSet
-    assert(edges(drifted) == edges(ref),
-      "merged edges equal the persisted-params append, not the drifted args")
+    val root = tmpDir("gann-drift") + "/g"
+    // degree 3 / planes 2 / tables 1: a merge under any other knobs
+    // would show in the merged adjacency
+    graft.operators.GraphAnn.graphWriteVersioned(base, "vec_id", "embedding",
+      dim = 64, planes = 2, tables = 1, degree = 3, refine = 0,
+      root = root, upperMod = 4, upperDegree = 6, upperRefine = 0)
+    def layer(t: String) = graft.etl.ManifestTable.read(spark, root, t)
+      .select("src", "dst")
+    val upper0 = layer("upper_edges").as[(Long, Long)].collect().toSet
+    // no tombstones and 4/36 appended → the append takes the
+    // NON-escalation merge path
+    graft.operators.GraphAnn.graphAppendVersioned(spark, root, base, delta,
+      "vec_id", "embedding", rounds = 2, beamWidth = 16,
+      entries = Seq(0L, 4L, 8L))
+    assert(layer("upper_edges").as[(Long, Long)].collect().toSet == upper0,
+      "no escalation: the routing layer is carried")
+    val outDeg = layer("edges").groupBy("src").count()
+      .select(col("src"), col("count")).as[(Long, Long)].collect().toMap
+    assert(outDeg.values.forall(_ <= 3L),
+      s"every adjacency obeys the committed degree 3: $outDeg")
+    assert((36L until 40L).forall(i => outDeg.get(i).exists(_ > 0L)),
+      s"every inserted node got edges: $outDeg")
   }
 
   // ---- verdict: write-time blooms for the versioned IVF index ----

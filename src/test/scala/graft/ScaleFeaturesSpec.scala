@@ -67,22 +67,36 @@ class ScaleFeaturesSpec extends SparkSpec {
     val dir = sf("sf0.001")
     val e = Tables.load(spark, dir, "embeddings")
     val queries = e.filter($"vec_id" < 5)
-    val idx = tmpDir("graft-ivf-idx")
-    val cents = Similarity.ivfWrite(e, "vec_id", "embedding", idx, nlist = 16)
-    val part = Similarity.ivfTopKPartitioned(spark, idx, cents, queries,
+    val root = tmpDir("graft-ivf-idx") + "/ivf"
+    val cents = Similarity.ivfWriteVersioned(e, "vec_id", "embedding", root,
+      nlist = 16)
+    val part = Similarity.ivfTopKVersioned(spark, root, cents, queries,
       "vec_id", "embedding", k = 10, nprobe = 4)
-    // the scan must prune on the partition column, not read-and-filter
-    val plan = part.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list_id"),
-      s"no partition pruning in:\n$plan")
+    // the scan must skip the files of unprobed lists, not read-and-filter:
+    // it opens exactly the files readPrunedIn keeps for the probed set
+    import graft.expressions.CosinesExpr.{cosinesD, topKIndices}
+    def keptFor(q: org.apache.spark.sql.DataFrame, nprobe: Int) = {
+      val probed = q
+        .select(explode(topKIndices(cosinesD($"embedding", cents), nprobe)))
+        .distinct().as[Int].collect().map(_.toLong).toSeq
+      graft.etl.ManifestTable.prunedInStats(spark, root, "lists", "list_id",
+        probed)
+    }
+    def opened(df: org.apache.spark.sql.DataFrame) =
+      df.inputFiles.count(_.contains(root))
+    assert(opened(part) == keptFor(queries, 4)._1)
+    // a single query probing one list: every other list's files skipped
+    val one = queries.filter($"vec_id" === 0)
+    val (kept1, _, total) = keptFor(one, 1)
+    assert(opened(Similarity.ivfTopKVersioned(spark, root, cents, one,
+      "vec_id", "embedding", k = 10, nprobe = 1)) == kept1 && kept1 < total,
+      s"a 1-list probe opens $kept1 of $total index files")
+    info(s"1-list probe: opened $kept1 of $total index files")
     // identical results to the in-memory operator with the same centroids
     val mem = Similarity.ivfTopK(e, queries, "vec_id", "embedding",
       k = 10, nlist = 16, nprobe = 4)
       .as[(Long, Long, Double, Long)].collect().toSet
     assert(part.as[(Long, Long, Double, Long)].collect().toSet == mem)
-    // fewer than all partitions actually read
-    val probed = plan.linesIterator.find(_.contains("PartitionFilters")).get
-    info(probed.trim.take(120))
   }
 
   test("k-means IVF: trained centroids keep recall@k vs brute force") {
@@ -309,27 +323,6 @@ class ScaleFeaturesSpec extends SparkSpec {
     val p2 = hashes.queryExecution.executedPlan.toString
     assert(!p2.contains("Exchange"), s"bmpAHash must not shuffle blobs:\n$p2")
     assert(chunks.count() > 0 && hashes.count() > 0)
-  }
-
-  test("materialized ivf-pq index prunes both scans to probed partitions") {
-    val dir = sf("sf0.001")
-    val e = Tables.load(spark, dir, "embeddings")
-    val queries = e.filter($"vec_id" < 5)
-    val idx = tmpDir("graft-ivfpq-idx")
-    val (cents, cb) = Similarity.ivfPqWrite(e, "vec_id", "embedding", idx,
-      dim = 64, nlist = 16, m = 8, ksub = 16, pqIters = 1)
-    val part = Similarity.ivfPqTopKPartitioned(spark, idx, cents, cb,
-      queries, "vec_id", "embedding", dim = 64, k = 10, nprobe = 4,
-      rerank = 40)
-    val plan = part.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("list_id"),
-      s"no partition pruning in:\n${plan.take(1500)}")
-    // identical results to the in-memory operator with the same metadata
-    val mem = Similarity.ivfPqTopK(e, queries, "vec_id", "embedding",
-        dim = 64, k = 10, nlist = 16, nprobe = 4, m = 8, ksub = 16,
-        pqIters = 1, rerank = 40)
-      .as[(Long, Long, Double, Long)].collect().toSet
-    assert(part.as[(Long, Long, Double, Long)].collect().toSet == mem)
   }
 
   test("hll distinct state: order/partition invariant, late-batch merge == recompute") {

@@ -1,8 +1,10 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes (bypasses the sbt
-# lock; requires target/scala-2.13/classes to be current).
-# Usage: tools/run_main.sh graft.Bench [args...]
+# lock; requires the classes to be current). GRAFT_CLASSES names the
+# classes directory; it defaults to this tree's target/scala-2.13/classes.
+# Usage: [GRAFT_CLASSES=<dir>] tools/run_main.sh graft.Bench [args...]
 MAIN="$1"; shift
+CLASSES="${GRAFT_CLASSES:-$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes}"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -20,5 +22,5 @@ exec java \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Dderby.system.home=/tmp/derby \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$CLASSES:/opt/spark/jars/*" \
   "$MAIN" "$@"
