@@ -1248,18 +1248,19 @@ object SparkEntry {
     }),
 
     // IVF index DELETE — the missing quarter of the index lifecycle
-    // (q38 write / q320 append / delete / vacuum): a keyed forget of
-    // vec_id % 7 == 3 from a full-corpus index — the id set probes the
-    // per-file vec_id blooms and only files holding a forgotten vector
-    // are rewritten, in one commit — then the q320 search shape; the
-    // oracle replays assignment and search minus the forgotten rows.
+    // (q38 write / q320 append / delete / vacuum): a soft delete of
+    // vec_id % 7 == 3 from a full-corpus index — the ids join the
+    // index's tombstone table in one commit, O(batch), no index file
+    // rewritten, and the search anti-joins them — then the q320 search
+    // shape; the oracle replays assignment and search minus the
+    // deleted rows.
     "q324_ivf_delete" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val root = java.nio.file.Files.createTempDirectory("graft-ivf-del")
         .toString + "/ivf"
       val cents = Similarity.ivfWriteVersioned(e, "vec_id", "embedding",
         root, nlist = 16)
-      Similarity.ivfForgetVersioned(s, root,
+      Similarity.ivfSoftDeleteVersioned(s, root,
         e.filter(col("vec_id") % 7 === 3).select(col("vec_id")))
       Similarity.ivfTopKVersioned(s, root, cents,
         e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10,

@@ -55,10 +55,12 @@ object IncrementalLoad {
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"$what: rename failed: $src -> $dst")
 
-  /** J2+S4: rows of `incoming` whose `key` is not yet in the target. */
+  /** J2+S4: rows of `incoming` whose `key` is not yet in the target.
+    * The existing keys need no distinct: an anti-join keeps or drops a
+    * row the same way whatever the multiplicity of its match. */
   def newRowsOnly(incoming: DataFrame, existingKeys: DataFrame,
                   key: Seq[String]): DataFrame =
-    incoming.join(existingKeys.select(key.map(col): _*).distinct(), key, "left_anti")
+    incoming.join(existingKeys.select(key.map(col): _*), key, "left_anti")
 
   /** Idempotent append: anti-join vs the target's current keys, then append.
     * Re-running with the same input appends 0 rows (reference invariant 1,

@@ -829,12 +829,100 @@ object ManifestTable {
         bloomSize(expectedItems), fpp))
   }
 
-  /** ONE distributed pass computing, per just-read data file, BOTH the
-    * canonical min/max stats of every `statsCols` column AND a Bloom
-    * filter of every `bloomCols` column. Write paths previously re-read
-    * their fresh files twice (stats job, then bloom job) — the named
-    * ~+6% bench cost of round 17's secondary blooms; one combined scan
-    * halves it and reads each needed column exactly once.
+  /** The per-row values the file metadata is built from: the canonical
+    * long of every stats column, then per bloom column its raw string
+    * rendering and its canonical long-form rendering (see
+    * [[statsBloomPass]] for why a key inserts under both). */
+  private def metaExprs(schema: StructType, statsCols: Seq[String],
+                        bloomCols: Seq[String]): Seq[Column] = {
+    def dtOf(c: String) = schema.find(_.name == c).map(_.dataType)
+    statsCols.zipWithIndex.map { case (c, i) =>
+      canonLongExpr(c, dtOf(c)).as(s"__s$i") } ++
+      bloomCols.zipWithIndex.flatMap { case (kc, j) => Seq(
+        col(kc).cast("string").as(s"__k$j"),
+        bloomLongFormExpr(kc, dtOf(kc)).as(s"__l$j")) }
+  }
+
+  /** Bloom-key bytes one write task buffers before it gives up and
+    * leaves its file to the post-write pass: a filter is sized to its
+    * file's row count, which is known only after the last row. A var
+    * ONLY so specs can drive that fallback; production never writes it. */
+  private[graft] var TapBufferBytes = 32L << 20
+
+  /** The write-task (partition) id in a Spark output file name,
+    * `part-<id>-<job uuid>-c<nnn>.<codec>.parquet`. */
+  private val TaskFile = "^part-(\\d+)-".r
+
+  /** One write task's file metadata, gathered while the file is
+    * written: `meta` is None when the task's bloom keys overflowed
+    * [[TapBufferBytes]]. */
+  private final case class TapOut(rows: Long, meta: Option[PerFileMeta])
+
+  /** The in-write twin of [[statsBloomPass]] for one write task: the
+    * same min/max and the same filters (same keys, same sizing from the
+    * row count, same fpp), built from the [[metaExprs]] values found
+    * at ordinal `off` onwards of each row the task writes. */
+  private final class MetaTap(p: Int, off: Int, statsCols: Seq[String],
+      bloomCols: Seq[String],
+      acc: org.apache.spark.util.CollectionAccumulator[(Int, TapOut)],
+      fpp: Double)
+      extends org.apache.spark.sql.graftbridge.RowTapBridge.Observer {
+    private val nS = statsCols.length
+    private val nB = bloomCols.length
+    private val mins = Array.fill(nS)(Long.MaxValue)
+    private val maxs = Array.fill(nS)(Long.MinValue)
+    private val keys = Array.fill(nB)(
+      scala.collection.mutable.ArrayBuffer.empty[Array[Byte]])
+    private var buffered = 0L
+    private var rows = 0L
+    private def overflowed = buffered > TapBufferBytes
+    private def keep(j: Int, k: org.apache.spark.unsafe.types.UTF8String): Unit = {
+      keys(j) += k.getBytes
+      buffered += k.numBytes + 32L
+    }
+    def row(r: org.apache.spark.sql.catalyst.InternalRow): Unit = {
+      rows += 1L
+      var i = 0
+      while (i < nS) {
+        if (!r.isNullAt(off + i)) {
+          val v = r.getLong(off + i)
+          mins(i) = math.min(mins(i), v)
+          maxs(i) = math.max(maxs(i), v)
+        }
+        i += 1
+      }
+      var j = 0
+      while (j < nB && !overflowed) {
+        val ko = off + nS + 2 * j
+        if (!r.isNullAt(ko)) {
+          val k = r.getUTF8String(ko)
+          keep(j, k)
+          if (!r.isNullAt(ko + 1) && r.getUTF8String(ko + 1) != k)
+            keep(j, r.getUTF8String(ko + 1))
+        }
+        j += 1
+      }
+      if (overflowed) keys.foreach(_.clear())
+    }
+    def done(): Unit = if (rows > 0L) acc.add(p -> TapOut(rows,
+      if (overflowed) None
+      else Some(PerFileMeta(
+        statsCols.indices.collect { case i if mins(i) <= maxs(i) =>
+          statsCols(i) -> ((mins(i), maxs(i))) }.toMap,
+        bloomCols.indices.map { j =>
+          val bf = org.apache.spark.util.sketch.BloomFilter.create(
+            bloomSize(2L * rows), fpp)
+          keys(j).foreach(bf.putBinary)
+          bloomCols(j) -> graft.expressions.BloomExprs.toBytes(bf)
+        }.toMap))))
+  }
+
+  /** ONE distributed pass over already-written data files computing,
+    * per file, BOTH the canonical min/max stats of every `statsCols`
+    * column AND a Bloom filter of every `bloomCols` column: the
+    * [[indexBloom]] retrofit, and [[writeData]]'s fallback for a file
+    * its write tasks could not cover ([[MetaTap]] computes the same
+    * metadata while the file is written).
     *
     * Each bloom key inserts under BOTH its raw string rendering (what
     * [[readPrunedEq]] probes) and its canonical long-form rendering
@@ -854,13 +942,8 @@ object ManifestTable {
     if (statsCols.isEmpty && bloomCols.isEmpty) return Map.empty
     val nS = statsCols.length
     val nB = bloomCols.length
-    def dtOf(c: String) = data.schema.find(_.name == c).map(_.dataType)
-    val exprs = Seq(input_file_name().as("__f")) ++
-      statsCols.zipWithIndex.map { case (c, i) =>
-        canonLongExpr(c, dtOf(c)).as(s"__s$i") } ++
-      bloomCols.zipWithIndex.flatMap { case (kc, j) => Seq(
-        col(kc).cast("string").as(s"__k$j"),
-        bloomLongFormExpr(kc, dtOf(kc)).as(s"__l$j")) }
+    val exprs = input_file_name().as("__f") +:
+      metaExprs(data.schema, statsCols, bloomCols)
     def update(a: SBAcc, r: Row): SBAcc = {
       var i = 0
       while (i < nS) {
@@ -925,10 +1008,11 @@ object ManifestTable {
     * listStatus the writer already pays), per-file ROW COUNTS (from the
     * just-written parquet footers — a driver metadata GET per file, no
     * data pass; they size the blooms and replace every "count the
-    * written files" job downstream), and ONE combined distributed pass
-    * ([[statsBloomPass]]) computing NAMED canonical min/max stats of
-    * `statsCol` + `extraStatsCols` AND a right-sized per-file Bloom
-    * filter of `bloomCol` + `extraBloomCols` — so files appended AFTER
+    * written files" job downstream), and NAMED canonical min/max stats
+    * of `statsCol` + `extraStatsCols` AND a right-sized per-file Bloom
+    * filter of `bloomCol` + `extraBloomCols`, gathered by the write
+    * tasks themselves ([[MetaTap]]; [[statsBloomPass]] re-reads only a
+    * file the tap could not cover) — so files appended AFTER
     * an [[indexBloom]] call keep the table's bloom coverage instead of
     * silently never being skipped. Bloom payloads land in the write
     * unit's content-addressed PACK ([[writeBloomPack]]), the entry
@@ -949,12 +1033,6 @@ object ManifestTable {
     dataWrites.incrementAndGet()
     val dir = s"$table/d-${uuid()}"
     val full = new HPath(rootP, dir)
-    df.write.parquet(full.toString)
-    val listed = fs.listStatus(full)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName).toSeq
-    require(listed.nonEmpty, s"writeData: no parquet files produced at $full")
-    val conf = spark.sparkContext.hadoopConfiguration
     val statsCols = (statsCol.toSeq ++ extraStatsCols).distinct
     val bloomCols = (bloomCol.toSeq ++ extraBloomCols).distinct
     // INTEGRAL and DATE stats columns read their exact min/max straight
@@ -962,10 +1040,8 @@ object ManifestTable {
     // parquet records signed-exact INT32/INT64 chunk stats, and
     // [[canonLongExpr]] is the identity on integrals / epoch-day on
     // DATE (which parquet stores as INT32 epoch days) — so when a write
-    // carries no bloom columns, the whole post-write stats SCAN of the
-    // just-written bytes disappears (guide §1.2: a full re-read of
-    // every written file per write unit, gone). Non-integral stats or
-    // any bloom column keep the one combined scan, unchanged.
+    // carries no bloom columns, it needs nothing else. Non-integral
+    // stats or any bloom column are gathered by the write tasks below.
     val footerable = statsCols.filter { c =>
       df.schema.find(_.name == c).map(_.dataType).exists {
         case org.apache.spark.sql.types.ByteType |
@@ -977,6 +1053,22 @@ object ManifestTable {
       }
     }
     val footerOnly = bloomCols.isEmpty && statsCols.forall(footerable.contains)
+    // every other write gathers its files' stats and blooms IN the
+    // write job: each write task writes one file from one partition,
+    // so a per-partition tap sees exactly that file's rows — no second
+    // job re-reading the bytes just written
+    val tap = if (footerOnly) None else Some(
+      spark.sparkContext.collectionAccumulator[(Int, TapOut)]("writeTap"))
+    val off = df.schema.length
+    tap.fold(df)(a => org.apache.spark.sql.graftbridge.RowTapBridge.tapped(
+        df, metaExprs(df.schema, statsCols, bloomCols),
+        p => new MetaTap(p, off, statsCols, bloomCols, a, 0.03)))
+      .write.parquet(full.toString)
+    val listed = fs.listStatus(full)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName).toSeq
+    require(listed.nonEmpty, s"writeData: no parquet files produced at $full")
+    val conf = spark.sparkContext.hadoopConfiguration
     val conversion = ParquetSchemaBridge.conversion(spark)
     // footer opens are independent metadata reads — do them
     // concurrently instead of one driver round-trip per file
@@ -1035,18 +1127,30 @@ object ManifestTable {
       }
     val rowsByName: Map[String, Long] =
       footerMeta.map { case (n, rows, _) => n -> rows }.toMap
-    val perFile =
-      if (rowsByName.values.forall(_ == 0L)) Map.empty[String, PerFileMeta]
-      else if (footerOnly) footerMeta.map { case (n, _, st) =>
-        s"/$n" -> PerFileMeta(st, Map.empty) }.toMap
-      else statsBloomPass(
-        scan(spark, rootP, listed.map(st =>
-          FileEntry(table, s"$dir/${st.getPath.getName}", None, None))),
+    // a tapped file's metadata is taken only when its task wrote it
+    // alone, reported once and saw exactly its footer's rows; any other
+    // file with rows (a task past TapBufferBytes, a task that wrote
+    // several files) goes through the post-write pass
+    val tapped: Map[String, PerFileMeta] = tap.fold(Map.empty[String, PerFileMeta]) { a =>
+      import scala.jdk.CollectionConverters._
+      val byTask = a.value.asScala.toSeq.groupBy(_._1)
+      listed.map(_.getPath.getName)
+        .groupBy(n => TaskFile.findFirstMatchIn(n).map(_.group(1).toInt))
+        .collect { case (Some(p), Seq(n)) => (n, byTask.get(p)) }
+        .collect { case (n, Some(Seq((_, TapOut(rows, Some(m))))))
+          if rows == rowsByName(n) => n -> m }
+    }
+    val rest = listed.map(_.getPath.getName)
+      .filter(n => rowsByName(n) > 0L && !tapped.contains(n))
+    val metaOf: Map[String, PerFileMeta] =
+      if (footerOnly) footerMeta.map { case (n, _, st) =>
+        n -> PerFileMeta(st, Map.empty) }.toMap
+      else if (rest.isEmpty) tapped
+      else tapped ++ statsBloomPass(
+        scan(spark, rootP, rest.map(n => FileEntry(table, s"$dir/$n", None, None))),
         statsCols, bloomCols, fname => 2L * rowsByName(fname))
-    // perFile keys are `/<name>` or full file paths: index by basename
-    // once, not one scan of perFile per listed file
-    val metaOf: Map[String, PerFileMeta] = perFile.map { case (f, m) =>
-      f.substring(f.lastIndexOf('/') + 1) -> m }
+        // keys are full file paths: index by basename
+        .map { case (f, m) => f.substring(f.lastIndexOf('/') + 1) -> m }
     // one pack object per write unit, rowless files included — see
     // [[writeBloomPack]]
     val packed = writeBloomPack(fs, rootP, table,

@@ -643,7 +643,9 @@ object Dedup {
     * An uncapped boilerplate bucket would explode every later batch
     * join against the index; existing counts come from a semi-joined
     * read of only the buckets the batch touches, so no bucket ever
-    * exceeds the cap no matter how many appends ran. */
+    * exceeds the cap no matter how many appends ran. The rows the cap
+    * drops are not counted anywhere yet, unlike the bucket-confined
+    * self-joins that record [[bucketStats]]. */
   private[graft] def cappedIndexRows(existingIdx: DataFrame, df: DataFrame,
                                      textCol: String, idCol: String,
                                      bands: Int, rowsPerBand: Int,

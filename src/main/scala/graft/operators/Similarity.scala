@@ -304,6 +304,23 @@ object Similarity {
   /** Table name the IVF index commits under its root. */
   private val IvfTable = "lists"
 
+  /** Soft-deleted vector ids ([[ivfSoftDeleteVersioned]]), committed
+    * under the same root. */
+  private val IvfTombT = "tombstones"
+
+  /** `assigned` (lists `0 until nlist`) shuffled into contiguous list
+    * ranges, one per shuffle partition (at most `nlist` of them), and
+    * sorted by list within each. The partition id is computed from
+    * `list_id`, so no range sample runs; each write task writes one
+    * file, so a file covers one list range. */
+  private def clusterByList(assigned: DataFrame, nlist: Int): DataFrame = {
+    val parts = math.min(nlist, assigned.sparkSession.conf
+      .get("spark.sql.shuffle.partitions").toInt)
+    assigned
+      .repartitionById(parts, (col("list_id") * parts / nlist).cast("int"))
+      .sortWithinPartitions(col("list_id"))
+  }
+
   /** Materialize the IVF index under `root`: every corpus vector
     * assigned to its nearest centroid (`list_id`) and committed through
     * [[graft.etl.ManifestTable]] as ONE atomic commit-file PUT — snapshot
@@ -315,7 +332,8 @@ object Similarity {
     * probed set ([[graft.etl.ManifestTable.readPrunedIn]]) — the classic
     * IVF pruning, expressed as file skipping. `metaCols` ride along in
     * the index files so a filtered search pushes its predicate into the
-    * scan instead of joining metadata back in by id. Returns the
+    * scan instead of joining metadata back in by id. Rewriting a root
+    * clears its soft-deleted ids in the same commit. Returns the
     * centroids — immutable index metadata the caller keeps for appends
     * and searches. */
   def ivfWriteVersioned(corpus: DataFrame, idCol: String, vecCol: String,
@@ -327,16 +345,22 @@ object Similarity {
     val cents =
       if (trainIters > 0) kmeansCentroids(corpus, idCol, vecCol, nlist, trainIters)
       else seedCentroids(c, nlist)
-    val assigned = c
-      .withColumn("list_id", argMax(cosinesD(col("cv"), cents)))
-      .repartitionByRange(nlist, col("list_id"))
-      .sortWithinPartitions(col("list_id"))
+    val assigned = clusterByList(
+      c.withColumn("list_id", argMax(cosinesD(col("cv"), cents))), nlist)
+    // a rebuild over a root that soft-deleted ids clears them in the
+    // same commit: they named rows of the index being replaced
+    val spark = corpus.sparkSession
+    val stale = graft.etl.ManifestTable.current(spark, root)
+      .exists(_.entries.exists(_.table == IvfTombT))
     // secondary vec_id bloom on every file (list_id stats stay the
     // primary, range-dense, bloom-free pruning axis — spec-pinned): the
     // vec-id forget path ([[ivfForgetVersioned]]) probes it so a GDPR
     // delete rewrites only files actually CONTAINING a forgotten vector
-    graft.etl.ManifestTable.overwrite(corpus.sparkSession, root, IvfTable,
-      assigned, statsCol = Some("list_id"), extraBloomCols = Seq("vec_id"))
+    graft.etl.ManifestTable.publish(spark, root,
+      Map(IvfTable -> assigned) ++ (if (!stale) Map.empty else
+        Map(IvfTombT -> spark.range(0).select(col("id").as("vec_id")))),
+      statsCols = Map(IvfTable -> "list_id"),
+      extraBloomCols = Map(IvfTable -> Seq("vec_id")))
     cents
   }
 
@@ -358,12 +382,11 @@ object Similarity {
                          root: String, cents: Seq[Array[Double]],
                          metaCols: Seq[String] = Nil): Long = {
     import graft.expressions.CosinesExpr.{argMax, cosinesD}
-    val assigned = delta
+    val assigned = clusterByList(delta
       .select((Seq(col(idCol).as("vec_id"), col(vecCol).as("cv"))
         ++ metaCols.map(col)): _*)
-      .withColumn("list_id", argMax(cosinesD(col("cv"), cents)))
-      .repartitionByRange(col("list_id"))
-      .sortWithinPartitions(col("list_id"))
+      .withColumn("list_id", argMax(cosinesD(col("cv"), cents))),
+      cents.length)
     // write-time bloom on list_id: an appended file's [min,max] spans
     // every list between the batch's extremes, but a small batch
     // POPULATES only some of them — the bloom lets a probed search
@@ -377,6 +400,38 @@ object Similarity {
     graft.etl.ManifestTable.appendNew(delta.sparkSession, root, IvfTable,
       assigned, key = Seq("vec_id"), statsCol = Some("list_id"),
       bloomCol = Some("list_id"), extraBloomCols = Seq("vec_id"))
+  }
+
+  /** SOFT-delete `ids` (a `vec_id` column) from a [[ivfWriteVersioned]]
+    * index: the ids join the root's tombstone table in ONE commit —
+    * O(batch), no index file rewritten — and [[ivfTopKVersioned]]
+    * anti-joins that table, so deleted vectors stop appearing the
+    * moment the commit lands. Re-deleting an id is a distinct-union
+    * no-op. The rows themselves stay in the index files, and in every
+    * retained version, until [[ivfForgetVersioned]] purges them (an
+    * erasure goes there directly) or a rebuild drops them. Returns the
+    * committed version. */
+  def ivfSoftDeleteVersioned(spark: org.apache.spark.sql.SparkSession,
+                             root: String, ids: DataFrame): Long = {
+    val fresh = ids.select(col("vec_id").cast("long"))
+    val all = tombstonesAt(spark, root, None).fold(fresh)(_.union(fresh))
+    graft.etl.ManifestTable.publish(spark, root,
+      Map(IvfTombT -> all.distinct().coalesce(1)))
+  }
+
+  /** The soft-deleted ids as of `version` (latest when None), or None
+    * when that version has no tombstone with rows. */
+  private def tombstonesAt(spark: org.apache.spark.sql.SparkSession,
+                           root: String,
+                           version: Option[Long]): Option[DataFrame] = {
+    val entries = version match {
+      case Some(v) => graft.etl.ManifestTable.entriesAt(spark, root, v)
+      case None => graft.etl.ManifestTable.current(spark, root).map(_.entries)
+    }
+    val tomb = entries.getOrElse(Nil).filter(_.table == IvfTombT)
+    if (!tomb.exists(_.rows.exists(_ > 0L))) None
+    else Some(version.fold(graft.etl.ManifestTable.read(spark, root, IvfTombT))(
+      graft.etl.ManifestTable.readAt(spark, root, IvfTombT, _)))
   }
 
   /** Delete from a [[ivfWriteVersioned]] index: manifest copy-on-write
@@ -428,7 +483,9 @@ object Similarity {
     * so no id-join back to a metadata table and no post-hoc filtering
     * of a top-k that came up short. The filter shrinks each probed list,
     * not the probe count: under a highly selective predicate raise
-    * `nprobe` (the standard over-probe trade). */
+    * `nprobe` (the standard over-probe trade). Ids soft-deleted as of
+    * the searched version ([[ivfSoftDeleteVersioned]]) are anti-joined
+    * out before ranking. */
   def ivfTopKVersioned(spark: org.apache.spark.sql.SparkSession,
                        root: String, cents: Seq[Array[Double]],
                        queries: DataFrame, idCol: String, vecCol: String,
@@ -438,9 +495,11 @@ object Similarity {
     val q = probes(queries, idCol, vecCol, cents, nprobe)
     val probedLists = q.select(col("list_id")).distinct()
       .collect().map(_.getInt(0).toLong).toSeq
-    val assigned0 = graft.etl.ManifestTable.readPrunedIn(spark, root,
+    val probed = graft.etl.ManifestTable.readPrunedIn(spark, root,
       IvfTable, "list_id", probedLists, version)
-    rankProbedLists(pred.fold(assigned0)(assigned0.filter), q, k)
+    val live = tombstonesAt(spark, root, version).fold(probed)(t =>
+      probed.join(broadcast(t), Seq("vec_id"), "left_anti"))
+    rankProbedLists(pred.fold(live)(live.filter), q, k)
   }
 
   /** Per-subspace product-quantization codebooks trained on coarse

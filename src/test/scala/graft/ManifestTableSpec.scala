@@ -731,4 +731,50 @@ class ManifestTableSpec extends SparkSpec {
     }
     assert(pruned(footer, "d", 18262L, 18800L) == Set(1L, 6L))
   }
+
+  test("write tasks gather each file's stats and blooms in the write job: " +
+      "the same bytes as the post-write pass, which still covers a task " +
+      "that overflows its key buffer") {
+    // 4 tasks -> 4 files; x is DOUBLE (scan-only stats, and a bloom key
+    // whose raw rendering differs from its long form), g has NULLs
+    val data = spark.range(0, 2000, 1, 4).select($"id",
+      ($"id" * 0.5).as("x"),
+      when($"id" % 9 === 0, lit(null)).otherwise($"id" % 50).as("g"))
+    def write(root: String): Unit = ManifestTable.publish(spark, root,
+      Map("t" -> data), statsCols = Map("t" -> "x"),
+      bloomCols = Map("t" -> "g"), extraBloomCols = Map("t" -> Seq("x")))
+    def entries(root: String) = ManifestTable.current(spark, root).get
+      .entries.filter(_.table == "t").sortBy(_.relPath.split("/").last.take(10))
+    def bloomBytes(root: String, payload: String): Seq[Byte] = {
+      val Array(rel, slice) = payload.stripPrefix(ManifestTable.PointerMark)
+        .split("#")
+      val Array(o, l) = slice.split(":").map(_.toInt)
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(root, rel))
+        .slice(o, o + l).toSeq
+    }
+    val tapped = tmpDir("mttap")
+    val tapJobs = jobsOf(write(tapped))
+    val passed = tmpDir("mttap-pass")
+    val prev = ManifestTable.TapBufferBytes
+    ManifestTable.TapBufferBytes = -1L // every task overflows at once
+    val passJobs = try jobsOf(write(passed))
+      finally ManifestTable.TapBufferBytes = prev
+    assert(tapJobs < passJobs,
+      s"the tapped write runs no post-write pass: $tapJobs vs $passJobs jobs")
+    val (a, b) = (entries(tapped), entries(passed))
+    assert(a.size == 4 && b.size == 4, s"${a.size} / ${b.size} files")
+    a.zip(b).foreach { case (t, p) =>
+      assert(t.rows == p.rows && t.statsFor("x") == p.statsFor("x"),
+        s"${t.relPath}: ${t.statsFor("x")} vs ${p.statsFor("x")}")
+      Seq("g", "x").foreach { c =>
+        assert(bloomBytes(tapped, t.bloomFor(c).get) ==
+          bloomBytes(passed, p.bloomFor(c).get), s"$c bloom of ${t.relPath}")
+      }
+    }
+    // the filters answer for the keys they hold, in both renderings
+    assert(ManifestTable.readPrunedEq(spark, tapped, "t", "x", "10.5")
+      .select("id").as[Long].collect().toSeq == Seq(21L))
+    assert(ManifestTable.readPrunedIn(spark, tapped, "t", "g", Seq(7L))
+      .count() == data.filter($"g" === 7).count())
+  }
 }

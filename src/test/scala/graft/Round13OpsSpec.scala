@@ -409,14 +409,58 @@ class Round13OpsSpec extends SparkSpec {
     assert(version(root) == v, "a no-op forget commits nothing")
   }
 
+  test("ivfSoftDeleteVersioned: deleted ids vanish from search in one " +
+    "commit that rewrites no index file; the prior version still shows " +
+    "them; a rebuild clears them") {
+    val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
+      .filter(col("vec_id") < 60)
+    val qs = e.filter(col("vec_id") < 3)
+    val root = tmpDir("ivf-soft") + "/ivf"
+    val cents = graft.operators.Similarity.ivfWriteVersioned(e, "vec_id",
+      "embedding", root, nlist = 16)
+    def search(k: Int, v: Option[Long] = None) = graft.operators.Similarity
+      .ivfTopKVersioned(spark, root, cents, qs, "vec_id", "embedding",
+        k = k, nprobe = 4, version = v)
+      .select("query_id", "vec_id", "rank").as[(Long, Long, Long)]
+      .collect().toSet
+    def top(board: Set[(Long, Long, Long)], k: Int) = board.groupBy(_._1)
+      .toSeq.flatMap { case (q, rows) => rows.toSeq.sortBy(_._3).take(k)
+        .zipWithIndex.map { case ((_, v, _), i) => (q, v, i + 1L) } }.toSet
+    val pre = search(20)
+    val v1 = version(root)
+    val files = liveFiles(root, "lists")
+    val deadIds = e.filter(col("vec_id") % 7 === 3).select("vec_id")
+    graft.operators.Similarity.ivfSoftDeleteVersioned(spark, root, deadIds)
+    assert(version(root) == v1 + 1L, "one commit")
+    assert(liveFiles(root, "lists") == files, "no index file rewritten")
+    val post = search(5)
+    assert(post == top(pre.filter(_._2 % 7 != 3), 5),
+      s"post-delete top-5 == live pre-delete rows re-ranked\n$post")
+    assert(search(5, Some(v1)) == top(pre, 5),
+      "the pre-delete version still answers with the deleted rows")
+    // re-deleting is a no-op on results; a rebuild replaces the index
+    // the tombstones named, so they go with it
+    graft.operators.Similarity.ivfSoftDeleteVersioned(spark, root,
+      deadIds.filter(col("vec_id") < 20))
+    assert(search(5) == post, "re-delete changes nothing")
+    graft.operators.Similarity.ivfWriteVersioned(e, "vec_id", "embedding",
+      root, nlist = 16)
+    assert(search(5) == top(pre, 5), "a rebuild clears the tombstones")
+  }
+
   test("ivfVacuum: touched lists rewritten, untouched files byte-stable, " +
     "interrupted vacuum stays correct") {
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
       .filter(col("vec_id") < 60)
     val qs = e.filter(col("vec_id") < 3)
     val root = tmpDir("ivf-vac") + "/ivf"
-    val cents = graft.operators.Similarity.ivfWriteVersioned(e, "vec_id",
-      "embedding", root, nlist = 16)
+    // one file per list (the write shards lists over the shuffle
+    // partitions): a 1-in-7 forget then misses some files
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    val cents = try graft.operators.Similarity.ivfWriteVersioned(e,
+      "vec_id", "embedding", root, nlist = 16)
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     def search() = graft.operators.Similarity
       .ivfTopKVersioned(spark, root, cents, qs, "vec_id", "embedding",
         k = 5, nprobe = 4)

@@ -4,7 +4,7 @@
 Usage:
 
     python3 tools/query_ab.py --base <parent tree> --change <change tree> \\
-        --queries q311,q317_graph_ann_append,... [--pairs 5] [--sf <dir>] \\
+        --queries q311,q317_graph_ann_append,... [--pairs 10] [--sf <dir>] \\
         [--cpus N] [--out ab.json]
 
 Each tree must be compiled (`sbt compile`): a run starts graft.Bench in a
@@ -19,11 +19,16 @@ Bench's own default (sf0.1); --cpus to this host's core count.
 Per query it reports each side's median and quartiles of the seconds,
 the ratio of the medians (change / base), the base's spread (IQR /
 median, null when the median is 0), the pairs the change side won (ties
-count for neither) and a verdict:
+count for neither) and the verdict of perfbench/ab.py, whose rule this
+tool imports rather than restates, with a bound of 0.10 (lower seconds
+are better):
 
-  regression  change median > 1.10 x base median;
-  unresolved  otherwise, when the base spread is wider than 0.10;
-  ok          otherwise.
+  gain        change wins >= 9/10 of the pairs and the median gap exceeds
+              the base's interquartile range;
+  regression  change median > 1.10 x base median, spread within 0.10;
+  unresolved  fewer than 10 pairs; or the base spread is wider than 0.10,
+              unless every change run beats every base run;
+  no change   otherwise.
 
 A run in which a query failed (Bench records -1, kept as null under
 "runs") drops that query's pair. The JSON written to --out is strict (no
@@ -31,15 +36,19 @@ NaN or Infinity).
 """
 import argparse
 import json
+import math
 import os
 import re
 import shutil
-import statistics
 import subprocess
 import sys
 import tempfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.join(HERE, "..", "perfbench"))
+sys.dont_write_bytecode = True  # leave perfbench/ as checked out
+import ab  # noqa: E402  (perfbench/ab.py: the quartile and verdict rule)
+
 BOUND = 0.10  # a query may slow by at most 10% (and spread no wider)
 
 
@@ -78,31 +87,18 @@ def run(tree, queries, sf, cpus):
     return {q: (secs[q] if secs.get(q, -1.0) >= 0 else None) for q in queries}
 
 
-def quartiles(xs):
-    if len(xs) < 2:
-        return xs[0], xs[0]
-    q = statistics.quantiles(xs, n=4, method="inclusive")
-    return q[0], q[2]
-
-
-def summarize(base, change):
-    med_b, med_c = statistics.median(base), statistics.median(change)
-    q1_b, q3_b = quartiles(base)
-    q1_c, q3_c = quartiles(change)
-    spread = (q3_b - q1_b) / med_b if med_b > 0 else None
-    ratio = med_c / med_b if med_b > 0 else None
-    if ratio is not None and ratio > 1 + BOUND:
-        verdict = "regression"
-    elif spread is None or spread > BOUND:
-        verdict = "unresolved"
-    else:
-        verdict = "ok"
+def summarize(name, base, change):
+    """ab.py's verdict on one query's paired seconds, as strict JSON."""
+    spec = {"end_to_end": [{"name": name, "better": "lower", "bound": BOUND}]}
+    v = ab.verdict(name, base, change, spec, len(base))
+    (q1_b, med_b, q3_b), (q1_c, med_c, q3_c) = v["base"], v["head"]
     return {"pairs": len(base),
             "base_median": med_b, "base_q1": q1_b, "base_q3": q3_b,
             "change_median": med_c, "change_q1": q1_c, "change_q3": q3_c,
-            "ratio": ratio, "base_spread": spread,
+            "ratio": med_c / med_b if med_b > 0 else None,
+            "base_spread": None if math.isinf(v["base_spread"]) else v["base_spread"],
             "change_wins": sum(c < b for b, c in zip(base, change)),
-            "verdict": verdict}
+            "verdict": v["verdict"]}
 
 
 def main():
@@ -110,7 +106,7 @@ def main():
     ap.add_argument("--base", required=True)
     ap.add_argument("--change", required=True)
     ap.add_argument("--queries", required=True)
-    ap.add_argument("--pairs", type=int, default=5)
+    ap.add_argument("--pairs", type=int, default=ab.MIN_PAIRS)
     ap.add_argument("--sf")
     ap.add_argument("--cpus", type=int, default=os.cpu_count())
     ap.add_argument("--out")
@@ -137,12 +133,12 @@ def main():
         pairs = [(b[q], c[q]) for b, c in zip(runs["base"], runs["change"])
                  if b[q] is not None and c[q] is not None]
         failed = a.pairs - len(pairs)
-        result["queries"][q] = (summarize([p[0] for p in pairs],
+        result["queries"][q] = (summarize(q, [p[0] for p in pairs],
                                           [p[1] for p in pairs])
                                 if pairs else {"pairs": 0, "verdict": "unresolved"})
         result["queries"][q]["failed_pairs"] = failed
     if totals_b:
-        result["total"] = summarize(totals_b, totals_c)
+        result["total"] = summarize("total", totals_b, totals_c)
     result["runs"] = runs  # every run's seconds, in pair order
     text = json.dumps(result, indent=2, allow_nan=False)
     if a.out:
