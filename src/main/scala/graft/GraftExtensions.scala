@@ -34,6 +34,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Opt-in rewrite: row_number window + rank<=k filter gains a
     // TopKPerKeyNode under the window (spark.graft.topk.rewrite=true).
     ext.injectOptimizerRule(_ => new graft.plans.TopKRewriteRule)
+    // File skipping while optimizing: a filter over a ManifestTable read
+    // narrows the read's file index (graft.etl.FileSkipping's rule).
+    ext.injectPreCBORule(_ => graft.etl.PruneManifestFiles)
     ext.injectFunction((FunctionIdentifier("shingles"),
       new ExpressionInfo(classOf[ShingleExpr].getName, "shingles"),
       (args: Seq[Expression]) => {

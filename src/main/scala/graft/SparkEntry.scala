@@ -2823,14 +2823,13 @@ object SparkEntry {
         fpp = 0.001)
       val probe = docs.filter(col("doc_id") === 42L)
         .select("digest").as[String].head()
-      val (kept, total) =
-        etl.ManifestTable.bloomPruneStats(s, root, "documents", "digest", probe)
-      require(kept >= 1L && total == 8L,
-        s"bloom probe must keep the hit file ($kept/$total)")
-      val out = etl.ManifestTable
+      val hit = etl.ManifestTable
         .readPrunedEq(s, root, "documents", "digest", probe)
         .select(col("doc_id"), col("source"), col("n_chars"))
-        .localCheckpoint()
+      val out = hit.localCheckpoint()
+      val (kept, total) = etl.ManifestFileIndex.filesKept(hit)
+      require(kept >= 1L && total == 8L,
+        s"bloom probe must keep the hit file ($kept/$total)")
       etl.ManifestTable.vacuum(s, root)
       etl.IncrementalLoad.deleteRecursively(tmp)
       out
@@ -3218,18 +3217,22 @@ object SparkEntry {
         etl.DataLayout.zorder(col("p_partkey"), col("p_size")).as("z"))
     }),
 
-    // Data skipping end to end: write lineitem z-order-clustered by
-    // (l_partkey, l_suppkey) with a per-file min/max manifest, read back
-    // through manifest pruning, aggregate. The oracle is a plain filtered
-    // aggregate over the original table — any file wrongly skipped or
-    // double-read breaks the hash.
+    // Data skipping end to end: publish lineitem z-order-clustered by
+    // (l_partkey, l_suppkey) with per-file stats on both, read it back
+    // with a plain range filter the manifest index skips files by,
+    // aggregate. The oracle is a plain filtered aggregate over the
+    // original table — any file wrongly skipped or double-read breaks
+    // the hash.
     "q90_zorder_skipping" -> ((s, dir) => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-zorder-q90")
-      val path = s"$tmp/lineitem_z"
-      etl.DataLayout.writeClustered(s, t(s, dir, "lineitem"),
-        "l_partkey", "l_suppkey", path, nFiles = 16)
-      val out = etl.DataLayout
-        .readSkipping(s, path, "l_partkey", lo = 100L, hi = 299L)
+      val root = s"$tmp/tables"
+      etl.ManifestTable.publish(s, root,
+        Map("lineitem" -> operators.ZOrder.cluster(t(s, dir, "lineitem"),
+          Seq("l_partkey", "l_suppkey"), 16)),
+        statsCols = Map("lineitem" -> "l_partkey"),
+        extraStatsCols = Map("lineitem" -> Seq("l_suppkey")))
+      val out = etl.ManifestTable.read(s, root, "lineitem")
+        .filter(col("l_partkey").between(100L, 299L))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"), round(sum(col("l_quantity")), 2).as("sum_qty"))
         .localCheckpoint() // materialize before the clustered copy goes away

@@ -1,115 +1,20 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.expressions.ZOrderExpr
 
-/** Data-layout optimization: z-order clustered writes + a per-file
-  * min/max manifest, and a manifest-pruned read path.
-  *
-  * This is the storage half of the 100 TB story: at scale the win is not
-  * executing the scan faster but NOT READING most files at all. Writing a
-  * fact range-partitioned and sorted by the Morton value of two key
-  * columns makes each parquet file a tile of the key plane; the manifest
-  * (one row per file: min/max of each clustered column) then resolves a
-  * 2-D range predicate to the touched tiles before any scan task launches.
-  * Engines' manifest/statistics files (Iceberg, Delta, Hudi) are this
-  * exact mechanism; here it is self-contained parquet under `_manifest`
-  * (underscore-prefixed paths are invisible to Spark's file index, like
-  * `_SUCCESS`).
-  *
-  * Scale notes:
-  *  - the write is one range-partitioning shuffle (sampled bounds) + an
-  *    in-partition sort — the same cost as any sorted write;
-  *  - the manifest is file-count-sized (one row per file), so collecting
-  *    the pruned file list on the driver is exactly as cheap as planning
-  *    a normal scan's file index;
-  *  - parquet row-group min/max pruning still applies WITHIN each kept
-  *    file (the data is sorted, so those stats are tight too).
+/** Data-layout helpers: the Morton (z-order) value clustered writes
+  * sort by, and a rendezvous shard assignment. A clustered table is
+  * written with [[graft.operators.ZOrder.cluster]] and published through
+  * [[ManifestTable]] with stats on the clustered columns, whose reads
+  * then skip the files a range filter misses.
   */
 object DataLayout {
 
   /** Morton value of two integral columns (see [[ZOrderExpr]]). */
   def zorder(a: Column, b: Column): Column = ZOrderExpr.zorder2(a, b)
-
-  /** Write `df` z-order-clustered by (`cx`, `cy`) into `nFiles`
-    * range-partitioned sorted files at `path`, plus the per-file min/max
-    * manifest at `path/_manifest`. */
-  def writeClustered(spark: SparkSession, df: DataFrame, cx: String, cy: String,
-                     path: String, nFiles: Int): Unit = {
-    df.withColumn("__z", zorder(col(cx), col(cy)))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-    val manifest = spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(
-        min(col(cx)).as(s"min_$cx"), max(col(cx)).as(s"max_$cx"),
-        min(col(cy)).as(s"min_$cy"), max(col(cy)).as(s"max_$cy"),
-        count(lit(1)).as("n_rows"))
-    manifest.coalesce(1).write.mode("overwrite").parquet(s"$path/_manifest")
-  }
-
-  /** Driver-side kept-file-list cap: the pruned list is collected to
-    * build the scan, which is safe at manifest scale (one row per file)
-    * but must not be unbounded at million-file tables — a 10M-path list
-    * of ~150-byte URIs is gigabytes of driver heap. The cap is checked
-    * with a distributed count BEFORE any collect. */
-  val MaxCollectedFiles: Int = 1000000
-
-  /** Kept-file list if it fits under `maxFiles` (checked with a
-    * distributed count BEFORE any collect), else None; second element is
-    * the total manifest file count. */
-  private def keptFiles(spark: SparkSession, path: String, c: String,
-                        lo: Long, hi: Long,
-                        maxFiles: Int): (Option[Seq[String]], Long, Long) = {
-    val man = spark.read.parquet(s"$path/_manifest")
-    val total = man.count()
-    val keepDf = man.filter(col(s"max_$c") >= lo && col(s"min_$c") <= hi)
-      .select("file")
-    val nKeep = keepDf.count()
-    val kept =
-      if (nKeep <= maxFiles) Some(keepDf.collect().map(_.getString(0)).toSeq)
-      else None
-    (kept, total, nKeep)
-  }
-
-  /** Files whose [min, max] range on `c` intersects [lo, hi] — the
-    * manifest-pruned scan list. Refuses (before collecting anything) if
-    * more than `maxFiles` files survive pruning: callers wanting the
-    * file list at that scale should process the manifest distributively;
-    * callers wanting the DATA should use [[readSkipping]], which falls
-    * back to a plain full scan instead. */
-  def prunedFiles(spark: SparkSession, path: String, c: String,
-                  lo: Long, hi: Long,
-                  maxFiles: Int = MaxCollectedFiles): (Seq[String], Long) = {
-    val (kept, total, nKeep) = keptFiles(spark, path, c, lo, hi, maxFiles)
-    require(kept.isDefined,
-      s"prunedFiles: $nKeep files survive pruning (> cap $maxFiles) — " +
-        "collecting that list would strain the driver; use readSkipping " +
-        "(full-scan fallback) or raise maxFiles deliberately")
-    (kept.get, total)
-  }
-
-  /** Read `path` with manifest pruning for `c` in [lo, hi]: only files
-    * whose min/max range intersects the predicate are opened. The exact
-    * predicate is re-applied, so results are identical to a full scan —
-    * pruning is purely an I/O reduction. If the kept list exceeds
-    * `maxFiles`, the read degrades to a full scan: a predicate touching
-    * a million files was barely pruning anyway, and parquet row-group
-    * min/max skipping still applies within each file. */
-  def readSkipping(spark: SparkSession, path: String, c: String,
-                   lo: Long, hi: Long,
-                   maxFiles: Int = MaxCollectedFiles): DataFrame = {
-    val base = keptFiles(spark, path, c, lo, hi, maxFiles)._1 match {
-      case Some(keep) if keep.isEmpty => spark.read.parquet(path).where(lit(false))
-      case Some(keep)                 => spark.read.parquet(keep: _*)
-      case None                       => spark.read.parquet(path)
-    }
-    base.filter(col(c) >= lo && col(c) <= hi)
-  }
 
   /** Rendezvous (highest-random-weight) shard assignment (Thaler &
     * Ravishankar 1998): key k lands on `argmax_s h32(s + ":" + k)` over

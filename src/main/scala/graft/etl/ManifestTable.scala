@@ -3,12 +3,11 @@ package graft.etl
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -52,9 +51,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * This is the mechanism Iceberg/Delta/Hudi build on (a metadata pointer
   * over immutable files), self-contained here over the public Hadoop
-  * FileSystem + parquet APIs — same pattern as [[DataLayout]]'s
-  * `_manifest` min/max index, promoted from statistics to the source of
-  * truth for table contents.
+  * FileSystem + parquet APIs — per-file min/max statistics promoted to
+  * the source of truth for table contents.
   *
   * Scale notes: commit files are CHANGED-file-sized (deltas), resolved
   * on the driver at plan time from the nearest checkpoint/cached state
@@ -79,6 +77,18 @@ import org.apache.spark.storage.StorageLevel
   *    always carries its byte size and row count;
   *  - every bloom payload is a slice of its write unit's pack object,
   *    `@<rel>.pack.bloom#<offset>:<len>` ([[writeBloomPack]]).
+  *
+  * Reads: every non-merging read plans from a [[ManifestFileIndex]] over
+  * the commit's entries, and file skipping has ONE rule, applied by its
+  * `listFiles` to Catalyst's resolved filter conjuncts:
+  *  - a range or equality bound on the exact value the writer recorded
+  *    min/max for ([[canonLongExpr]], or the bare column where that map
+  *    is the identity or monotone and total) skips by min/max;
+  *  - `=` / `IN` on a bloom-inserted form (`cast(c AS string)`, or the
+  *    long form) skips by the bloom pack;
+  *  - any other conjunct skips nothing.
+  * So a plain `read(...).filter(...)` skips files, and merge discovery
+  * tests its collected keys per file with the same functions.
   */
 object ManifestTable {
 
@@ -277,22 +287,6 @@ object ManifestTable {
 
   private def uuid(): String = UUID.randomUUID().toString.replace("-", "")
 
-  /** Evaluate one independent unit of write work per element
-    * CONCURRENTLY (guide §2.6 — a multi-table publish's per-table
-    * writes are independent Spark jobs; submitting them from driver
-    * threads lets the next table's tasks back-fill executors freed by
-    * the current table's stage tail), preserving the input order of
-    * the results so commit bodies stay byte-deterministic. Each unit
-    * writes to its own `d-<uuid>` dir; the only shared state is the
-    * thread-safe FileSystem handle and Spark's scheduler. */
-  private def inParallel[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-    if (xs.lengthCompare(1) <= 0) xs.map(f)
-    else {
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      xs.map(x => Future(f(x))).map(Await.result(_, Duration.Inf))
-    }
-  }
-
   // ---------------------------------------------------------------- resolve
 
   /** Parsed body of one commit file: a self-contained SNAPSHOT (a
@@ -462,7 +456,7 @@ object ManifestTable {
     if (!fs.exists(new HPath(cd, fixedName(version))))
       throw new IllegalArgumentException(
         s"readAt: version $version not retained under $root (vacuumed?)")
-    toDf(spark, rootP, resolveEntries(fs, cd, version), table)
+    toDf(spark, rootP, version, resolveEntries(fs, cd, version), table)
   }
 
   /** Row-level diff between two retained snapshots: every row only in
@@ -789,8 +783,8 @@ object ManifestTable {
     * date-clustered tables previously recorded NO usable range and a
     * date-bounded retention purge could not prune discovery),
     * epoch-SECOND for TIMESTAMP (exactly what `cast(ts AS long)`
-    * computes), long cast otherwise. [[impliedRange]]'s literal
-    * canonicalizers mirror these units. */
+    * computes), long cast otherwise. [[ManifestFileIndex]]'s skip rule
+    * matches filters on exactly these expressions. */
   private def canonLongExpr(c: String,
       dt: Option[org.apache.spark.sql.types.DataType]): Column = dt match {
     case Some(org.apache.spark.sql.types.DateType) =>
@@ -924,10 +918,10 @@ object ManifestTable {
     * its write tasks could not cover ([[MetaTap]] computes the same
     * metadata while the file is written).
     *
-    * Each bloom key inserts under BOTH its raw string rendering (what
-    * [[readPrunedEq]] probes) and its canonical long-form rendering
-    * (what [[readPrunedIn]] probes): a DOUBLE column's raw form is
-    * "4.0" while the long probe is "4", and probing a filter that only
+    * Each bloom key inserts under BOTH its raw string rendering (what a
+    * `cast(c AS string)` equality probes) and its canonical long-form
+    * rendering (what an integral equality probes): a DOUBLE column's raw
+    * form is "4.0" while the long probe is "4", and probing a filter that only
     * held the raw form would be a guaranteed FALSE NEGATIVE — a
     * silently dropped matching file. Two insertions at most per row per
     * column; `expectedOf(fileName)` supplies the per-file insertion
@@ -1073,7 +1067,7 @@ object ManifestTable {
     // footer opens are independent metadata reads — do them
     // concurrently instead of one driver round-trip per file
     val footerMeta: Seq[(String, Long, Map[String, (Long, Long)])] =
-      inParallel(listed) { s =>
+      graft.Overlap.map(listed) { s =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromPath(s.getPath, conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -1140,14 +1134,15 @@ object ManifestTable {
         .collect { case (n, Some(Seq((_, TapOut(rows, Some(m))))))
           if rows == rowsByName(n) => n -> m }
     }
-    val rest = listed.map(_.getPath.getName)
-      .filter(n => rowsByName(n) > 0L && !tapped.contains(n))
+    val rest = listed.filter(s => rowsByName(s.getPath.getName) > 0L &&
+      !tapped.contains(s.getPath.getName))
     val metaOf: Map[String, PerFileMeta] =
       if (footerOnly) footerMeta.map { case (n, _, st) =>
         n -> PerFileMeta(st, Map.empty) }.toMap
       else if (rest.isEmpty) tapped
       else tapped ++ statsBloomPass(
-        scan(spark, rootP, rest.map(n => FileEntry(table, s"$dir/$n", None, None))),
+        scan(spark, rootP, -1L, rest.map(s => FileEntry(table,
+          s"$dir/${s.getPath.getName}", None, None, bytes = Some(s.getLen)))),
         statsCols, bloomCols, fname => 2L * rowsByName(fname))
         // keys are full file paths: index by basename
         .map { case (f, m) => f.substring(f.lastIndexOf('/') + 1) -> m }
@@ -1244,7 +1239,7 @@ object ManifestTable {
     * straight from its slice. A payload that is not
     * `@<rel>#<offset>:<len>`, or whose slice lies outside the pack,
     * fails a require naming it. */
-  private def bloomFilterOf(fs: FileSystem, rootP: HPath, payload: String)
+  private[etl] def bloomFilterOf(fs: FileSystem, rootP: HPath, payload: String)
       : org.apache.spark.util.sketch.BloomFilter = {
     val raw = payload.stripPrefix(PointerMark)
     val i = raw.indexOf('#')
@@ -1325,13 +1320,17 @@ object ManifestTable {
   private def entriesOf(c: Option[Commit], table: String): Seq[FileEntry] =
     c.map(_.entries.filter(_.table == table)).getOrElse(Nil)
 
-  private def toDf(spark: SparkSession, rootP: HPath, entries: Seq[FileEntry],
-                   table: String, mergeSchema: Boolean = false): DataFrame = {
+  /** `table`'s rows in `entries` (of commit `version`). The merging
+    * read stays on `spark.read`: a merged schema is the union of every
+    * footer, which only Spark's inference computes. */
+  private def toDf(spark: SparkSession, rootP: HPath, version: Long,
+                   entries: Seq[FileEntry], table: String,
+                   mergeSchema: Boolean = false): DataFrame = {
     val mine = entries.filter(_.table == table)
     require(mine.nonEmpty, s"no table '$table' in this version")
     if (mergeSchema) spark.read.option("mergeSchema", "true")
       .parquet(mine.map(e => new HPath(rootP, e.relPath).toString): _*)
-    else scan(spark, rootP, mine)
+    else scan(spark, rootP, version, mine)
   }
 
   /** Data schema of every write directory (`<table>/d-<uuid>`) this
@@ -1358,22 +1357,26 @@ object ManifestTable {
       spark.read.parquet(file.toString).schema)
   }
 
-  /** The one non-merging read of manifest entries: `files` planned
-    * under the schema [[schemaOf]] knows for the first of them, so no
-    * schema-inference job runs — the same schema Spark would infer. No
-    * files at all yields an empty relation with the schema of
-    * `orEmptyOf` (a pruned read that keeps nothing), which lists and
-    * plans no file either. */
-  private def scan(spark: SparkSession, rootP: HPath, files: Seq[FileEntry],
-                   orEmptyOf: Seq[FileEntry] = Nil): DataFrame =
-    files.headOption match {
-      case Some(first) => spark.read.schema(schemaOf(spark, rootP, first))
-        .parquet(files.map(e => new HPath(rootP, e.relPath).toString): _*)
-      case None =>
-        require(orEmptyOf.nonEmpty, "scan: no files and no table to type them")
-        spark.createDataFrame(java.util.Collections.emptyList[Row](),
-          schemaOf(spark, rootP, orEmptyOf.head))
-    }
+  /** The one non-merging read of manifest entries: `files` (one table's,
+    * of commit `version`; -1 for files no commit lists yet) planned
+    * through a [[ManifestFileIndex]] under the schema [[schemaOf]] knows
+    * for the first of them — no listing, no stat, no schema-inference
+    * job, and the index skips files by the module's one rule. */
+  private def scan(spark: SparkSession, rootP: HPath, version: Long,
+                   files: Seq[FileEntry]): DataFrame = {
+    require(files.nonEmpty, "scan: no files")
+    val index = ManifestFileIndex(rootP.toString, version, files.head.table,
+      files)(spark)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      schemaOf(spark, rootP, files.head), None, new ParquetFileFormat,
+      Map.empty)(spark))
+  }
+
+  /** `entries`' rows of `table` at `version` of `root` — the read a
+    * change-stream delivery builds from the entries it was handed. */
+  private[graft] def frameOf(spark: SparkSession, root: String, version: Long,
+                             table: String, entries: Seq[FileEntry]): DataFrame =
+    toDf(spark, fsFor(spark, root)._2, version, entries, table)
 
   // ------------------------------------------------------------------ reads
 
@@ -1387,132 +1390,24 @@ object ManifestTable {
     val (_, rootP) = fsFor(spark, root)
     val c = current(spark, root).getOrElse(
       throw new IllegalArgumentException(s"no committed table under $root"))
-    toDf(spark, rootP, c.entries, table, mergeSchema)
+    toDf(spark, rootP, c.version, c.entries, table, mergeSchema)
   }
 
-  /** Read with FILE SKIPPING on the stats column: only files whose
-    * [min,max] intersects [lo,hi] are opened (files with no stats are
-    * always opened). The predicate is re-applied, so results equal a
-    * full scan — skipping is purely I/O reduction, the readSkipping
-    * contract of [[DataLayout]]. */
+  /** [[read]] filtered to `statsCol`'s canonical long in [lo, hi] — the
+    * filter the index skips files by. */
   def readPruned(spark: SparkSession, root: String, table: String,
                  statsCol: String, lo: Long, hi: Long): DataFrame = {
-    val (_, rootP) = fsFor(spark, root)
-    val c = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed table under $root"))
-    val mine = entriesOf(Some(c), table)
-    require(mine.nonEmpty, s"no table '$table' under $root")
-    val keep = mine.filter(e => e.statsFor(statsCol) match {
-      case Some((mn, mx)) => mx >= lo && mn <= hi
-      case None => true
-    })
-    val base = scan(spark, rootP, keep, orEmptyOf = mine)
+    val df = read(spark, root, table)
     val cl = canonLongExpr(statsCol,
-      base.schema.find(_.name == statsCol).map(_.dataType))
-    base.filter(cl >= lo && cl <= hi)
-  }
-
-  /** [[readPruned]] for a SET of probe values instead of one range,
-    * optionally pinned to a retained `version` (time travel): only
-    * files whose [min,max] contains at least one probe value are
-    * opened, and the membership predicate is re-applied so results
-    * equal a full scan. This is how a manifest-committed IVF index
-    * expresses probed-list pruning — the probe set is the nprobe
-    * best lists, tiny by construction — while the version pin gives
-    * the racing-reader isolation a `list_id=` directory can't.
-    *
-    * COMPOSES with [[indexBloom]]: a file surviving the min/max test
-    * is additionally probed against its Bloom filter when one exists
-    * on `statsCol`, so files inside a probe's [min,max] envelope that
-    * do not actually CONTAIN any probed value are skipped too — the
-    * case range stats alone can never catch once values interleave
-    * across many files. Bloom misses are exact (no false negatives),
-    * so results still equal a full scan; files without a bloom on
-    * `statsCol` are simply never bloom-skipped. */
-  def readPrunedIn(spark: SparkSession, root: String, table: String,
-                   statsCol: String, values: Seq[Long],
-                   version: Option[Long] = None): DataFrame = {
-    require(values.nonEmpty, "readPrunedIn: empty probe set")
-    val (fs, rootP) = fsFor(spark, root)
-    val entries = version match {
-      case Some(v) => entriesAt(spark, root, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"readPrunedIn: version $v not retained under $root (vacuumed?)"))
-      case None => current(spark, root).getOrElse(
-        throw new IllegalArgumentException(
-          s"no committed table under $root")).entries
-    }
-    val mine = entries.filter(_.table == table)
-    require(mine.nonEmpty, s"no table '$table' under $root")
-    val keep = mine.filter(e => keepInSet(fs, rootP, e, statsCol, values))
-    val base = scan(spark, rootP, keep, orEmptyOf = mine)
-    base.filter(canonLongExpr(statsCol,
-      base.schema.find(_.name == statsCol).map(_.dataType)).isin(values: _*))
-  }
-
-  /** The [[readPrunedIn]] skip test for one file: min/max range first
-    * (the primary pair when its recorded name matches, or a named
-    * secondary group), then the per-file Bloom filter when one
-    * covers `statsCol` (primary or secondary slot). */
-  private def keepInSet(fs: FileSystem, rootP: HPath, e: FileEntry,
-                        statsCol: String, values: Seq[Long]): Boolean = {
-    val rangeOk = e.statsFor(statsCol) match {
-      case Some((mn, mx)) => values.exists(v => v >= mn && v <= mx)
-      case None => true
-    }
-    rangeOk && (e.bloomFor(statsCol) match {
-      case Some(payload) =>
-        val bf = bloomFilterOf(fs, rootP, payload)
-        values.exists(v => bf.mightContainBinary(bloomKeyBytes(v)))
-      case None => true
-    })
-  }
-
-  /** Kept-vs-total file counts for a probe SET, with and without the
-    * bloom composition — (keptBloomComposed, keptMinMaxOnly, total),
-    * the observability hook for [[readPrunedIn]]'s skip rate. */
-  def prunedInStats(spark: SparkSession, root: String, table: String,
-                    statsCol: String, values: Seq[Long],
-                    version: Option[Long] = None): (Long, Long, Long) = {
-    val (fs, rootP) = fsFor(spark, root)
-    val entries = version match {
-      case Some(v) => entriesAt(spark, root, v).getOrElse(
-        throw new IllegalArgumentException(
-          s"prunedInStats: version $v not retained under $root"))
-      case None => current(spark, root).getOrElse(
-        throw new IllegalArgumentException(
-          s"no committed table under $root")).entries
-    }
-    val mine = entries.filter(_.table == table)
-    val keptRange = mine.count(e => e.statsFor(statsCol) match {
-      case Some((mn, mx)) => values.exists(v => v >= mn && v <= mx)
-      case None => true
-    })
-    val keptBloom = mine.count(e => keepInSet(fs, rootP, e, statsCol, values))
-    (keptBloom.toLong, keptRange.toLong, mine.size.toLong)
-  }
-
-  /** Kept-vs-total file counts for a pruning range — observability for
-    * specs and ops dashboards. Uses the primary stats pair regardless
-    * of its recorded name (the caller supplies no column here; this is
-    * the raw clustered-range view). */
-  def pruneStats(spark: SparkSession, root: String, table: String,
-                 lo: Long, hi: Long): (Long, Long) = {
-    val c = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed table under $root"))
-    val mine = entriesOf(Some(c), table)
-    val kept = mine.count(e => (e.min, e.max) match {
-      case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
-      case _ => true
-    })
-    (kept.toLong, mine.size.toLong)
+      df.schema.find(_.name == statsCol).map(_.dataType))
+    df.filter(cl >= lo && cl <= hi)
   }
 
   // ------------------------------------------------------------ bloom index
 
   /** UTF-8 bytes of the canonical string form a value is probed/inserted
     * under — both sides of the bloom contract go through here. */
-  private def bloomKeyBytes(v: Any): Array[Byte] =
+  private[etl] def bloomKeyBytes(v: Any): Array[Byte] =
     String.valueOf(v).getBytes(StandardCharsets.UTF_8)
 
   /** Metadata-only version that attaches a per-file Bloom filter of
@@ -1542,8 +1437,8 @@ object ManifestTable {
     require(mine.nonEmpty, s"no table '$table' under $root")
     val rowsByName: Map[String, Long] = mine.map(e =>
       e.relPath.split("/").last -> rowsOf(Seq(e))).toMap
-    val blooms = statsBloomPass(scan(spark, rootP, mine), Nil, Seq(keyCol),
-      fname => 2L * rowsByName(fname), fpp)
+    val blooms = statsBloomPass(scan(spark, rootP, cur.version, mine), Nil,
+      Seq(keyCol), fname => 2L * rowsByName(fname), fpp)
     // one pack per retrofit call (see [[writeBloomPack]]), keyed here by
     // the entry's relPath since retrofits span multiple write dirs
     val packed = writeBloomPack(fs, rootP, table,
@@ -1562,49 +1457,12 @@ object ManifestTable {
       parent = Some(cur.entries))
   }
 
-  /** Equality-probe read with Bloom file skipping: only files whose
-    * filter might contain `value` (plus files with no bloom on `keyCol`)
-    * are opened. No false negatives, and the predicate is re-applied, so
-    * the result equals a full scan filtered to `keyCol = value` (string
-    * equality on the canonical cast, mirroring [[indexBloom]]'s
-    * insertion form). The point-lookup twin of [[readPruned]]. */
+  /** [[read]] filtered to `keyCol`'s string form equal to `value`'s —
+    * the equality the index skips files by through their blooms. */
   def readPrunedEq(spark: SparkSession, root: String, table: String,
-                   keyCol: String, value: Any): DataFrame = {
-    val (fs, rootP) = fsFor(spark, root)
-    val c = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed table under $root"))
-    val mine = entriesOf(Some(c), table)
-    require(mine.nonEmpty, s"no table '$table' under $root")
-    val probe = bloomKeyBytes(value)
-    val keep = mine.filter { e =>
-      e.bloomFor(keyCol) match {
-        case Some(payload) =>
-          bloomFilterOf(fs, rootP, payload).mightContainBinary(probe)
-        case None => true
-      }
-    }
-    val base = scan(spark, rootP, keep, orEmptyOf = mine)
-    base.filter(col(keyCol).cast("string") === lit(String.valueOf(value)))
-  }
-
-  /** Kept-vs-total file counts for an equality probe — [[pruneStats]]'s
-    * bloom twin. */
-  def bloomPruneStats(spark: SparkSession, root: String, table: String,
-                      keyCol: String, value: Any): (Long, Long) = {
-    val (fs, rootP) = fsFor(spark, root)
-    val c = current(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"no committed table under $root"))
-    val mine = entriesOf(Some(c), table)
-    val probe = bloomKeyBytes(value)
-    val kept = mine.count { e =>
-      e.bloomFor(keyCol) match {
-        case Some(payload) =>
-          bloomFilterOf(fs, rootP, payload).mightContainBinary(probe)
-        case None => true
-      }
-    }
-    (kept.toLong, mine.size.toLong)
-  }
+                   keyCol: String, value: Any): DataFrame =
+    read(spark, root, table)
+      .filter(col(keyCol).cast("string") === lit(String.valueOf(value)))
 
   // ----------------------------------------------------------------- writes
 
@@ -1623,7 +1481,7 @@ object ManifestTable {
     val (fs, rootP) = fsFor(spark, root)
     fs.mkdirs(rootP)
     val cur = current(spark, root)
-    val fresh = inParallel(tables.toSeq.sortBy(_._1)) { case (name, df) =>
+    val fresh = graft.Overlap.map(tables.toSeq.sortBy(_._1)) { case (name, df) =>
       writeData(spark, rootP, fs, name, df, statsCols.get(name),
         bloomCols.get(name),
         extraStatsCols = extraStatsCols.getOrElse(name, Nil),
@@ -1779,7 +1637,7 @@ object ManifestTable {
         carried ++ newEntries, parent = cur.map(_.entries))
       return n
     }
-    val existing = toDf(spark, rootP, prior, table)
+    val existing = toDf(spark, rootP, cur.get.version, prior, table)
     val fresh = IncrementalLoad.newRowsOnly(incoming, existing, key)
     // write FIRST, then count the written files (a parquet metadata-only
     // count) — one execution of the anti-join, no staging step, and the
@@ -1795,126 +1653,9 @@ object ManifestTable {
     n
   }
 
-  /** Necessary [lo, hi] bounds on `c`'s canonical-long stats values
-    * implied by `pred`'s CONJUNCTS, or None when nothing bounds the
-    * column. Sound for file skipping: pred ⇒ each conjunct, so every
-    * matching row satisfies each extracted bound; the bounds are then
-    * WIDENED by 1 on each side because manifest stats are min/max of
-    * the canonical long form ([[statExprFor]] — `cast(col AS long)`
-    * truncates toward zero, so the stats value can sit up to one below
-    * or above the raw value the predicate compared). Bounds arrive as
-    * EXACT BigDecimals and widen via floor−1 / ceil+1 in exact
-    * arithmetic, SATURATING to unbounded when the widened bound leaves
-    * Long range — the previous double pipeline rounded snowflake-scale
-    * literals (~1.5e18) by up to ~512 and wrapped beyond Long range,
-    * either of which could exclude a file holding genuinely matching
-    * rows (a silently incomplete purge). `colType` selects the literal
-    * canonicalizer (numeric identity / epoch-day / epoch-second) and
-    * gates cast-transparency: a `CAST(c AS t)` reference counts as `c`
-    * only when the cast is provably widening from the column's real
-    * type (Cast.canUpCast) — through a narrowing cast a non-ANSI
-    * overflow-wrapped raw value can match the predicate from far
-    * outside the implied range. Handled shapes: >=, >, <=, <, =, <=>,
-    * IN and BETWEEN (as its desugared conjunction) between such a
-    * reference and accepted literals, either operand order, combined
-    * through AND. Anything else (OR, NOT, UDFs, rejected literals,
-    * NaN) contributes no bound — never unsound, just no narrowing. */
-  private[graft] def impliedRange(pred: Column, c: String,
-      colType: Option[org.apache.spark.sql.types.DataType] = None)
-      : Option[(Long, Long)] = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    import org.apache.spark.sql.types.{DataType, DateType, DoubleType,
-      FloatType, TimestampType}
-    val pointCanon: Any => Option[BigDecimal] = colType match {
-      case Some(DateType) => ColumnBridge.canonDate
-      case Some(TimestampType) => ColumnBridge.canonTimestamp
-      case _ => ColumnBridge.canonNumeric
-    }
-    // when the comparison WIDENS to double — floating column, floating
-    // literal, or unknown column type (assume the worst) — a literal
-    // matches its whole double-preimage band, not a point: every raw
-    // value within ±ulp of the literal's double form compares equal.
-    // An exact column against an exact literal compares exactly and
-    // keeps the point interval.
-    val colFloating = colType.exists(dt =>
-      dt == FloatType || dt == DoubleType)
-    def litFloating(v: Any): Boolean =
-      v.isInstanceOf[java.lang.Float] || v.isInstanceOf[java.lang.Double]
-    val toCanon: Any => Option[(BigDecimal, BigDecimal)] = v =>
-      pointCanon(v).flatMap { p =>
-        if (!colFloating && colType.isDefined && !litFloating(v))
-          Some((p, p))
-        else {
-          val d = p.toDouble
-          if (d.isInfinite || d.isNaN) None // unbounded band: no bound
-          else { val u = BigDecimal(math.ulp(d)); Some((p - u, p + u)) }
-        }
-      }
-    val castOk: DataType => Boolean = target => colType.exists(ct =>
-      org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(ct, target))
-    val (lo, hi) = ColumnBridge.impliedNumericBounds(pred, c, toCanon, castOk)
-    if (lo.isEmpty && hi.isEmpty) None
-    else {
-      // floor/ceil alone absorb long-cast truncation: a matching row
-      // v >= lo has trunc-toward-zero(v) >= floor(lo) (v >= 0 gives
-      // trunc = floor(v) >= floor(lo); v < 0 gives trunc = ceil(v) >=
-      // v >= lo >= floor(lo)), symmetrically trunc(v) <= ceil(hi) for
-      // v <= hi — so the recorded stat of every matching row lands
-      // inside [floor(lo), ceil(hi)] and no extra widening is needed.
-      // (The pre-exact-bounds ±1 existed to absorb DOUBLE rounding of
-      // the bounds themselves; bounds are exact BigDecimal now, and
-      // double-widened comparisons already carry their ulp band.)
-      //
-      // Columns whose raw values ARE integers (integral types, DATE in
-      // epoch-day) tighten further: inclusive lo rounds UP (no integer
-      // sits in (floor(lo), lo)), and a STRICT bound excludes its own
-      // integer — `k > 32` admits no row below 33, `k < 20` none above
-      // 19. Float/double/timestamp columns keep the conservative
-      // rounding: fractional raw values sit strictly between the bound
-      // and its neighbors and still truncate onto floor(lo)/ceil(hi).
-      // Scale-0 decimals qualify: their raw values are integers, and
-      // the out-of-Long concern is moot — a row matching an
-      // in-Long-range bound is itself in range and castable (its stat
-      // is recorded), while out-of-Long LITERALS already saturate the
-      // bound side to unbounded below.
-      import org.apache.spark.sql.types.{ByteType, ShortType,
-        IntegerType, LongType, DecimalType}
-      val integralStats = colType.exists {
-        case ByteType | ShortType | IntegerType | LongType | DateType => true
-        case d: DecimalType => d.scale == 0
-        case _ => false
-      }
-      val minL = BigDecimal(Long.MinValue)
-      val maxL = BigDecimal(Long.MaxValue)
-      val loL = lo.fold(Long.MinValue) { case (bd, strict) =>
-        val w =
-          if (integralStats && strict)
-            bd.setScale(0, BigDecimal.RoundingMode.FLOOR) + 1
-          else if (integralStats)
-            bd.setScale(0, BigDecimal.RoundingMode.CEILING)
-          else bd.setScale(0, BigDecimal.RoundingMode.FLOOR)
-        // out of Long range on EITHER side -> unbounded: stats of rows
-        // beyond Long range are cast-saturated (double) or cast-null
-        // (decimal) and a representable clamp could still skip the file
-        // holding them
-        if (w < minL || w > maxL) Long.MinValue else w.toLongExact
-      }
-      val hiL = hi.fold(Long.MaxValue) { case (bd, strict) =>
-        val w =
-          if (integralStats && strict)
-            bd.setScale(0, BigDecimal.RoundingMode.CEILING) - 1
-          else if (integralStats)
-            bd.setScale(0, BigDecimal.RoundingMode.FLOOR)
-          else bd.setScale(0, BigDecimal.RoundingMode.CEILING)
-        if (w > maxL || w < minL) Long.MaxValue else w.toLongExact
-      }
-      Some((loL, hiL))
-    }
-  }
-
   /** Targeted deletion at FILE granularity: only files that contain a
-    * matching row are rewritten (manifest stats have already bounded
-    * which files those can be for stats-correlated predicates); all
+    * matching row are rewritten (the index's skip rule, judged on the
+    * predicate, has already bounded which files those can be); all
     * other files are carried into the new version untouched —
     * byte-identical, not even re-read at commit time. Crash-consistent
     * ACROSS files, unlike the per-partition swap loop of
@@ -1931,143 +1672,21 @@ object ManifestTable {
       throw new IllegalArgumentException(s"no committed table under $root"))
     val mine = entriesOf(Some(cur), table)
     require(mine.nonEmpty, s"no table '$table' under $root")
-    val delCond = coalesce(predicate, lit(false)) // NULL means KEEP
-    // discovery narrowing for PREDICATE deletes: a conjunct of the
-    // predicate that bounds a stats-covered column bounds every
-    // matching row, so files whose recorded [min,max] misses the
-    // implied range provably hold no match — the affected-file scan
-    // reads only in-range files, the readPruned shape on a write path.
-    // EVERY column with recorded stats participates (the named primary
-    // and any secondary stats group); per-column necessity intersects.
-    // TYPE-GUARDED: conjunct literals are numeric, so narrowing applies
-    // only to NUMERIC-typed columns — on a STRING column Spark coerces
-    // the comparison to DOUBLE and a decimal-formatted value ("4.00")
-    // long-casts to NULL, i.e. it is invisible to the recorded min/max
-    // while still matching the predicate; skipping by those stats would
-    // silently leave matching rows undeleted. Arbitrary predicates (no
-    // extractable conjunct) scan everything, exactly as before.
-    val schema = schemaOf(spark, rootP, mine.head)
-    def colType(c: String): Option[org.apache.spark.sql.types.DataType] =
-      schema.find(_.name == c).map(_.dataType)
-    def numericCol(c: String): Boolean = colType(c)
-      .exists(_.isInstanceOf[org.apache.spark.sql.types.NumericType])
-    // range narrowing applies to numeric columns AND date/timestamp
-    // columns (whose stats are recorded canonically — epoch-day /
-    // epoch-second — and whose literals canonicalize the same way);
-    // impliedRange picks the matching canonicalizer per column type
-    def rangeNarrowable(c: String): Boolean = colType(c).exists {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case org.apache.spark.sql.types.DateType => true
-      case org.apache.spark.sql.types.TimestampType => true
-      case _ => false
-    }
-    val statCols = mine.flatMap(e =>
-      e.statsName.toSeq ++ e.stats2.map(_._1)).distinct
-    val ranged = statCols.filter(rangeNarrowable).foldLeft(mine) { (cand, sc) =>
-      impliedRange(predicate, sc, colType(sc)) match {
-        case Some((lo, hi)) => cand.filter(e =>
-          e.statsFor(sc) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi
-            case None => true
-          })
-        case None => cand
-      }
-    }
-    // equality/IN conjuncts additionally probe per-file BLOOMS on any
-    // covered column (the deleteByKeys narrowing, reached through a
-    // predicate): a file whose filter rejects every pinned value
-    // provably holds no match. TYPE-GUARDED per (column type, literal)
-    // pair — only the combinations whose canonical insertion form is
-    // guaranteed hit by a match qualify:
-    //  - STRING column = STRING literal: same-type string equality, the
-    //    raw-form insertion IS the value;
-    //  - EXACT-NUMERIC column (integral/decimal) = exact integral
-    //    literal: the widened comparison stays exact, so a match means
-    //    numeric equality with integer L at ANY magnitude and the row's
-    //    LONG-cast form is exactly L;
-    //  - any FLOATING side (float/double column, or Float/Double /
-    //    numeric-string literal): the comparison widens to DOUBLE, and
-    //    above 2^53 MANY distinct long-cast row values satisfy equality
-    //    with one double while only one long form is probed — a
-    //    guaranteed false negative — so the literal must be integral
-    //    AND |L| <= 2^53;
-    // anything else (fractional literals — rendering ambiguity across
-    // numeric types; numerics against string columns — the "4.00"
-    // coercion hole) skips narrowing on that column. A single
-    // non-qualifying IN member disables the whole column (probing a
-    // subset would be a false negative).
-    val scanSet = ranged
-      .flatMap(e => (e.bloom.toSeq ++ e.blooms2).map(_._1)).distinct
-      .foldLeft(ranged) { (cand, c) =>
-        import org.apache.spark.sql.types._
-        val colIsString = colType(c).contains(StringType)
-        val colIsNumeric = numericCol(c)
-        val colIsExact = colType(c).exists {
-          case ByteType | ShortType | IntegerType | LongType => true
-          case _: DecimalType => true
-          case _ => false
-        }
-        val TwoP53 = 1L << 53
-        def longForm(l: Long): Option[Array[Byte]] =
-          Some(String.valueOf(l).getBytes(StandardCharsets.UTF_8))
-        // double path: integral-valued and within exact-double range
-        def fromDouble(d: Double): Option[Array[Byte]] =
-          if (!d.isNaN && !d.isInfinite && d == math.floor(d) &&
-            math.abs(d) <= TwoP53.toDouble) longForm(d.toLong) else None
-        def probeForm(v: Any): Option[Array[Byte]] = v match {
-          case s: String if colIsString =>
-            Some(s.getBytes(StandardCharsets.UTF_8))
-          case n @ (_: java.lang.Byte | _: java.lang.Short |
-                    _: java.lang.Integer | _: java.lang.Long)
-              if colIsNumeric =>
-            val l = n.asInstanceOf[Number].longValue()
-            if (colIsExact || (-TwoP53 <= l && l <= TwoP53)) longForm(l)
-            else None
-          case d: java.lang.Double if colIsNumeric => fromDouble(d.doubleValue())
-          case f: java.lang.Float if colIsNumeric => fromDouble(f.doubleValue())
-          case bd: java.math.BigDecimal if colIsNumeric =>
-            val whole = bd.stripTrailingZeros.scale <= 0
-            val inLong = whole &&
-              bd.compareTo(java.math.BigDecimal.valueOf(Long.MinValue)) >= 0 &&
-              bd.compareTo(java.math.BigDecimal.valueOf(Long.MaxValue)) <= 0
-            if (inLong) {
-              val l = bd.setScale(0).longValueExact()
-              if (colIsExact || (-TwoP53 <= l && l <= TwoP53)) longForm(l)
-              else None
-            } else None
-          case bd: BigDecimal if colIsNumeric => probeForm(bd.underlying())
-          case s: String if colIsNumeric =>
-            // string-vs-numeric coerces both sides to DOUBLE
-            scala.util.Try(s.trim.toDouble).toOption.flatMap(fromDouble)
-          case _ => None
-        }
-        val castOkFor: DataType => Boolean = target => colType(c).exists(ct =>
-          org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(ct, target))
-        org.apache.spark.sql.graftbridge.ColumnBridge
-          .impliedEqualitySet(predicate, c, castOkFor) match {
-          case Some(vals) if vals.nonEmpty =>
-            val probes = vals.map(probeForm)
-            if (probes.exists(_.isEmpty)) cand // one bad member: no narrowing
-            else cand.filter { e =>
-              e.bloomFor(c) match {
-                case Some(payload) =>
-                  val bf = bloomFilterOf(fs, rootP, payload)
-                  probes.flatten.exists(bf.mightContainBinary)
-                case None => true
-              }
-            }
-          case _ => cand
-        }
-      }
+    // discovery: the index's skip rule, judged on the resolved bare
+    // predicate, narrows the files to scan. A NULL verdict keeps the row:
+    // the filter drops it from discovery, coalesce keeps it below.
+    val cand = ManifestFileIndex.keptByFilter(
+      scan(spark, rootP, cur.version, mine).filter(predicate))
     recordDiscoveryStats(rootP, table,
-      DiscoveryStats(scanSet.size.toLong, mine.size.toLong))
-    if (scanSet.isEmpty) return (0L, 0L)
-    val affectedFiles = scan(spark, rootP, scanSet).filter(delCond)
+      DiscoveryStats(cand.size.toLong, mine.size.toLong))
+    if (cand.isEmpty) return (0L, 0L)
+    val affectedFiles = scan(spark, rootP, cur.version, cand).filter(predicate)
       .select(input_file_name().as("f")).distinct()
       .collect().map(_.getString(0)).toSet
     if (affectedFiles.isEmpty) return (0L, 0L)
     val (aff, keep) = partitionAffected(rootP, mine, affectedFiles)
-    val keepRows = scan(spark, rootP, aff).filter(!delCond)
+    val keepRows = scan(spark, rootP, cur.version, aff)
+      .filter(!coalesce(predicate, lit(false)))
     // a fully-emptied table still commits one footer-only file so the
     // next read keeps its schema (the deleteWhere readability contract)
     val newEntries = writeDataNonEmptyOr(spark, rootP, fs, table, keepRows,
@@ -2083,9 +1702,10 @@ object ManifestTable {
     (aff.size.toLong, nDel)
   }
 
-  /** Last merge-discovery pruning outcome per (root, table): how many of
-    * the table's files the discovery scan actually read vs held — the
-    * observability hook for [[affectedByKeys]]'s candidate narrowing.
+  /** Last discovery narrowing outcome per (root, table): how many of
+    * the table's files discovery kept for its scan vs held — the
+    * observability hook for [[affectedByKeys]]'s and [[deleteWhere]]'s
+    * candidate narrowing.
     * Keyed by table too: merges on DIFFERENT tables under one root (the
     * CorpusIngest corpus+index shape) must not overwrite each other's
     * counts. The table-less accessor returns the root's most recent
@@ -2203,9 +1823,9 @@ object ManifestTable {
   }
 
   /** One key column's narrowing pass over `cand` (see
-    * [[discoveryCandidates]]): range containment via
-    * [[FileEntry.statsFor]], then bloom probes via
-    * [[FileEntry.bloomFor]] under the driver budget. Probe keys render
+    * [[discoveryCandidates]]): range containment, then bloom probes under
+    * the driver budget — per file, the [[FileSkipping]] tests every
+    * filtered read applies. Probe keys render
     * through the same canonical forms the writers inserted
     * ([[canonLongExpr]]/[[bloomLongFormExpr]] — epoch-day for DATE keys,
     * whose plain long cast is an analysis error). */
@@ -2225,20 +1845,18 @@ object ManifestTable {
       .limit(MaxCollectedProbeKeys.toInt + 1).collect()
     val collected: Option[Array[Row]] =
       if (taken.length <= MaxCollectedProbeKeys) Some(taken) else None
+    val bloomOf = (p: String) => bloomFilterOf(fs, rootP, p)
     val ranged =
       if (!statsCover) cand
       else collected match {
         case Some(rows) =>
-          // exact per-file containment against the sorted key set
-          val longs = rows.filter(!_.isNullAt(0)).map(_.getLong(0)).sorted
-          val anyUncastable = rows.exists(_.isNullAt(0))
-          cand.filter(e => e.statsFor(kc) match {
-            case Some((mn, mx)) if !anyUncastable =>
-              val i = java.util.Arrays.binarySearch(longs, mn)
-              val from = if (i >= 0) i else -i - 1
-              from < longs.length && longs(from) <= mx
-            case _ => true // footer-only / uncastable keys: never skip
-          })
+          // exact per-file containment against the sorted key set; an
+          // uncastable key (invisible to the stats) keeps every file
+          if (rows.exists(_.isNullAt(0))) cand
+          else {
+            val skip = FileSkipping.AnyPoint(kc, rows.map(_.getLong(0)).sorted)
+            cand.filter(skip.keeps(_, bloomOf))
+          }
         case None =>
           // overflow path: same uncastable discipline as the collected
           // branch — a probe key the long cast loses (non-numeric
@@ -2251,10 +1869,8 @@ object ManifestTable {
               lit(1L)).otherwise(lit(0L)))).head()
           val anyUncastable = !r.isNullAt(2) && r.getLong(2) > 0L
           if (r.isNullAt(0) || r.isNullAt(1) || anyUncastable) cand
-          else cand.filter(e => e.statsFor(kc) match {
-            case Some((mn, mx)) => mx >= r.getLong(0) && mn <= r.getLong(1)
-            case None => true
-          })
+          else cand.filter(FileSkipping.InRange(kc, r.getLong(0), r.getLong(1))
+            .keeps(_, bloomOf))
       }
     val bloomable = ranged.count(_.bloomFor(kc).isDefined)
     collected match {
@@ -2276,14 +1892,7 @@ object ManifestTable {
               .getBytes(StandardCharsets.UTF_8))
           (s.toSeq ++ l.filterNot(lb => s.exists(java.util.Arrays.equals(_, lb))))
         }
-        ranged.filter { e =>
-          e.bloomFor(kc) match {
-            case Some(payload) =>
-              val bf = bloomFilterOf(fs, rootP, payload)
-              probes.exists(bf.mightContainBinary)
-            case None => true
-          }
-        }
+        ranged.filter(FileSkipping.AnyKey(kc, probes.toSeq).keeps(_, bloomOf))
       case _ => ranged
     }
   }
@@ -2300,7 +1909,7 @@ object ManifestTable {
     * never be rewritten. The fail-loud guard rejects an empty file
     * name if a plan change ever reintroduces that. */
   private def affectedByKeys(spark: SparkSession, rootP: HPath,
-                             probeKeys: DataFrame,
+                             version: Long, probeKeys: DataFrame,
                              key: Seq[String], mine: Seq[FileEntry],
                              tableSchema: org.apache.spark.sql.types.StructType): (Seq[FileEntry], Seq[FileEntry]) = {
     val cand = discoveryCandidates(spark, rootP, probeKeys, key, mine,
@@ -2308,7 +1917,8 @@ object ManifestTable {
     recordDiscoveryStats(rootP, mine.headOption.fold("")(_.table),
       DiscoveryStats(cand.size.toLong, mine.size.toLong))
     if (cand.isEmpty) return (Nil, mine)
-    val affectedFiles = scan(spark, rootP, cand).withColumn("__f", input_file_name())
+    val affectedFiles = scan(spark, rootP, version, cand)
+      .withColumn("__f", input_file_name())
       .join(probeKeys, key, "left_semi")
       .select(col("__f")).distinct()
       .collect().map(_.getString(0)).toSet
@@ -2366,7 +1976,7 @@ object ManifestTable {
     * delete-shaped rewrite (its columns may not match the table's —
     * the transactionalMerge empty-upserts contract). */
   private def rewriteAffected(spark: SparkSession, rootP: HPath,
-                              fs: FileSystem, table: String,
+                              fs: FileSystem, version: Long, table: String,
                               aff: Seq[FileEntry], touchedKeys: DataFrame,
                               key: Seq[String], inserts: Option[DataFrame],
                               keepSchemaIfEmpty: Boolean,
@@ -2376,7 +1986,7 @@ object ManifestTable {
                               extraStatsCols: Seq[String] = Nil): Seq[FileEntry] = {
     val keepRows =
       if (aff.isEmpty) touchedKeys.where(lit(false)) // only with inserts
-      else scan(spark, rootP, aff).join(touchedKeys, key, "left_anti")
+      else scan(spark, rootP, version, aff).join(touchedKeys, key, "left_anti")
     val newRows = inserts match {
       case None => keepRows
       case Some(ins) =>
@@ -2424,11 +2034,11 @@ object ManifestTable {
     // cut: the key set feeds discovery, the row count, and the rewrite
     val ks = graft.operators.Lineage.cut(
       keys.select(key.map(col): _*).distinct())
-    val (aff, keep) = affectedByKeys(spark, rootP, ks, key, mine,
-      schemaOf(spark, rootP, mine.head))
+    val (aff, keep) = affectedByKeys(spark, rootP, cur.version, ks, key,
+      mine, schemaOf(spark, rootP, mine.head))
     if (aff.isEmpty) return (0L, 0L)
-    val newEntries = rewriteAffected(spark, rootP, fs, table, aff, ks,
-      key, inserts = None, keepSchemaIfEmpty = keep.isEmpty, statsCol,
+    val newEntries = rewriteAffected(spark, rootP, fs, cur.version, table,
+      aff, ks, key, inserts = None, keepSchemaIfEmpty = keep.isEmpty, statsCol,
       bloomCol, extraBloomCols, extraStatsCols)
     // deleted-row count by manifest arithmetic — affected footer rows
     // minus survivor rows the rewrite just recorded — instead of a
@@ -2494,10 +2104,10 @@ object ManifestTable {
     val touched = graft.operators.Lineage.cut(
       nr.select(key.map(col): _*)
         .unionByName(dropKeys.select(key.map(col): _*)).distinct())
-    val (aff, keep) = affectedByKeys(spark, rootP, touched, key, mine,
-      schema)
-    val newEntries = rewriteAffected(spark, rootP, fs, table, aff, touched,
-      key, inserts = Some(nr), keepSchemaIfEmpty = keep.isEmpty, statsCol,
+    val (aff, keep) = affectedByKeys(spark, rootP, cur.version, touched,
+      key, mine, schema)
+    val newEntries = rewriteAffected(spark, rootP, fs, cur.version, table,
+      aff, touched, key, inserts = Some(nr), keepSchemaIfEmpty = keep.isEmpty, statsCol,
       bloomCol, extraBloomCols, extraStatsCols)
     // dropped-row count by manifest arithmetic: the rewrite wrote
     // (affected survivors + nr), so dropped = affected footer rows +
@@ -2572,8 +2182,8 @@ object ManifestTable {
     require(nSrcKeys == nSrc,
       "mergeInto: duplicate keys in source make the replace ambiguous")
     val srcKeys = src.select(key.map(col): _*)
-    val (aff, keep) = affectedByKeys(spark, rootP, srcKeys, key, mine,
-      schema)
+    val (aff, keep) = affectedByKeys(spark, rootP, cur.version, srcKeys,
+      key, mine, schema)
     val (nUpdated, nMatchedKeys) =
       if (aff.isEmpty) (0L, 0L)
       else {
@@ -2581,14 +2191,14 @@ object ManifestTable {
         // counts (formerly two semi-join count jobs): matched table
         // rows = Σ per-key counts, matched source keys = the group
         // count (source keys are unique by the guard above)
-        val r = scan(spark, rootP, aff).select(key.map(col): _*)
+        val r = scan(spark, rootP, cur.version, aff).select(key.map(col): _*)
           .join(srcKeys, key, "left_semi")
           .groupBy(key.map(col): _*).agg(count(lit(1)).as("__c"))
           .agg(coalesce(sum(col("__c")), lit(0L)), count(lit(1))).head()
         (r.getLong(0), r.getLong(1))
       }
-    val newEntries = rewriteAffected(spark, rootP, fs, table, aff, srcKeys,
-      key, Some(src), keepSchemaIfEmpty = keep.isEmpty, statsCol, bloomCol,
+    val newEntries = rewriteAffected(spark, rootP, fs, cur.version, table,
+      aff, srcKeys, key, Some(src), keepSchemaIfEmpty = keep.isEmpty, statsCol, bloomCol,
       extraStatsCols = extraStatsCols)
     commitOrRebase(spark, fs, rootP, root, Some(cur),
       carriedOf = _.filterNot(_.table == table),
@@ -2616,7 +2226,7 @@ object ManifestTable {
     require(mine.nonEmpty, s"no table '$table' under $root")
     val bytes = tableBytes(mine)
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val df = toDf(spark, rootP, cur.entries, table)
+    val df = toDf(spark, rootP, cur.version, cur.entries, table)
     val re = statsCol match {
       // cluster on the stats column so compacted files keep tight
       // min/max ranges (file skipping survives compaction)
@@ -2624,7 +2234,7 @@ object ManifestTable {
       case None => df.repartition(nFiles)
     }
     // bloom/stats columns so compaction does not STRIP the table's
-    // per-file coverage (merge discovery and readPrunedEq/In consume it)
+    // per-file coverage (merge discovery and filtered reads consume it)
     val newEntries = writeData(spark, rootP, fs, table, re, statsCol,
       bloomCol, extraStatsCols = extraStatsCols,
       extraBloomCols = extraBloomCols)
@@ -2870,11 +2480,11 @@ object ManifestTable {
     // distinct shuffle
     val touched = graft.operators.Lineage.cut(
       up.select(key.map(col): _*).unionByName(del).distinct())
-    val (aff, keep) = affectedByKeys(spark, rootP, touched, key, mine,
-      schema)
+    val (aff, keep) = affectedByKeys(spark, rootP, cur.get.version,
+      touched, key, mine, schema)
     if (aff.isEmpty && nUp == 0L) return true // no-change batch
-    val newEntries = rewriteAffected(spark, rootP, fs, table, aff, touched,
-      key, if (nUp == 0L) None else Some(up),
+    val newEntries = rewriteAffected(spark, rootP, fs, cur.get.version,
+      table, aff, touched, key, if (nUp == 0L) None else Some(up),
       keepSchemaIfEmpty = keep.isEmpty, statsCol, bloomCol,
       extraStatsCols = extraStatsCols)
     commit(aff, newEntries)
@@ -2922,7 +2532,7 @@ object ManifestTable {
       e.table == TxnTable && e.relPath == markerPath &&
         e.min.exists(_ >= batchId)))
     if (applied) return false
-    val newEntries = inParallel(tables.toSeq.sortBy(_._1)) { case (name, df) =>
+    val newEntries = graft.Overlap.map(tables.toSeq.sortBy(_._1)) { case (name, df) =>
       val exists = cur.exists(_.entries.exists(_.table == name))
       // one execution + footer-only-if-new: an empty contribution to a
       // brand-new table establishes its schema; to an existing table it

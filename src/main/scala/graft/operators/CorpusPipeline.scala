@@ -58,16 +58,12 @@ object CorpusPipeline {
     // stages are independent (only the near-dup stage needs the chosen
     // config) — overlap them (guide §2.6): the board runs while the
     // corpus survivors materialize, instead of back to back
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val fCfg = scala.concurrent.Future(Dedup.chooseLshConfig(sample,
-      textCol, idCol, recallFloorP6, shingleN, nearDupThreshold, configs,
-      metricName = "graft.pipeline.lsh.choice"))
-    val pre = Lineage.cut(prepareStages(docs, textCol, idCol, sourceCol,
-      minTokens, maxTopShare, perSourceCap, maxRepeatMass,
-      nearDup = None, throughDedupOnly = true))
-    val (bands, rowsPerBand) = scala.concurrent.Await.result(fCfg,
-      scala.concurrent.duration.Duration.Inf)
+    val ((bands, rowsPerBand), pre) = graft.Overlap.pair(
+      Dedup.chooseLshConfig(sample, textCol, idCol, recallFloorP6, shingleN,
+        nearDupThreshold, configs, metricName = "graft.pipeline.lsh.choice"),
+      Lineage.cut(prepareStages(docs, textCol, idCol, sourceCol,
+        minTokens, maxTopShare, perSourceCap, maxRepeatMass,
+        nearDup = None, throughDedupOnly = true)))
     val deduped = Dedup.dedupCorpus(pre, textCol, idCol, bands,
       rowsPerBand, shingleN, nearDupThreshold)
     capAndScrub(deduped, textCol, idCol, sourceCol, perSourceCap)

@@ -734,8 +734,9 @@ object Dedup {
     // write-time bloom on band (batch-proportional cost): an appended
     // file's [min,max] can span bands the batch never produced rows for
     // (the skew cap drops whole (band,bh) buckets) — band-probed
-    // maintenance reads (readPrunedIn) skip those. The base write stays
-    // band-bloom-free: range-clustered full-corpus files are band-dense.
+    // maintenance reads (a band `isin` filter) skip those. The base
+    // write stays band-bloom-free: range-clustered full-corpus files are
+    // band-dense.
     // The secondary id bloom keeps the forget path's coverage across
     // appends ([[minhashIndexForgetVersioned]]).
     graft.etl.ManifestTable.appendNew(spark, root, MhIndexTable, rows,
@@ -911,17 +912,10 @@ object Dedup {
     // the minhash table and the exact-Jaccard grader are INDEPENDENT
     // subtrees that both lineage-cut eagerly — overlap their
     // materializations (guide §2.6) instead of paying them back to back
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val fMh = scala.concurrent.Future(Lineage.cut(
-      h.groupBy(col("id")).agg(minCols.head, minCols.tail: _*)))
-    val fExact = scala.concurrent.Future(Lineage.cut(
-      SetSimJoin.prefixFilteredPairs(df, textCol,
+    val (mh, exact) = graft.Overlap.pair(
+      Lineage.cut(h.groupBy(col("id")).agg(minCols.head, minCols.tail: _*)),
+      Lineage.cut(SetSimJoin.prefixFilteredPairs(df, textCol,
         idCol, shingleN, threshold).select(col("id_a"), col("id_b"))))
-    val mh = scala.concurrent.Await.result(fMh,
-      scala.concurrent.duration.Duration.Inf)
-    val exact = scala.concurrent.Await.result(fExact,
-      scala.concurrent.duration.Duration.Inf)
     val Shift = 2147483648L // 2^31: each minhash is < P < 2^31
     val boards = configs.map { case (bands, r) =>
       // band keys straight off the wide row — the former per-config

@@ -362,19 +362,14 @@ object GraphAnn {
     // rounds lineage-cut as they are constructed) — overlap them
     // (guide §2.6) so the sparse upper build back-fills the full
     // layer's stage tails
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val fFull = scala.concurrent.Future(
+    val (full, upperEdges) = graft.Overlap.pair(
       knnGraph(corpus, idCol, vecCol, dim, planes, tables, degree, refine,
-        cutFinal = false))
-    val fUpper = scala.concurrent.Future(
+        cutFinal = false),
       knnGraph(upper, idCol, vecCol, dim, planes, tables, upperDegree,
         upperRefine, cutFinal = false))
-    def awaited[A](f: scala.concurrent.Future[A]): A =
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
     graft.etl.ManifestTable.publish(spark, root, Map(
-      EdgesT -> awaited(fFull),
-      UpperT -> awaited(fUpper),
+      EdgesT -> full,
+      UpperT -> upperEdges,
       TombT -> emptyTombTable(spark),
       ParamsT -> paramsDf(spark, BuildParams(dim, planes, tables, degree,
         refine, upperMod, upperDegree, upperRefine, corpus.count(), 0L))),
@@ -471,8 +466,8 @@ object GraphAnn {
     def repair(tableName: String, layer: DataFrame, deg: Int): Long = {
       // who points at a dead node: dst-bloom-pruned scan, then the
       // LIVE sources among them (dead sources just drop)
-      val affSrc = graft.etl.ManifestTable.readPrunedIn(spark, root,
-          tableName, "dst", tombIds)
+      val affSrc = graft.etl.ManifestTable.read(spark, root, tableName)
+        .filter(col("dst").isin(tombIds: _*))
         .select(col("src")).distinct()
         .filter(!col("src").isin(tombIds: _*))
       val queries = layer.join(broadcast(affSrc),

@@ -329,8 +329,8 @@ object Similarity {
     * ([[graft.etl.ManifestTable.vacuum]]). Rows are range-clustered by
     * list before the write so each file covers a tight list range, and
     * a probed search opens only files whose [min,max] intersects its
-    * probed set ([[graft.etl.ManifestTable.readPrunedIn]]) — the classic
-    * IVF pruning, expressed as file skipping. `metaCols` ride along in
+    * probed set (a `list_id` `isin` filter the manifest index skips
+    * files by) — the classic IVF pruning, expressed as file skipping. `metaCols` ride along in
     * the index files so a filtered search pushes its predicate into the
     * scan instead of joining metadata back in by id. Rewriting a root
     * clears its soft-deleted ids in the same commit. Returns the
@@ -390,12 +390,12 @@ object Similarity {
     // write-time bloom on list_id: an appended file's [min,max] spans
     // every list between the batch's extremes, but a small batch
     // POPULATES only some of them — the bloom lets a probed search
-    // ([[ivfTopKVersioned]] via readPrunedIn) skip appended files whose
+    // ([[ivfTopKVersioned]]'s list_id filter) skip appended files whose
     // range covers a probed list that the batch never touched. The base
     // write carries no LIST_ID bloom deliberately: its range-clustered
     // files are dense (every list inside a file's range is populated),
     // so keptBloom == keptRange by construction — measured, not assumed
-    // (Round16OpsSpec pins both directions with prunedInStats). The
+    // (Round16OpsSpec pins both directions with filesKept). The
     // secondary vec_id bloom serves only the forget path.
     graft.etl.ManifestTable.appendNew(delta.sparkSession, root, IvfTable,
       assigned, key = Seq("vec_id"), statsCol = Some("list_id"),
@@ -495,8 +495,10 @@ object Similarity {
     val q = probes(queries, idCol, vecCol, cents, nprobe)
     val probedLists = q.select(col("list_id")).distinct()
       .collect().map(_.getInt(0).toLong).toSeq
-    val probed = graft.etl.ManifestTable.readPrunedIn(spark, root,
-      IvfTable, "list_id", probedLists, version)
+    val probed = version
+      .fold(graft.etl.ManifestTable.read(spark, root, IvfTable))(
+        graft.etl.ManifestTable.readAt(spark, root, IvfTable, _))
+      .filter(col("list_id").isin(probedLists: _*))
     val live = tombstonesAt(spark, root, version).fold(probed)(t =>
       probed.join(broadcast(t), Seq("vec_id"), "left_anti"))
     rankProbedLists(pred.fold(live)(live.filter), q, k)

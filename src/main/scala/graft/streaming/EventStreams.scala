@@ -224,13 +224,17 @@ object EventStreams {
       case (v, ManifestTable.Snapshot(es)) => v -> es
     }.toMap
     val versionsInBatch = byVersion.map(_._1).toSet
-    def pathsOf(es: Seq[ManifestTable.FileEntry]): Set[String] =
-      es.filter(_.table == table).map(_.relPath).toSet
-    def headSnapshot(v: Long): Option[Set[String]] =
+    def mineOf(es: Seq[ManifestTable.FileEntry]): Seq[ManifestTable.FileEntry] =
+      es.filter(_.table == table)
+    // each delivery reads its entries through the manifest index: paths,
+    // sizes and schema come from the commit, so no listing or inference
+    def deliver(v: Long, es: Seq[ManifestTable.FileEntry]): Unit =
+      f(ManifestTable.frameOf(s, root, v, table, es.sortBy(_.relPath)), v)
+    def headSnapshot(v: Long): Option[Seq[ManifestTable.FileEntry]] =
       // no predecessor anywhere: fine iff v is the stream's head
       // (oldest retained) — that delivery is the initial snapshot
       if (ManifestTable.minRetainedVersion(s, root).contains(v))
-        ManifestTable.entriesAt(s, root, v).map(pathsOf)
+        ManifestTable.entriesAt(s, root, v).map(mineOf)
       else None
     byVersion.foreach {
       case (v, d: ManifestTable.DeltaBody) =>
@@ -238,30 +242,27 @@ object EventStreams {
         // needed, except at the stream's head, where the delivery is
         // the full resolved snapshot (the compacted-log entry point)
         val removed = d.removes.filter(_._1 == table)
-        val added = d.upserts.filter(_.table == table).map(_.relPath)
+        val added = mineOf(d.upserts)
         headSnapshot(v) match {
           case Some(all) if !versionsInBatch.contains(v - 1L) &&
               ManifestTable.entriesAt(s, root, v - 1L).isEmpty =>
-            if (all.nonEmpty)
-              f(s.read.parquet(all.toSeq.sorted.map(p => s"$root/$p"): _*), v)
+            if (all.nonEmpty) deliver(v, all)
           case _ =>
-            if (removed.isEmpty && added.nonEmpty)
-              f(s.read.parquet(added.sorted.map(p => s"$root/$p"): _*), v)
+            if (removed.isEmpty && added.nonEmpty) deliver(v, added)
         }
       case (v, ManifestTable.Snapshot(entries)) =>
-        val mine = pathsOf(entries)
+        val mine = mineOf(entries)
         val prev: Set[String] =
           if (v == 1L) Set.empty
-          else inBatch.get(v - 1L).map(pathsOf)
-            .orElse(ManifestTable.entriesAt(s, root, v - 1L).map(pathsOf))
+          else inBatch.get(v - 1L).orElse(ManifestTable.entriesAt(s, root, v - 1L))
+            .map(es => mineOf(es).map(_.relPath).toSet)
             .orElse(headSnapshot(v).map(_ => Set.empty[String]))
             .getOrElse(throw new IllegalStateException(
               s"manifest stream: version ${v - 1} of $root no longer " +
                 "retained — compactLog/vacuum outran this reader"))
-        val added = mine -- prev
-        val removed = prev -- mine
-        if (removed.isEmpty && added.nonEmpty)
-          f(s.read.parquet(added.toSeq.sorted.map(p => s"$root/$p"): _*), v)
+        val added = mine.filterNot(e => prev.contains(e.relPath))
+        val removed = prev -- mine.map(_.relPath)
+        if (removed.isEmpty && added.nonEmpty) deliver(v, added)
     }
   }
 

@@ -3,7 +3,6 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.DataType
 
 /** Column <-> Expression bridge for custom Catalyst expressions.
   *
@@ -15,212 +14,6 @@ import org.apache.spark.sql.types.DataType
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Necessary bounds on column `name` implied by `pred`'s CONJUNCTS,
-    * as EXACT BigDecimal values (None = unbounded on that side;
-    * (None, None) = nothing extractable). Exactness matters: returning
-    * doubles here rounded large integral literals (a snowflake-style id
-    * ~1.5e18 moves by up to ~512 at double precision), and a rounded-UP
-    * lower bound widened only ±1 by the caller could exclude files whose
-    * long-cast stats contain genuinely matching rows — rows silently
-    * surviving a purge. Float/Double literals convert via
-    * `new java.math.BigDecimal(double)` — the exact binary value the
-    * predicate actually compares, not the shortest round-trip decimal
-    * (which can sit up to half an ulp away, > 1 for large doubles).
-    *
-    * Lives here because a Column's UNRESOLVED ColumnNode tree — the only
-    * structured form a predicate has before any plan exists — is
-    * `private[sql]` (columnNodes.scala); the Expression conversion wraps
-    * the whole tree in one opaque ColumnNodeExpression, hiding its
-    * structure. Sound for file skipping: pred ⇒ each conjunct, so every
-    * matching row satisfies each extracted bound. Handled: >=, >, <=, <,
-    * =, <=>, IN over a reference to `name` and literals `toCanon`
-    * accepts, either operand order, combined through AND; anything else
-    * (OR, NOT, UDFs, rejected literals, NaN) contributes nothing —
-    * never unsound, just no narrowing.
-    *
-    * `toCanon` maps a literal value to the INTERVAL of canonical
-    * numerics a matching row's value can lie in — an interval, not a
-    * point, because a comparison that WIDENS to floating point matches
-    * every raw value in the literal's double-preimage band (at 1.5e18
-    * the gap between adjacent doubles is 256: `k === lit(1.5e18d)` on a
-    * LONG column matches 256 distinct longs, and a point bound widened
-    * only ±1 would range-skip the files holding most of them). Callers
-    * return a point interval when the comparison is provably exact
-    * (exact column, exact literal) and a ±ulp band when either side is
-    * floating; a literal mapped to None contributes no bound, and a
-    * None member inside IN voids the whole set (a partial set is not a
-    * necessary bound). `castOk` decides whether a `CAST(name AS t)`
-    * reference still counts as `name` — callers pass a provable-widening
-    * test (Cast.canUpCast from the column's actual type); seeing through
-    * a NARROWING cast is unsound because a wrapped/overflowed raw value
-    * (e.g. 4294967301 wrapping to 5 under non-ANSI int cast) satisfies
-    * the predicate while sitting far outside the implied range.
-    * The caller (ManifestTable.impliedRange) owns long-cast widening. */
-  def impliedNumericBounds(pred: Column, name: String,
-      toCanon: Any => Option[(BigDecimal, BigDecimal)],
-      castOk: DataType => Boolean = _ => false)
-      : (Option[(BigDecimal, Boolean)], Option[(BigDecimal, Boolean)]) = {
-    import org.apache.spark.sql.internal.{ColumnNode,
-      Literal => NLiteral, UnresolvedFunction => NFn}
-    type B = Option[(BigDecimal, Boolean)] // (bound, isStrict)
-    def isCol(n: ColumnNode): Boolean = refNameOf(n, castOk).contains(name)
-    def litBand(n: ColumnNode): Option[(BigDecimal, BigDecimal)] = n match {
-      case l: NLiteral => Option(l.value).flatMap(toCanon)
-      case _ => None
-    }
-    // a ">= lit" conjunct bounds matching rows below by the band's LOW
-    // edge (the smallest raw value the widened comparison can match);
-    // "<= lit" by the band's HIGH edge; equality by both. Strict
-    // operators carry a flag so integral-typed callers can tighten by
-    // one unit (a float/double/timestamp caller must NOT — fractional
-    // raw values sit strictly between the bound and its neighbors).
-    def cmp(op: String, a: ColumnNode, b: ColumnNode): (B, B) = op match {
-      case ">=" | ">" =>
-        val s = op == ">"
-        if (isCol(a)) (litBand(b).map(x => (x._1, s)), None)
-        else if (isCol(b)) (None, litBand(a).map(x => (x._2, s)))
-        else (None, None)
-      case "<=" | "<" =>
-        val s = op == "<"
-        if (isCol(a)) (None, litBand(b).map(x => (x._2, s)))
-        else if (isCol(b)) (litBand(a).map(x => (x._1, s)), None)
-        else (None, None)
-      case "=" | "==" | "<=>" =>
-        if (isCol(a)) (litBand(b).map(x => (x._1, false)),
-          litBand(b).map(x => (x._2, false)))
-        else if (isCol(b)) (litBand(a).map(x => (x._1, false)),
-          litBand(a).map(x => (x._2, false)))
-        else (None, None)
-      case _ => (None, None)
-    }
-    // conjuncts intersect: greater lo wins, smaller hi wins; on a value
-    // tie the STRICT bound is the tighter of the two
-    def pick(x: B, y: B, preferGreater: Boolean): B = (x, y) match {
-      case (Some((xv, xs)), Some((yv, ys))) =>
-        if (xv == yv) Some((xv, xs || ys))
-        else if ((xv > yv) == preferGreater) x else y
-      case _ => x.orElse(y)
-    }
-    def walk(n: ColumnNode): (B, B) = n match {
-      case f: NFn => (f.functionName, f.arguments) match {
-        case ("and", scala.collection.Seq(l, r)) =>
-          val (ll, lh) = walk(l); val (rl, rh) = walk(r)
-          (pick(ll, rl, preferGreater = true),
-           pick(lh, rh, preferGreater = false))
-        case ("in", args) if args.length >= 2 && isCol(args.head) =>
-          val vs = args.tail.map(litBand(_))
-          if (vs.forall(_.isDefined)) {
-            val ds = vs.flatten
-            (Some((ds.map(_._1).min, false)), Some((ds.map(_._2).max, false)))
-          } else (None, None)
-        case (op, scala.collection.Seq(a, b)) => cmp(op, a, b)
-        case _ => (None, None)
-      }
-      case _ => (None, None)
-    }
-    walk(c0node(pred))
-  }
-
-  /** The canonical-numeric mapping for NUMERIC columns: every exact
-    * integral/decimal literal maps to its exact value; Float/Double map
-    * to their exact binary expansion (what the comparison sees);
-    * NaN/Infinity and non-numerics map to None (no narrowing). */
-  val canonNumeric: Any => Option[BigDecimal] = {
-    case i: java.lang.Integer => Some(BigDecimal(i.intValue()))
-    case v: java.lang.Long => Some(BigDecimal(v.longValue()))
-    case s: java.lang.Short => Some(BigDecimal(s.intValue()))
-    case b: java.lang.Byte => Some(BigDecimal(b.intValue()))
-    case f: java.lang.Float if !f.isNaN && !f.isInfinite =>
-      Some(BigDecimal(new java.math.BigDecimal(f.doubleValue())))
-    case d: java.lang.Double if !d.isNaN && !d.isInfinite =>
-      Some(BigDecimal(new java.math.BigDecimal(d.doubleValue())))
-    case d: java.math.BigDecimal => Some(BigDecimal(d))
-    case d: BigDecimal => Some(d)
-    case i: java.math.BigInteger => Some(BigDecimal(i))
-    case _ => None
-  }
-
-  /** Canonical mapping for DATE columns: epoch-day. */
-  val canonDate: Any => Option[BigDecimal] = {
-    case d: java.sql.Date => Some(BigDecimal(d.toLocalDate.toEpochDay))
-    case d: java.time.LocalDate => Some(BigDecimal(d.toEpochDay))
-    case _ => None
-  }
-
-  /** Canonical mapping for TIMESTAMP columns: epoch-SECOND (the unit
-    * `cast(ts AS long)` stats are recorded in), carried at micro
-    * precision so sub-second literals bound correctly after the
-    * caller's floor/ceil widening. */
-  val canonTimestamp: Any => Option[BigDecimal] = {
-    case t: java.sql.Timestamp =>
-      val micros = math.floorDiv(t.getTime, 1000L) * 1000000L +
-        (t.getNanos / 1000L)
-      Some(BigDecimal(micros) / BigDecimal(1000000L))
-    case i: java.time.Instant =>
-      Some((BigDecimal(i.getEpochSecond) * BigDecimal(1000000L) +
-        BigDecimal(i.getNano / 1000L)) / BigDecimal(1000000L))
-    case _ => None
-  }
-
-  /** The bare/CAST reference name a node denotes, or None for anything
-    * else. A Cast wrapper is transparent ONLY when `castOk` accepts its
-    * target type (callers pass a provable-widening test against the
-    * column's real type); an unprovable cast is opaque — treating it as
-    * the column would let a non-ANSI overflow-wrapped raw value match
-    * the predicate from far outside the implied range. */
-  private def refNameOf(n: org.apache.spark.sql.internal.ColumnNode,
-      castOk: DataType => Boolean): Option[String] = {
-    import org.apache.spark.sql.internal.{Cast => NCast,
-      UnresolvedAttribute => NAttr}
-    n match {
-      case a: NAttr => Some(a.nameParts.mkString("."))
-      case cst: NCast if castOk(cst.dataType) => refNameOf(cst.child, castOk)
-      case _ => None
-    }
-  }
-
-  /** Necessary EQUALITY probe set on column `name` implied by `pred`'s
-    * conjuncts: the literal values of a `name = lit` / `name <=> lit` /
-    * `name IN (lits)` conjunct (either operand order). Sound the same
-    * way [[impliedNumericBounds]] is — pred ⇒ the conjunct, so every
-    * matching row's value is IN the returned set; when several
-    * conjuncts each bound the column, the SMALLEST set is returned
-    * (all are necessary). None when no conjunct pins the column, or a
-    * candidate set contains a non-literal member. Cast-wrapped
-    * references count only under `castOk` (see [[impliedNumericBounds]]). */
-  def impliedEqualitySet(pred: Column, name: String,
-      castOk: DataType => Boolean = _ => false): Option[Seq[Any]] = {
-    import org.apache.spark.sql.internal.{ColumnNode,
-      Literal => NLiteral, UnresolvedFunction => NFn}
-    def isCol(n: ColumnNode): Boolean = refNameOf(n, castOk).contains(name)
-    def litOf(n: ColumnNode): Option[Any] = n match {
-      case l: NLiteral => Option(l.value) // a NULL literal pins nothing
-      case _ => None
-    }
-    def walk(n: ColumnNode): Option[Seq[Any]] = n match {
-      case f: NFn => (f.functionName, f.arguments) match {
-        case ("and", scala.collection.Seq(l, r)) =>
-          (walk(l), walk(r)) match {
-            case (Some(a), Some(b)) => Some(if (a.length <= b.length) a else b)
-            case (a, b) => a.orElse(b)
-          }
-        case ("=" | "==" | "<=>", scala.collection.Seq(a, b)) =>
-          if (isCol(a)) litOf(b).map(Seq(_))
-          else if (isCol(b)) litOf(a).map(Seq(_))
-          else None
-        case ("in", args) if args.length >= 2 && isCol(args.head) =>
-          val vs = args.tail.map(litOf(_))
-          if (vs.forall(_.isDefined)) Some(vs.flatten.toSeq) else None
-        case _ => None
-      }
-      case _ => None
-    }
-    walk(c0node(pred))
-  }
-
-  private def c0node(c: Column): org.apache.spark.sql.internal.ColumnNode =
-    c.node
 
   /** Dataset from a (resolved) logical plan — `Dataset.ofRows` is
     * `private[sql]` in Spark 4; custom whole-operator nodes

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.etl.DataLayout
+import graft.etl.{DataLayout, ManifestFileIndex, ManifestTable}
 import graft.expressions.ExprKernels
+import graft.operators.ZOrder
 
 /** Z-order expression bit math + clustered-write file skipping. */
 class DataLayoutSpec extends SparkSpec {
@@ -48,55 +49,41 @@ class DataLayoutSpec extends SparkSpec {
     assert(sqlGot == got)
   }
 
+  /** `df` published z-order-clustered by (x, y) into `nFiles` files with
+    * stats on both columns. */
+  private def clustered(df: org.apache.spark.sql.DataFrame, nFiles: Int,
+                        dir: String): String = {
+    val root = tmpDir(dir) + "/t"
+    ManifestTable.publish(spark, root,
+      Map("t" -> ZOrder.cluster(df, Seq("x", "y"), nFiles)),
+      statsCols = Map("t" -> "x"), extraStatsCols = Map("t" -> Seq("y")))
+    root
+  }
+
   test("writeClustered + readSkipping: prunes files, results identical") {
     val n = 4096
     val df = spark.range(n).select(
       (col("id") % 64).as("x"),
       expr("id DIV 64").as("y"),
       col("id").as("payload"))
-    val path = tmpDir("graft-zcluster") + "/t"
-    DataLayout.writeClustered(spark, df, "x", "y", path, nFiles = 8)
-
-    val (keep, total) = DataLayout.prunedFiles(spark, path, "x", 10L, 13L)
+    val root = clustered(df, 8, "graft-zcluster")
+    val skipped = ManifestTable.read(spark, root, "t")
+      .filter(col("x").between(10L, 13L))
+    val (keep, total) = ManifestFileIndex.filesKept(skipped)
     assert(total == 8, s"expected 8 files, manifest has $total")
-    assert(keep.nonEmpty && keep.size < 8,
-      s"narrow x-range should touch a strict subset of tiles, kept ${keep.size}")
+    assert(keep > 0 && keep < 8,
+      s"narrow x-range should touch a strict subset of tiles, kept $keep")
 
-    val skipped = DataLayout.readSkipping(spark, path, "x", 10L, 13L)
-      .agg(count(lit(1)), sum(col("payload"))).as[(Long, Long)].head()
+    val got = skipped.agg(count(lit(1)), sum(col("payload"))).as[(Long, Long)].head()
     val full = df.filter(col("x").between(10, 13))
       .agg(count(lit(1)), sum(col("payload"))).as[(Long, Long)].head()
-    assert(skipped == full)
+    assert(got == full)
   }
 
   test("readSkipping with an out-of-range predicate returns empty, not error") {
     val df = spark.range(16).select(col("id").as("x"), col("id").as("y"))
-    val path = tmpDir("graft-zempty") + "/t"
-    DataLayout.writeClustered(spark, df, "x", "y", path, nFiles = 2)
-    assert(DataLayout.readSkipping(spark, path, "x", 1000L, 2000L).isEmpty)
-  }
-
-  test("kept-file cap: prunedFiles refuses, readSkipping degrades to full scan") {
-    // a "wide" manifest stand-in: 8 files all surviving pruning, with the
-    // cap lowered to 4 to simulate a million-file table without writing one
-    val n = 4096
-    val df = spark.range(n).select(
-      (col("id") % 64).as("x"), expr("id DIV 64").as("y"),
-      col("id").as("payload"))
-    val path = tmpDir("graft-zcap") + "/t"
-    DataLayout.writeClustered(spark, df, "x", "y", path, nFiles = 8)
-
-    // the whole x-range keeps all 8 files: over the cap
-    val e = intercept[IllegalArgumentException] {
-      DataLayout.prunedFiles(spark, path, "x", 0L, 63L, maxFiles = 4)
-    }
-    assert(e.getMessage.contains("cap"))
-    // readSkipping must neither fail nor collect — and stay correct
-    val capped = DataLayout.readSkipping(spark, path, "x", 0L, 63L, maxFiles = 4)
-      .agg(count(lit(1)), sum(col("payload"))).as[(Long, Long)].head()
-    assert(capped == ((n.toLong, n.toLong * (n - 1) / 2)))
-    // under the cap, pruning still happens as before
-    val (keep, _) = DataLayout.prunedFiles(spark, path, "x", 10L, 13L, maxFiles = 4)
-    assert(keep.nonEmpty && keep.size <= 4)
+    val root = clustered(df, 2, "graft-zempty")
+    assert(ManifestTable.read(spark, root, "t")
+      .filter(col("x").between(1000L, 2000L)).isEmpty)
   }
 }

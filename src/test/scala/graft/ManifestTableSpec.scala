@@ -165,18 +165,17 @@ class ManifestTableSpec extends SparkSpec {
         spark.range(base, base + 10).toDF("id").withColumn("v", $"id" * 2),
         Seq("id"), statsCol = Some("id"))
     }
-    val (kept, total) = ManifestTable.pruneStats(spark, root, "t", 100L, 109L)
+    def range(lo: Long, hi: Long) = ManifestTable.readPruned(spark, root, "t", "id", lo, hi)
+    val (kept, total) = graft.etl.ManifestFileIndex.filesKept(range(100L, 109L))
     assert(total >= 3L && kept < total, s"skipping must drop files ($kept/$total)")
-    val pruned = ManifestTable.readPruned(spark, root, "t", "id", 100L, 109L)
-      .select("id").as[Long].collect().toSet
+    val pruned = range(100L, 109L).select("id").as[Long].collect().toSet
     assert(pruned == (100L to 109L).toSet)
     // compaction clustered on the stats column keeps skipping effective
     ManifestTable.compact(spark, root, "t", targetFileBytes = 1L,
       statsCol = Some("id"))
-    val (k2, t2) = ManifestTable.pruneStats(spark, root, "t", 0L, 5L)
+    val (k2, t2) = graft.etl.ManifestFileIndex.filesKept(range(0L, 5L))
     assert(k2 < t2, "stats survive compaction")
-    assert(ManifestTable.readPruned(spark, root, "t", "id", 0L, 5L)
-      .count() == 6L)
+    assert(range(0L, 5L).count() == 6L)
   }
 
   test("vacuum collects superseded files but keeps requested history") {
@@ -288,25 +287,27 @@ class ManifestTableSpec extends SparkSpec {
     val target = digested(0, 400).filter($"id" === 123L)
       .select("digest").as[String].head()
 
-    val (kept, total) = ManifestTable.bloomPruneStats(spark, root, "t", "digest", target)
-    assert(total == 4L && kept < total, s"kept $kept of $total")
+    def probe(v: String) = graft.etl.ManifestFileIndex.filesKept(
+      ManifestTable.readPrunedEq(spark, root, "t", "digest", v))
     val hit = ManifestTable.readPrunedEq(spark, root, "t", "digest", target)
+    val (kept, total) = graft.etl.ManifestFileIndex.filesKept(hit)
+    assert(total == 4L && kept < total, s"kept $kept of $total")
     assert(hit.inputFiles.length.toLong == kept, "only might-contain files are in the scan")
     assert(hit.select("id").as[Long].collect().toSeq == Seq(123L))
     // a key that is nowhere: every bloom rejects, zero files opened,
     // empty result WITH the table schema
     val miss = ManifestTable.readPrunedEq(spark, root, "t", "digest", "not-a-digest")
     assert(miss.count() == 0L && miss.columns.toSet == Set("id", "digest"))
-    val (kept0, _) = ManifestTable.bloomPruneStats(spark, root, "t", "digest", "not-a-digest")
+    val (kept0, _) = probe("not-a-digest")
     assert(kept0 == 0L)
 
     // appended files carry no bloom yet: counted as kept (never skipped),
     // correctness unaffected; re-indexing re-covers them
     ManifestTable.appendNew(spark, root, "t", digested(400, 500), Seq("id"))
-    val (k2, t2) = ManifestTable.bloomPruneStats(spark, root, "t", "digest", "not-a-digest")
+    val (k2, t2) = probe("not-a-digest")
     assert(t2 > total && k2 == t2 - total, "bloom-less appended files always open")
     ManifestTable.indexBloom(spark, root, "t", "digest", fpp = 0.001)
-    val (k3, _) = ManifestTable.bloomPruneStats(spark, root, "t", "digest", "not-a-digest")
+    val (k3, _) = probe("not-a-digest")
     assert(k3 == 0L)
     assert(ManifestTable.readPrunedEq(spark, root, "t", "digest", target)
       .select("id").as[Long].collect().toSeq == Seq(123L))
@@ -389,8 +390,9 @@ class ManifestTableSpec extends SparkSpec {
       p.contains(".pack.bloom#"))), "entries must point into the pack")
     val target = digested(0, 400).filter($"id" === 123L)
       .select("digest").as[String].head()
-    val (kept, total) = ManifestTable.bloomPruneStats(spark, root, "t",
-      "digest", target)
+    def probe(v: String) = graft.etl.ManifestFileIndex.filesKept(
+      ManifestTable.readPrunedEq(spark, root, "t", "digest", v))
+    val (kept, total) = probe(target)
     assert(total == 6L && kept >= 1L && kept < total, s"kept $kept/$total")
     assert(ManifestTable.readPrunedEq(spark, root, "t", "digest", target)
       .select("id").as[Long].collect().toSeq == Seq(123L))
@@ -411,8 +413,7 @@ class ManifestTableSpec extends SparkSpec {
       s"carried entries keep the old pack referenced: $after")
     val purged = digested(0, 400).filter($"id" === 42L)
       .select("digest").as[String].head()
-    val (k2, t2) = ManifestTable.bloomPruneStats(spark, root, "t",
-      "digest", purged)
+    val (k2, t2) = probe(purged)
     assert(k2 == 0L && t2 >= 1L, "purged key: every file's bloom rejects")
     // surviving keys still probe through pack pointers end to end —
     // one from a REWRITTEN file (123, new pack), one from a carried
@@ -463,7 +464,7 @@ class ManifestTableSpec extends SparkSpec {
       new java.io.File(commit.getParent, s".${commit.getName}.crc").delete()
       ManifestTable.dropStateCacheForTest()
       intercept[IllegalArgumentException] {
-        ManifestTable.bloomPruneStats(spark, root, "t", "digest", "x")
+        ManifestTable.readPrunedEq(spark, root, "t", "digest", "x").collect()
       }.getMessage
     }
     val malformed = probeWith("#12:x")
@@ -534,8 +535,8 @@ class ManifestTableSpec extends SparkSpec {
     ManifestTable.dropStateCacheForTest()
     assert(ManifestTable.read(spark, root, "t").columns.toSeq ==
       Seq("id", "digest"))
-    assert(ManifestTable.bloomPruneStats(spark, root, "t", "digest",
-      "x") == ((0L, 1L)))
+    assert(graft.etl.ManifestFileIndex.filesKept(
+      ManifestTable.readPrunedEq(spark, root, "t", "digest", "x")) == ((0L, 1L)))
     // hand-written commits outside the grammar fail naming the file
     def b64(x: String) = java.util.Base64.getEncoder
       .encodeToString(x.getBytes("UTF-8"))
@@ -588,7 +589,8 @@ class ManifestTableSpec extends SparkSpec {
       "digest", target).collect() } == 1)
     assert(hit.map(_.getLong(0)).toSeq == Seq(123L))
     val absent = Iterator.from(0).map(i => s"absent-$i").find(v =>
-      ManifestTable.bloomPruneStats(spark, root, "t", "digest", v)._1 == 0L).get
+      graft.etl.ManifestFileIndex.filesKept(
+        ManifestTable.readPrunedEq(spark, root, "t", "digest", v))._1 == 0L).get
     var none = Array.empty[Row]
     assert(jobsOf { none = ManifestTable.readPrunedEq(spark, root, "t",
       "digest", absent).collect() } == 0)
@@ -602,6 +604,68 @@ class ManifestTableSpec extends SparkSpec {
     assert(jobsOf(empty.collect()) == 0)
     assert(empty.inputFiles.isEmpty &&
       empty.schema == spark.read.parquet(filesOf(root, "t"): _*).schema)
+  }
+
+  /** Paths the manifest scans of `df`'s executed plan open. */
+  private def openedFiles(df: org.apache.spark.sql.DataFrame): Set[String] = {
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    Plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.selectedPartitions.filePartitionIterator.flatMap(_.files)
+          .map(_.getPath.toUri.getPath).toSeq
+    }.flatten.toSet
+  }
+
+  test("a plain read(...).filter opens only the files the index keeps: " +
+      "min/max for a range, blooms for a point; two reads of one version " +
+      "are one relation to the cache") {
+    val root = tmpDir("mtindex")
+    def digested(lo: Long, hi: Long) = spark.range(lo, hi)
+      .select($"id", md5(concat(lit("k"), $"id")).as("digest"))
+    ManifestTable.publish(spark, root,
+      Map("t" -> digested(0, 400).repartitionByRange(4, $"id")),
+      statsCols = Map("t" -> "id"), bloomCols = Map("t" -> "digest"))
+    val entries = ManifestTable.current(spark, root).get.entries
+      .filter(_.table == "t")
+    def pathOf(e: ManifestTable.FileEntry) =
+      new org.apache.hadoop.fs.Path(root, e.relPath).toUri.getPath
+    // range: exactly the files whose recorded [min, max] meets [150, 159]
+    val inRange = entries.filter(_.statsFor("id").exists { case (mn, mx) =>
+      mx >= 150L && mn <= 159L }).map(pathOf).toSet
+    val range = ManifestTable.read(spark, root, "t").filter($"id".between(150L, 159L))
+    assert(range.select("id").as[Long].collect().toSet == (150L to 159L).toSet)
+    assert(entries.size == 4 && inRange.size == 1, s"fixture: $inRange")
+    assert(graft.etl.ManifestFileIndex.filesKept(range) == ((1L, 4L)))
+    assert(openedFiles(range) == inRange)
+    assert(range.inputFiles.map(f => new java.net.URI(f).getPath).toSet == inRange)
+    // point: exactly the files whose bloom may hold the digest
+    val target = digested(123, 124).select("digest").as[String].head()
+    def bloomOf(e: ManifestTable.FileEntry) = {
+      val Array(rel, slice) = e.bloomFor("digest").get
+        .stripPrefix(ManifestTable.PointerMark).split("#")
+      val Array(o, l) = slice.split(":").map(_.toInt)
+      org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(root, rel)), o, l))
+    }
+    val positive = entries.filter(bloomOf(_).mightContainString(target))
+      .map(pathOf).toSet
+    val point = ManifestTable.read(spark, root, "t").filter($"digest" === target)
+    assert(point.select("id").as[Long].collect().toSeq == Seq(123L))
+    assert(positive.nonEmpty && positive.size < 4, s"fixture: $positive")
+    assert(openedFiles(point) == positive)
+    // one version, two reads: one relation to sameResult and the cache
+    val (a, b) = (ManifestTable.read(spark, root, "t"), ManifestTable.read(spark, root, "t"))
+    assert(a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed))
+    a.cache().count()
+    try {
+      assert(b.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "the second read is served by the first's cache")
+      ManifestTable.appendNew(spark, root, "t", digested(400, 410), Seq("id"),
+        statsCol = Some("id"), bloomCol = Some("digest"))
+      assert(ManifestTable.read(spark, root, "t").storageLevel ==
+        org.apache.spark.storage.StorageLevel.NONE, "a new version is another relation")
+    } finally a.unpersist()
   }
 
   test("the recorded schema is the one Spark infers, for logical and " +
@@ -774,7 +838,7 @@ class ManifestTableSpec extends SparkSpec {
     // the filters answer for the keys they hold, in both renderings
     assert(ManifestTable.readPrunedEq(spark, tapped, "t", "x", "10.5")
       .select("id").as[Long].collect().toSeq == Seq(21L))
-    assert(ManifestTable.readPrunedIn(spark, tapped, "t", "g", Seq(7L))
+    assert(ManifestTable.read(spark, tapped, "t").filter($"g".isin(7L))
       .count() == data.filter($"g" === 7).count())
   }
 }

@@ -708,13 +708,14 @@ class Round13OpsSpec extends SparkSpec {
     def opened(df: org.apache.spark.sql.DataFrame) =
       df.inputFiles.count(_.contains(root))
     def kept(q: org.apache.spark.sql.DataFrame, nprobe: Int) =
-      graft.etl.ManifestTable.prunedInStats(spark, root, "lists", "list_id",
-        probedLists(q, cents, nprobe))
+      graft.etl.ManifestFileIndex.filesKept(graft.etl.ManifestTable
+        .read(spark, root, "lists")
+        .filter(col("list_id").isin(probedLists(q, cents, nprobe): _*)))
     assert(opened(filtered) == kept(qs, 6)._1,
       "the scan opens exactly the files whose list range meets the probes")
     // one query probing 2 lists: the other lists' files are skipped
     val q0 = qs.filter(col("vec_id") === 0)
-    val (narrow, _, total) = kept(q0, 2)
+    val (narrow, total) = kept(q0, 2)
     assert(opened(graft.operators.Similarity.ivfTopKVersioned(spark, root,
       cents, q0, "vec_id", "embedding", k = 10, nprobe = 2,
       pred = Some(col("label") === 3))) == narrow && narrow < total,

@@ -232,8 +232,8 @@ class Round14OpsSpec extends SparkSpec {
     assert(!search(None).exists(_._2 == dead), "latest survives vacuum")
     // probed-set pruning is real: a single-list probe opens fewer
     // files than the table holds (manifest min/max file skipping)
-    val (kept, total) = graft.etl.ManifestTable.pruneStats(spark, root,
-      "lists", lo = 0L, hi = 0L)
+    val (kept, total) = graft.etl.ManifestFileIndex.filesKept(
+      graft.etl.ManifestTable.readPruned(spark, root, "lists", "list_id", 0L, 0L))
     assert(kept < total && total > 1,
       s"file skipping prunes: kept $kept of $total")
     // filtered search: the metadata predicate evaluates against the

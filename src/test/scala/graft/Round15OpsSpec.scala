@@ -289,7 +289,19 @@ class Round15OpsSpec extends SparkSpec {
       Map("a" -> empty, "b" -> empty), "w", 1L))
   }
 
-  // ---- verdict #5: readPrunedIn composes with bloom probes ----
+  // ---- verdict #5: an IN filter composes range stats with bloom probes ----
+
+  /** (files an `IN` filter on `c` keeps — range stats and blooms —,
+    * files a range filter over the same values keeps — stats alone —,
+    * files held) for table `t` under `root`. */
+  private def inStats(root: String, c: String, vs: Seq[Long]): (Long, Long, Long) = {
+    def keptBy(p: org.apache.spark.sql.Column) = graft.etl.ManifestFileIndex
+      .filesKept(graft.etl.ManifestTable.read(spark, root, "t").filter(p))
+    val (kb, total) = keptBy(col(c).isin(vs: _*))
+    (kb, keptBy(col(c).between(vs.min, vs.max))._1, total)
+  }
+  private def readIn(root: String, c: String, vs: Seq[Long]) =
+    graft.etl.ManifestTable.read(spark, root, "t").filter(col(c).isin(vs: _*))
 
   test("readPrunedIn × indexBloom: files inside the min/max envelope that " +
     "lack the probed value are skipped; results equal a full scan") {
@@ -310,17 +322,14 @@ class Round15OpsSpec extends SparkSpec {
     graft.etl.ManifestTable.publish(spark, root,
       Map("t" -> twoFiles), statsCols = Map("t" -> "k"))
     graft.etl.ManifestTable.indexBloom(spark, root, "t", "k")
-    val (keptBloom, keptRange, total) = graft.etl.ManifestTable
-      .prunedInStats(spark, root, "t", "k", Seq(4L))
+    val (keptBloom, keptRange, total) = inStats(root, "k", Seq(4L))
     assert(total == 2L && keptRange == 2L,
       s"fixture interleaves: range stats keep both files ($keptRange/$total)")
     assert(keptBloom == 1L,
       s"bloom composition skips the odd file: $keptBloom")
-    assert(graft.etl.ManifestTable.readPrunedIn(spark, root, "t", "k",
-      Seq(4L)).select("k").as[Long].collect().toSeq == Seq(4L),
-      "pruned read equals the full-scan filter")
-    assert(graft.etl.ManifestTable.readPrunedIn(spark, root, "t", "k",
-      Seq(4L, 7L)).select("k").as[Long].collect().sorted.toSeq
+    assert(readIn(root, "k", Seq(4L)).select("k").as[Long].collect().toSeq
+      == Seq(4L), "pruned read equals the full-scan filter")
+    assert(readIn(root, "k", Seq(4L, 7L)).select("k").as[Long].collect().sorted.toSeq
       == Seq(4L, 7L), "multi-probe set keeps every containing file")
   }
 
@@ -438,13 +447,11 @@ class Round15OpsSpec extends SparkSpec {
     assert(graft.etl.ManifestTable.appendNew(spark, root, "t",
       Seq(1L, 3L, 5L, 7L, 9L).toDF("k").coalesce(1), key = Seq("k"),
       statsCol = Some("k"), bloomCol = Some("k")) == 5L)
-    val (keptBloom, keptRange, total) = graft.etl.ManifestTable
-      .prunedInStats(spark, root, "t", "k", Seq(4L))
+    val (keptBloom, keptRange, total) = inStats(root, "k", Seq(4L))
     assert(total == 2L && keptRange == 2L && keptBloom == 1L,
       s"write-time blooms skip the appended non-matching file: " +
         s"$keptBloom/$keptRange/$total")
-    assert(graft.etl.ManifestTable.readPrunedIn(spark, root, "t", "k",
-      Seq(7L)).select("k").as[Long].collect().toSeq == Seq(7L),
+    assert(readIn(root, "k", Seq(7L)).select("k").as[Long].collect().toSeq == Seq(7L),
       "a probe landing in the APPENDED file still resolves exactly")
   }
 

@@ -164,8 +164,16 @@ class Round16OpsSpec extends SparkSpec {
     val cents = graft.operators.Similarity.ivfWriteVersioned(
       base, "vec_id", "embedding", root, nlist = 8)
     // dense base: nothing for a bloom to catch — and none was paid
-    val (kb0, kr0, tot0) = graft.etl.ManifestTable.prunedInStats(
-      spark, root, "lists", "list_id", Seq(3L))
+    // files a list probe keeps (range stats and blooms) vs files a
+    // range filter on the same list keeps (range stats alone)
+    def lists = graft.etl.ManifestTable.read(spark, root, "lists")
+    def keptBy(c: org.apache.spark.sql.Column) =
+      graft.etl.ManifestFileIndex.filesKept(lists.filter(c))
+    def inStats(l: Long): (Long, Long, Long) = {
+      val (kb, tot) = keptBy(col("list_id").isin(l))
+      (kb, keptBy(col("list_id").between(l, l))._1, tot)
+    }
+    val (kb0, kr0, tot0) = inStats(3L)
     assert(kb0 == kr0, s"base files have no bloom to consult: $kb0/$kr0/$tot0")
     // append lists {0,7} ONLY, forced into ONE file → its [min,max]
     // spans 0..7 while it POPULATES only the two extremes
@@ -179,19 +187,16 @@ class Round16OpsSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     // probe an untouched interior list: range stats keep the appended
     // file (3 ∈ [0,7]) — the bloom skips it
-    val (kb, kr, tot) = graft.etl.ManifestTable.prunedInStats(
-      spark, root, "lists", "list_id", Seq(3L))
+    val (kb, kr, tot) = inStats(3L)
     assert(kb < kr, s"bloom beats range on the interleaved file: $kb < $kr ($tot)")
     // skipping is I/O-only: the pruned read equals the full-scan filter
-    val pruned = graft.etl.ManifestTable.readPrunedIn(
-      spark, root, "lists", "list_id", Seq(3L))
+    val pruned = lists.filter(col("list_id").isin(3L))
       .select("vec_id").as[Long].collect().toSet
     val full = graft.etl.ManifestTable.read(spark, root, "lists")
       .filter(col("list_id") === 3).select("vec_id").as[Long].collect().toSet
     assert(pruned == full && full.nonEmpty, "pruned read equals full scan")
     // a probed list the append DID touch keeps the appended file
-    val (kb7, _, _) = graft.etl.ManifestTable.prunedInStats(
-      spark, root, "lists", "list_id", Seq(7L))
+    val (kb7, _, _) = inStats(7L)
     assert(kb7 > kb, s"list 7 keeps its appended file: $kb7 > $kb")
   }
 

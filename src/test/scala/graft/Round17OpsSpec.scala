@@ -169,65 +169,134 @@ class Round17OpsSpec extends SparkSpec {
       s"no extractable conjunct → full discovery scan: $st2")
   }
 
-  test("impliedRange extracts only NECESSARY bounds: conjuncts tighten, " +
-    "disjunctions and foreign columns contribute nothing, IN bounds") {
-    import graft.etl.ManifestTable.impliedRange
-    import org.apache.spark.sql.types.LongType
-    val lt = Some(LongType)
-    assert(impliedRange(col("k") >= 10 && col("k") < 20, "k", lt)
-      .contains((10L, 19L)), "exact bounds; strict < excludes its integer")
-    assert(impliedRange(col("k") === 7, "k", lt).contains((7L, 7L)))
-    assert(impliedRange(lit(100) > col("k"), "k", lt)
-      .contains((Long.MinValue, 99L)), "literal-on-left mirrors, strict")
-    assert(impliedRange(col("k").isin(3, 9, 5), "k", lt).contains((3L, 9L)))
-    assert(impliedRange(col("k") >= 10 || col("k") < 0, "k", lt).isEmpty,
-      "disjunction is not a conjunct")
-    assert(impliedRange(col("other") >= 10, "k", lt).isEmpty)
-    assert(impliedRange(col("k") >= 10 && col("other") < 5, "k", lt)
-      .contains((10L, Long.MaxValue)), "foreign conjunct ignored, k kept")
-    // unknown column type: the comparison COULD widen to double, so the
-    // bound carries the literal's double-preimage band (±ulp) — one
-    // extra unit of slack at small magnitudes, never a lost row
-    assert(impliedRange(col("k") === 7, "k").contains((6L, 8L)),
-      "typeless call stays conservative")
-    assert(impliedRange(col("k").cast("long") <= 4.5, "k",
-      Some(org.apache.spark.sql.types.IntegerType))
-      .contains((Long.MinValue, 4L)),
-      "provably-widening cast wrapper + fractional literal: no integer " +
-        "sits in (4, 4.5]")
+  /** Deletes `pred` from table `t` under `root` and checks the outcome
+    * against the rows `pred` matched before: all of them gone, no other
+    * row touched. Returns the discovery stats. */
+  private def purgeExact(root: String, pred: org.apache.spark.sql.Column,
+      statsCol: String, extraStatsCols: Seq[String] = Nil)
+      : graft.etl.ManifestTable.DiscoveryStats = {
+    val M = graft.etl.ManifestTable
+    val before = M.read(spark, root, "t").count()
+    val matched = M.read(spark, root, "t").filter(pred).count()
+    val (_, deleted) = M.deleteWhere(spark, root, "t", pred,
+      statsCol = Some(statsCol), extraStatsCols = extraStatsCols)
+    assert(deleted == matched, s"$pred: deleted $deleted of $matched matches")
+    assert(M.read(spark, root, "t").filter(pred).count() == 0L, s"$pred")
+    assert(M.read(spark, root, "t").count() == before - matched, s"$pred")
+    M.mergeDiscoveryStats(root, "t").get
   }
 
-  test("impliedRange soundness at the edges: large integral literals " +
-    "carry exactly (no double rounding), out-of-Long bounds saturate " +
-    "to unbounded, narrowing casts are opaque") {
-    import graft.etl.ManifestTable.impliedRange
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    // snowflake-scale id: 1.5e18-ish is NOT representable as a double
-    // (gap ~512 there); the old double pipeline could round the lower
-    // bound UP past files holding matching rows. Exact carry, no slack.
-    val big = 1500000000000000003L
-    assert(impliedRange(col("k") === big, "k", Some(LongType))
-      .contains((big, big)), "exact bounds for > 2^53 literals")
-    assert(impliedRange(col("k") >= big, "k", Some(LongType))
-      .contains((big, Long.MaxValue)))
-    // bounds whose widened form leaves Long range saturate to UNBOUNDED
-    // (never wrap to the opposite extreme, which skipped every file)
-    assert(impliedRange(col("k") >= Long.MinValue, "k", Some(LongType))
-      .contains((Long.MinValue, Long.MaxValue)), "floor-1 underflow saturates")
-    assert(impliedRange(col("k") <= Long.MaxValue, "k", Some(LongType))
-      .contains((Long.MinValue, Long.MaxValue)), "ceil+1 overflow saturates")
-    assert(impliedRange(col("k") <= java.math.BigDecimal.valueOf(2)
-      .pow(70).doubleValue(), "k", Some(LongType))
-      .contains((Long.MinValue, Long.MaxValue)),
-      "beyond-Long double literal -> unbounded side, not a wrapped bound")
-    // a NARROWING cast is opaque: cast(k AS int) === 5 says nothing
-    // about k's raw range under non-ANSI overflow wrap (4294967301 -> 5)
-    assert(impliedRange(col("k").cast("int") === 5, "k", Some(LongType))
-      .isEmpty, "narrowing cast contributes no bound")
-    assert(impliedRange(col("k").cast("long") === 5, "k", Some(IntegerType))
-      .contains((5L, 5L)), "widening cast stays transparent")
-    // with no column type supplied every cast is opaque (cannot prove)
-    assert(impliedRange(col("k").cast("long") === 5, "k").isEmpty)
+  test("deleteWhere narrows by the one skip rule: conjuncts intersect, " +
+    "strict bounds exclude their own integer, literal-on-left mirrors, IN " +
+    "tests each value; disjunctions and foreign columns narrow nothing") {
+    val root = tmpDir("delw-rule") + "/t"
+    manyFileTable(root, 30) // file i holds k in [i*100, i*100+9]
+    val st1 = purgeExact(root, col("k") >= 105L && col("k") < 200L, "k")
+    assert(st1.scannedFiles == 1L && st1.totalFiles == 30L,
+      s"k < 200 excludes the file starting at 200: $st1")
+    val st2 = purgeExact(root, col("k") > 309L && col("k") <= 405L, "k")
+    assert(st2.scannedFiles == 1L, s"k > 309 excludes the file ending at 309: $st2")
+    val st3 = purgeExact(root, lit(100L) > col("k"), "k")
+    assert(st3.scannedFiles == 1L, s"100 > k is k < 100: $st3")
+    val st4 = purgeExact(root, col("k").isin(703L, 909L, 1505L), "k")
+    assert(st4.scannedFiles == 3L, s"IN keeps the files of its values: $st4")
+    val st5 = purgeExact(root, col("k") >= 2900L || col("k") < 0L, "k")
+    assert(st5.scannedFiles == st5.totalFiles, s"a disjunction narrows nothing: $st5")
+    val st6 = purgeExact(root, col("v") === "v12-3", "k")
+    assert(st6.scannedFiles == st6.totalFiles, s"a foreign column narrows nothing: $st6")
+    val st7 = purgeExact(root, col("k") >= 2000L && col("v").endsWith("-1"), "k")
+    assert(st7.scannedFiles == 9L, s"the k conjunct narrows beside a residue: $st7")
+  }
+
+  test("deleteWhere soundness at the edges: snowflake-scale and double " +
+    "literals on LONG, NaN, narrowing and widening casts, out-of-Long " +
+    "decimals, the \"4.00\" STRING column and DATE/TIMESTAMP bounds " +
+    "delete every matching row") {
+    import org.apache.spark.sql.types._
+    def table(root: String, schema: StructType, files: Seq[Seq[Any]],
+              extraStats: Seq[String] = Nil): Unit = {
+      val rdd = spark.sparkContext.parallelize(files, files.size)
+        .flatMap(_.map(v => org.apache.spark.sql.Row(v, s"v$v")))
+      graft.etl.ManifestTable.publish(spark, root,
+        Map("t" -> spark.createDataFrame(rdd, schema)),
+        statsCols = Map("t" -> schema.head.name),
+        extraStatsCols = Map("t" -> extraStats))
+    }
+    def kv(dt: DataType) = StructType(Seq(StructField("k", dt),
+      StructField("v", StringType)))
+    // snowflake-scale ids: 1.5e18 is far past 2^53, where doubles are
+    // 256 apart; 6 files of 10 consecutive ids, 1000 apart
+    val big = 1500000000000000000L
+    val snow = tmpDir("edge-snow") + "/t"
+    table(snow, kv(LongType), (0 until 6).map(i =>
+      (0 until 10).map(j => big + i * 1000L + j)))
+    val s1 = purgeExact(snow, col("k") === big + 2003L, "k")
+    assert(s1.scannedFiles == 1L, s"exact > 2^53 literal narrows: $s1")
+    val s2 = purgeExact(snow, col("k") >= big + 5005L, "k")
+    assert(s2.scannedFiles == 1L, s"exact > 2^53 bound narrows: $s2")
+    // a DOUBLE literal compares in double: every id of its 256-wide band
+    // matches; past 2^53 the rule claims nothing
+    val s3 = purgeExact(snow, col("k") === lit((big + 3004L).toDouble), "k")
+    assert(s3.scannedFiles == s3.totalFiles, s"ulp band: no narrowing: $s3")
+    // beyond-Long bounds never wrap into a skip
+    val s4 = purgeExact(snow, col("k") <= lit(math.pow(2, 70)) &&
+      col("k").between(big + 4000L, big + 4999L), "k")
+    assert(s4.scannedFiles == 1L, s"the in-range conjunct still narrows: $s4")
+    val s5 = purgeExact(snow, col("k") <= lit(java.math.BigDecimal.valueOf(2).pow(70)) &&
+      col("k") >= lit(java.math.BigDecimal.valueOf(2).pow(70).negate()) &&
+      col("k") < big + 1000L, "k")
+    assert(s5.scannedFiles == 1L, s"out-of-Long decimals bound nothing: $s5")
+    // a narrowing cast wraps (non-ANSI): it says nothing about k
+    val wrapped = (big + 1007L).toInt
+    val s6 = purgeExact(snow, col("k").cast("int") === wrapped, "k")
+    assert(s6.scannedFiles == s6.totalFiles, s"narrowing cast: no narrowing: $s6")
+
+    // INT column: a widening cast is the column, and a fractional bound
+    // excludes the integer past it
+    val ints = tmpDir("edge-int") + "/t"
+    table(ints, kv(IntegerType), (0 until 4).map(i => (0 until 10).map(j => i * 10 + j)))
+    val i1 = purgeExact(ints, col("k").cast("long") === 25L, "k")
+    assert(i1.scannedFiles == 1L, s"widening cast narrows: $i1")
+    val i2 = purgeExact(ints, col("k").cast("long") <= 9.5, "k")
+    assert(i2.scannedFiles == 1L, s"k <= 9.5 is k <= 9: $i2")
+
+    // DOUBLE column with NaN: NaN equals NaN and exceeds every number;
+    // the bare column is no canonical long, so nothing narrows
+    val dbl = tmpDir("edge-nan") + "/t"
+    table(dbl, kv(DoubleType), Seq(Seq(1.5, 2.5, Double.NaN), Seq(10.5, 11.5),
+      Seq(Double.NaN, 20.5)))
+    val d1 = purgeExact(dbl, col("k") > 1e300, "k")
+    assert(d1.scannedFiles == d1.totalFiles, s"NaN: no narrowing: $d1")
+    assert(graft.etl.ManifestTable.read(spark, dbl, "t").count() == 5L)
+    // the exact stats expression narrows on any column type
+    val d2 = purgeExact(dbl, col("k").cast("long") === 11L, "k")
+    assert(d2.scannedFiles == 1L, s"cast(k AS long) is the stats value: $d2")
+
+    // STRING column of decimal-formatted numbers: "4.00" = 4 matches
+    // through a parse whose result depends on the cast mode, so a string
+    // column's recorded longs answer no numeric conjunct
+    val str = tmpDir("edge-str") + "/t"
+    table(str, kv(StringType), Seq(Seq("4.00", "5.00"), Seq("40.00", "41.00")))
+    val t1 = purgeExact(str, col("k") === 4, "k")
+    assert(t1.scannedFiles == t1.totalFiles, s"string vs number: no narrowing: $t1")
+    val t2 = purgeExact(str, col("k").cast("long") === 41L, "k")
+    assert(t2.scannedFiles == t2.totalFiles, s"nor does a string's long cast: $t2")
+
+    // DATE (epoch-day) and TIMESTAMP (epoch-second) bounds
+    val dates = tmpDir("edge-date") + "/t"
+    val day0 = java.time.LocalDate.of(2023, 1, 1)
+    table(dates, kv(DateType), (0 until 4).map(i => (0 until 10).map(j =>
+      java.sql.Date.valueOf(day0.plusDays(i * 10L + j)))))
+    val e1 = purgeExact(dates, col("k") > lit(java.sql.Date.valueOf("2023-01-10")) &&
+      col("k") <= lit(java.sql.Date.valueOf("2023-01-20")), "k")
+    assert(e1.scannedFiles == 1L, s"a strict DATE bound excludes its day: $e1")
+    val stamps = tmpDir("edge-ts") + "/t"
+    val t0 = java.sql.Timestamp.valueOf("2023-01-01 00:00:00").getTime
+    table(stamps, kv(TimestampType), (0 until 4).map(i => (0 until 10).map(j =>
+      new java.sql.Timestamp(t0 + (i * 10L + j) * 1000L + 500L))))
+    val f1 = purgeExact(stamps, col("k") >= lit(new java.sql.Timestamp(t0 + 19700L)) &&
+      col("k") < lit(new java.sql.Timestamp(t0 + 20400L)), "k")
+    assert(f1.scannedFiles <= 2L, s"sub-second TIMESTAMP bounds narrow: $f1")
   }
 
   // ---- verdict #3 (missing): file-reusing conflict rebase ----
@@ -390,10 +459,9 @@ class Round17OpsSpec extends SparkSpec {
       .filter(_.table == "t")
     assert(mine.size == 1 && mine.head.bloomFor("k").isDefined,
       s"schema keeper carries a bloom: $mine")
-    val (kept, total) = graft.etl.ManifestTable.bloomPruneStats(spark,
-      root, "t", "k", 1L)
-    assert((kept, total) == (0L, 1L), s"empty bloom rejects the probe: $kept/$total")
     val df = graft.etl.ManifestTable.readPrunedEq(spark, root, "t", "k", 1L)
+    val (kept, total) = graft.etl.ManifestFileIndex.filesKept(df)
+    assert((kept, total) == (0L, 1L), s"empty bloom rejects the probe: $kept/$total")
     assert(df.count() == 0L && df.columns.toSeq == Seq("k", "v"),
       "readable empty table with intact schema")
   }

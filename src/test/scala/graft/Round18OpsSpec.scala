@@ -138,11 +138,11 @@ class Round18OpsSpec extends SparkSpec {
     assert(entries.forall(e => e.bloomFor("k").isDefined &&
       e.bloomFor("u").isDefined), "both columns covered")
     // coverage is real: a point lookup on either column prunes hard
-    val (kk, kt) = graft.etl.ManifestTable.bloomPruneStats(
-      spark, root, "t", "k", 1507L)
+    def lookup(c: String, v: Long) = graft.etl.ManifestFileIndex.filesKept(
+      graft.etl.ManifestTable.readPrunedEq(spark, root, "t", c, v))
+    val (kk, kt) = lookup("k", 1507L)
     assert(kt == 30L && kk <= 3L, s"k bloom prunes: $kk/$kt")
-    val (uk, _) = graft.etl.ManifestTable.bloomPruneStats(
-      spark, root, "t", "u", 15021L)
+    val (uk, _) = lookup("u", 15021L)
     assert(uk <= 3L, s"u bloom prunes: $uk")
     assert(graft.etl.ManifestTable.readPrunedEq(spark, root, "t", "u", 15021L)
       .select("k").as[Long].collect().toSeq == Seq(1503L))
@@ -603,10 +603,10 @@ class Round18OpsSpec extends SparkSpec {
     assert(sizes.nonEmpty && sizes.max < 4096L,
       s"3-row file gets a right-sized filter, got ${sizes.toSeq} bytes")
     // and it still answers exactly
-    assert(graft.etl.ManifestTable.bloomPruneStats(spark, root, "t", "k", 2L)
-      ._1 == 1L)
-    assert(graft.etl.ManifestTable.bloomPruneStats(spark, root, "t", "k",
-      404L)._1 == 0L, "right-sized filter keeps its fpp")
+    def kept(v: Long) = graft.etl.ManifestFileIndex.filesKept(
+      graft.etl.ManifestTable.readPrunedEq(spark, root, "t", "k", v))._1
+    assert(kept(2L) == 1L)
+    assert(kept(404L) == 0L, "right-sized filter keeps its fpp")
   }
 
   test("deleteByKeys with a LONG-typed key frame still narrows at " +

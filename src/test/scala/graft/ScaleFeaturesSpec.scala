@@ -73,21 +73,21 @@ class ScaleFeaturesSpec extends SparkSpec {
     val part = Similarity.ivfTopKVersioned(spark, root, cents, queries,
       "vec_id", "embedding", k = 10, nprobe = 4)
     // the scan must skip the files of unprobed lists, not read-and-filter:
-    // it opens exactly the files readPrunedIn keeps for the probed set
+    // it opens exactly the files a list_id filter keeps for the probed set
     import graft.expressions.CosinesExpr.{cosinesD, topKIndices}
     def keptFor(q: org.apache.spark.sql.DataFrame, nprobe: Int) = {
       val probed = q
         .select(explode(topKIndices(cosinesD($"embedding", cents), nprobe)))
         .distinct().as[Int].collect().map(_.toLong).toSeq
-      graft.etl.ManifestTable.prunedInStats(spark, root, "lists", "list_id",
-        probed)
+      graft.etl.ManifestFileIndex.filesKept(graft.etl.ManifestTable
+        .read(spark, root, "lists").filter(col("list_id").isin(probed: _*)))
     }
     def opened(df: org.apache.spark.sql.DataFrame) =
       df.inputFiles.count(_.contains(root))
     assert(opened(part) == keptFor(queries, 4)._1)
     // a single query probing one list: every other list's files skipped
     val one = queries.filter($"vec_id" === 0)
-    val (kept1, _, total) = keptFor(one, 1)
+    val (kept1, total) = keptFor(one, 1)
     assert(opened(Similarity.ivfTopKVersioned(spark, root, cents, one,
       "vec_id", "embedding", k = 10, nprobe = 1)) == kept1 && kept1 < total,
       s"a 1-list probe opens $kept1 of $total index files")
