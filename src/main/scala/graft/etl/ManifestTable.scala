@@ -12,14 +12,14 @@ import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
-/** Manifest-pointer committed tables: the object-store-safe form of the
-  * reference's multi-table transaction (`main.py:173-195`, T1) that
-  * [[IncrementalLoad.atomicPublish]] implements with directory renames.
+/** Manifest-pointer committed tables: the engine's one table writer and
+  * its form of the reference's multi-table transaction
+  * (`main.py:173-195`, T1).
   *
-  * Rename-based swaps are atomic on HDFS but NOT on S3-like object
-  * stores, where rename of a directory is per-object copy+delete and a
-  * concurrent reader can observe a mid-swap tree. This module removes
-  * renames of DATA from the commit path entirely:
+  * Rename-based directory swaps are atomic on HDFS but NOT on S3-like
+  * object stores, where rename of a directory is per-object copy+delete
+  * and a concurrent reader can observe a mid-swap tree. This module
+  * removes renames of DATA from the commit path entirely:
   *
   *  - data files are immutable and uniquely named (`<table>/d-<uuid>/
   *    part-*.parquet`) — they are never renamed, overwritten, or deleted
@@ -279,7 +279,9 @@ object ManifestTable {
 
   final case class Commit(version: Long, entries: Seq[FileEntry])
 
-  private def fsFor(spark: SparkSession, p: String): (FileSystem, HPath) = {
+  /** Filesystem of `p` (from the path's scheme, e.g. file:/HDFS) plus the
+    * fully-qualified path. */
+  private[graft] def fsFor(spark: SparkSession, p: String): (FileSystem, HPath) = {
     val hp = new HPath(p)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     (fs, fs.makeQualified(hp))
@@ -1606,11 +1608,9 @@ object ManifestTable {
   /** Idempotent incremental append (S4/J2, `load_data_conditionally`
     * main.py:45-59): anti-join `incoming` against the CURRENT version's
     * keys, write only the fresh rows as new files, commit old+new. A
-    * re-run appends 0 rows and creates NO new version. Unlike the
-    * rename-based [[IncrementalLoad.appendNew]] there is no staging
-    * step to get wrong: the anti-join reads the old files while the new
-    * files are written elsewhere, and nothing is visible until the
-    * commit lands. Returns rows appended. */
+    * re-run appends 0 rows and creates NO new version. The anti-join
+    * reads the old files while the new files are written elsewhere, and
+    * nothing is visible until the commit lands. Returns rows appended. */
   def appendNew(spark: SparkSession, root: String, table: String,
                 incoming: DataFrame, key: Seq[String],
                 statsCol: Option[String] = None,
@@ -1658,10 +1658,10 @@ object ManifestTable {
     * predicate, has already bounded which files those can be); all
     * other files are carried into the new version untouched —
     * byte-identical, not even re-read at commit time. Crash-consistent
-    * ACROSS files, unlike the per-partition swap loop of
-    * [[IncrementalLoad.deleteWhere]]: either the single new commit
-    * lands (all affected files replaced at once) or nothing changes.
-    * Returns (filesRewritten, rowsDeleted). */
+    * ACROSS files: either the single new commit lands (all affected
+    * files replaced at once) or nothing changes. A row whose predicate
+    * is NULL is kept (SQL DELETE semantics). Returns
+    * (filesRewritten, rowsDeleted). */
   def deleteWhere(spark: SparkSession, root: String, table: String,
                   predicate: Column, statsCol: Option[String] = None,
                   bloomCol: Option[String] = None,
@@ -2289,6 +2289,17 @@ object ManifestTable {
     * files that EXIST under data dirs, so markers are inert there too. */
   private val TxnTable = "_txn"
 
+  /** Does `c` hold a `_txn` watermark for `marker` at or past `batchId`
+    * (a replay of an applied batch)? */
+  private def watermarked(c: Commit, marker: String, batchId: Long): Boolean =
+    c.entries.exists(e => e.table == TxnTable && e.relPath == marker &&
+      e.min.exists(_ >= batchId))
+
+  /** A writer id is one path segment of a `_txn` marker. */
+  private def requireWriterId(writerId: String): Unit =
+    require(!writerId.contains("\t") && !writerId.contains("\n") &&
+      !writerId.contains("/"), s"illegal writerId: $writerId")
+
   /** Exactly-once append for at-least-once writers (Structured Streaming
     * `foreachBatch`, retried orchestration steps): the commit that adds
     * the batch's data files ALSO records `(writerId, batchId)` as a
@@ -2313,16 +2324,12 @@ object ManifestTable {
   def transactionalAppend(spark: SparkSession, root: String, table: String,
                           df: DataFrame, writerId: String, batchId: Long,
                           statsCol: Option[String] = None): Boolean = {
-    require(!writerId.contains("\t") && !writerId.contains("\n") &&
-      !writerId.contains("/"), s"illegal writerId: $writerId")
+    requireWriterId(writerId)
     val (fs, rootP) = fsFor(spark, root)
     fs.mkdirs(rootP)
     val cur = current(spark, root)
     val markerPath = s"$writerId/$table"
-    val applied = cur.exists(_.entries.exists(e =>
-      e.table == TxnTable && e.relPath == markerPath &&
-        e.min.exists(_ >= batchId)))
-    if (applied) return false
+    if (cur.exists(watermarked(_, markerPath, batchId))) return false
     // write FIRST, count from the written footers, drop the dir when
     // empty — one execution of `df` (the appendNew discipline); the
     // empty batch still returns true without creating a version
@@ -2348,18 +2355,14 @@ object ManifestTable {
     * the batch. */
   def batchApplied(spark: SparkSession, root: String, writerId: String,
                    batchId: Long): Boolean =
-    current(spark, root).exists(_.entries.exists(e =>
-      e.table == TxnTable && e.relPath == s"$writerId/__txn" &&
-        e.min.exists(_ >= batchId)))
+    current(spark, root).exists(watermarked(_, s"$writerId/__txn", batchId))
 
   /** The per-table twin of [[batchApplied]] for
     * [[transactionalAppend]]/[[transactionalMerge]] writers (their
     * watermark rides `<writerId>/<table>`). */
   def tableBatchApplied(spark: SparkSession, root: String, table: String,
                         writerId: String, batchId: Long): Boolean =
-    current(spark, root).exists(_.entries.exists(e =>
-      e.table == TxnTable && e.relPath == s"$writerId/$table" &&
-        e.min.exists(_ >= batchId)))
+    current(spark, root).exists(watermarked(_, s"$writerId/$table", batchId))
 
   /** Exactly-once CDC apply — [[mergeInto]] plus a delete set plus the
     * `(writerId, batchId)` watermark, all in ONE commit: existing rows
@@ -2397,15 +2400,12 @@ object ManifestTable {
                          bloomCol: Option[String],
                          extraStatsCols: Seq[String]): Boolean = {
     require(key.nonEmpty, "transactionalMerge: empty key")
-    require(!writerId.contains("\t") && !writerId.contains("\n") &&
-      !writerId.contains("/"), s"illegal writerId: $writerId")
+    requireWriterId(writerId)
     val (fs, rootP) = fsFor(spark, root)
     fs.mkdirs(rootP)
     val cur = current(spark, root)
     val markerPath = s"$writerId/$table"
-    if (cur.exists(_.entries.exists(e =>
-      e.table == TxnTable && e.relPath == markerPath &&
-        e.min.exists(_ >= batchId)))) return false
+    if (cur.exists(watermarked(_, markerPath, batchId))) return false
     val up = graft.operators.Lineage.cut(upserts)
     // row count and duplicate-key guard in ONE aggregation job (formerly
     // count() + distinct().count() — two passes over the batch)
@@ -2456,9 +2456,7 @@ object ManifestTable {
         added = added :+
           FileEntry(TxnTable, markerPath, Some(batchId), Some(batchId)),
         reusableUnder = reusable,
-        alreadyAppliedUnder = nc => nc.entries.exists(e =>
-          e.table == TxnTable && e.relPath == markerPath &&
-            e.min.exists(_ >= batchId)),
+        alreadyAppliedUnder = watermarked(_, markerPath, batchId),
         freshEntries = added) match {
         case Committed(_) => true
         case AlreadyApplied => false
@@ -2522,16 +2520,12 @@ object ManifestTable {
                              statsCols: Map[String, String],
                              bloomCols: Map[String, String]): Boolean = {
     require(tables.nonEmpty, "transactionalAppendAll: no tables")
-    require(!writerId.contains("\t") && !writerId.contains("\n") &&
-      !writerId.contains("/"), s"illegal writerId: $writerId")
+    requireWriterId(writerId)
     val (fs, rootP) = fsFor(spark, root)
     fs.mkdirs(rootP)
     val cur = current(spark, root)
     val markerPath = s"$writerId/__txn"
-    val applied = cur.exists(_.entries.exists(e =>
-      e.table == TxnTable && e.relPath == markerPath &&
-        e.min.exists(_ >= batchId)))
-    if (applied) return false
+    if (cur.exists(watermarked(_, markerPath, batchId))) return false
     val newEntries = graft.Overlap.map(tables.toSeq.sortBy(_._1)) { case (name, df) =>
       val exists = cur.exists(_.entries.exists(_.table == name))
       // one execution + footer-only-if-new: an empty contribution to a
@@ -2551,9 +2545,7 @@ object ManifestTable {
         FileEntry(TxnTable, markerPath, Some(batchId), Some(batchId)),
       reusableUnder = nc => tables.keysIterator.forall(t =>
         tableUnchanged(cur, t)(nc)),
-      alreadyAppliedUnder = nc => nc.entries.exists(e =>
-        e.table == TxnTable && e.relPath == markerPath &&
-          e.min.exists(_ >= batchId)),
+      alreadyAppliedUnder = watermarked(_, markerPath, batchId),
       freshEntries = newEntries) match {
       case Committed(_) => true
       case AlreadyApplied => false

@@ -199,8 +199,8 @@ object OpinionPipeline {
   /** E1 end-to-end: transform + atomic multi-table publish (T1) through
     * [[ManifestTable.publish]] — ALL NINE star tables become visible in one
     * commit-file PUT, so the reference's one-transaction load
-    * (main.py:173-195) is all-or-nothing even on object stores, where the
-    * directory renames of [[IncrementalLoad.atomicPublish]] are not atomic.
+    * (main.py:173-195) is all-or-nothing even on object stores, where a
+    * directory rename is not atomic.
     * Earlier versions keep serving readers until [[ManifestTable.vacuum]]
     * (snapshot isolation), and a crashed publish leaves only orphan data
     * files — the previous star is untouched.

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.etl.{IncrementalLoad, ManifestTable}
+import graft.etl.ManifestTable
 
 /** Event-stream processing (SURVEY.md §2.9, §7 step 6).
   *
@@ -125,16 +125,19 @@ object EventStreams {
         col("click_ts"), col("view_ts"), col("view_value"))
   }
 
-  /** Idempotent streaming sink: every micro-batch is merged with a
-    * left-anti join against the target's existing keys — exactly-once
-    * effect on top of at-least-once delivery, the streaming form of the
-    * reference's load_data_conditionally. */
-  def idempotentParquetSink(stream: DataFrame, targetPath: String,
+  /** Idempotent streaming sink: every micro-batch lands via
+    * [[ManifestTable.appendNew]], a left-anti join against the table's
+    * committed keys — exactly-once effect on top of at-least-once
+    * delivery, the streaming form of the reference's
+    * load_data_conditionally. Keyed on the rows, not the batch id, so a
+    * redelivered batch appends only keys the table lacks, whatever id
+    * the replay carries. */
+  def idempotentParquetSink(stream: DataFrame, root: String, table: String,
                             checkpoint: String, key: Seq[String]): DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IncrementalLoad.appendNew(batch.sparkSession, batch, targetPath, key)
+        ManifestTable.appendNew(batch.sparkSession, root, table, batch, key)
         ()
       }
 

@@ -1,11 +1,13 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.etl._
 
 /** The five invariants the reference hardened by hand (SURVEY.md §5),
-  * asserted on reference-shaped opinion fixtures (FIXTURES.md §A). */
+  * asserted on reference-shaped opinion fixtures (FIXTURES.md §A).
+  * Invariants 1 (idempotent append) and 4 (atomic multi-table publish)
+  * are table-writer guarantees, pinned on [[ManifestTable]] in
+  * ManifestTableSpec; the end-to-end publish case here runs them on the
+  * star. */
 class EtlInvariantsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -130,192 +132,6 @@ class EtlInvariantsSpec extends SparkSpec {
     assert(out.registroCargas.filter($"Nombre" === "Web").count() == 1)
   }
 
-  test("invariant 1: idempotent load — re-run appends 0 rows") {
-    val target = tmpDir("idem")
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    val n1 = IncrementalLoad.appendNew(spark, df, s"$target/t", Seq("id"))
-    val n2 = IncrementalLoad.appendNew(spark, df, s"$target/t", Seq("id"))
-    assert(n1 == 2 && n2 == 0)
-    assert(spark.read.parquet(s"$target/t").count() == 2)
-    // incremental: one new row -> only it appends
-    val df2 = Seq((2L, "b"), (3L, "c")).toDF("id", "v")
-    val n3 = IncrementalLoad.appendNew(spark, df2, s"$target/t", Seq("id"))
-    assert(n3 == 1 && spark.read.parquet(s"$target/t").count() == 3)
-  }
-
-  test("compaction merges append-accumulated small files, content unchanged") {
-    val target = s"${tmpDir("compact")}/t"
-    // 30 appends -> at least 30 files
-    (1L to 30L).foreach { i =>
-      IncrementalLoad.appendNew(spark,
-        Seq((i, s"row$i")).toDF("id", "v"), target, Seq("id"))
-    }
-    val beforeRows = spark.read.parquet(target)
-      .as[(Long, String)].collect().toSet
-    val (nBefore, nAfter) = IncrementalLoad.compact(spark, target,
-      targetFileBytes = 1L << 30)
-    assert(nBefore >= 30 && nAfter < nBefore, s"$nBefore -> $nAfter")
-    val afterRows = spark.read.parquet(target).as[(Long, String)].collect().toSet
-    assert(afterRows == beforeRows)
-    // still appendable and idempotent afterwards
-    assert(IncrementalLoad.appendNew(spark,
-      Seq((1L, "row1")).toDF("id", "v"), target, Seq("id")) == 0)
-  }
-
-  test("compaction preserves a partitioned table's layout and pruning") {
-    val target = s"${tmpDir("compactp")}/t"
-    // several small writes into a year-partitioned table
-    (0 until 6).foreach { i =>
-      Seq((i.toLong, java.sql.Date.valueOf(s"202${4 + i % 2}-01-0${i + 1}"), s"v$i"))
-        .toDF("id", "fecha", "v")
-        .withColumn("anio", year($"fecha"))
-        .write.mode("append").partitionBy("anio").parquet(target)
-    }
-    val beforeRows = spark.read.parquet(target)
-      .select("id", "v", "anio").as[(Long, String, Int)].collect().toSet
-    val (nBefore, nAfter) = IncrementalLoad.compact(spark, target,
-      targetFileBytes = 1L << 30)
-    assert(nAfter < nBefore)
-    // layout preserved: anio=... dirs still exist and pruning still fires
-    val dirs = new java.io.File(target).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.startsWith("anio=")).sorted
-    assert(dirs.sameElements(Array("anio=2024", "anio=2025")))
-    val pruned = spark.read.parquet(target).filter($"anio" === 2024)
-    assert(pruned.queryExecution.executedPlan.toString.contains("anio"))
-    assert(spark.read.parquet(target)
-      .select("id", "v", "anio").as[(Long, String, Int)].collect().toSet == beforeRows)
-  }
-
-  test("deleteWhere rewrites only affected partitions; empty partitions vanish") {
-    val target = s"${tmpDir("delw")}/t"
-    Seq(
-      (1L, 2024, "alice"), (2L, 2024, "bob"),
-      (3L, 2025, "alice"), (4L, 2025, "carol"),
-      (5L, 2026, "dave")
-    ).toDF("id", "anio", "who").write.partitionBy("anio").parquet(target)
-    def filesOf(year: Int): Set[String] =
-      new java.io.File(s"$target/anio=$year").listFiles()
-        .map(_.getName).filter(_.endsWith(".parquet")).toSet
-    val files2026 = filesOf(2026)
-    // delete alice everywhere: touches 2024 and 2025, NOT 2026
-    val (nPart, nRows) = IncrementalLoad.deleteWhere(spark, target, $"who" === "alice")
-    assert((nPart, nRows) == (2L, 2L))
-    assert(filesOf(2026) == files2026, "untouched partition byte-identical")
-    assert(spark.read.parquet(target).select("id").as[Long].collect().toSet ==
-      Set(2L, 4L, 5L))
-    // predicate on the PARTITION column: the whole 2026 partition empties
-    // and its directory is removed outright
-    val (p2, r2) = IncrementalLoad.deleteWhere(spark, target, $"anio" === 2026)
-    assert((p2, r2) == (1L, 1L))
-    assert(!new java.io.File(s"$target/anio=2026").exists())
-    assert(spark.read.parquet(target).select("id").as[Long].collect().toSet ==
-      Set(2L, 4L))
-    // no-match predicate is a no-op
-    assert(IncrementalLoad.deleteWhere(spark, target, $"who" === "nobody") == (0L, 0L))
-  }
-
-  test("deleteWhere on an unpartitioned table: full rewrite, empty stays readable") {
-    val target = s"${tmpDir("delwu")}/t"
-    Seq((1L, "x"), (2L, "y")).toDF("id", "v").write.parquet(target)
-    assert(IncrementalLoad.deleteWhere(spark, target, $"v" === "x") == (1L, 1L))
-    assert(spark.read.parquet(target).select("id").as[Long].collect().toSeq == Seq(2L))
-    assert(IncrementalLoad.deleteWhere(spark, target, lit(true)) == (1L, 1L))
-    // an EMPTY table must remain a readable parquet table (schema
-    // footer present), not a bare directory the next read crashes on
-    val after = spark.read.parquet(target)
-    assert(after.count() == 0 && after.columns.toSeq == Seq("id", "v"))
-    assert(IncrementalLoad.deleteWhere(spark, target, lit(true)) == (0L, 0L))
-  }
-
-  test("deleteWhere emptying EVERY partition leaves a readable empty table") {
-    val target = s"${tmpDir("delwall")}/t"
-    Seq((1L, 2024, "a"), (2L, 2025, "b"))
-      .toDF("id", "anio", "who").write.partitionBy("anio").parquet(target)
-    val (p, d) = IncrementalLoad.deleteWhere(spark, target, lit(true))
-    assert((p, d) == (2L, 2L))
-    // the root must hold a parquet footer with the FULL schema
-    // (partition columns included), not a bare dir that fails inference
-    val after = spark.read.parquet(target)
-    assert(after.count() == 0)
-    assert(after.columns.toSet == Set("id", "anio", "who"))
-  }
-
-  test("deleteWhere prunes empty intermediate dirs on multi-level partitions") {
-    val target = s"${tmpDir("delwml")}/t"
-    Seq((1L, 2024, 1, "a"), (2L, 2024, 2, "b"), (3L, 2025, 1, "c"))
-      .toDF("id", "anio", "mes", "who")
-      .write.partitionBy("anio", "mes").parquet(target)
-    // empty anio=2025 entirely: its mes=1 leaf AND the now-empty
-    // anio=2025 shell must both vanish
-    val (p, d) = IncrementalLoad.deleteWhere(spark, target, $"anio" === 2025)
-    assert((p, d) == (1L, 1L))
-    assert(!new java.io.File(s"$target/anio=2025").exists(),
-      "empty intermediate partition shell pruned")
-    assert(spark.read.parquet(target).select("id").as[Long].collect().toSet ==
-      Set(1L, 2L))
-  }
-
-  test("deleteWhere handles partition values needing Hive escaping") {
-    val target = s"${tmpDir("delwesc")}/t"
-    // 'north region' (space, kept literal by Hive), 'a=b' (equals ->
-    // %3D) and '10:30' (colon -> %3A) exercise the writer's dir-name
-    // encoding; deleteWhere must reconstruct the SAME names
-    Seq((1L, "north region"), (2L, "plain"), (3L, "a=b"), (4L, "10:30"))
-      .toDF("id", "zone").write.partitionBy("zone").parquet(target)
-    assert(new java.io.File(s"$target/zone=a%3Db").exists(),
-      "writer escaped '=' as %3D")
-    val (p, d) = IncrementalLoad.deleteWhere(spark, target, $"id" === 3L)
-    assert((p, d) == (1L, 1L))
-    assert(!new java.io.File(s"$target/zone=a%3Db").exists(),
-      "escaped partition emptied and removed")
-    // delete inside the space-bearing partition: others untouched
-    val (p2, d2) = IncrementalLoad.deleteWhere(spark, target, $"zone" === "north region")
-    assert((p2, d2) == (1L, 1L))
-    assert(spark.read.parquet(target).select("id").as[Long].collect().toSet ==
-      Set(2L, 4L))
-  }
-
-  test("deleteWhere refuses NULL/empty partition values (Hive default partition)") {
-    val target = s"${tmpDir("delwnull")}/t"
-    // NULL and '' both land in __HIVE_DEFAULT_PARTITION__ on write and
-    // read back as NULL — deleting by reconstructed dir name would be
-    // ambiguous, so deleteWhere must fail fast before any swap
-    Seq((1L, Some("x")), (2L, None)).toDF("id", "zone")
-      .write.partitionBy("zone").parquet(target)
-    val e = intercept[IllegalArgumentException] {
-      IncrementalLoad.deleteWhere(spark, target, $"id" === 2L)
-    }
-    assert(e.getMessage.contains("default-partition"))
-    assert(spark.read.parquet(target).count() == 2, "nothing deleted")
-  }
-
-  test("deleteWhere: NULL predicate means KEEP, and is never silent loss") {
-    val target = s"${tmpDir("delwn")}/t"
-    Seq((1L, Some("alice")), (2L, None), (3L, Some("bob")))
-      .toDF("id", "who").write.parquet(target)
-    // predicate is NULL for id=2: SQL DELETE semantics keep that row
-    val (p, d) = IncrementalLoad.deleteWhere(spark, target, $"who" === "alice")
-    assert((p, d) == (1L, 1L))
-    assert(spark.read.parquet(target).select("id").as[Long].collect().toSet ==
-      Set(2L, 3L), "NULL-predicate row kept, not silently dropped")
-  }
-
-  test("invariant 4: atomic publish — failure leaves published tree untouched") {
-    val root = tmpDir("atomic")
-    val good = Seq((1, "x")).toDF("id", "v")
-    IncrementalLoad.atomicPublish(root, Map("t1" -> good, "t2" -> good))
-    assert(spark.read.parquet(s"$root/t1").count() == 1)
-    // second publish where one table fails mid-write: t1 must keep v1 data
-    val bad = good.select(expr("raise_error('boom')").as("id"), $"v")
-    intercept[Exception] {
-      IncrementalLoad.atomicPublish(root, Map("t1" -> good.union(good), "t2" -> bad))
-    }
-    assert(spark.read.parquet(s"$root/t1").count() == 1, "t1 not partially replaced")
-    assert(spark.read.parquet(s"$root/t2").count() == 1, "t2 untouched")
-    assert(!new java.io.File(root).listFiles().exists(_.getName.startsWith(".staging")),
-      "staging cleaned up")
-  }
-
   test("end-to-end publish is idempotent-by-construction: re-run == same tables") {
     val root = tmpDir("e2e")
     val v1 = OpinionPipeline.run(spark, out, root)
@@ -340,22 +156,5 @@ class EtlInvariantsSpec extends SparkSpec {
     val v2 = OpinionPipeline.run(spark, out, root)
     assert(v2 == 2L)
     assert(snapshot() == first)
-  }
-
-  test("partitioned fact sink prunes by year") {
-    val root = tmpDir("part")
-    IncrementalLoad.writePartitioned(
-      out.comentarios.withColumn("Fecha", $"Fecha".cast("date")), "Fecha", s"$root/c")
-    val back = spark.read.parquet(s"$root/c")
-    assert(back.filter($"anio" === 2024).count() == back.count())
-    assert(new java.io.File(s"$root/c").listFiles().exists(_.getName == "anio=2024"))
-    // the year filter must reach the scan as a PARTITION filter (directory
-    // pruning — the reference's filegroup elimination), not a data filter
-    val plan = back.filter($"anio" === 2024).queryExecution.executedPlan.toString
-    // anio must appear INSIDE the PartitionFilters bracket — the bracket
-    // itself prints (empty) on every partitioned scan, and 'anio' appears
-    // elsewhere in the plan regardless, so substring checks are vacuous
-    assert("PartitionFilters: \\[[^\\]]*anio".r.findFirstIn(plan).isDefined,
-      s"expected anio inside PartitionFilters in:\n$plan")
   }
 }

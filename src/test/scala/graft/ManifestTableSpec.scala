@@ -125,6 +125,11 @@ class ManifestTableSpec extends SparkSpec {
     assert((before intersect after).nonEmpty, "untouched files carried, not rewritten")
     assert(ManifestTable.read(spark, root, "t").select("id")
       .as[Long].collect().toSet == Set(1L, 2L, 11L))
+    // a file the delete empties leaves the commit; the others stay carried
+    assert(ManifestTable.deleteWhere(spark, root, "t", $"id" === 11L)._2 == 1L)
+    val left = ManifestTable.current(spark, root).get.entries
+    assert(left.map(_.relPath).toSet.subsetOf(before intersect after))
+    assert(left.forall(_.rows.exists(_ > 0L)), s"no emptied file committed: $left")
     // NULL predicate means KEEP (SQL DELETE semantics)
     ManifestTable.overwrite(spark, root, "nulls",
       Seq((1L, Some("alice")), (2L, Option.empty[String])).toDF("id", "who"))
@@ -141,6 +146,7 @@ class ManifestTableSpec extends SparkSpec {
     assert(d == 1L)
     val after = ManifestTable.read(spark, root, "t")
     assert(after.count() == 0L && after.columns.toSeq == Seq("id", "v"))
+    assert(ManifestTable.deleteWhere(spark, root, "t", lit(true)) == ((0L, 0L)))
   }
 
   test("compact merges small files into a new version; old version still readable") {
@@ -152,7 +158,11 @@ class ManifestTableSpec extends SparkSpec {
     val vPre = ManifestTable.current(spark, root).get.version
     val (before, afterN) = ManifestTable.compact(spark, root, "t")
     assert(before == 5L && afterN == 1L)
-    assert(ManifestTable.read(spark, root, "t").count() == 5L)
+    assert(ManifestTable.read(spark, root, "t").as[(Long, String)].collect()
+      .toSet == (1 to 5).map(i => (i.toLong, s"v$i")).toSet)
+    // the compacted table stays idempotent under appendNew
+    assert(ManifestTable.appendNew(spark, root, "t",
+      Seq((1L, "v1")).toDF("id", "v"), Seq("id")) == 0L)
     // pre-compaction snapshot still readable (background compaction)
     assert(ManifestTable.readAt(spark, root, "t", vPre).count() == 5L)
   }
@@ -373,7 +383,7 @@ class ManifestTableSpec extends SparkSpec {
     ManifestTable.publish(spark, root,
       Map("t" -> digested(0, 400).repartitionByRange(6, $"id")),
       bloomCols = Map("t" -> "digest"))
-    val (fs, rootP) = graft.etl.IncrementalLoad.fsFor(spark, root)
+    val (fs, rootP) = ManifestTable.fsFor(spark, root)
     def sidecarFiles(): Seq[String] = fs.listStatus(
         new org.apache.hadoop.fs.Path(rootP, "t/_blooms"))
       .map(_.getPath.getName).toSeq.sorted

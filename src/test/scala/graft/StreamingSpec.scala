@@ -156,22 +156,37 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("idempotent foreachBatch sink: replaying the stream appends nothing") {
+    import graft.etl.ManifestTable
     val src = tmpDir("idem-src")
-    val target = tmpDir("idem-target") + "/t"
+    val root = tmpDir("idem-root")
     eventsDF.coalesce(1).write.mode("overwrite").parquet(src)
 
     def runOnce(checkpoint: String): Unit = {
       val stream = EventStreams.readEventStream(spark, src, eventsDF.schema)
-      val q = EventStreams.idempotentParquetSink(stream, target, checkpoint, Seq("event_id"))
+      val q = EventStreams.idempotentParquetSink(stream, root, "events",
+          checkpoint, Seq("event_id"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
+    def rows() = ManifestTable.read(spark, root, "events").count()
+    def version() = ManifestTable.current(spark, root).map(_.version)
     runOnce(tmpDir("cp1"))
-    assert(spark.read.parquet(target).count() == 5)
+    assert(rows() == 5)
+    val v1 = version()
     // Fresh checkpoint = full redelivery of every file: the at-least-once
     // worst case. The anti-join merge must still keep the target exact.
     runOnce(tmpDir("cp2"))
-    assert(spark.read.parquet(target).count() == 5, "replay appended nothing")
+    assert(rows() == 5, "replay appended nothing")
+    assert(version() == v1, "replay committed no new version")
+    // a second file redelivers every key plus one new one, as a batch id
+    // never applied: a batch-id watermark would append all six rows, the
+    // key anti-join appends only the new one
+    eventsDF.unionByName(eventsDF.limit(1).withColumn("event_id", lit(6L)))
+      .coalesce(1).write.mode("append").parquet(src)
+    runOnce(tmpDir("cp3"))
+    assert(rows() == 6, "only the new key appended")
+    assert(ManifestTable.read(spark, root, "events")
+      .filter($"event_id" === 6L).count() == 1)
   }
 
   test("exactly-once manifest sink: full redelivery lands zero duplicate rows") {
